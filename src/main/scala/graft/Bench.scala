@@ -14,7 +14,8 @@ import graft.sources.{ImageTable, PolygonTable}
   * common grid → per-pixel stack stats + trend → polygon PIP join + heatmap →
   * kNN — one pass, counted at each sink. For the N→4N scaling criterion run
   * this binary at SPARK_GRAFT_CPUS=8 and =32 on the same SPARK_GRAFT_SF_DIR
-  * (tools/run_scaling.sh) and compare images_per_sec. */
+  * and compare images_per_sec, or run `python3 perfbench/run.py --scaling`
+  * (local[1] → local[4], with per-layer rollups). */
 object Bench {
   /** Single-thread host probe on the same two dimensions as
     * tools/probe_host.py: register-bound LCG throughput (k-iters/ms, blind

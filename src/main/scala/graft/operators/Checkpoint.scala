@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,6 +17,7 @@ import org.apache.spark.sql.functions._
   * fingerprint matches is read back instead of recomputed — any stage of the
   * tiling job is resumable mid-pipeline (north rule). */
 class Pipeline(spark: SparkSession, rootDir: String) {
+  import Pipeline.lineageFingerprint
   // fingerprint map + computed list are guarded: INDEPENDENT stages may
   // run from concurrent driver threads (guide §2.6 — e.g. the flagship's
   // image leg overlapping its text chain); each stage still owns its own
@@ -41,15 +42,17 @@ class Pipeline(spark: SparkSession, rootDir: String) {
     }
     val dir = s"$rootDir/$name"
     val lineagePath = Paths.get(s"$rootDir/${name}_lineage.json")
-    val reusable = Files.exists(lineagePath) && {
-      val txt = Files.readString(lineagePath)
-      txt.contains(s""""fingerprint": "$f"""") &&
-        Files.exists(Paths.get(dir, "_SUCCESS"))
-    }
+    val reusable = Files.exists(lineagePath) &&
+      Files.exists(Paths.get(dir, "_SUCCESS")) &&
+      lineageFingerprint(lineagePath).contains(f)
     if (reusable) {
       spark.read.parquet(dir)
     } else {
       val t0 = System.nanoTime()
+      // the stale lineage goes BEFORE the data overwrite: a crash after
+      // the new write must not leave this run's data paired with the
+      // previous run's fingerprint
+      Files.deleteIfExists(lineagePath)
       val df = build
       df.write.mode("overwrite").parquet(dir)
       val out = spark.read.parquet(dir)
@@ -59,19 +62,8 @@ class Pipeline(spark: SparkSession, rootDir: String) {
       // stage's full output a second time (guide §6: row counts are
       // already in the metadata)
       val conf = spark.sessionState.newHadoopConf()
-      val parts = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.endsWith(".parquet") && f.length > 0)
-        .sortBy(_.getName)
-        .map { f =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(f.getPath), conf))
-          try {
-            var n = 0L
-            r.getFooter.getBlocks.forEach(b => n += b.getRowCount)
-            n
-          } finally r.close()
-        }
+      val parts = graft.sources.ParquetFiles.partFiles(dir)
+        .map(p => graft.sources.ParquetFiles.rowCount(p.getPath, conf))
       val rows = parts.sum
       val hist = parts.zipWithIndex
         .map { case (n, pid) => s"""{"pid": $pid, "rows": $n}""" }
@@ -83,7 +75,11 @@ class Pipeline(spark: SparkSession, rootDir: String) {
            | "deps": [${deps.sorted.map(d => s""""$d"""").mkString(",")}],
            | "rows": $rows, "partitions": $hist,
            | "wall_s": $secs, "written_at_ms": ${System.currentTimeMillis()}}""".stripMargin
-      Files.writeString(lineagePath, json)
+      // published after _SUCCESS by an atomic move: a reader sees either
+      // no lineage or the whole one
+      val tmp = Paths.get(s"$rootDir/.${name}_lineage.json.tmp")
+      Files.writeString(tmp, json)
+      Files.move(tmp, lineagePath, StandardCopyOption.ATOMIC_MOVE)
       finger.synchronized { computed += name }
       out
     }
@@ -91,6 +87,17 @@ class Pipeline(spark: SparkSession, rootDir: String) {
 }
 
 object Pipeline {
+  /** The top-level `fingerprint` field of a lineage sidecar; None when the
+    * file does not parse or lacks it (the stage then recomputes). */
+  private def lineageFingerprint(path: Path): Option[String] = {
+    import org.json4s._
+    scala.util.Try(org.json4s.jackson.JsonMethods.parse(Files.readString(path)))
+      .toOption.flatMap(_ \ "fingerprint" match {
+        case JString(fp) => Some(fp)
+        case _ => None
+      })
+  }
+
   /** The flagship resumable job graph: generate → warp → (stack stats,
     * trend) — used by tests and by the Bench resume scenario. */
   def tilingJob(spark: SparkSession, root: String, nImages: Int,

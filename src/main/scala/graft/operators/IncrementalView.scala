@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotTable
+import graft.sources.{ParquetFiles, SnapshotTable}
 
 /** The refresh engine shared by the incrementally-maintained materialized
   * views ([[StatsView]], [[TrendView]]): a view table keyed on `tile_id`
@@ -15,16 +16,13 @@ import graft.sources.SnapshotTable
   *   - APPEND-ONLY range (appends + compactions): the O(delta) fast path —
   *       1. `SnapshotTable.changes(from, to)` — only the source layers
   *          committed since the last refresh (file-level scan);
-  *       2. a caller-supplied `fold` of those layers into canonical view
-  *          rows (one shuffle keyed on tile_id, map-side combined);
-  *       3. ONE typed equi-join against the current view rows of the
-  *          affected tiles (stats-pruned read), merging old⊕new with the
-  *          caller's `combine` — a hand-written while-loop over the buffer
-  *          arrays that JITs to straight array arithmetic. (The
+  *       2. the view aggregator's fold of those layers, FUSED with
+  *       3. the old⊕new merge against the current view rows of the
+  *          affected tiles (stats-pruned read) — one tagged-union
+  *          exchange keyed on tile_id; old⊕new is the aggregator's own
+  *          `merge` on unpacked buffers (compiled while-loops; the
   *          Column-level alternative, `zip_with`, is a CodegenFallback
-  *          higher-order function: per-element INTERPRETED lambda
-  *          dispatch, measured ~30× slower over the ~10⁸ element merges a
-  *          full-region refresh performs.)
+  *          higher-order function measured ~30× slower).
   *   - CHURNED range (merge / delete / overwrite, CDC intact): moments
   *     already folded in cannot be SUBTRACTED (min/max aren't invertible,
   *     and a silent adds-only fold would double-count merge post-images
@@ -56,60 +54,39 @@ private[operators] object IncrementalView {
   def refreshedVersion(mvRoot: String, tilesRoot: String, kind: String): Long =
     SnapshotTable.lastCommittedEpoch(mvRoot, markerId(tilesRoot, kind))
 
+  /** A view's ONE definition: the batch aggregator over source layers plus
+    * the codec between its buffer and the stored row `V`. Every refresh
+    * path derives from it — the delta and rebuild folds, the identity row
+    * (`pack(agg.zero)`) and old⊕new (`agg.merge(delta, unpack(old))`,
+    * delta first: the batch folds' operand order, whose min/max tie rule
+    * keeps the delta operand). */
+  final case class ViewDef[B, V](agg: Aggregator[TileRow, B, _],
+                                 pack: (Long, B) => V, unpack: V => B)
+
   /** Advance the view at `mvRoot` to cover `tilesRoot`'s current version.
-    * `fold` maps source layers (TileRow-shaped) to typed view rows (the
-    * encoder's schema IS the table schema — first commit and every merge
-    * write the same shape); `combine(delta, old)` merges one pair of
-    * same-tile rows, delta first (the batch folds' operand order); `zero`
-    * builds the fold-identity row for a tile whose source layers all
-    * vanished (identity buffers: counts 0, min/max at their extremes — a
-    * later `combine` against it is a no-op). Returns the source version
-    * now covered (unchanged if already current). */
-  def refresh[V](spark: SparkSession, tilesRoot: String, mvRoot: String,
-                 kind: String, fold: DataFrame => Dataset[V],
-                 foldRun: (Long, Iterator[TileRow]) => V,
-                 combine: (V, V) => V, zero: Long => V)
-                (implicit enc: Encoder[V]): Long = {
+    * The encoder's schema IS the view table's schema (first commit and
+    * every merge write the same shape). Returns the source version now
+    * covered (unchanged if already current). */
+  def refresh[B, V](spark: SparkSession, tilesRoot: String, mvRoot: String,
+                    kind: String, view: ViewDef[B, V])
+                   (implicit enc: Encoder[V]): Long = {
     val to = SnapshotTable.currentVersion(tilesRoot).toLong
     val from = refreshedVersion(mvRoot, tilesRoot, kind)
     if (to <= math.max(from, 0L)) return from
-    // split/partition sizing scoped to the refresh (restored on exit):
-    // tile payloads and moment buffers compress ~100-200× in parquet and
-    // in shuffle blocks, so Spark's byte-based planning (128 MB splits,
-    // 64 MB AQE advisory, 4 MB per-file open cost) packs the whole
-    // CPU-heavy decode+fold+merge onto 1-2 tasks (measured: 2-task fold
-    // over 24 MB of shuffle bytes = 660 MB decoded). Sizing by
-    // bytes-AFTER-decode keeps the stages wide; values are ratios of the
-    // observed compression, not local core counts, so they hold at any
-    // cluster size (guide §2.2/§6).
-    val scoped = Seq(
-      "spark.sql.files.maxPartitionBytes" -> (16L * 1024 * 1024).toString,
-      "spark.sql.files.openCostInBytes" -> (512L * 1024).toString,
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (4L * 1024 * 1024).toString,
-      // batch ROW count must follow row width too: the packed view rows
-      // are ~100-260 KB each, and the default 4096-row vectorized batches
-      // reserve ~0.5-1 GB of contiguous column buffers PER TASK at sf1
-      // (observed reader reserve failure at 10x scale); 128 rows bounds a
-      // batch to a few MB per column at any scale
-      "spark.sql.parquet.columnarReaderBatchSize" -> "128")
-    val saved = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    try refreshInner(spark, tilesRoot, mvRoot, kind, fold, foldRun, combine,
-      zero, to, from)
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    // fat-row split/partition sizing, scoped to the refresh
+    ParquetFiles.withFatRowScanConf(spark) {
+      refreshInner(spark, tilesRoot, mvRoot, kind, view, to, from)
     }
   }
 
-  private def refreshInner[V](spark: SparkSession, tilesRoot: String,
-                              mvRoot: String, kind: String,
-                              fold: DataFrame => Dataset[V],
-                              foldRun: (Long, Iterator[TileRow]) => V,
-                              combine: (V, V) => V, zero: Long => V,
-                              to: Long, from: Long)
-                             (implicit enc: Encoder[V]): Long = {
+  private def refreshInner[B, V](spark: SparkSession, tilesRoot: String,
+                                 mvRoot: String, kind: String,
+                                 view: ViewDef[B, V], to: Long, from: Long)
+                                (implicit enc: Encoder[V]): Long = {
     val marker = markerId(tilesRoot, kind)
+    // source layers → packed view rows (the rebuild and churn folds)
+    val fold: DataFrame => Dataset[V] = df =>
+      StackOps.partialFold(df.as(Encoders.product[TileRow]), view.agg)(view.pack)
     val fromI = math.max(from, 0L).toInt
 
     // classify (from, to]: a mid-range manifest may be expired (None) —
@@ -127,12 +104,12 @@ private[operators] object IncrementalView {
       sn.op != "rollback" && !sn.cdcOff))
 
     if (appendOnly)
-      refreshAppendOnly(spark, tilesRoot, mvRoot, marker, fromI, to, foldRun,
-        combine)
+      refreshAppendOnly(spark, tilesRoot, mvRoot, marker, fromI, to, view)
     else if (mvEmpty || !cdcReplayable)
       rebuild(spark, tilesRoot, mvRoot, marker, to, fold, mvEmpty)
     else
-      refreshChurned(spark, tilesRoot, mvRoot, marker, fromI, to, fold, zero)
+      refreshChurned(spark, tilesRoot, mvRoot, marker, fromI, to, fold,
+        tid => view.pack(tid, view.agg.zero))
     to
   }
 
@@ -140,9 +117,9 @@ private[operators] object IncrementalView {
     * FUSED into one shuffle. The raw delta rows and the envelope-pruned
     * old-view rows travel through a single tagged-union exchange keyed on
     * tile_id; the post-shuffle stage sorts each partition by tile_id and
-    * streams one tile at a time — folding that tile's delta rows
-    * (`foldRun`) and combining with its at-most-one old row — straight
-    * into the merge commit's write. The earlier two-stage form (fold to a
+    * streams one tile at a time — folding that tile's delta rows and
+    * merging in its at-most-one old row — straight into the merge
+    * commit's write. The earlier two-stage form (fold to a
     * partial Dataset, then a full-outer sort-merge join) paid an extra
     * Exchange of the fat ~100-300 KB fold buffers plus a separate join
     * stage (guide §2.4 — remove shuffles outright). Fold/combine order is
@@ -150,12 +127,10 @@ private[operators] object IncrementalView {
     * order-independent on the engine's exact-sum payloads, which the
     * strict oracles gate. The old-view side still never broadcasts (no
     * join exists to mis-broadcast); each fat row moves exactly once. */
-  private def refreshAppendOnly[V](spark: SparkSession, tilesRoot: String,
-                                   mvRoot: String, marker: String, fromI: Int,
-                                   to: Long,
-                                   foldRun: (Long, Iterator[TileRow]) => V,
-                                   combine: (V, V) => V)
-                                  (implicit enc: Encoder[V]): Unit = {
+  private def refreshAppendOnly[B, V](spark: SparkSession, tilesRoot: String,
+                                      mvRoot: String, marker: String, fromI: Int,
+                                      to: Long, view: ViewDef[B, V])
+                                     (implicit enc: Encoder[V]): Unit = {
     val delta = SnapshotTable.changes(spark, tilesRoot, fromI, to.toInt)
     // affected-tile envelope bounds BOTH the old-view read and the
     // merge's file rewrites; conservative (range, not id set). Derived
@@ -185,7 +160,7 @@ private[operators] object IncrementalView {
       val (lo, hi) = env.get
       val prune = Seq(SnapshotTable.ColRange("tile_id", lo, hi))
       val oldDf = SnapshotTable.read(spark, mvRoot, prune = prune)
-      val tEnc = org.apache.spark.sql.Encoders.product[TileRow]
+      val tEnc = Encoders.product[TileRow]
       // tagged union rows (_1 = tile_id, _2 = delta TileRow | null,
       // _3 = old view row | null); the null legs deserialize to null
       // tuple components (the joinWith contract this replaces)
@@ -196,8 +171,7 @@ private[operators] object IncrementalView {
         lit(null).cast(tEnc.schema).as("_2"),
         struct(enc.schema.fieldNames.map(col).toSeq: _*).as("_3"))
       implicit val tup: Encoder[(Long, TileRow, V)] =
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong, tEnc, enc)
+        Encoders.tuple(Encoders.scalaLong, tEnc, enc)
       // explicit width (shared with the batch folds): the compressed
       // shuffle size would let AQE coalesce the decode-bound fold+combine
       // to 1-2 tasks
@@ -205,26 +179,18 @@ private[operators] object IncrementalView {
       val combined: Dataset[V] = dU.unionByName(oU)
         .repartition(p, col("_1")).sortWithinPartitions(col("_1"))
         .as[(Long, TileRow, V)]
-        .mapPartitions { it =>
-          new scala.collection.AbstractIterator[V] {
-            private var cur: (Long, TileRow, V) =
-              if (it.hasNext) it.next() else null
-            def hasNext: Boolean = cur != null
-            def next(): V = {
-              val k = cur._1
-              val rows = scala.collection.mutable.ArrayBuffer.empty[TileRow]
-              var o: V = null.asInstanceOf[V]
-              while (cur != null && cur._1 == k) {
-                if (cur._2 != null) rows += cur._2
-                if (cur._3 != null) o = cur._3     // unique per view key
-                cur = if (it.hasNext) it.next() else null
-              }
-              val d = if (rows.isEmpty) null.asInstanceOf[V]
-                      else foldRun(k, rows.iterator)
-              if (o == null) d else if (d == null) o else combine(d, o)
+        .mapPartitions((it: Iterator[(Long, TileRow, V)]) =>
+          StackOps.sortedRuns(it)(_._1) { (k, run) =>
+            val agg = view.agg
+            var b: B = null.asInstanceOf[B]   // delta buffer, once a row arrives
+            var o: V = null.asInstanceOf[V]   // old view row, unique per key
+            run.foreach { case (_, t, old) =>
+              if (t != null) b = agg.reduce(if (b == null) agg.zero else b, t)
+              if (old != null) o = old
             }
-          }
-        }
+            if (b == null) o   // old-only tile: passes through untouched
+            else view.pack(k, if (o == null) b else agg.merge(b, view.unpack(o)))
+          })
       // the combined set carries every surviving row of the pruned
       // old-view files (old-only tiles pass through untouched), so the
       // merge commit takes them as those files' full replacement
@@ -315,7 +281,7 @@ private[operators] object IncrementalView {
     SnapshotTable.expire(mvRoot, keepLast)
   }
 
-  // ---- packed little-endian codecs + combiners for the view stores ----
+  // ---- packed little-endian codecs for the view stores ----
   // The view tables store their dense per-pixel moment arrays as BINARY
   // cells in a fixed little-endian layout: parquet writes/reads a binary
   // cell as one memcopy, where an array<double> column goes through the
@@ -343,87 +309,5 @@ private[operators] object IncrementalView {
   }
   private[operators] def unpackF(a: Array[Byte]): Array[Float] = {
     val o = new Array[Float](a.length / 4); bb(a).asFloatBuffer.get(o); o
-  }
-  private[operators] def addIP(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val n = a.length / 4; val o = new Array[Byte](a.length)
-    val ab = bb(a).asIntBuffer; val xb = bb(b).asIntBuffer
-    val ob = bb(o).asIntBuffer
-    var i = 0; while (i < n) { ob.put(i, ab.get(i) + xb.get(i)); i += 1 }; o
-  }
-  private[operators] def addDP(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val n = a.length / 8; val o = new Array[Byte](a.length)
-    val ab = bb(a).asDoubleBuffer; val xb = bb(b).asDoubleBuffer
-    val ob = bb(o).asDoubleBuffer
-    var i = 0; while (i < n) { ob.put(i, ab.get(i) + xb.get(i)); i += 1 }; o
-  }
-  private[operators] def minDP(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val n = a.length / 8; val o = new Array[Byte](a.length)
-    val ab = bb(a).asDoubleBuffer; val xb = bb(b).asDoubleBuffer
-    val ob = bb(o).asDoubleBuffer
-    var i = 0
-    while (i < n) {
-      val x = ab.get(i); val y = xb.get(i)
-      ob.put(i, if (x <= y) x else y); i += 1
-    }
-    o
-  }
-  private[operators] def maxDP(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val n = a.length / 8; val o = new Array[Byte](a.length)
-    val ab = bb(a).asDoubleBuffer; val xb = bb(b).asDoubleBuffer
-    val ob = bb(o).asDoubleBuffer
-    var i = 0
-    while (i < n) {
-      val x = ab.get(i); val y = xb.get(i)
-      ob.put(i, if (x >= y) x else y); i += 1
-    }
-    o
-  }
-  private[operators] def minFP(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val n = a.length / 4; val o = new Array[Byte](a.length)
-    val ab = bb(a).asFloatBuffer; val xb = bb(b).asFloatBuffer
-    val ob = bb(o).asFloatBuffer
-    var i = 0
-    while (i < n) {
-      val x = ab.get(i); val y = xb.get(i)
-      ob.put(i, if (x <= y) x else y); i += 1
-    }
-    o
-  }
-  private[operators] def maxFP(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val n = a.length / 4; val o = new Array[Byte](a.length)
-    val ab = bb(a).asFloatBuffer; val xb = bb(b).asFloatBuffer
-    val ob = bb(o).asFloatBuffer
-    var i = 0
-    while (i < n) {
-      val x = ab.get(i); val y = xb.get(i)
-      ob.put(i, if (x >= y) x else y); i += 1
-    }
-    o
-  }
-
-  // ---- while-loop array combiners shared by the views' `combine`s ----
-  private[operators] def addI(a: Array[Int], b: Array[Int]): Array[Int] = {
-    val n = a.length; val o = new Array[Int](n)
-    var i = 0; while (i < n) { o(i) = a(i) + b(i); i += 1 }; o
-  }
-  private[operators] def addD(a: Array[Double], b: Array[Double]): Array[Double] = {
-    val n = a.length; val o = new Array[Double](n)
-    var i = 0; while (i < n) { o(i) = a(i) + b(i); i += 1 }; o
-  }
-  private[operators] def minD(a: Array[Double], b: Array[Double]): Array[Double] = {
-    val n = a.length; val o = new Array[Double](n)
-    var i = 0; while (i < n) { o(i) = if (a(i) <= b(i)) a(i) else b(i); i += 1 }; o
-  }
-  private[operators] def maxD(a: Array[Double], b: Array[Double]): Array[Double] = {
-    val n = a.length; val o = new Array[Double](n)
-    var i = 0; while (i < n) { o(i) = if (a(i) >= b(i)) a(i) else b(i); i += 1 }; o
-  }
-  private[operators] def minF(a: Array[Float], b: Array[Float]): Array[Float] = {
-    val n = a.length; val o = new Array[Float](n)
-    var i = 0; while (i < n) { o(i) = if (a(i) <= b(i)) a(i) else b(i); i += 1 }; o
-  }
-  private[operators] def maxF(a: Array[Float], b: Array[Float]): Array[Float] = {
-    val n = a.length; val o = new Array[Float](n)
-    var i = 0; while (i < n) { o(i) = if (a(i) >= b(i)) a(i) else b(i); i += 1 }; o
   }
 }

@@ -107,7 +107,7 @@ object StackOps {
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
   private[operators] def partialFold[B, O: Encoder](
-      tiles: Dataset[TileRow], agg: Aggregator[TileRow, B, O], maxLive: Int)(
+      tiles: Dataset[TileRow], agg: Aggregator[TileRow, B, _])(
       finish: (Long, B) => O): Dataset[O] = {
     // explicit partition count (not AQE-advisory-sized): the fold is
     // CPU-bound per DECODED byte, and the ~100-200× compressed shuffle
@@ -121,30 +121,42 @@ object StackOps {
     val p = foldWidth(spark)
     val coloc = tiles.repartition(p, col("tile_id"))
       .sortWithinPartitions(col("tile_id"))
-    coloc.mapPartitions { it =>
-      new scala.collection.AbstractIterator[O] {
-        private var cur: TileRow = if (it.hasNext) it.next() else null
-        def hasNext: Boolean = cur != null
-        def next(): O = {
-          val tid = cur.tile_id
-          var b = agg.zero
-          while (cur != null && cur.tile_id == tid) {
-            b = agg.reduce(b, cur)
-            cur = if (it.hasNext) it.next() else null
-          }
-          finish(tid, b)
+    coloc.mapPartitions((it: Iterator[TileRow]) =>
+      sortedRuns(it)(_.tile_id) { (tid, run) =>
+        var b = agg.zero
+        run.foreach(t => b = agg.reduce(b, t))
+        finish(tid, b)
+      })
+  }
+
+  /** The runs of equal keys in a key-sorted iterator, each mapped through
+    * `f(key, run)` as it streams past — one run live at a time. Serves the
+    * batch fold and the views' fused refresh; `f` may leave its run
+    * partly unread. */
+  private[operators] def sortedRuns[T, O](it: Iterator[T])(key: T => Long)(
+      f: (Long, Iterator[T]) => O): Iterator[O] = {
+    val in = it.buffered
+    new scala.collection.AbstractIterator[O] {
+      def hasNext: Boolean = in.hasNext
+      def next(): O = {
+        val k = key(in.head)
+        val run = new scala.collection.AbstractIterator[T] {
+          def hasNext: Boolean = in.hasNext && key(in.head) == k
+          def next(): T = in.next()
         }
+        val o = f(k, run)
+        run.foreach(_ => ())
+        o
       }
     }
   }
 
   def stackStats(tiles: Dataset[TileRow], tileSize: Int = Warp.TileSize,
-                 ndv: Float = ImageTable.Ndv,
-                 maxLiveBuffers: Int = 2048): Dataset[TileStats] = {
+                 ndv: Float = ImageTable.Ndv): Dataset[TileStats] = {
     val spark = tiles.sparkSession
     import spark.implicits._
     val agg = new TileStatsAgg(tileSize * tileSize, ndv)
-    partialFold(tiles, agg, maxLiveBuffers)((tid, b) => agg.finish(b).copy(tile_id = tid))
+    partialFold(tiles, agg)((tid, b) => agg.finish(b).copy(tile_id = tid))
   }
 
   /** Per-band, per-pixel stack stats over multi-band tiles. The band folds
@@ -156,14 +168,13 @@ object StackOps {
     * (band, tile); no cross-band traffic by construction. */
   def stackStatsBands(tiles: Dataset[BandTileRow], nBands: Int,
                       tileSize: Int = Warp.TileSize,
-                      ndv: Float = ImageTable.Ndv,
-                      maxLiveBuffers: Int = 2048): Dataset[BandTileStats] = {
+                      ndv: Float = ImageTable.Ndv): Dataset[BandTileStats] = {
     val spark = tiles.sparkSession
     import spark.implicits._
     require(nBands >= 1, s"nBands $nBands")
     val keyed = tiles.map(b => TileRow(b.image_id, b.ts_us,
       b.tile_id * nBands + b.band, b.tx, b.ty, b.payload, b.n_valid, b.elided))
-    stackStats(keyed, tileSize, ndv, maxLiveBuffers).map { st =>
+    stackStats(keyed, tileSize, ndv).map { st =>
       BandTileStats((st.tile_id % nBands).toInt, st.tile_id / nBands,
         st.n_layers, st.count, st.mean, st.std, st.vmin, st.vmax)
     }
@@ -308,13 +319,13 @@ object StackOps {
   def trend(tiles: Dataset[TileRow], tileSize: Int = Warp.TileSize,
             ndv: Float = ImageTable.Ndv, nThresh: Int = 2,
             minDtPtp: Double = 0.0, confTest: Boolean = false,
-            alpha: Double = 0.05, maxLiveBuffers: Int = 2048,
+            alpha: Double = 0.05,
             diagnostics: Boolean = true): Dataset[TileTrend] = {
     val spark = tiles.sparkSession
     import spark.implicits._
     val agg = new TileTrendAgg(tileSize * tileSize, ndv, nThresh, minDtPtp, confTest,
       alpha, diagnostics)
-    partialFold(tiles, agg, maxLiveBuffers)((tid, b) => agg.finish(b).copy(tile_id = tid))
+    partialFold(tiles, agg)((tid, b) => agg.finish(b).copy(tile_id = tid))
   }
 
   /** The reference's default time-spread gate when none is given
@@ -380,12 +391,11 @@ object StackOps {
   }
 
   def dtStats(tiles: Dataset[TileRow], tileSize: Int = Warp.TileSize,
-              ndv: Float = ImageTable.Ndv,
-              maxLiveBuffers: Int = 2048): Dataset[TileDt] = {
+              ndv: Float = ImageTable.Ndv): Dataset[TileDt] = {
     val spark = tiles.sparkSession
     import spark.implicits._
     val agg = new TileDtAgg(tileSize * tileSize, ndv)
-    partialFold(tiles, agg, maxLiveBuffers)((tid, b) => agg.finish(b).copy(tile_id = tid))
+    partialFold(tiles, agg)((tid, b) => agg.finish(b).copy(tile_id = tid))
   }
 
   /** Long form: one row per valid pixel — `get_xyz` `malib.py:1854-1859`

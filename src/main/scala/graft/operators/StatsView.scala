@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.{ImageTable, SnapshotTable}
 
 /** Incrementally-maintained per-pixel stack statistics — a MATERIALIZED
@@ -18,14 +16,11 @@ import graft.sources.{ImageTable, SnapshotTable}
   *
   *   1. `SnapshotTable.changes(from, to)` — ONLY the layers committed
   *      since the last refresh (O(delta) scan, file-level);
-  *   2. the bounded partial-fold of those layers into per-tile buffers
-  *      (one shuffle keyed on tile_id, map-side combined);
-  *   3. ONE typed equi-join against the current view rows of the affected
-  *      tiles (stats-pruned read) merging old+new buffers element-wise with
-  *      a hand-written while-loop (JITs to straight array arithmetic; the
-  *      `zip_with` alternative is a CodegenFallback interpreted lambda,
-  *      measured ~30× slower — IncrementalView.scala:17-22);
-  *   4. a `merge` commit keyed on tile_id — only view files whose tile
+  *   2. the fold of those layers into per-tile buffers FUSED with the
+  *      old⊕new merge against the current view rows of the affected tiles
+  *      (stats-pruned read) — one exchange keyed on tile_id; both the fold
+  *      and old⊕new are `TileStatsAgg`'s own reduce/merge;
+  *   3. a `merge` commit keyed on tile_id — only view files whose tile
   *      range intersects the delta are rewritten (stats-bounded write
   *      amplification), and the refreshed SOURCE VERSION rides in the
   *      manifest as an idempotent-writer marker, so a crashed/replayed
@@ -47,22 +42,21 @@ object StatsView {
                          sum: Array[Byte], sumsq: Array[Byte],
                          vmin: Array[Byte], vmax: Array[Byte])
 
-  /** The batch stats fold re-targeted to emit raw buffers: zero/reduce/
-    * merge ARE TileStatsAgg's (one definition of the moments), only finish
-    * differs (it packs). */
-  private class MvAgg(tileLen: Int, ndv: Float)
-      extends Aggregator[TileRow, StackOps.StatsBuf, MvRow] with Serializable {
-    private val inner = new StackOps.TileStatsAgg(tileLen, ndv)
-    def zero: StackOps.StatsBuf = inner.zero
-    def reduce(b: StackOps.StatsBuf, t: TileRow): StackOps.StatsBuf = inner.reduce(b, t)
-    def merge(a: StackOps.StatsBuf, b: StackOps.StatsBuf): StackOps.StatsBuf = inner.merge(a, b)
-    def finish(b: StackOps.StatsBuf): MvRow = {
-      import IncrementalView._
-      MvRow(-1L, b.n, packI(b.cnt), packD(b.sum), packD(b.sumsq),
-        packF(b.vmin), packF(b.vmax))
-    }
-    def bufferEncoder: Encoder[StackOps.StatsBuf] = Encoders.product[StackOps.StatsBuf]
-    def outputEncoder: Encoder[MvRow] = Encoders.product[MvRow]
+  private def unpack(r: MvRow): StackOps.StatsBuf = {
+    import IncrementalView._
+    StackOps.StatsBuf(r.n, unpackI(r.cnt), unpackD(r.sum), unpackD(r.sumsq),
+      unpackF(r.vmin), unpackF(r.vmax))
+  }
+
+  /** The view's one definition: the batch stats aggregator plus the
+    * codec between its buffer and the stored row. */
+  private def view(tileSize: Int, ndv: Float) = {
+    import IncrementalView._
+    ViewDef[StackOps.StatsBuf, MvRow](
+      new StackOps.TileStatsAgg(tileSize * tileSize, ndv),
+      (tid, b) => MvRow(tid, b.n, packI(b.cnt), packD(b.sum), packD(b.sumsq),
+        packF(b.vmin), packF(b.vmax)),
+      unpack)
   }
 
   /** Source version the view last folded in, -1 for a fresh view. */
@@ -72,29 +66,15 @@ object StatsView {
   /** Advance the view at `mvRoot` to cover `tilesRoot`'s current version.
     * Returns the source version now covered (unchanged if already
     * current). Safe to re-run: a refresh that already happened (or raced a
-    * twin) is skipped by the manifest marker. Delta fold + old⊕new merge +
-    * marker bookkeeping all live in [[IncrementalView.refresh]]; the
-    * combine is the SAME element-wise arithmetic as `TileStatsAgg.merge`
-    * (delta-first operand order), as a JIT-friendly while-loop. */
+    * twin) is skipped by the manifest marker. Delta fold, old⊕new merge
+    * (`TileStatsAgg.merge`, delta first) and marker bookkeeping all live
+    * in [[IncrementalView.refresh]]. */
   def refresh(spark: SparkSession, tilesRoot: String, mvRoot: String,
               tileSize: Int = Warp.TileSize,
-              ndv: Float = ImageTable.Ndv,
-              maxLiveBuffers: Int = 2048): Long = {
+              ndv: Float = ImageTable.Ndv): Long = {
     import spark.implicits._
-    import IncrementalView._
-    val agg = new MvAgg(tileSize * tileSize, ndv)
-    IncrementalView.refresh[MvRow](spark, tilesRoot, mvRoot, "statsview",
-      delta => StackOps.partialFold(delta.as[TileRow], agg, maxLiveBuffers)(
-        (tid, b) => agg.finish(b).copy(tile_id = tid)),
-      (tid, it) => {                 // one-tile fold for the fused refresh
-        var b = agg.zero
-        it.foreach(t => b = agg.reduce(b, t))
-        agg.finish(b).copy(tile_id = tid)
-      },
-      (d, o) => MvRow(d.tile_id, d.n + o.n, addIP(d.cnt, o.cnt),
-        addDP(d.sum, o.sum), addDP(d.sumsq, o.sumsq),
-        minFP(d.vmin, o.vmin), maxFP(d.vmax, o.vmax)),
-      tid => agg.finish(agg.zero).copy(tile_id = tid))
+    IncrementalView.refresh(spark, tilesRoot, mvRoot, "statsview",
+      view(tileSize, ndv))
   }
 
   /** View-table maintenance (tile-sorted compaction + snapshot expiry);
@@ -103,36 +83,16 @@ object StatsView {
                keepLast: Int = 3): (Int, Int) =
     IncrementalView.maintain(spark, mvRoot, targetFiles, keepLast)
 
-  /** Finished per-tile statistics from the stored moments — the same
-    * emission as `TileStatsAgg.finish`, restated over the view columns so
-    * finished values are bit-identical to the batch fold on exact-sum
-    * (integer-valued) stacks. */
+  /** Finished per-tile statistics from the stored moments — the batch
+    * `TileStatsAgg.finish` over the unpacked buffer, so finished values
+    * are bit-identical to the batch fold on exact-sum (integer-valued)
+    * stacks. */
   def stats(spark: SparkSession, mvRoot: String,
             tileSize: Int = Warp.TileSize,
             ndv: Float = ImageTable.Ndv): DataFrame = {
     import spark.implicits._
-    val tileLen = tileSize * tileSize
-    SnapshotTable.read(spark, mvRoot).as[MvRow].map { r =>
-      import IncrementalView._
-      val cnt = unpackI(r.cnt); val sum = unpackD(r.sum)
-      val sumsq = unpackD(r.sumsq)
-      val vmin = unpackF(r.vmin); val vmax = unpackF(r.vmax)
-      val mean = new Array[Float](tileLen); val std = new Array[Float](tileLen)
-      val mn = new Array[Float](tileLen); val mx = new Array[Float](tileLen)
-      var i = 0
-      while (i < tileLen) {
-        if (cnt(i) == 0) {
-          mean(i) = ndv; std(i) = ndv; mn(i) = ndv; mx(i) = ndv
-        } else {
-          val m = sum(i) / cnt(i)
-          mean(i) = m.toFloat
-          std(i) = if (cnt(i) <= 1) ndv
-                   else math.sqrt(math.max(0.0, sumsq(i) / cnt(i) - m * m)).toFloat
-          mn(i) = vmin(i); mx(i) = vmax(i)
-        }
-        i += 1
-      }
-      StackOps.TileStats(r.tile_id, r.n, cnt, mean, std, mn, mx)
-    }.toDF()
+    val agg = new StackOps.TileStatsAgg(tileSize * tileSize, ndv)
+    SnapshotTable.read(spark, mvRoot).as[MvRow]
+      .map(r => agg.finish(unpack(r)).copy(tile_id = r.tile_id)).toDF()
   }
 }

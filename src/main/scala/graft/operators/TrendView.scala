@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.{ImageTable, SnapshotTable}
 
 /** Incrementally-maintained per-pixel OLS trend — [[StatsView]]'s sibling
@@ -33,57 +31,39 @@ object TrendView {
                          syy: Array[Byte],
                          tmin: Array[Byte], tmax: Array[Byte])
 
-  /** The batch trend fold re-targeted to emit raw buffers: zero/reduce/
-    * merge ARE TileTrendAgg's, only finish differs. */
-  private[operators] class MvAgg(tileLen: Int, ndv: Float)
-      extends Aggregator[TileRow, StackOps.TrendBuf, MvRow] with Serializable {
-    private val inner = new StackOps.TileTrendAgg(tileLen, ndv, nThresh = 2,
-      minDtPtp = 0.0)
-    def zero: StackOps.TrendBuf = inner.zero
-    def reduce(b: StackOps.TrendBuf, t: TileRow): StackOps.TrendBuf = inner.reduce(b, t)
-    def merge(a: StackOps.TrendBuf, b: StackOps.TrendBuf): StackOps.TrendBuf = inner.merge(a, b)
-    def finish(b: StackOps.TrendBuf): MvRow = {
-      import IncrementalView._
-      MvRow(-1L, b.n, packI(b.cnt), packD(b.st), packD(b.stt), packD(b.sy),
-        packD(b.sty), packD(b.syy), packD(b.tmin), packD(b.tmax))
-    }
-    def bufferEncoder: Encoder[StackOps.TrendBuf] = Encoders.product[StackOps.TrendBuf]
-    def outputEncoder: Encoder[MvRow] = Encoders.product[MvRow]
+  private def unpack(r: MvRow): StackOps.TrendBuf = {
+    import IncrementalView._
+    StackOps.TrendBuf(r.n, unpackI(r.cnt), unpackD(r.st), unpackD(r.stt),
+      unpackD(r.sy), unpackD(r.sty), unpackD(r.syy), unpackD(r.tmin),
+      unpackD(r.tmax))
+  }
+
+  /** The view's one definition: the batch trend aggregator (ungated — the
+    * gates apply at finish) plus the codec between its buffer and the
+    * stored row. */
+  private def view(tileSize: Int, ndv: Float) = {
+    import IncrementalView._
+    ViewDef[StackOps.TrendBuf, MvRow](
+      new StackOps.TileTrendAgg(tileSize * tileSize, ndv, nThresh = 2,
+        minDtPtp = 0.0),
+      (tid, b) => MvRow(tid, b.n, packI(b.cnt), packD(b.st), packD(b.stt),
+        packD(b.sy), packD(b.sty), packD(b.syy), packD(b.tmin), packD(b.tmax)),
+      unpack)
   }
 
   /** Source version the view last folded in, -1 for a fresh view. */
   def refreshedVersion(mvRoot: String, tilesRoot: String): Long =
     IncrementalView.refreshedVersion(mvRoot, tilesRoot, "trendview")
 
-  /** Element-wise old⊕new (`TileTrendAgg.merge`'s arithmetic, delta-first
-    * operand order) as a JIT-friendly while-loop. */
-  private[operators] def combineRows(d: MvRow, o: MvRow): MvRow = {
-    import IncrementalView._
-    MvRow(d.tile_id, d.n + o.n, addIP(d.cnt, o.cnt), addDP(d.st, o.st),
-      addDP(d.stt, o.stt), addDP(d.sy, o.sy), addDP(d.sty, o.sty),
-      addDP(d.syy, o.syy), minDP(d.tmin, o.tmin), maxDP(d.tmax, o.tmax))
-  }
-
   /** Advance the view at `mvRoot` to cover `tilesRoot`'s current version.
-    * Same contract as [[StatsView.refresh]]; the combine is
-    * `TileTrendAgg.merge`'s element-wise arithmetic (delta-first operand
-    * order) as a JIT-friendly while-loop. */
+    * Same contract as [[StatsView.refresh]]; old⊕new is
+    * `TileTrendAgg.merge` (delta first). */
   def refresh(spark: SparkSession, tilesRoot: String, mvRoot: String,
               tileSize: Int = Warp.TileSize,
-              ndv: Float = ImageTable.Ndv,
-              maxLiveBuffers: Int = 2048): Long = {
+              ndv: Float = ImageTable.Ndv): Long = {
     import spark.implicits._
-    val agg = new MvAgg(tileSize * tileSize, ndv)
-    IncrementalView.refresh[MvRow](spark, tilesRoot, mvRoot, "trendview",
-      delta => StackOps.partialFold(delta.as[TileRow], agg, maxLiveBuffers)(
-        (tid, b) => agg.finish(b).copy(tile_id = tid)),
-      (tid, it) => {                 // one-tile fold for the fused refresh
-        var b = agg.zero
-        it.foreach(t => b = agg.reduce(b, t))
-        agg.finish(b).copy(tile_id = tid)
-      },
-      combineRows,
-      tid => agg.finish(agg.zero).copy(tile_id = tid))
+    IncrementalView.refresh(spark, tilesRoot, mvRoot, "trendview",
+      view(tileSize, ndv))
   }
 
   /** View-table maintenance (tile-sorted compaction + snapshot expiry);
@@ -107,11 +87,7 @@ object TrendView {
     val tileLen = tileSize * tileSize
     val fin = new StackOps.TileTrendAgg(tileLen, ndv, nThresh, minDtPtp,
       confTest, alpha, diagnostics)
-    SnapshotTable.read(spark, mvRoot).as[MvRow].map { r =>
-      import IncrementalView._
-      fin.finish(StackOps.TrendBuf(r.n, unpackI(r.cnt), unpackD(r.st),
-        unpackD(r.stt), unpackD(r.sy), unpackD(r.sty), unpackD(r.syy),
-        unpackD(r.tmin), unpackD(r.tmax))).copy(tile_id = r.tile_id)
-    }.toDF()
+    SnapshotTable.read(spark, mvRoot).as[MvRow]
+      .map(r => fin.finish(unpack(r)).copy(tile_id = r.tile_id)).toDF()
   }
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{RasterOps, Sampling, StackOps, Warp}
-import graft.sources.PolygonTable
+import graft.sources.{ParquetFiles, PolygonTable}
 
 /** DuckDB-oracle forms of the heavy engine pipelines (VERDICT r2 #1).
   *
@@ -65,75 +65,9 @@ object EngineOracle {
     zipped.select(cols: _*).filter(col("n") > 0)
   }
 
-  /** Scan/partition sizing for the incremental-view protocol drivers
-    * (restored on exit): tile payloads compress ~100-200× in parquet and
-    * shuffle blocks, so default byte-based planning (128 MB splits, 4 MB
-    * per-file open cost, 64 MB AQE advisory) packs the CPU-heavy
-    * decode+fold+merge work of the catalog reads onto 1-2 tasks. Sizing by
-    * bytes-after-decode keeps every stage wide; ratios, not core counts,
-    * so they hold at any cluster size (guide §2.2/§6). */
-  private def withFatRowScanConf[T](s: SparkSession)(body: => T): T = {
-    val scoped = Seq(
-      "spark.sql.files.maxPartitionBytes" -> (16L * 1024 * 1024).toString,
-      "spark.sql.files.openCostInBytes" -> (512L * 1024).toString,
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (4L * 1024 * 1024).toString,
-      // batch ROW count must follow row width too: the packed view rows
-      // are ~100-260 KB each, and the default 4096-row vectorized batches
-      // reserve ~0.5-1 GB of contiguous column buffers PER TASK at sf1
-      // (observed reader reserve failure at 10x scale); 128 rows bounds a
-      // batch to a few MB per column at any scale
-      "spark.sql.parquet.columnarReaderBatchSize" -> "128")
-    val saved = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-    scoped.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
-  /** ONE parquet file from a DataFrame without serializing the encode: the
-    * earlier `repartition(1).write` funneled every row through a single
-    * task — ~3 s of CPU per epoch file pushing ~10⁸ array elements through
-    * the parquet writer — and produced a single row group (dictionary
-    * encoding keeps the buffered estimate below any block size), so the
-    * downstream scan decoded the whole file on ONE task too. Here the
-    * encode runs wide (normal distributed write, small row groups), then
-    * the part files' row groups are concatenated BYTE-FOR-BYTE on the
-    * driver (`ParquetFileWriter.appendFile` — no decode, no re-encode;
-    * the parquet-tools merge primitive). Many row groups also give the
-    * one-file epoch real scan parallelism (guide §6). */
-  private def writeOneFileParquet(s: SparkSession, df: DataFrame,
-                                  dst: java.nio.file.Path): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
-    import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-    val tmp = java.nio.file.Files.createTempDirectory("graft_onefile").toString
-    try {
-      df.write.mode("overwrite")
-        .option("parquet.block.size", (256 * 1024).toString)
-        .option("compression", "none")
-        .parquet(tmp)
-      val parts = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && f.length > 0)
-        .sortBy(_.getName)
-      require(parts.nonEmpty, s"no parquet parts under $tmp")
-      val conf = s.sessionState.newHadoopConf()
-      val r0 = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new HPath(parts.head.getPath), conf))
-      val (schema, kv) =
-        try (r0.getFooter.getFileMetaData.getSchema,
-             r0.getFooter.getFileMetaData.getKeyValueMetaData)
-        finally r0.close()
-      java.nio.file.Files.deleteIfExists(dst)
-      val w = new ParquetFileWriter(
-        HadoopOutputFile.fromPath(new HPath(dst.toString), conf),
-        schema, ParquetFileWriter.Mode.CREATE, 256L * 1024, 0)
-      w.start()
-      parts.foreach(p =>
-        w.appendFile(HadoopInputFile.fromPath(new HPath(p.getPath), conf)))
-      w.end(kv)
-    } finally graft.sources.SnapshotTable.deleteRecursively(tmp)
-  }
+  /** Per-pixel fields of the stack-stats and trend oracles. */
+  private val StatsFields = Seq("count", "mean", "std", "vmin", "vmax")
+  private val TrendFields = Seq("count", "slope_yr", "intercept", "r2", "t_stat")
 
   /** Detach a result from scratch inputs the caller is about to delete:
     * a DISTRIBUTED parquet write to a JVM-lifetime temp dir, re-read
@@ -156,7 +90,7 @@ object EngineOracle {
     val target = Warp.analyze(imgs, "min", "union")
     val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
     explodeStats(StackOps.stackStats(Warp.warpToTiles(s, imgs, target, "near")).toDF(),
-      ntx, Seq("count", "mean", "std", "vmin", "vmax"))
+      ntx, StatsFields)
   }
 
   /** q108: q41's per-pixel stack stats, computed INCREMENTALLY — the same
@@ -168,27 +102,11 @@ object EngineOracle {
     * and fails the hash. A deliberate re-refresh with no new source data
     * and a replayed refresh marker both prove idempotent (version-pinned
     * inside the run). */
-  def stackCellsIncremental(s: SparkSession, d: String): DataFrame = {
-    val imgs = quantNoRipple(Engine.images(s, d))
-    val target = Warp.analyze(imgs, "min", "union")
-    val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
-    val base = java.nio.file.Files.createTempDirectory("graft_q108").toString
-    val tilesRoot = s"$base/tiles"; val mvRoot = s"$base/mv"
-    try withFatRowScanConf(s) {
-      appendBatchesWithRefresh(s, tilesRoot,
-        (0 until 3).map(b => Warp.warpToTiles(s,
-          imgs.filter(idx % 3 === b), target, "near").toDF()),
-        () => graft.operators.StatsView.refresh(s, tilesRoot, mvRoot))
-      // idempotence: nothing new to fold → marker unchanged, no commit
-      val vBefore = graft.sources.SnapshotTable.currentVersion(mvRoot)
-      require(graft.operators.StatsView.refresh(s, tilesRoot, mvRoot) == 3)
-      require(graft.sources.SnapshotTable.currentVersion(mvRoot) == vBefore,
-        "a no-op refresh must not commit")
-      val out = explodeStats(graft.operators.StatsView.stats(s, mvRoot),
-        ntx, Seq("count", "mean", "std", "vmin", "vmax"))
-      detachViaParquet(s, out)
-    } finally graft.sources.SnapshotTable.deleteRecursively(base)
-  }
+  def stackCellsIncremental(s: SparkSession, d: String): DataFrame =
+    appendViewChain(s, "q108", quantNoRipple(Engine.images(s, d)),
+      b => idx % 3 === b,
+      (tilesRoot, mvRoot) => graft.operators.StatsView.refresh(s, tilesRoot, mvRoot),
+      mvRoot => graft.operators.StatsView.stats(s, mvRoot), StatsFields)
 
   /** q114: the full STREAM → CATALOG → VIEW chain — the composition of
     * q107 (streaming ingest commits snapshot epochs exactly-once) and
@@ -210,7 +128,7 @@ object EngineOracle {
       quantNoRipple(Engine.images(s, d)), b => idx % 3 === b,
       (tilesRoot, mvRoot) => graft.operators.StatsView.refresh(s, tilesRoot, mvRoot),
       mvRoot => graft.operators.StatsView.stats(s, mvRoot),
-      Seq("count", "mean", "std", "vmin", "vmax"))
+      StatsFields)
 
   /** q115: the stream → catalog → view chain for the TREND view — same
     * protocol as q114 (crash after epochs 0–1, epoch-1 replay must be a
@@ -222,7 +140,7 @@ object EngineOracle {
       trendSubset(Engine.images(s, d)), b => floor(idx / 9) % 3 === b,
       (tilesRoot, mvRoot) => graft.operators.TrendView.refresh(s, tilesRoot, mvRoot),
       mvRoot => graft.operators.TrendView.trend(s, mvRoot),
-      Seq("count", "slope_yr", "intercept", "r2", "t_stat"))
+      TrendFields)
 
   /** Shared q114/q115 driver: land 3 tile batches as files → stream them
     * into the catalog (one epoch commit per micro-batch) → refresh the
@@ -232,90 +150,74 @@ object EngineOracle {
                               batchPred: Int => Column,
                               refresh: (String, String) => Long,
                               finished: String => DataFrame,
-                              fields: Seq[String]): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val target = Warp.analyze(imgs, "min", "union")
-    val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
-    val base = Files.createTempDirectory(s"graft_$tag").toString
-    val srcDir = s"$base/src"; val tilesRoot = s"$base/tiles"
-    val ckptDir = s"$base/ckpt"; val mvRoot = s"$base/mv"
-    Files.createDirectories(Paths.get(srcDir))
-    val streamId = s"${tag}_tiles"
-    def tilesOf(b: Int) =
-      Warp.warpToTiles(s, imgs.filter(batchPred(b)), target, "near").toDF()
-    val tileSchema = tilesOf(0).schema
-    def land(b: Int): Unit = {
-      val dst = Paths.get(srcDir, s"f$b.parquet")
-      writeOneFileParquet(s, tilesOf(b), dst)
-      // deterministic pickup order for the file source
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1704067200000L + b * 2000L))
-    }
-    def label[T](what: String)(body: => T): T = {
-      s.sparkContext.setJobDescription(s"$tag $what") // guide §1.5
-      try body finally s.sparkContext.setJobDescription(null)
-    }
-    // the three epoch builds are INDEPENDENT inputs — overlap them (guide
-    // §2.6): f0/f1 land concurrently, and f2 is built into a staging path
-    // during the leg-1/refresh driver phases (it must stay invisible to
-    // the file source until the resume leg) and only MOVED into the
-    // source dir at its protocol step. Same files, same mtimes, same
-    // pickup order — only the idle driver-phase cores get used.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    def async(body: => Unit): java.util.concurrent.Future[_] =
-      pool.submit(new Runnable { def run(): Unit = body })
-    val f2staging = Paths.get(base, "stage_f2.parquet")
-    try withFatRowScanConf(s) {
-      val l0 = async { land(0) }
-      val l1 = async { land(1) }
-      val l2 = async { writeOneFileParquet(s, tilesOf(2), f2staging) }
-      label("land epochs 0,1") { l0.get(); l1.get() }
-      label("stream leg 1") {
-        val q1 = graft.streaming.StreamOps.parquetStreamToSnapshot(
-          s, srcDir, tilesRoot, ckptDir, streamId, tileSchema)
-        q1.processAllAvailable(); q1.stop() // "crash" after epochs 0,1
-      }
-      require(graft.sources.SnapshotTable.currentVersion(tilesRoot) == 2,
-        "expected one snapshot per epoch")
-      require(label("refresh epochs 0,1") { refresh(tilesRoot, mvRoot) } == 2)
-      // crash-window replay of epoch 1: no-op commit, then no-op refresh
-      val replay = label("replay epoch 1") {
-        graft.sources.SnapshotTable.commitStreamBatch(
-          s, tilesRoot, tilesOf(1), streamId, 1L)
-      }
-      require(replay.isEmpty, s"replayed epoch 1 must be a no-op, got $replay")
-      val vBefore = graft.sources.SnapshotTable.currentVersion(mvRoot)
-      require(refresh(tilesRoot, mvRoot) == 2)
-      require(graft.sources.SnapshotTable.currentVersion(mvRoot) == vBefore,
-        "a refresh after a replayed epoch must not commit")
-      label("land epoch 2") {
-        l2.get()
-        val dst = Paths.get(srcDir, "f2.parquet")
-        Files.move(f2staging, dst)
+                              fields: Seq[String]): DataFrame =
+    viewDriver(s, tag, imgs, finished, fields) { (target, base) =>
+      import java.nio.file.{Files, Paths}
+      val srcDir = s"$base/src"; val tilesRoot = s"$base/tiles"
+      val ckptDir = s"$base/ckpt"; val mvRoot = s"$base/mv"
+      Files.createDirectories(Paths.get(srcDir))
+      val streamId = s"${tag}_tiles"
+      def tilesOf(b: Int) =
+        Warp.warpToTiles(s, imgs.filter(batchPred(b)), target, "near").toDF()
+      val tileSchema = tilesOf(0).schema
+      def land(b: Int): Unit = {
+        val dst = Paths.get(srcDir, s"f$b.parquet")
+        ParquetFiles.writeOneFile(s, tilesOf(b), dst)
+        // deterministic pickup order for the file source
         Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1704067200000L + 2 * 2000L))
+          java.nio.file.attribute.FileTime.fromMillis(1704067200000L + b * 2000L))
       }
-      label("stream leg 2") {
-        val q2 = graft.streaming.StreamOps.parquetStreamToSnapshot(
-          s, srcDir, tilesRoot, ckptDir, streamId, tileSchema)
-        q2.processAllAvailable(); q2.stop() // resume: only f2 → epoch 2
+      def label[T](what: String)(body: => T): T = {
+        s.sparkContext.setJobDescription(s"$tag $what") // guide §1.5
+        try body finally s.sparkContext.setJobDescription(null)
       }
-      require(graft.sources.SnapshotTable.currentVersion(tilesRoot) == 3,
-        "resume must deliver exactly the one new epoch")
-      require(label("refresh epoch 2") { refresh(tilesRoot, mvRoot) } == 3)
-      label("explode + detach") {
-        val out = explodeStats(finished(mvRoot), ntx, fields)
-        detachViaParquet(s, out)
+      // the three epoch builds are INDEPENDENT inputs — overlap them (guide
+      // §2.6): f0/f1 land concurrently, and f2 is built into a staging path
+      // during the leg-1/refresh driver phases (it must stay invisible to
+      // the file source until the resume leg) and only MOVED into the
+      // source dir at its protocol step. Same files, same mtimes, same
+      // pickup order — only the idle driver-phase cores get used.
+      val f2staging = Paths.get(base, "stage_f2.parquet")
+      Overlap(s) { ov =>
+        val l0 = ov.fork { land(0) }
+        val l1 = ov.fork { land(1) }
+        val l2 = ov.fork { ParquetFiles.writeOneFile(s, tilesOf(2), f2staging) }
+        label("land epochs 0,1") { l0.get(); l1.get() }
+        label("stream leg 1") {
+          val q1 = graft.streaming.StreamOps.parquetStreamToSnapshot(
+            s, srcDir, tilesRoot, ckptDir, streamId, tileSchema)
+          q1.processAllAvailable(); q1.stop() // "crash" after epochs 0,1
+        }
+        require(graft.sources.SnapshotTable.currentVersion(tilesRoot) == 2,
+          "expected one snapshot per epoch")
+        require(label("refresh epochs 0,1") { refresh(tilesRoot, mvRoot) } == 2)
+        // crash-window replay of epoch 1: no-op commit, then no-op refresh
+        val replay = label("replay epoch 1") {
+          graft.sources.SnapshotTable.commitStreamBatch(
+            s, tilesRoot, tilesOf(1), streamId, 1L)
+        }
+        require(replay.isEmpty, s"replayed epoch 1 must be a no-op, got $replay")
+        val vBefore = graft.sources.SnapshotTable.currentVersion(mvRoot)
+        require(refresh(tilesRoot, mvRoot) == 2)
+        require(graft.sources.SnapshotTable.currentVersion(mvRoot) == vBefore,
+          "a refresh after a replayed epoch must not commit")
+        label("land epoch 2") {
+          l2.get()
+          val dst = Paths.get(srcDir, "f2.parquet")
+          Files.move(f2staging, dst)
+          Files.setLastModifiedTime(dst,
+            java.nio.file.attribute.FileTime.fromMillis(1704067200000L + 2 * 2000L))
+        }
+        label("stream leg 2") {
+          val q2 = graft.streaming.StreamOps.parquetStreamToSnapshot(
+            s, srcDir, tilesRoot, ckptDir, streamId, tileSchema)
+          q2.processAllAvailable(); q2.stop() // resume: only f2 → epoch 2
+        }
+        require(graft.sources.SnapshotTable.currentVersion(tilesRoot) == 3,
+          "resume must deliver exactly the one new epoch")
+        require(label("refresh epoch 2") { refresh(tilesRoot, mvRoot) } == 3)
       }
-    } finally {
-      // stop any still-running staging build BEFORE deleting its target
-      // dir (an abandoned l2 on the failure path would otherwise race the
-      // recursive delete)
-      pool.shutdownNow()
-      pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-      graft.sources.SnapshotTable.deleteRecursively(base)
     }
-  }
 
   /** q110: q42's per-pixel OLS trend, computed INCREMENTALLY — the trend
     * stack lands in a snapshot-catalog table across three commits and a
@@ -326,58 +228,63 @@ object EngineOracle {
     * path. The strict oracle is q42's DuckDB twin VERBATIM (exact dyadic t
     * on the 3-hour grid → moment sums associate), so any double-counted
     * replay, missed delta, or wrong old⊕new merge fails the hash. */
-  def trendCellsIncremental(s: SparkSession, d: String): DataFrame = {
-    val imgs = trendSubset(Engine.images(s, d))
+  def trendCellsIncremental(s: SparkSession, d: String): DataFrame =
+    // trendSubset already pins idx % 3 == 0 and drops (idx/3) % 3 == 0
+    // (raw fmt) — batch on idx/9 so all three commits are non-empty
+    appendViewChain(s, "q110", trendSubset(Engine.images(s, d)),
+      b => floor(idx / 9) % 3 === b,
+      (tilesRoot, mvRoot) => graft.operators.TrendView.refresh(s, tilesRoot, mvRoot),
+      mvRoot => graft.operators.TrendView.trend(s, mvRoot), TrendFields)
+
+  /** The frame every view protocol driver (q108, q110–q112, q114, q115)
+    * shares: the warp grid of `imgs`, a scratch dir `base` holding the
+    * tiles table (`base/tiles`) and the view (`base/mv`), the caller's
+    * protocol `drive(target, base)`, then the finished view exploded and
+    * detached before the scratch is deleted. */
+  private def viewDriver(s: SparkSession, tag: String, imgs: DataFrame,
+                         finished: String => DataFrame, fields: Seq[String])(
+      drive: (graft.geo.GridSpec, String) => Unit): DataFrame = {
     val target = Warp.analyze(imgs, "min", "union")
     val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
-    val base = java.nio.file.Files.createTempDirectory("graft_q110").toString
-    val tilesRoot = s"$base/tiles"; val mvRoot = s"$base/mv"
-    try withFatRowScanConf(s) {
-      // trendSubset already pins idx % 3 == 0 and drops (idx/3) % 3 == 0
-      // (raw fmt) — batch on idx/9 so all three commits are non-empty
-      appendBatchesWithRefresh(s, tilesRoot,
-        (0 until 3).map(b => Warp.warpToTiles(s,
-          imgs.filter(floor(idx / 9) % 3 === b), target, "near").toDF()),
-        () => graft.operators.TrendView.refresh(s, tilesRoot, mvRoot))
-      // idempotence: nothing new to fold → marker unchanged, no commit
-      val vBefore = graft.sources.SnapshotTable.currentVersion(mvRoot)
-      require(graft.operators.TrendView.refresh(s, tilesRoot, mvRoot) == 3)
-      require(graft.sources.SnapshotTable.currentVersion(mvRoot) == vBefore,
-        "a no-op refresh must not commit")
-      val out = explodeStats(graft.operators.TrendView.trend(s, mvRoot),
-        ntx, Seq("count", "slope_yr", "intercept", "r2", "t_stat"))
-      detachViaParquet(s, out)
+    val base = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
+    try ParquetFiles.withFatRowScanConf(s) {
+      drive(target, base)
+      detachViaParquet(s, explodeStats(finished(s"$base/mv"), ntx, fields))
     } finally graft.sources.SnapshotTable.deleteRecursively(base)
   }
 
-  /** Append-protocol driver shared by q108/q110: commit each warped batch
-    * and refresh the view after every commit. Batches are independent
+  /** Append-protocol driver shared by q108/q110: commit each of three
+    * warped batches and refresh the view after every commit, then prove a
+    * refresh with nothing new to fold is a no-op. Batches are independent
     * inputs, so while batch b commits/refreshes, the warps of b+1.. fill
     * their caches on the idle cores of the driver-side phases (guide
     * §2.6); the commit→refresh protocol itself stays strictly serial. */
-  private def appendBatchesWithRefresh(s: SparkSession, tilesRoot: String,
-                                       batches: Seq[DataFrame],
-                                       refresh: () => Long): Unit = {
-    val cached = batches.map(_.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      cached.head.count() // the immediately-needed batch first
-      val prefetch = cached.tail.map(df => pool.submit(new Runnable {
-        def run(): Unit = { df.count(); () }
-      }))
-      cached.zipWithIndex.foreach { case (df, b) =>
-        if (b > 0) prefetch(b - 1).get() // cached before its commit
-        graft.sources.SnapshotTable.commit(s, tilesRoot, df)
-        val covered = refresh()
-        require(covered == b + 1, s"refresh covered v$covered, expected v${b + 1}")
-      }
-    } finally {
-      pool.shutdownNow()
-      pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-      cached.foreach(_.unpersist(blocking = false))
+  private def appendViewChain(s: SparkSession, tag: String, imgs: DataFrame,
+                              batchPred: Int => Column,
+                              refresh: (String, String) => Long,
+                              finished: String => DataFrame,
+                              fields: Seq[String]): DataFrame =
+    viewDriver(s, tag, imgs, finished, fields) { (target, base) =>
+      val tilesRoot = s"$base/tiles"; val mvRoot = s"$base/mv"
+      val cached = (0 until 3).map(b => Warp.warpToTiles(s,
+          imgs.filter(batchPred(b)), target, "near").toDF()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      try Overlap(s) { ov =>
+        cached.head.count() // the immediately-needed batch first
+        val prefetch = cached.tail.map(df => ov.fork { df.count() })
+        cached.zipWithIndex.foreach { case (df, b) =>
+          if (b > 0) prefetch(b - 1).get() // cached before its commit
+          graft.sources.SnapshotTable.commit(s, tilesRoot, df)
+          val covered = refresh(tilesRoot, mvRoot)
+          require(covered == b + 1, s"refresh covered v$covered, expected v${b + 1}")
+        }
+      } finally cached.foreach(_.unpersist(blocking = false))
+      // idempotence: nothing new to fold → marker unchanged, no commit
+      val vBefore = graft.sources.SnapshotTable.currentVersion(mvRoot)
+      require(refresh(tilesRoot, mvRoot) == 3)
+      require(graft.sources.SnapshotTable.currentVersion(mvRoot) == vBefore,
+        "a no-op refresh must not commit")
     }
-  }
 
   /** Shared churn driver for q111/q112: land `imgs` in a snapshot tiles
     * table through a NON-APPEND history — append b0, append b1, MERGE that
@@ -388,6 +295,16 @@ object EngineOracle {
     * any adds-only double-count (corrupt kept + restore added), stale
     * deleted moment, or missed recompute leaves the +1 shift or a ghost
     * layer in the exact integer moments and fails the hash. */
+  private def churnViewChain(s: SparkSession, tag: String, imgs: DataFrame,
+                             batchOf: Column, batchSql: String,
+                             refresh: (String, String) => Long,
+                             finished: String => DataFrame,
+                             fields: Seq[String]): DataFrame =
+    viewDriver(s, tag, imgs, finished, fields) { (target, base) =>
+      churnSnapshots(s, imgs, target, s"$base/tiles", batchOf, batchSql,
+        () => refresh(s"$base/tiles", s"$base/mv"))
+    }
+
   private def churnSnapshots(s: SparkSession, imgs: DataFrame,
                              target: graft.geo.GridSpec, tilesRoot: String,
                              batchOf: Column, batchSql: String,
@@ -413,7 +330,6 @@ object EngineOracle {
     // (tileCache is not thread-safe); the background work is only the
     // count() that materializes the already-registered persist.
     Seq(0, 1, 2).foreach(tiles)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     // +1-corruption as a typed map, not a `transform(...)` higher-order
     // expression: HOFs evaluate their lambda INTERPRETED per element
     // (measured ~40 s of executor CPU over the batch's ~9·10⁷ elements);
@@ -428,11 +344,9 @@ object EngineOracle {
       }
       t.copy(payload = p)
     }.toDF()
-    try {
+    try Overlap(s) { ov =>
       tiles(0).count() // materialize the immediately-needed batch first
-      val prefetch = Seq(1, 2).map(b => pool.submit(new Runnable {
-        def run(): Unit = { tiles(b).count(); () }
-      }))
+      val prefetch = Seq(1, 2).map(b => ov.fork { tiles(b).count() })
       step(1) { ST.commit(s, tilesRoot, tiles(0)) }
       prefetch.head.get() // b1 cached before its commit
       step(2) { ST.commit(s, tilesRoot, tiles(1)) }
@@ -443,11 +357,7 @@ object EngineOracle {
       step(6) { ST.commit(s, tilesRoot, tiles(1)) }
       prefetch(1).get()
       step(7) { ST.commit(s, tilesRoot, tiles(2)) }
-    } finally {
-      pool.shutdownNow()
-      pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-      tileCache.values.foreach(_.unpersist(blocking = false))
-    }
+    } finally tileCache.values.foreach(_.unpersist(blocking = false))
   }
 
   /** q111: q108's incrementally-maintained stack stats, driven through
@@ -456,42 +366,22 @@ object EngineOracle {
     * recompute path for the churned ranges and the O(delta) path for the
     * appends; the strict oracle is the q41 twin over the same final state
     * (even-index half of the oracle subset). */
-  def stackCellsIncrementalChurn(s: SparkSession, d: String): DataFrame = {
-    val imgs = quantNoRipple(Engine.images(s, d)).filter(idx % 2 === 0)
-    val target = Warp.analyze(imgs, "min", "union")
-    val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
-    val base = java.nio.file.Files.createTempDirectory("graft_q111").toString
-    val tilesRoot = s"$base/tiles"; val mvRoot = s"$base/mv"
-    try withFatRowScanConf(s) {
-      churnSnapshots(s, imgs, target, tilesRoot,
-        floor(idx / 6) % 3,
-        "(CAST(substring(image_id, 5, 8) AS INT) DIV 6) % 3",
-        () => graft.operators.StatsView.refresh(s, tilesRoot, mvRoot))
-      val out = explodeStats(graft.operators.StatsView.stats(s, mvRoot),
-        ntx, Seq("count", "mean", "std", "vmin", "vmax"))
-      detachViaParquet(s, out)
-    } finally graft.sources.SnapshotTable.deleteRecursively(base)
-  }
+  def stackCellsIncrementalChurn(s: SparkSession, d: String): DataFrame =
+    churnViewChain(s, "q111", quantNoRipple(Engine.images(s, d)).filter(idx % 2 === 0),
+      floor(idx / 6) % 3,
+      "(CAST(substring(image_id, 5, 8) AS INT) DIV 6) % 3",
+      (tilesRoot, mvRoot) => graft.operators.StatsView.refresh(s, tilesRoot, mvRoot),
+      mvRoot => graft.operators.StatsView.stats(s, mvRoot), StatsFields)
 
   /** q112: q110's incrementally-maintained OLS trend view, driven through
     * the same churn history; strict oracle = the q42 twin over the final
     * state (even-index trend subset). */
-  def trendCellsIncrementalChurn(s: SparkSession, d: String): DataFrame = {
-    val imgs = trendSubset(Engine.images(s, d)).filter(idx % 2 === 0)
-    val target = Warp.analyze(imgs, "min", "union")
-    val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
-    val base = java.nio.file.Files.createTempDirectory("graft_q112").toString
-    val tilesRoot = s"$base/tiles"; val mvRoot = s"$base/mv"
-    try withFatRowScanConf(s) {
-      churnSnapshots(s, imgs, target, tilesRoot,
-        floor(idx / 18) % 3,
-        "(CAST(substring(image_id, 5, 8) AS INT) DIV 18) % 3",
-        () => graft.operators.TrendView.refresh(s, tilesRoot, mvRoot))
-      val out = explodeStats(graft.operators.TrendView.trend(s, mvRoot),
-        ntx, Seq("count", "slope_yr", "intercept", "r2", "t_stat"))
-      detachViaParquet(s, out)
-    } finally graft.sources.SnapshotTable.deleteRecursively(base)
-  }
+  def trendCellsIncrementalChurn(s: SparkSession, d: String): DataFrame =
+    churnViewChain(s, "q112", trendSubset(Engine.images(s, d)).filter(idx % 2 === 0),
+      floor(idx / 18) % 3,
+      "(CAST(substring(image_id, 5, 8) AS INT) DIV 18) % 3",
+      (tilesRoot, mvRoot) => graft.operators.TrendView.refresh(s, tilesRoot, mvRoot),
+      mvRoot => graft.operators.TrendView.trend(s, mvRoot), TrendFields)
 
   /** q42 oracle form: per-pixel OLS slope/intercept/r²/t-stat over the
     * exact-time subset, via TileTrendAgg (diagnostics included). */
@@ -500,7 +390,7 @@ object EngineOracle {
     val target = Warp.analyze(imgs, "min", "union")
     val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
     explodeStats(StackOps.trend(Warp.warpToTiles(s, imgs, target, "near")).toDF(),
-      ntx, Seq("count", "slope_yr", "intercept", "r2", "t_stat"))
+      ntx, TrendFields)
   }
 
   /** q47 oracle form: per-pixel difference of the two half-set composites

@@ -35,19 +35,17 @@ object Flagship {
     // docs_filtered → text_pairs → text_keepers runs here; both join at
     // `keepers`. Stage bookkeeping is lock-guarded in Pipeline; outputs
     // and fingerprints are identical to the serial order.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val (textKeepers, imgKeepers) = try {
-      val imgFut = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-        def call(): DataFrame =
-          p.stage("image_keepers", Map("src" -> d, "maxDist" -> "8")) {
-            // keeper image = the component label itself (min image id
-            // across the hash-level near-dup component — the q91
-            // contracted-graph path)
-            EngineOracle.neardupClusters(s, d)
-              .filter(col("image_id") === col("comp_all"))
-              .select(col("image_id").as("id"))
-          }
-      })
+    val (textKeepers, imgKeepers) = Overlap(s) { ov =>
+      val imgLeg = ov.fork {
+        p.stage("image_keepers", Map("src" -> d, "maxDist" -> "8")) {
+          // keeper image = the component label itself (min image id
+          // across the hash-level near-dup component — the q91
+          // contracted-graph path)
+          EngineOracle.neardupClusters(s, d)
+            .filter(col("image_id") === col("comp_all"))
+            .select(col("image_id").as("id"))
+        }
+      }
       // the source dir is part of BOTH ingest fingerprints: resuming the
       // same root against different data must invalidate, not silently
       // reuse
@@ -66,12 +64,7 @@ object Flagship {
           .filter(col("id") === col("component"))
           .select(col("id"))
       }
-      (tk, imgFut.get())
-    } finally {
-      // non-daemon pool thread must never outlive the call (it would pin
-      // the JVM on the failure path)
-      pool.shutdownNow()
-      pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+      (tk, imgLeg.get())
     }
     val keepers = p.stage("keepers", deps = Seq("text_keepers", "image_keepers")) {
       // doc ids are BIGINT, image ids strings — the manifest is string-keyed

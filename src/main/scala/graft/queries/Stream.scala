@@ -40,10 +40,7 @@ object Stream {
     val out = s.createDataFrame(
       java.util.Arrays.asList(sink.collect(): _*), sink.schema)
     s.catalog.dropTempView(sinkTable)
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-    }
-    rm(new java.io.File(dir))
+    graft.sources.SnapshotTable.deleteRecursively(dir)
     out
   }
 

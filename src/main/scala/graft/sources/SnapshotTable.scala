@@ -335,14 +335,19 @@ object SnapshotTable {
     * cannot diverge. */
   private def writeAttempt(spark: SparkSession, root: String, v: Int,
                            df: DataFrame): (Seq[String], Map[String, FileStats]) = {
-    val attempt = s"s$v-${java.util.UUID.randomUUID().toString.take(8)}"
-    val dataDir = Paths.get(root, "data", attempt)
-    df.write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
-    val newFiles = listNames(dataDir)
-      .filter(_.endsWith(".parquet"))
-      .sorted.map(f => s"data/$attempt/$f")
+    val attempt = newAttempt(v)
+    df.write.mode(SaveMode.Overwrite).parquet(s"$root/data/$attempt")
+    val newFiles = attemptFiles(root, s"data/$attempt")
     (newFiles, computeStats(spark, root, newFiles))
   }
+
+  /** Fresh attempt-dir name for version `v` (see [[commitFrom]]). */
+  private def newAttempt(v: Int): String =
+    s"s$v-${java.util.UUID.randomUUID().toString.take(8)}"
+
+  /** Root-relative paths of the part files under root-relative `dir`. */
+  private def attemptFiles(root: String, dir: String): Seq[String] =
+    ParquetFiles.partFiles(s"$root/$dir").map(f => s"$dir/${f.getName}")
 
   /** Single-pass copy-on-write split for merge/delete: one scan of the
     * touched files writes BOTH the survivor rewrite and the CDC tombstone
@@ -357,18 +362,11 @@ object SnapshotTable {
   private def writeSplit(spark: SparkSession, root: String, v: Int,
                          df: DataFrame, keptCol: String)
       : (Seq[String], Map[String, FileStats], Seq[String]) = {
-    val attempt = s"s$v-${java.util.UUID.randomUUID().toString.take(8)}"
-    val dataDir = Paths.get(root, "data", attempt)
+    val attempt = newAttempt(v)
     df.write.mode(SaveMode.Overwrite).partitionBy(keptCol)
-      .parquet(dataDir.toString)
-    def half(kept: Boolean): Seq[String] = {
-      val sub = dataDir.resolve(s"$keptCol=$kept")
-      if (!Files.isDirectory(sub)) Nil
-      else listNames(sub).filter(_.endsWith(".parquet"))
-        .sorted.map(f => s"data/$attempt/$keptCol=$kept/$f")
-    }
-    val survivors = half(kept = true)
-    val tombstones = half(kept = false)
+      .parquet(s"$root/data/$attempt")
+    val survivors = attemptFiles(root, s"data/$attempt/$keptCol=true")
+    val tombstones = attemptFiles(root, s"data/$attempt/$keptCol=false")
     (survivors, computeStats(spark, root, survivors), tombstones)
   }
 
@@ -445,85 +443,80 @@ object SnapshotTable {
     val conf = spark.sessionState.newHadoopConf()
     val out = Map.newBuilder[String, FileStats]
     for (f <- files) {
-      val p = new org.apache.hadoop.fs.Path(s"$root/$f")
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try {
-        val md = reader.getFooter
-        val msg = md.getFileMetaData.getSchema
-        // classify top-level fields: Some(name) = track, None = skip; a
-        // tracked-but-unreplicable type aborts the whole fast path
-        val tracked: Seq[String] = msg.getFields.asScala.toSeq.flatMap { t =>
-          if (!t.isPrimitive) None // arrays/structs: scan skips them too
-          else {
-            val pt = t.asPrimitiveType().getPrimitiveTypeName
-            val ann = t.getLogicalTypeAnnotation
-            pt match {
-              case PrimitiveTypeName.BOOLEAN => None
-              case PrimitiveTypeName.BINARY |
-                   PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY => ann match {
-                case _: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-                  return None // decimal: scan tracks natively — fall back
-                case _ => None // strings/uuids: scan skips
-              }
-              case PrimitiveTypeName.INT96 => return None // legacy ts: fall back
-              case PrimitiveTypeName.INT32 => ann match {
-                case null => Some(t.getName)
-                case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
-                  if i.isSigned => Some(t.getName)
-                case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation =>
-                  None // DateType: scan skips it
-                case _ => return None
-              }
-              case PrimitiveTypeName.INT64 => ann match {
-                case null => Some(t.getName)
-                case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
-                  if i.isSigned => Some(t.getName)
-                case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-                  if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS =>
-                  // LTZ: instant micros == unix_micros; NTZ: wall micros ==
-                  // the as-if-UTC pin — both equal the scan's statExpr
-                  Some(t.getName)
-                case _ => return None
-              }
-              case PrimitiveTypeName.FLOAT | PrimitiveTypeName.DOUBLE =>
+      val md = ParquetFiles.footer(s"$root/$f", conf)
+      val msg = md.getFileMetaData.getSchema
+      // classify top-level fields: Some(name) = track, None = skip; a
+      // tracked-but-unreplicable type aborts the whole fast path
+      val tracked: Seq[String] = msg.getFields.asScala.toSeq.flatMap { t =>
+        if (!t.isPrimitive) None // arrays/structs: scan skips them too
+        else {
+          val pt = t.asPrimitiveType().getPrimitiveTypeName
+          val ann = t.getLogicalTypeAnnotation
+          pt match {
+            case PrimitiveTypeName.BOOLEAN => None
+            case PrimitiveTypeName.BINARY |
+                 PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY => ann match {
+              case _: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
+                return None // decimal: scan tracks natively — fall back
+              case _ => None // strings/uuids: scan skips
+            }
+            case PrimitiveTypeName.INT96 => return None // legacy ts: fall back
+            case PrimitiveTypeName.INT32 => ann match {
+              case null => Some(t.getName)
+              case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
+                if i.isSigned => Some(t.getName)
+              case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation =>
+                None // DateType: scan skips it
+              case _ => return None
+            }
+            case PrimitiveTypeName.INT64 => ann match {
+              case null => Some(t.getName)
+              case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
+                if i.isSigned => Some(t.getName)
+              case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+                if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS =>
+                // LTZ: instant micros == unix_micros; NTZ: wall micros ==
+                // the as-if-UTC pin — both equal the scan's statExpr
                 Some(t.getName)
+              case _ => return None
             }
+            case PrimitiveTypeName.FLOAT | PrimitiveTypeName.DOUBLE =>
+              Some(t.getName)
           }
         }
-        var rows = 0L
-        val lo = scala.collection.mutable.Map.empty[String, Double]
-        val hi = scala.collection.mutable.Map.empty[String, Double]
-        val dropped = scala.collection.mutable.Set.empty[String] // NaN bounds
-        for (b <- md.getBlocks.asScala) {
-          rows += b.getRowCount
-          for (cc <- b.getColumns.asScala if cc.getPath.size == 1) {
-            val name = cc.getPath.toDotString
-            if (tracked.contains(name)) {
-              val st = cc.getStatistics
-              if (st == null) return None // stats absent: fall back
-              if (!st.hasNonNullValue) {
-                // all-null chunk contributes nothing; an unset-stats chunk
-                // with values present cannot be distinguished from it safely
-                // unless null counts are recorded — fall back in that case
-                if (!st.isNumNullsSet || st.getNumNulls != cc.getValueCount)
-                  return None
-              } else {
-                val bLo = dirDouble(st.genericGetMin, up = false)
-                val bHi = dirDouble(st.genericGetMax, up = true)
-                if (bLo.isNaN || bHi.isNaN) dropped += name
-                else {
-                  lo.updateWith(name)(o => Some(o.fold(bLo)(math.min(_, bLo))))
-                  hi.updateWith(name)(o => Some(o.fold(bHi)(math.max(_, bHi))))
-                }
+      }
+      var rows = 0L
+      val lo = scala.collection.mutable.Map.empty[String, Double]
+      val hi = scala.collection.mutable.Map.empty[String, Double]
+      val dropped = scala.collection.mutable.Set.empty[String] // NaN bounds
+      for (b <- md.getBlocks.asScala) {
+        rows += b.getRowCount
+        for (cc <- b.getColumns.asScala if cc.getPath.size == 1) {
+          val name = cc.getPath.toDotString
+          if (tracked.contains(name)) {
+            val st = cc.getStatistics
+            if (st == null) return None // stats absent: fall back
+            if (!st.hasNonNullValue) {
+              // all-null chunk contributes nothing; an unset-stats chunk
+              // with values present cannot be distinguished from it safely
+              // unless null counts are recorded — fall back in that case
+              if (!st.isNumNullsSet || st.getNumNulls != cc.getValueCount)
+                return None
+            } else {
+              val bLo = dirDouble(st.genericGetMin, up = false)
+              val bHi = dirDouble(st.genericGetMax, up = true)
+              if (bLo.isNaN || bHi.isNaN) dropped += name
+              else {
+                lo.updateWith(name)(o => Some(o.fold(bLo)(math.min(_, bLo))))
+                hi.updateWith(name)(o => Some(o.fold(bHi)(math.max(_, bHi))))
               }
             }
           }
         }
-        dropped.foreach { n => lo.remove(n); hi.remove(n) }
-        out += f -> FileStats(rows,
-          lo.keys.map(n => n -> (lo(n), hi(n))).toMap)
-      } finally reader.close()
+      }
+      dropped.foreach { n => lo.remove(n); hi.remove(n) }
+      out += f -> FileStats(rows,
+        lo.keys.map(n => n -> (lo(n), hi(n))).toMap)
     }
     Some(out.result())
   }
@@ -555,10 +548,9 @@ object SnapshotTable {
                                   max(statExpr(f)).as(s"__hi_${f.name}")))
     val byFile = df.groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*).collect()
+    val resolve = fileResolver(root, files)
     byFile.map { r =>
-      val abs = r.getString(0)
-      val rel = files.find(f => abs.endsWith(f))
-        .getOrElse(throw new IllegalStateException(s"unexpected scan file $abs"))
+      val rel = resolve(r.getString(0))
       val cols = statCols.zipWithIndex.flatMap { case (c, i) =>
         val lo = r.get(2 * i + 2); val hi = r.get(2 * i + 3)
         if (lo == null || hi == null) None
@@ -566,6 +558,42 @@ object SnapshotTable {
       }.toMap
       rel -> FileStats(r.getLong(1), cols)
     }.toMap
+  }
+
+  /** Maps the file names a scan reports (`input_file_name()`, a
+    * percent-encoded URI) to the root-relative `files` it planned, by
+    * EXACT normalized local path. A scanned file that resolves to none of
+    * them breaks the caller's accounting, so it fails loudly. */
+  private def fileResolver(root: String, files: Seq[String]): String => String = {
+    def norm(p: Path): String = p.toAbsolutePath.normalize.toString
+    val byPath = files.map(f => norm(Paths.get(root, f)) -> f).toMap
+    scanned => {
+      val p = if (scanned.startsWith("file:")) Paths.get(new java.net.URI(scanned))
+              else Paths.get(scanned)
+      byPath.getOrElse(norm(p), throw new IllegalStateException(
+        s"scanned file $scanned is not one of the planned files of $root"))
+    }
+  }
+
+  /** The keys-only hit scan merge and delete share: ONE pass over `files`
+    * yields, per file, (rows, rows where the hit column is true), grouped
+    * on `input_file_name()`. `hits` receives the scan with the file name
+    * captured in `__f` (before any join — input_file_name is
+    * single-source) and returns the frame to count and its hit column.
+    * Files with no rows get no entry. */
+  private def hitScan(root: String, reader: org.apache.spark.sql.DataFrameReader,
+                      files: Seq[String])(
+      hits: DataFrame => (DataFrame, org.apache.spark.sql.Column))
+      : Map[String, (Long, Long)] = {
+    import org.apache.spark.sql.functions._
+    val (scan, hit) = hits(reader.parquet(files.map(f => s"$root/$f"): _*)
+      .withColumn("__f", input_file_name()))
+    val resolve = fileResolver(root, files)
+    scan.groupBy(col("__f"))
+      .agg(count(lit(1)), count(when(hit, 1)))
+      .collect()
+      .map(r => resolve(r.getString(0)) -> (r.getLong(1), r.getLong(2)))
+      .toMap
   }
 
   private def manifestJson(v: Int, parent: Int, op: String, rows: Long,
@@ -1023,29 +1051,22 @@ object SnapshotTable {
     //     now over only the files that genuinely mix both.
     // A merge that replaces or misses whole files — the common shapes at
     // scale — thus decodes and re-encodes nothing.
+    val reader = prev.schema.fold(spark.read)(spark.read.schema)
+    // the distinct incoming keys, read back from the delta's own files
+    // (`df` is computed once): the join side of the hit scan and the split
+    def incomingKeys: DataFrame =
+      (if (deltaFiles.nonEmpty)
+         spark.read.schema(df.schema).parquet(deltaFiles.map(f => s"$root/$f"): _*)
+       else df).select(keyCols.map(col): _*).distinct()
     val (zeroHit, fullHit, partial) =
       if (candidates.isEmpty || replaceAllPrune.isDefined)
         (Seq.empty[String], Seq.empty[String], candidates)
       else {
-        val reader = prev.schema.fold(spark.read)(spark.read.schema)
-        val keysScan =
-          if (deltaFiles.nonEmpty)
-            spark.read.schema(df.schema).parquet(deltaFiles.map(f => s"$root/$f"): _*)
-              .select(keyCols.map(col): _*).distinct()
-          else df.select(keyCols.map(col): _*).distinct()
-        val perFile = reader.parquet(candidates.map(f => s"$root/$f"): _*)
-          // input_file_name is single-source: capture it BEFORE the join
-          .select(keyCols.map(col) :+ input_file_name().as("__f"): _*)
-          .join(keysScan.withColumn("__hit", lit(1)), keyCols, "left")
-          .groupBy(col("__f"))
-          .agg(count(lit(1)).as("__n"), count(col("__hit")).as("__h"))
-          .collect()
-        val hit = perFile.flatMap { r =>
-          candidates.find(r.getString(0).endsWith)
-            .map(f => f -> (r.getLong(1), r.getLong(2)))
-        }.toMap
-        require(hit.size == perFile.length,
-          s"hit-scan file paths did not all resolve to candidates at $root")
+        val hit = hitScan(root, reader, candidates) { scan =>
+          (scan.select((keyCols :+ "__f").map(col): _*)
+             .join(incomingKeys.withColumn("__hit", lit(1)), keyCols, "left"),
+           col("__hit").isNotNull)
+        }
         // a candidate with stats but no scan row is empty — zero matches
         (candidates.filter(f => hit.get(f).forall(_._2 == 0L)),
          candidates.filter(f => hit.get(f).exists(x => x._2 > 0 && x._2 == x._1)),
@@ -1054,35 +1075,31 @@ object SnapshotTable {
     val untouched = prev.files.filterNot(candidates.toSet)
     // byte-identical replacements for the match-free candidates: hardlink
     // when the filesystem allows it, plain copy otherwise — either way the
-    // original's stats describe the new file exactly
+    // original's stats describe the new file exactly. An original without
+    // recorded stats (a legacy manifest) gets them from the copy's footer:
+    // left stats-less, it would stay a merge candidate forever. The copy
+    // never replaces an existing file: live basenames are unique per
+    // Spark write job, so a collision is a broken invariant, not a retry.
     val (copyFiles, copyStats) =
       if (zeroHit.isEmpty) (Seq.empty[String], Map.empty[String, FileStats])
       else {
-        val attempt = s"s$v-${java.util.UUID.randomUUID().toString.take(8)}"
+        val attempt = newAttempt(v)
         Files.createDirectories(Paths.get(root, "data", attempt))
         val moved = zeroHit.map { f =>
-          val fname = Paths.get(f).getFileName.toString
-          val dst = Paths.get(root, "data", attempt, fname)
-          val src = Paths.get(root, f)
-          try Files.createLink(dst, src)
-          catch { case _: UnsupportedOperationException | _: java.io.IOException =>
-            Files.copy(src, dst) }
-          f -> s"data/$attempt/$fname"
+          val n = s"data/$attempt/${Paths.get(f).getFileName}"
+          ParquetFiles.linkOrCopy(Paths.get(root, f), Paths.get(root, n))
+          f -> n
         }
+        val (known, unknown) = moved.partition { case (o, _) => prev.stats.contains(o) }
         (moved.map(_._2),
-         moved.flatMap { case (o, n) => prev.stats.get(o).map(n -> _) }.toMap)
+         known.map { case (o, n) => n -> prev.stats(o) }.toMap ++
+           computeStats(spark, root, unknown.map(_._2)))
       }
     val (survFiles, survStats, tombFiles) =
       if (partial.isEmpty || replaceAllPrune.isDefined)
         (Seq.empty[String], Map.empty[String, FileStats], Seq.empty[String])
       else {
-        val reader = prev.schema.fold(spark.read)(spark.read.schema)
         val old = reader.parquet(partial.map(f => s"$root/$f"): _*)
-        val keys =
-          if (deltaFiles.nonEmpty)
-            spark.read.schema(df.schema).parquet(deltaFiles.map(f => s"$root/$f"): _*)
-              .select(keyCols.map(col): _*).distinct()
-          else df.select(keyCols.map(col): _*).distinct()
         // ONE pass over the partially-hit files: a left join against the
         // (distinct, broadcastable) incoming keys routes each row to the
         // survivor rewrite (no key match) or the CDC tombstone pre-images
@@ -1090,7 +1107,7 @@ object SnapshotTable {
         // `removed`, outside the live list, so changesCdc streams deletes
         // without diffing row sets). Replaces an anti-join + semi-join
         // pair that scanned the touched set twice.
-        val marked = keys.withColumn("__hit", lit(1))
+        val marked = incomingKeys.withColumn("__hit", lit(1))
         val routed = old.join(marked, keyCols, "left")
           .withColumn("__kept", col("__hit").isNull)
           .drop("__hit")
@@ -1151,15 +1168,8 @@ object SnapshotTable {
     val (touched: Seq[String], fullyDeleted: Seq[String]) =
       if (candidates.isEmpty) (Nil, Nil)
       else {
-        val perFile = reader.parquet(candidates.map(f => s"$root/$f"): _*)
-          .groupBy(input_file_name().as("__f"))
-          .agg(count(lit(1)).as("__n"),
-               count(when(coalesce(predicate, lit(false)), 1)).as("__h"))
-          .collect()
-        val hit = perFile.flatMap { r =>
-          candidates.find(r.getString(0).endsWith)
-            .map(f => f -> (r.getLong(1), r.getLong(2)))
-        }.toMap
+        val hit = hitScan(root, reader, candidates)(
+          scan => (scan, coalesce(predicate, lit(false))))
         val withHits = candidates.filter(f => hit.get(f).exists(_._2 > 0))
         (withHits.filter(f => { val (n, h) = hit(f); h < n }),
          withHits.filter(f => { val (n, h) = hit(f); h == n }))
@@ -1295,26 +1305,31 @@ object SnapshotTable {
     * the small-files problem is the first maintenance job any snapshot
     * catalog needs at 100 TB ingest rates. */
   def compact(spark: SparkSession, root: String, targetFiles: Int = 1,
-              sortCols: Seq[String] = Nil): Int = {
-    val base = currentVersion(root)
-    require(base >= 1, s"nothing to compact at $root")
-    val v = base + 1
-    val cur = read(spark, root)
+              sortCols: Seq[String] = Nil): Int = rewriteCurrent(spark, root) { cur =>
     // sort-ordered rewrite (Iceberg's sort `rewrite_data_files` strategy):
     // range-partition on the sort key then sort within partitions, so the
     // rewritten files hold DISJOINT key ranges and the fresh manifest
     // stats are tight — planFiles on a key range then plans ~1 file
     // instead of every file (a hash repartition smears each key range
     // across all files, making the per-file [min, max] span the table)
-    val arranged =
-      if (sortCols.isEmpty) cur.repartition(targetFiles)
-      else {
-        import org.apache.spark.sql.functions.col
-        val keys = sortCols.map(col)
-        cur.repartitionByRange(targetFiles, keys: _*)
-          .sortWithinPartitions(keys: _*)
-      }
-    val (newFiles, stats) = writeAttempt(spark, root, v, arranged)
+    if (sortCols.isEmpty) cur.repartition(targetFiles)
+    else {
+      import org.apache.spark.sql.functions.col
+      val keys = sortCols.map(col)
+      cur.repartitionByRange(targetFiles, keys: _*)
+        .sortWithinPartitions(keys: _*)
+    }
+  }
+
+  /** Both compactions' commit: `arrange` the current rows, write them as
+    * one attempt, publish as op "compact" (fresh stats, markers carried). */
+  private def rewriteCurrent(spark: SparkSession, root: String)(
+      arrange: DataFrame => DataFrame): Int = {
+    val base = currentVersion(root)
+    require(base >= 1, s"nothing to compact at $root")
+    val v = base + 1
+    val cur = read(spark, root)
+    val (newFiles, stats) = writeAttempt(spark, root, v, arrange(cur))
     publish(root, v, manifestJson(v, base, "compact",
       stats.valuesIterator.map(_.rows).sum, newFiles, stats, cur.schema,
       txns = carriedTxns(root, base)))
@@ -1337,31 +1352,24 @@ object SnapshotTable {
     import org.apache.spark.sql.functions._
     require(zCols.size == 2 || zCols.size == 3,
       s"z-order interleaves 2 or 3 columns, got ${zCols.size}")
-    val base = currentVersion(root)
-    require(base >= 1, s"nothing to compact at $root")
-    val v = base + 1
-    val cur = read(spark, root)
-    val bits = if (zCols.size == 2) 21 else 21 // 2×21 or 3×21 ≤ 63 bits
-    // per-column [min, max] over the table: one bounded agg (2k doubles)
-    val aggs = zCols.flatMap(c =>
-      Seq(min(col(c)).cast("double"), max(col(c)).cast("double")))
-    val mm = cur.agg(aggs.head, aggs.tail: _*).head()
-    val zkey = zCols.zipWithIndex.map { case (c, i) =>
-      val lo = mm.getDouble(2 * i); val hi = mm.getDouble(2 * i + 1)
-      val span = if (hi > lo) hi - lo else 1.0
-      val rank = ((col(c).cast("double") - lit(lo)) / lit(span) *
-        lit(((1L << bits) - 1).toDouble)).cast("long")
-      shiftleft(spreadBits(rank, zCols.size), i)
-    }.reduce(_.bitwiseOR(_))
-    val arranged = cur.withColumn("__z", zkey)
-      .repartitionByRange(targetFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-    val (newFiles, stats) = writeAttempt(spark, root, v, arranged)
-    publish(root, v, manifestJson(v, base, "compact",
-      stats.valuesIterator.map(_.rows).sum, newFiles, stats, cur.schema,
-      txns = carriedTxns(root, base)))
-    v
+    rewriteCurrent(spark, root) { cur =>
+      val bits = if (zCols.size == 2) 21 else 21 // 2×21 or 3×21 ≤ 63 bits
+      // per-column [min, max] over the table: one bounded agg (2k doubles)
+      val aggs = zCols.flatMap(c =>
+        Seq(min(col(c)).cast("double"), max(col(c)).cast("double")))
+      val mm = cur.agg(aggs.head, aggs.tail: _*).head()
+      val zkey = zCols.zipWithIndex.map { case (c, i) =>
+        val lo = mm.getDouble(2 * i); val hi = mm.getDouble(2 * i + 1)
+        val span = if (hi > lo) hi - lo else 1.0
+        val rank = ((col(c).cast("double") - lit(lo)) / lit(span) *
+          lit(((1L << bits) - 1).toDouble)).cast("long")
+        shiftleft(spreadBits(rank, zCols.size), i)
+      }.reduce(_.bitwiseOR(_))
+      cur.withColumn("__z", zkey)
+        .repartitionByRange(targetFiles, col("__z"))
+        .sortWithinPartitions(col("__z"))
+        .drop("__z")
+    }
   }
 
   /** Space the low 21 bits of `x` `stride` apart (Morton spread) with the

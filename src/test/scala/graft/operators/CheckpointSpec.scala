@@ -48,4 +48,24 @@ class CheckpointSpec extends AnyFunSuite {
       .select("tile_id", "n_layers").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(before == after)
   }
+
+  test("reuse reads the lineage's own fingerprint field, not a substring of its text") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    import java.nio.file.Paths
+    val root = Files.createTempDirectory("ckpt5").toString
+    Pipeline.tilingJob(spark, root, nImages = 20)
+    val lineage = Paths.get(s"$root/images_lineage.json")
+    val JString(fp) = parse(Files.readString(lineage)) \ "fingerprint"
+    // a stale lineage whose params text happens to carry the current
+    // fingerprint must not pass for it
+    Files.writeString(lineage,
+      s"""{"stage": "images", "fingerprint": "stale", "params": {"fingerprint": "$fp"}}""")
+    val p2 = Pipeline.tilingJob(spark, root, nImages = 20)
+    assert(p2.computed.toSeq == Seq("images"), s"recomputed: ${p2.computed}")
+    assert(parse(Files.readString(lineage)) \ "fingerprint" == JString(fp))
+    val leftovers = Files.list(Paths.get(root))
+    try assert(!leftovers.anyMatch(_.getFileName.toString.endsWith(".tmp")))
+    finally leftovers.close()
+  }
 }

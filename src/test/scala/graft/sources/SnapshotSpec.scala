@@ -757,4 +757,63 @@ class SnapshotSpec extends AnyFunSuite {
     assert(commitStreamBatch(spark, root, df(6 until 8), "sR", 0L).isEmpty)
     assert(read(spark, root).count() == 8)
   }
+
+  test("merge and delete resolve scanned files exactly under a root with a space and a %") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val root = freshRoot("odd dir%41")
+    def mk(r: Range, tag: String) =
+      r.map(i => (i.toLong, s"$tag$i")).toDF("id", "s").coalesce(1)
+    commit(spark, root, mk(0 until 100, "base"))
+    commit(spark, root, mk(100 until 200, "base"))
+    commit(spark, root, mk(200 until 300, "base"))
+    val f2 = snapshot(root, 3).files.find(_.startsWith("data/s2-")).get
+    // envelope 0..259 plans all three files: file 1 every row hit, file 2
+    // none (copied), file 3 partly (split)
+    val incoming = (0 until 100) ++ (250 until 260)
+    val v = merge(spark, root,
+      incoming.map(i => (i.toLong, s"new$i")).toDF("id", "s").coalesce(1), Seq("id"))
+    val sn = snapshot(root, v)
+    val copy = sn.files.find(_.endsWith(java.nio.file.Paths.get(f2).getFileName.toString)).get
+    assert(copy != f2 && sn.stats.contains(copy))
+    assert(sn.removed.exists(_.startsWith("data/s1-")), "the fully-hit file is a tombstone")
+    val got = read(spark, root).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got.size == 300 && got(5L) == "new5" && got(150L) == "base150" &&
+      got(255L) == "new255" && got(260L) == "base260")
+    val vd = delete(spark, root, col("id") % 10 === 3)
+    val ids = read(spark, root).select("id").collect().map(_.getLong(0)).toSet
+    assert(ids == (0L until 300L).filter(_ % 10 != 3).toSet)
+    assert(changesCdc(spark, root, v, vd).count() == 30)
+    deleteRecursively(root)
+  }
+
+  test("zero-hit copy of a file without recorded stats gets them from its footer") {
+    import spark.implicits._
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.{compact, parse, render}
+    val root = freshRoot("zerohit_stats")
+    def mk(r: Range, tag: String) =
+      r.map(i => (i.toLong, s"$tag$i")).toDF("id", "s").coalesce(1)
+    commit(spark, root, mk(0 until 100, "base"))
+    commit(spark, root, mk(100 until 200, "base"))
+    val f1 = snapshot(root, 2).files.find(_.startsWith("data/s1-")).get
+    // a legacy manifest: file 1 has no recorded stats
+    val man = java.nio.file.Paths.get(root, "meta", "v2.json")
+    val stripped = parse(java.nio.file.Files.readString(man)).transformField {
+      case ("stats", JObject(fs)) => ("stats", JObject(fs.filterNot(_._1 == f1)))
+    }
+    java.nio.file.Files.writeString(man, compact(render(stripped)))
+    assert(!snapshot(root, 2).stats.contains(f1))
+    // keys outside file 1: stats-less, it is still a candidate, with zero hits
+    val v3 = merge(spark, root, mk(150 until 160, "new"), Seq("id"))
+    val sn3 = snapshot(root, v3)
+    val copy = sn3.files.find(_.endsWith(java.nio.file.Paths.get(f1).getFileName.toString)).get
+    assert(copy != f1, "the zero-hit candidate is replaced by its copy")
+    assert(sn3.stats.get(copy).map(s => (s.rows, s.cols.get("id"))) ==
+      Some((100L, Some((0.0, 99.0)))), s"copy stats ${sn3.stats.get(copy)}")
+    // …so the next merge outside it no longer plans it at all
+    val v4 = merge(spark, root, mk(170 until 180, "new"), Seq("id"))
+    assert(snapshot(root, v4).files.contains(copy))
+    assert(read(spark, root).count() == 200)
+  }
 }
