@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.{Knn, SpatialJoin, StackOps, Warp}
 import graft.queries.Engine
 import graft.sources.{ImageTable, PolygonTable}
@@ -52,24 +51,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val (cpuPre, bwPre) = probeHost()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // reduce concurrency capped (vector-buffer folds are memory-bandwidth
-      // bound in local mode; see BENCH.md §4)
-      .config("spark.sql.shuffle.partitions", math.min(16, cpus.toInt).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the bench box is a VM with multi-minute steal-time freezes (dmesg
-      // hrtimer stalls): at the default 120 s heartbeat horizon one host
-      // pause "loses" the local executor and stops the context mid-run.
-      // Timing-harness hardening only — values are irrelevant to any
-      // measured query, and a real cluster tunes these per-site anyway.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Local.cpus
+    val spark = Local.session()
 
     // ---- flagship pipeline (timed as one job graph) ----
     val nImages = Engine.nImages(sfDir)
@@ -119,11 +102,8 @@ object Bench {
     // the N→4N efficiency measurement)
     val pipelineOnly = sys.env.get("SPARK_GRAFT_PIPELINE_ONLY").contains("1")
     // SPARK_GRAFT_ONLY=q28,q56 limits the per-query loop (local iteration aid)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val inventory = (if (pipelineOnly) Map.empty[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]
-                     else SparkEntry.queries)
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .toSeq.sortBy(_._1)
+    val inventory = if (pipelineOnly) Nil
+      else SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY").toSeq.flatMap(_.split(",")))
     val perPass: Seq[Seq[(String, Double, Boolean)]] =
       (0 until passes).map { _ =>
         inventory.map { case (name, fn) =>

@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dedup-at-scale benchmark (VERDICT r3 #6): the q91/q92 pipeline class —
   * MinHash signatures → LSH band pairs → connected components → keepers —
   * on a synthetic corpus 16× the sf0.1 document scale (16k → 256k docs),
-  * at local[32]. Done-criteria measured here: completes without driver
+  * at local[SPARK_GRAFT_CPUS]. Done-criteria measured here: completes without driver
   * OOM, wall-clock within ~4× of the 16k run (per-item sublinear), and the
   * CC round count stays O(log diameter).
   *
@@ -31,16 +30,10 @@ object DedupScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val n = sys.env.getOrElse("SPARK_GRAFT_N_DOCS", "262144").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Local.session()
+    // one reducer per core for the LSH band shuffle and the CC rounds
+    spark.conf.set("spark.sql.shuffle.partitions", Local.cpus.toString)
     import spark.implicits._
 
     val docs = spark.range(n)
@@ -65,7 +58,7 @@ object DedupScaleBench {
 
     val total = tPairs + tCc
     val heapMb = (Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory) / (1 << 20)
-    println(s"""{"metric":"dedup_scale","unit":"sec","cpus":$cpus,"n_docs":$n,"n_pairs":$nPairs,"n_keepers":$nKeepers,"pairs_sec":${f"$tPairs%.1f"},"cc_sec":${f"$tCc%.1f"},"total_sec":${f"$total%.1f"},"driver_heap_mb":$heapMb}""")
+    println(s"""{"metric":"dedup_scale","unit":"sec","cpus":${Local.cpus},"n_docs":$n,"n_pairs":$nPairs,"n_keepers":$nKeepers,"pairs_sec":${f"$tPairs%.1f"},"cc_sec":${f"$tCc%.1f"},"total_sec":${f"$total%.1f"},"driver_heap_mb":$heapMb}""")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Benchmark-scale fixture generator (BENCH §10): replicates a testdata sf
@@ -22,21 +21,14 @@ object GenScale {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.drop(1).headOption.getOrElse("/tmp/testdata_sf1")
     val copies = args.drop(2).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Local.session()
     val Off = 100000000L // beyond every key in any source sf
     def rep(name: String, keyCols: Seq[String]): Unit = {
       val df = spark.read.parquet(s"$src/$name.parquet")
       (0 until copies).map { k =>
         keyCols.foldLeft(df)((d, c) => d.withColumn(c, col(c) + lit(k * Off)))
       }.reduce(_ unionByName _)
-        .repartition(cpus.toInt)
+        .repartition(Local.cpus)
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
       println(s"[gen] $name x$copies done")
     }

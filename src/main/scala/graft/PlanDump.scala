@@ -12,31 +12,19 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, suffix, list) = args.take(3)
-    val names = list.split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", math.min(16, cpus.toInt).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Local.session()
     Files.createDirectories(Paths.get(outDir))
-    names.foreach { prefix =>
-      SparkEntry.queries.filter(_._1.startsWith(prefix)).foreach {
-        case (name, fn) =>
-          try {
-            val df = fn(spark, sfDir)
-            val plan = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-            Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), plan)
-            println(s"[plandump] wrote $name")
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-          }
+    SparkEntry.select(list.split(",").toSeq).foreach { case (name, fn) =>
+      try {
+        val df = fn(spark, sfDir)
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), plan)
+        println(s"[plandump] wrote $name")
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[plandump] $name failed: ${e.getMessage}")
       }
     }
     graft.queries.Engine.clearImageCache()

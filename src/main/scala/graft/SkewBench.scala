@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.SpatialJoin
 import graft.sources.PolygonTable
@@ -17,36 +16,22 @@ import graft.sources.PolygonTable
   * ×salt polygon replication) is for. Each (salt, aqe) cell is measured
   * interleaved best-of-N (the box's noise demands it, BENCH.md §3).
   *
-  * Run at SPARK_GRAFT_CPUS=8 and =32 (tools/run_skew.sh) and compare: the
-  * salted join's 8→32 efficiency and its wall-clock vs the unsalted one
+  * Run once per core count (e.g. SPARK_GRAFT_CPUS=1 and =4) and compare: the
+  * salted join's scaling efficiency and its wall-clock vs the unsalted one
   * under identical skew; AQE on/off separates Spark's runtime skew-split
   * from the plan-level salting. */
 object SkewBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val n = sys.env.getOrElse("SPARK_GRAFT_N_POINTS", "3000000").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-
-    def session(aqe: Boolean): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", aqe.toString)
-        .config("spark.sql.adaptive.skewJoin.enabled", aqe.toString)
-        // the regime under test is the 100 TB one where the polygon side is
-        // NOT broadcastable — without this the planner broadcasts the small
-        // fixture layer and the shuffle (and therefore the skew) vanishes
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
-      s
-    }
-
-    // one warm session; the AQE flags are runtime SQL confs flipped per
-    // measurement inside run()
-    val spark = session(aqe = true)
+    val spark = Local.session()
+    // the regime under test is the 100 TB one where the polygon side is NOT
+    // broadcastable — without this the planner broadcasts the small fixture
+    // layer and the shuffle (and therefore the skew) vanishes. One reducer
+    // per core, so the salted join can use every core it is scaled to. The
+    // AQE flags are runtime SQL confs flipped per measurement inside run().
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.shuffle.partitions", Local.cpus.toString)
 
     // 30% of ids → one 64 m cell at (502000, 5299000); the rest uniform over
     // the ~5,100-cell PolygonTable domain. Deterministic closed forms.
@@ -111,7 +96,7 @@ object SkewBench {
     val fields = cells.map { case c @ (salt, aqe) =>
       s""""salt${salt}_aqe${if (aqe) "on" else "off"}":${f"${best(c)}%.3f"}"""
     }.mkString(",")
-    println(s"""{"metric":"skew_pip","unit":"sec","cpus":$cpus,"n_points":$n,"hot_cell_points":$hot,$fields}""")
+    println(s"""{"metric":"skew_pip","unit":"sec","cpus":${Local.cpus},"n_points":$n,"hot_cell_points":$hot,$fields}""")
     spark.stop()
   }
 }

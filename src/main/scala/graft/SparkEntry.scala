@@ -195,6 +195,19 @@ object SparkEntry {
     "q115_stream_trend"      -> (EngineOracle.streamTrendIncremental _),
   )
 
+  /** The registry sorted by name, restricted to names starting with one of
+    * `prefixes` (the whole registry when there are none). */
+  def select(prefixes: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] =
+    queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => prefixes.isEmpty || prefixes.exists(name.startsWith) }
+
+  /** The `oracleSql` entries whose name passes `keep`, as the JSON object
+    * the DuckDB comparison loads (in the map's own iteration order, so the
+    * dump stays byte-stable). */
+  def oracleJson(keep: String => Boolean): String =
+    oracleSql.filter { case (name, _) => keep(name) }
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Map(

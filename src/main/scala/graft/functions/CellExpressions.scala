@@ -104,16 +104,17 @@ object GraftFunctions {
   private def cd(e: Expression) = Cast(e, DoubleType)
   private def ci(e: Expression) = Cast(e, IntegerType)
   private def cl(e: Expression) = Cast(e, LongType)
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    ("zcell", es => ZCellEncode(cd(es(0)), cd(es(1)), ci(es(2)))),
-    ("hexcell", es => HexCellEncode(cd(es(0)), cd(es(1)), ci(es(2)))),
-    ("s2cell", es => S2CellEncode(cd(es(0)), cd(es(1)), ci(es(2)))),
-    ("planar_cell", es => PlanarCellEncode(cd(es(0)), cd(es(1)), cd(es(2)))),
-    ("planar_kring", es => PlanarKRing(cl(es(0)), ci(es(1)))),
-    ("vec_dot", es => VecDot(es(0), es(1))))
+  /** (SQL name, expression class, builder) */
+  private[functions] val fns: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("zcell", classOf[ZCellEncode], es => ZCellEncode(cd(es(0)), cd(es(1)), ci(es(2)))),
+    ("hexcell", classOf[HexCellEncode], es => HexCellEncode(cd(es(0)), cd(es(1)), ci(es(2)))),
+    ("s2cell", classOf[S2CellEncode], es => S2CellEncode(cd(es(0)), cd(es(1)), ci(es(2)))),
+    ("planar_cell", classOf[PlanarCellEncode], es => PlanarCellEncode(cd(es(0)), cd(es(1)), cd(es(2)))),
+    ("planar_kring", classOf[PlanarKRing], es => PlanarKRing(cl(es(0)), ci(es(1)))),
+    ("vec_dot", classOf[VecDot], es => VecDot(es(0), es(1))))
 
   /** Register on a live session (SQL-callable: `SELECT zcell(lon, lat, 9)`). */
-  def register(spark: SparkSession): Unit = fns.foreach { case (name, b) =>
+  def register(spark: SparkSession): Unit = fns.foreach { case (name, _, b) =>
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
   }
 }
@@ -123,27 +124,9 @@ object GraftFunctions {
   * (the spark-submit path of the north rule). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    def cd(x: Expression) = Cast(x, DoubleType)
-    def ci(x: Expression) = Cast(x, IntegerType)
-    def cl(x: Expression) = Cast(x, LongType)
-    e.injectFunction((FunctionIdentifier("zcell"),
-      new ExpressionInfo(classOf[ZCellEncode].getName, "zcell"),
-      (es: Seq[Expression]) => ZCellEncode(cd(es(0)), cd(es(1)), ci(es(2)))))
-    e.injectFunction((FunctionIdentifier("hexcell"),
-      new ExpressionInfo(classOf[HexCellEncode].getName, "hexcell"),
-      (es: Seq[Expression]) => HexCellEncode(cd(es(0)), cd(es(1)), ci(es(2)))))
-    e.injectFunction((FunctionIdentifier("s2cell"),
-      new ExpressionInfo(classOf[S2CellEncode].getName, "s2cell"),
-      (es: Seq[Expression]) => S2CellEncode(cd(es(0)), cd(es(1)), ci(es(2)))))
-    e.injectFunction((FunctionIdentifier("planar_cell"),
-      new ExpressionInfo(classOf[PlanarCellEncode].getName, "planar_cell"),
-      (es: Seq[Expression]) => PlanarCellEncode(cd(es(0)), cd(es(1)), cd(es(2)))))
-    e.injectFunction((FunctionIdentifier("planar_kring"),
-      new ExpressionInfo(classOf[PlanarKRing].getName, "planar_kring"),
-      (es: Seq[Expression]) => PlanarKRing(cl(es(0)), ci(es(1)))))
-    e.injectFunction((FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (es: Seq[Expression]) => VecDot(es(0), es(1))))
+    GraftFunctions.fns.foreach { case (name, cls, b) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), b))
+    }
     // custom whole-operator plan: nearest-time as-of join (graft.plans)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }

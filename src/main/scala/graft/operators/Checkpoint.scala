@@ -18,6 +18,7 @@ import org.apache.spark.sql.functions._
   * tiling job is resumable mid-pipeline (north rule). */
 class Pipeline(spark: SparkSession, rootDir: String) {
   import Pipeline.lineageFingerprint
+  import graft.Json.str
   // fingerprint map + computed list are guarded: INDEPENDENT stages may
   // run from concurrent driver threads (guide §2.6 — e.g. the flagship's
   // image leg overlapping its text chain); each stage still owns its own
@@ -70,9 +71,9 @@ class Pipeline(spark: SparkSession, rootDir: String) {
         .mkString("[", ",", "]")
       val secs = (System.nanoTime() - t0) / 1e9
       val json =
-        s"""{"stage": "$name", "fingerprint": "$f",
-           | "params": {${params.toSeq.sorted.map { case (k, v) => s""""$k": "$v"""" }.mkString(",")}},
-           | "deps": [${deps.sorted.map(d => s""""$d"""").mkString(",")}],
+        s"""{"stage": ${str(name)}, "fingerprint": "$f",
+           | "params": {${params.toSeq.sorted.map { case (k, v) => s"${str(k)}: ${str(v)}" }.mkString(",")}},
+           | "deps": [${deps.sorted.map(str).mkString(",")}],
            | "rows": $rows, "partitions": $hist,
            | "wall_s": $secs, "written_at_ms": ${System.currentTimeMillis()}}""".stripMargin
       // published after _SUCCESS by an atomic move: a reader sees either

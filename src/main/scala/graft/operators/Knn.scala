@@ -41,35 +41,17 @@ object Knn {
     (topk, resolvedIds)
   }
 
-  /** Per-invocation handle over a lazy knn call's pass caches. */
-  final class KnnCaches private[Knn] (scoped: Seq[DataFrame]) {
-    def release(): Unit = scoped.foreach(_.unpersist(false))
-  }
-
-  /** Pending handles of `knn(eager = false)` calls. The GLOBAL drain
-    * ([[releaseCaches]]) is for sequential drivers (Bench/Verify): it
-    * releases EVERY in-flight lazy call's caches, so concurrent library
-    * users must use [[knnLazy]] and release their own handle instead. */
-  private val pending = new java.util.concurrent.ConcurrentLinkedQueue[KnnCaches]()
+  /** Pass caches of `knn(eager = false)` calls still alive: a global drain
+    * for sequential drivers (Bench/Verify) that materialize each lazy result
+    * once and then call [[releaseCaches]]. */
+  private val pending = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
   /** Release every cache any `knn(eager = false)` call left alive. Call
     * AFTER materializing the lazy results (count/write); the plans stay
     * valid but re-execute the ring passes if materialized again. */
   def releaseCaches(): Unit = {
-    var h = pending.poll()
-    while (h != null) { h.release(); h = pending.poll() }
-  }
-
-  /** Lazy form with a CALLER-SCOPED release handle — the concurrent-safe
-    * API (a global releaseCaches drain would drop other threads' pending
-    * caches and silently re-run their ring passes). */
-  def knnLazy(spark: SparkSession, queries: DataFrame, candidates: DataFrame,
-              k: Int, cellSize: Double = 0.0, r0: Int = 2,
-              maxRounds: Int = 3): (DataFrame, KnnCaches) = {
-    var handle: KnnCaches = null
-    val out = knn(spark, queries, candidates, k, cellSize, r0, maxRounds,
-      eager = false, register = h => handle = h)
-    (out, handle)
+    var df = pending.poll()
+    while (df != null) { df.unpersist(false); df = pending.poll() }
   }
 
   /** cellSize ≤ 0 → auto-size from candidate density so a radius-r0 ring
@@ -87,8 +69,7 @@ object Knn {
     * drain — the Bench/Verify shape. */
   def knn(spark: SparkSession, queries: DataFrame, candidates: DataFrame,
           k: Int, cellSize: Double = 0.0, r0: Int = 2,
-          maxRounds: Int = 3, eager: Boolean = true,
-          register: KnnCaches => Unit = null): DataFrame = {
+          eager: Boolean = true): DataFrame = {
     import graft.functions.GraftFunctions.planarCell
     def finish(out: DataFrame, scoped: Seq[DataFrame]): DataFrame =
       if (eager) {
@@ -96,8 +77,7 @@ object Knn {
         scoped.foreach(_.unpersist(false))
         res
       } else {
-        val h = new KnnCaches(scoped)
-        if (register != null) register(h) else pending.add(h)
+        scoped.foreach(pending.add)
         out
       }
     val cs = if (cellSize > 0) cellSize else {

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Knn, Multimodal, Pipeline, RasterOps, Sampling, SpatialJoin, StackOps, Stencil, TimeParse, Warp}
+import graft.operators.{Knn, Multimodal, Pipeline, RasterOps, Sampling, SpatialJoin, Stencil, TimeParse, Warp}
 import graft.sources.{ImageTable, PolygonTable}
 
 /** Engine (non-SQL-expressible) pipeline queries: the warp→tile→stack flow
@@ -76,19 +76,6 @@ object Engine {
               col("n_valid_px"), col("n_elided"))
   }
 
-  /** make_stack.py trace (SURVEY.md §3.2): per-pixel stack stats via the
-    * vector aggregator; per-tile scalar summary row. */
-  def stackStatsTiles(s: SparkSession, d: String): DataFrame = {
-    val imgs = images(s, d)
-    val target = Warp.analyze(imgs, "min", "union")
-    val tiles = Warp.warpToTiles(s, imgs, target, "near")
-    StackOps.stackStats(tiles).toDF().select(
-      col("tile_id"), col("n_layers"),
-      expr("aggregate(count, 0, (a, x) -> a + x)").as("valid_px"),
-      round(expr(s"aggregate(zip_with(mean, count, (m, c) -> if(c > 0, cast(m as double), 0d)), 0d, (a, x) -> a + x)") /
-            greatest(expr("size(filter(count, c -> c > 0))"), lit(1)), 4).as("mean_of_means"))
-  }
-
   def nPolys(d: String): Int =
     if (Fix.pinned) Fix.nPoly // fixture-scale oracle pass (see Fix.scala)
     else if (d.contains("sf1")) 1300
@@ -140,20 +127,6 @@ object Engine {
       .select(col("q_id"), col("c_id"), col("dist"), col("rnk"))
   }
 
-  /** README flagship: warp two layer sets to a common grid, reduce each to a
-    * composite (per-pixel mean), difference, stats. */
-  def diffStats(s: SparkSession, d: String): DataFrame = {
-    val n = nImages(d)
-    val imgs = images(s, d)
-    val half = n / 2
-    val a = imgs.filter(substring(col("image_id"), 5, 8).cast("long") < half)
-    val b = imgs.filter(substring(col("image_id"), 5, 8).cast("long") >= half)
-    val target = Warp.analyze(imgs, "min", "union")
-    val ta = StackOps.compositeMean(Warp.warpToTiles(s, a, target, "near"), label = "a")
-    val tb = StackOps.compositeMean(Warp.warpToTiles(s, b, target, "near"), label = "b")
-    RasterOps.tileStats(RasterOps.tileDiff(ta, tb))
-  }
-
   /** Stencil sweep: gaussian smooth + slope over warped tiles (tile+halo). */
   def stencilGauss(s: SparkSession, d: String): DataFrame = {
     val imgs = images(s, d)
@@ -176,12 +149,6 @@ object Engine {
     }.toDF("image_id", "w_trim", "h_trim", "ulx_trim", "uly_trim", "outline_wkb_len")
   }
 
-  /** Point sampling join: window median+NMAD per (point, image) pair.
-    * Point count divided down: each point fans out to every covering image. */
-  def pointSample(s: SparkSession, d: String): DataFrame =
-    Sampling.pointSample(s, PolygonTable.points(s, nPoints(d) / 4), images(s, d),
-      cellSize = 256.0, pad = 1)
-
   /** Profile extraction across the region (line densify + sampling join). */
   def profileExtract(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ImageTable.{X0, Y0}
@@ -197,10 +164,6 @@ object Engine {
       .map(id => (id, TimeParse.parse(id).getOrElse(-1L)))
       .toDF("image_id", "parsed_us")
   }
-
-  /** Multimodal: decode → per-image feature table. */
-  def imgFeatures(s: SparkSession, d: String): DataFrame =
-    Multimodal.imageFeatures(s, images(s, d))
 
   /** Multimodal: thumbnail resize (binary in, binary out, caption intact). */
   def imgResize(s: SparkSession, d: String): DataFrame =
@@ -258,18 +221,6 @@ object Engine {
       val rows = "\"rows\": (\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toLong).getOrElse(-1L)
       (stage, rows)
     }.toSeq.toDF("stage", "rows")
-  }
-
-  /** Robust Theil–Sen per-cell trend (the ma_linreg robust variant),
-    * restricted to a clipped tile window to bound the O(n²) slope pairs. */
-  def theilSenTiles(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val imgs = images(s, d)
-    val target = Warp.analyze(imgs, "min", "union")
-    val tiles = StackOps.stackClip(
-      Warp.warpToTiles(s, imgs, target, "near"), 0, 0, 3, 3)
-    StackOps.theilSen(StackOps.toCells(tiles))
-      .select(col("cell_id"), col("n"), round(col("slope_yr"), 4).as("slope_yr"))
   }
 
   /** ANN over embeddings: cosine-LSH bucket join + exact re-rank (the scale
@@ -377,18 +328,6 @@ object Engine {
       .agg(count(lit(1)).as("n_tiles"), sum(col("n_valid")).as("n_valid_px"))
   }
 
-  /** RANSAC per-cell trend over the clipped tile window (robust variant
-    * beside q58's Theil–Sen). */
-  def ransacTiles(s: SparkSession, d: String): DataFrame = {
-    val imgs = images(s, d)
-    val target = Warp.analyze(imgs, "min", "union")
-    val tiles = StackOps.stackClip(
-      Warp.warpToTiles(s, imgs, target, "near"), 0, 0, 3, 3)
-    StackOps.ransac(StackOps.toCells(tiles))
-      .select(col("cell_id"), col("n"), round(col("slope_yr"), 4).as("slope_yr"),
-              col("n_inliers"))
-  }
-
   /** Subsampled scan (ds_getma_sub): per-image capped dims + scaled res. */
   def subsampleScan(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -426,19 +365,5 @@ object Engine {
       (img.image_id, px.count(_ == img.ndv.toFloat),
        outside.count(_ == true), opened.count(_ == true))
     }.toDF("image_id", "n_invalid", "n_outside", "n_opened")
-  }
-
-  /** Per-pixel OLS trend over the stack (ma_linreg analog), summarized. */
-  def trendTiles(s: SparkSession, d: String): DataFrame = {
-    val imgs = images(s, d)
-    val target = Warp.analyze(imgs, "min", "union")
-    val tiles = Warp.warpToTiles(s, imgs, target, "near")
-    val ndv = ImageTable.Ndv
-    StackOps.trend(tiles).toDF().select(
-      col("tile_id"),
-      expr(s"size(filter(slope_yr, v -> v != ${ndv}f))").as("n_trend_px"),
-      round(expr(s"aggregate(filter(slope_yr, v -> v != ${ndv}f), 0d, (a, x) -> a + cast(x as double))") /
-            greatest(expr(s"size(filter(slope_yr, v -> v != ${ndv}f))"), lit(1)), 4)
-        .as("mean_slope_yr"))
   }
 }

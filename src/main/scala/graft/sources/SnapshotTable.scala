@@ -604,6 +604,10 @@ object SnapshotTable {
                            txn: Option[(String, Long)] = None,
                            txns: Map[String, Long] = Map.empty,
                            cdcOff: Boolean = false): String = {
+    // every string is escaped: stream ids embed caller paths (e.g.
+    // "statsview:/tmp/…"), and one id with a quote would otherwise corrupt
+    // every later manifest (the merged txns map carries forward forever)
+    import graft.Json.{str => js}
     def jd(d: Double): String =
       if (d.isNaN || d.isInfinite) "null" else d.toString
     val statsJson = files.filter(stats.contains).map { f =>
@@ -629,22 +633,6 @@ object SnapshotTable {
        | "removed": [${removed.map(js).mkString(", ")}],
        | "ts_ms": ${System.currentTimeMillis()},
        | "schema": ${schema.json}}""".stripMargin
-  }
-
-  /** JSON string literal with full escaping. Stream ids embed caller paths
-    * (e.g. "statsview:/tmp/…"); unescaped interpolation would let one id
-    * containing a quote/backslash corrupt every subsequent manifest (the
-    * merged txns map carries forward forever). File names and stat column
-    * names go through the same escape — free, and closes the class. */
-  private def js(s: String): String = {
-    val b = new StringBuilder(s.length + 2).append('"')
-    s.foreach {
-      case '"'  => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.append('"').toString
   }
 
   /** Lease window for abandoned publish claims: a claim older than this

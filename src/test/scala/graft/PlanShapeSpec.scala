@@ -4,9 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TestSpark
 
 /** CI guard for the executed-plan shapes the 100 TB design rests on
-  * (BENCH.md §6; previously only the manual PlanCheck diagnostic):
+  * (BENCH.md §6):
   *  - the LSH/banded pair joins must never regress to a nested-loop or
-  *    cartesian shape;
+  *    cartesian shape, and the ANN paths must carry no Scala UDF;
   *  - scans must prune columns and push filters down to parquet.
   * Runs the real queries at sf0.001 so AQE's FINAL plan is inspected, not
   * the initial one. */
@@ -26,10 +26,17 @@ class PlanShapeSpec extends AnyFunSuite {
         ("q24_minhash_pairs", queries.Text.minhashPairs(spark, sf)),
         ("q28_emb_neardup", queries.Vec.embNearDup(spark, sf)),
         ("q56_phash_dedup", queries.Engine.phashDedup(spark, sf)),
-        ("q59_ann_lsh", queries.Engine.annLsh(spark, sf)))) {
+        ("q59_ann_lsh", queries.Engine.annLsh(spark, sf)),
+        ("q64_ann_ivf", queries.Engine.annIvf(spark, sf)),
+        ("q93_ann_lsh_exact", queries.EngineOracle.annLshExact(spark, sf)),
+        ("q94_ann_ivf_exact", queries.EngineOracle.annIvfExact(spark, sf)))) {
       val plan = executedPlan(df)
       assert(!plan.contains("BroadcastNestedLoopJoin"), s"$name planned a BNLJ")
       assert(!plan.contains("CartesianProduct"), s"$name planned a cartesian product")
+      // the ANN bucket keys / probes are codegen Expressions (LshBucketKeys /
+      // IvfProbe), never a ScalaUDF (BENCH.md §6 records UDF=false)
+      if (name.contains("_ann_"))
+        assert(!plan.contains("UDF"), s"$name planned a UDF")
     }
   }
 

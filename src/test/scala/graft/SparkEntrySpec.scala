@@ -16,6 +16,23 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.size == 108, s"oracles: ${SparkEntry.oracleSql.size}")
   }
 
+  test("oracle dump parses back to every twin SQL text exactly") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    val JObject(fields) = parse(SparkEntry.oracleJson(_ => true))
+    assert(fields.size == 108, s"oracles: ${fields.size}")
+    assert(fields.map(_._1).toSet == SparkEntry.oracleSql.keySet)
+    fields.foreach { case (k, v) =>
+      assert(v == JString(SparkEntry.oracleSql(k)), s"$k does not round-trip")
+    }
+  }
+
+  test("select sorts the registry and filters it by name prefix") {
+    assert(SparkEntry.select(Nil).map(_._1) == SparkEntry.queries.keys.toSeq.sorted)
+    assert(SparkEntry.select(Seq("q93", "q04")).map(_._1) ==
+      Seq("q04_trend_ols", "q93_ann_lsh_exact"))
+  }
+
   test("query names are well-formed qNN_ prefixes") {
     val bad = SparkEntry.queries.keys.filterNot(_.matches("q\\d{2,3}_[a-z0-9_]+"))
     assert(bad.isEmpty, bad.toString)

@@ -68,4 +68,17 @@ class CheckpointSpec extends AnyFunSuite {
     try assert(!leftovers.anyMatch(_.getFileName.toString.endsWith(".tmp")))
     finally leftovers.close()
   }
+
+  test("a param value with quotes and a backslash still resumes") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("ckpt6").toString
+    def run(): Pipeline = {
+      val p = new Pipeline(spark, root)
+      p.stage("srs", Map("crs" -> "GEOGCS[\"WGS 84\"]\\x")) { Seq(1, 2, 3).toDF("v") }
+      p
+    }
+    assert(run().computed.toSeq == Seq("srs"))
+    val p2 = run()
+    assert(p2.computed.isEmpty, s"recomputed: ${p2.computed}")
+  }
 }

@@ -133,7 +133,7 @@ class KnnSpec extends AnyFunSuite {
     val cand = Seq(("c1", 0.0, 0.0, 0.0, 0L), ("c2", 10.0, 0.0, 0.0, 0L))
       .toDF("pt_id", "x", "y", "z", "ts_us")
     val q = Seq(("q1", 1.0, 1.0, 0.0, 0L)).toDF("pt_id", "x", "y", "z", "ts_us")
-    val got = Knn.knn(spark, q, cand, k = 5, cellSize = 4.0, maxRounds = 3)
+    val got = Knn.knn(spark, q, cand, k = 5, cellSize = 4.0)
       .collect()
     assert(got.length == 2)
   }
