@@ -177,22 +177,22 @@ object SparkEntry {
     "q107_stream_snapshot"   -> (Stream.streamSnapshotSink _),
     // round-6: q41 recomputed incrementally via a snapshot-catalog
     // materialized view (CDC-driven O(delta) refresh); same strict twin
-    "q108_stack_stats_incr"  -> (EngineOracle.stackCellsIncremental _),
+    "q108_stack_stats_incr"  -> (ViewProtocol.stackCellsIncremental _),
     // round-6: overview-pyramid warp (gdaladdo 'average' + GDAL level pick)
     "q109_ovr_warp"          -> (EngineOracle.ovrWarpCells _),
     // round-6: q42's OLS trend recomputed incrementally (CDC-driven
     // materialized view of the normal-equation moments); same strict twin
-    "q110_trend_incr"        -> (EngineOracle.trendCellsIncremental _),
+    "q110_trend_incr"        -> (ViewProtocol.trendCellsIncremental _),
     // round-7: the incremental views driven through NON-APPEND source
     // churn (merge corrupt→restore, delete, re-append) — the refresh
     // engine's recompute path, strict-oracled against the batch twins
-    "q111_stack_incr_churn"  -> (EngineOracle.stackCellsIncrementalChurn _),
-    "q112_trend_incr_churn"  -> (EngineOracle.trendCellsIncrementalChurn _),
+    "q111_stack_incr_churn"  -> (ViewProtocol.stackCellsIncrementalChurn _),
+    "q112_trend_incr_churn"  -> (ViewProtocol.trendCellsIncrementalChurn _),
     // round-7: the lossy JPEG codec leg — PSNR ≥ 40 dB re-encode invariant
     // exercised non-vacuously, per-image hash-gated (q55's technique)
     "q113_jpeg_roundtrip"    -> (Engine.jpegAudit _),
-    "q114_stream_view"       -> (EngineOracle.streamViewIncremental _),
-    "q115_stream_trend"      -> (EngineOracle.streamTrendIncremental _),
+    "q114_stream_view"       -> (ViewProtocol.streamViewIncremental _),
+    "q115_stream_trend"      -> (ViewProtocol.streamTrendIncremental _),
   )
 
   /** The registry sorted by name, restricted to names starting with one of

@@ -119,8 +119,7 @@ object SpatialJoin {
     // cell join, and `tiles` is consumed exactly once — re-deriving the
     // tile-id set from the stack would re-run the upstream warp)
     val ulx = target.ulx; val uly = target.uly; val res = target.res
-    val ntx = (target.w + tileSize - 1) / tileSize
-    val nty = (target.h + tileSize - 1) / tileSize
+    val (ntx, nty) = Warp.tileGrid(target, tileSize)
     val cs = tileSize * res
     val cands = polys.select("poly_id", "geom_wkb", "xmin", "ymin", "xmax", "ymax")
       .flatMap { r =>

@@ -40,6 +40,10 @@ final case class BandTileRow(
 object Warp {
   val TileSize = 64
 
+  /** Tile columns and rows (ntx, nty) that cover `target`. */
+  private[graft] def tileGrid(target: GridSpec, tileSize: Int = TileSize): (Int, Int) =
+    ((target.w + tileSize - 1) / tileSize, (target.h + tileSize - 1) / tileSize)
+
   /** Stage A. Strategies follow `parse_res`/`parse_extent` (`warplib.py:
     * 312-419`); 'first' = lowest image_id (the reference's list order).
     * `tSrs` resolves the TARGET CRS (`parse_srs` `warplib.py:264-310`):
@@ -173,7 +177,7 @@ object Warp {
                   kernel: String = "near", tileSize: Int = TileSize,
                   datum: String = Proj.Wgs84): Dataset[TileRow] = {
     import spark.implicits._
-    val ntx = (target.w + tileSize - 1) / tileSize
+    val ntx = tileGrid(target, tileSize)._1
     images.as[ImageRow].flatMap { img =>
       warpOne(img, target, kernel, tileSize, ntx, datum)
     }
@@ -194,7 +198,7 @@ object Warp {
                        datum: String = Proj.Wgs84): Dataset[BandTileRow] = {
     import spark.implicits._
     require(nBands >= 1, s"nBands $nBands")
-    val ntx = (target.w + tileSize - 1) / tileSize
+    val ntx = tileGrid(target, tileSize)._1
     images.as[ImageRow].flatMap { img =>
       (0 until nBands).iterator.flatMap { b =>
         val bandImg = img.copy(
@@ -242,7 +246,7 @@ object Warp {
       val ext = fixedExtent.getOrElse(
         if (sameCrs) g.extent else Proj.projectExtent(g.extent, g.crs, crs, datum = datum))
       val target = GridSpec.fromExtentRes(ext, res, crs)
-      val ntx = (target.w + tileSize - 1) / tileSize
+      val ntx = tileGrid(target, tileSize)._1
       warpOne(img, target, kernel, tileSize, ntx, datum)
     }
   }

@@ -3,9 +3,10 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{RasterOps, Sampling, StackOps, Warp}
-import graft.sources.{ParquetFiles, PolygonTable}
+import graft.sources.PolygonTable
 
-/** DuckDB-oracle forms of the heavy engine pipelines (VERDICT r2 #1).
+/** DuckDB-oracle forms of the heavy engine pipelines (VERDICT r2 #1) and
+  * their SQL twins.
   *
   * The driver hash-compares query output against pure SQL re-derivations, so
   * these queries run the REAL operators (warpToTiles → TileStatsAgg /
@@ -33,364 +34,45 @@ import graft.sources.{ParquetFiles, PolygonTable}
   * README flagship diff, geolib.py:914-1016 (sample).
   */
 object EngineOracle {
-  /** Tile edge / pixel count — all (tx, ty, pidx) ↔ (px, py) decodes below
-    * derive from the REAL tile size so an engine TileSize change cannot
-    * silently shear the emitted pixel coordinates (the generated DuckDB
-    * twins embed the matching constants at generation time). */
-  private val T = Warp.TileSize
-  private val T2 = T * T
-
   /** Image index parsed from `img_%08d_...` ids. */
-  private def idx: Column = substring(col("image_id"), 5, 8).cast("int")
+  private[queries] def idx: Column = substring(col("image_id"), 5, 8).cast("int")
 
   /** Quantized (integer-payload), ripple-free layers. */
-  private def quantNoRipple(imgs: DataFrame): DataFrame =
+  private[queries] def quantNoRipple(imgs: DataFrame): DataFrame =
     imgs.filter(idx % 3 =!= 2 && col("fmt") =!= "raw")
 
   /** Trend subset: quantized + hour divisible by 3 (exact OLS t sums). */
-  private def trendSubset(imgs: DataFrame): DataFrame =
+  private[queries] def trendSubset(imgs: DataFrame): DataFrame =
     imgs.filter(idx % 3 === 0 && col("fmt") =!= "raw")
 
   /** Explode per-pixel stat arrays to one row per valid cell, addressed by
-    * global target pixel (px, py) — SQL-joinable without tile arithmetic. */
-  private def explodeStats(stats: DataFrame, ntx: Int, fields: Seq[String]): DataFrame = {
-    val zipped = stats.select(col("tile_id"),
-      posexplode(arrays_zip(fields.map(col): _*)).as(Seq("pidx", "z")))
-    val cols = Seq(
-      ((col("tile_id") % ntx) * T + col("pidx") % T).cast("int").as("px"),
-      (expr(s"cast(tile_id div $ntx as int)") * T +
-        expr(s"cast(pidx div $T as int)")).as("py"),
-      col("z.count").as("n")) ++
+    * global target pixel (px, py) — SQL-joinable without tile arithmetic.
+    * `keys` are carried through ahead of (px, py). */
+  private[queries] def explodeStats(stats: DataFrame, ntx: Int, fields: Seq[String],
+                                    keys: String*): DataFrame = {
+    val zipped = stats.select(keys.map(col) ++ Seq(col("tile_id"),
+      posexplode(arrays_zip(fields.map(col): _*)).as(Seq("pidx", "z"))): _*)
+    val cols = keys.map(col) ++ TileCells.tilePixelXY(ntx) ++ Seq(col("z.count").as("n")) ++
       fields.filter(_ != "count").map(f => col(s"z.$f").cast("double").as(f))
     zipped.select(cols: _*).filter(col("n") > 0)
   }
 
   /** Per-pixel fields of the stack-stats and trend oracles. */
-  private val StatsFields = Seq("count", "mean", "std", "vmin", "vmax")
-  private val TrendFields = Seq("count", "slope_yr", "intercept", "r2", "t_stat")
-
-  /** Detach a result from scratch inputs the caller is about to delete:
-    * a DISTRIBUTED parquet write to a JVM-lifetime temp dir, re-read
-    * lazily. The collect()+createDataFrame alternative materializes every
-    * row single-threaded on the driver — measured 45 s of q108's 64 s at
-    * sf0.1 (10.6M rows); this form is the same rows in ~2 s and keeps the
-    * returned plan a plain scan the driver can re-run. */
-  private def detachViaParquet(s: SparkSession, df: DataFrame): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_detach").toString
-    sys.addShutdownHook(graft.sources.SnapshotTable.deleteRecursively(dir))
-    val path = s"$dir/out"
-    df.write.parquet(path)
-    s.read.parquet(path)
-  }
+  private[queries] val StatsFields = Seq("count", "mean", "std", "vmin", "vmax")
+  private[queries] val TrendFields = Seq("count", "slope_yr", "intercept", "r2", "t_stat")
 
   /** q41 oracle form: per-pixel stack count/mean/std/min/max over the
     * quantized subset, via the production warp + vector-aggregator path. */
   def stackCells(s: SparkSession, d: String): DataFrame = {
-    val imgs = quantNoRipple(Engine.images(s, d))
-    val target = Warp.analyze(imgs, "min", "union")
-    val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
-    explodeStats(StackOps.stackStats(Warp.warpToTiles(s, imgs, target, "near")).toDF(),
-      ntx, StatsFields)
+    val st = TileCells.nearStack(s, quantNoRipple(Engine.images(s, d)))
+    explodeStats(StackOps.stackStats(st.tiles).toDF(), st.ntx, StatsFields)
   }
-
-  /** q108: q41's per-pixel stack stats, computed INCREMENTALLY — the same
-    * images land in a snapshot-catalog tiles table across three commits,
-    * and a materialized view of mergeable moments advances by CDC after
-    * each (`StatsView.refresh`: O(delta) scan + stats-bounded merge). The
-    * strict oracle is q41's twin VERBATIM: any double-counted replay,
-    * missed delta, or wrong old⊕new merge shifts an exact integer moment
-    * and fails the hash. A deliberate re-refresh with no new source data
-    * and a replayed refresh marker both prove idempotent (version-pinned
-    * inside the run). */
-  def stackCellsIncremental(s: SparkSession, d: String): DataFrame =
-    appendViewChain(s, "q108", quantNoRipple(Engine.images(s, d)),
-      b => idx % 3 === b,
-      (tilesRoot, mvRoot) => graft.operators.StatsView.refresh(s, tilesRoot, mvRoot),
-      mvRoot => graft.operators.StatsView.stats(s, mvRoot), StatsFields)
-
-  /** q114: the full STREAM → CATALOG → VIEW chain — the composition of
-    * q107 (streaming ingest commits snapshot epochs exactly-once) and
-    * q108 (a materialized view advances off the catalog's CDC) that
-    * neither row exercises end-to-end. The q41 tile batches land as
-    * parquet FILES in a streaming source dir; a file-source stream
-    * (`StreamOps.parquetStreamToSnapshot`, maxFilesPerTrigger=1) commits
-    * one APPEND snapshot per micro-batch with the (streamId, epochId) txn
-    * marker; `StatsView.refresh` folds each epoch's delta. The run
-    * "crashes" after epochs 0–1, re-delivers epoch 1 straight into the
-    * sink (must be a no-op commit AND a no-op refresh — exactly-once
-    * holds through the VIEW, not just the table), then resumes from the
-    * checkpoint for epoch 2. The strict oracle is q41's twin VERBATIM: a
-    * replayed epoch that double-folds, a missed delta, or a stream commit
-    * that breaks the view's append-only contract shifts an exact integer
-    * moment and fails the hash. */
-  def streamViewIncremental(s: SparkSession, d: String): DataFrame =
-    streamViewChain(s, "q114",
-      quantNoRipple(Engine.images(s, d)), b => idx % 3 === b,
-      (tilesRoot, mvRoot) => graft.operators.StatsView.refresh(s, tilesRoot, mvRoot),
-      mvRoot => graft.operators.StatsView.stats(s, mvRoot),
-      StatsFields)
-
-  /** q115: the stream → catalog → view chain for the TREND view — same
-    * protocol as q114 (crash after epochs 0–1, epoch-1 replay must be a
-    * no-op commit AND refresh, checkpoint resume for epoch 2), strict
-    * oracle = q42's batch twin verbatim. Together q114/q115 prove BOTH
-    * view types advance correctly off streamed epoch commits. */
-  def streamTrendIncremental(s: SparkSession, d: String): DataFrame =
-    streamViewChain(s, "q115",
-      trendSubset(Engine.images(s, d)), b => floor(idx / 9) % 3 === b,
-      (tilesRoot, mvRoot) => graft.operators.TrendView.refresh(s, tilesRoot, mvRoot),
-      mvRoot => graft.operators.TrendView.trend(s, mvRoot),
-      TrendFields)
-
-  /** Shared q114/q115 driver: land 3 tile batches as files → stream them
-    * into the catalog (one epoch commit per micro-batch) → refresh the
-    * view after each stream leg, with the crash/replay/resume protocol
-    * described on [[streamViewIncremental]]. */
-  private def streamViewChain(s: SparkSession, tag: String, imgs: DataFrame,
-                              batchPred: Int => Column,
-                              refresh: (String, String) => Long,
-                              finished: String => DataFrame,
-                              fields: Seq[String]): DataFrame =
-    viewDriver(s, tag, imgs, finished, fields) { (target, base) =>
-      import java.nio.file.{Files, Paths}
-      val srcDir = s"$base/src"; val tilesRoot = s"$base/tiles"
-      val ckptDir = s"$base/ckpt"; val mvRoot = s"$base/mv"
-      Files.createDirectories(Paths.get(srcDir))
-      val streamId = s"${tag}_tiles"
-      def tilesOf(b: Int) =
-        Warp.warpToTiles(s, imgs.filter(batchPred(b)), target, "near").toDF()
-      val tileSchema = tilesOf(0).schema
-      def land(b: Int): Unit = {
-        val dst = Paths.get(srcDir, s"f$b.parquet")
-        ParquetFiles.writeOneFile(s, tilesOf(b), dst)
-        // deterministic pickup order for the file source
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1704067200000L + b * 2000L))
-      }
-      def label[T](what: String)(body: => T): T = {
-        s.sparkContext.setJobDescription(s"$tag $what") // guide §1.5
-        try body finally s.sparkContext.setJobDescription(null)
-      }
-      // the three epoch builds are INDEPENDENT inputs — overlap them (guide
-      // §2.6): f0/f1 land concurrently, and f2 is built into a staging path
-      // during the leg-1/refresh driver phases (it must stay invisible to
-      // the file source until the resume leg) and only MOVED into the
-      // source dir at its protocol step. Same files, same mtimes, same
-      // pickup order — only the idle driver-phase cores get used.
-      val f2staging = Paths.get(base, "stage_f2.parquet")
-      Overlap(s) { ov =>
-        val l0 = ov.fork { land(0) }
-        val l1 = ov.fork { land(1) }
-        val l2 = ov.fork { ParquetFiles.writeOneFile(s, tilesOf(2), f2staging) }
-        label("land epochs 0,1") { l0.get(); l1.get() }
-        label("stream leg 1") {
-          val q1 = graft.streaming.StreamOps.parquetStreamToSnapshot(
-            s, srcDir, tilesRoot, ckptDir, streamId, tileSchema)
-          q1.processAllAvailable(); q1.stop() // "crash" after epochs 0,1
-        }
-        require(graft.sources.SnapshotTable.currentVersion(tilesRoot) == 2,
-          "expected one snapshot per epoch")
-        require(label("refresh epochs 0,1") { refresh(tilesRoot, mvRoot) } == 2)
-        // crash-window replay of epoch 1: no-op commit, then no-op refresh
-        val replay = label("replay epoch 1") {
-          graft.sources.SnapshotTable.commitStreamBatch(
-            s, tilesRoot, tilesOf(1), streamId, 1L)
-        }
-        require(replay.isEmpty, s"replayed epoch 1 must be a no-op, got $replay")
-        val vBefore = graft.sources.SnapshotTable.currentVersion(mvRoot)
-        require(refresh(tilesRoot, mvRoot) == 2)
-        require(graft.sources.SnapshotTable.currentVersion(mvRoot) == vBefore,
-          "a refresh after a replayed epoch must not commit")
-        label("land epoch 2") {
-          l2.get()
-          val dst = Paths.get(srcDir, "f2.parquet")
-          Files.move(f2staging, dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1704067200000L + 2 * 2000L))
-        }
-        label("stream leg 2") {
-          val q2 = graft.streaming.StreamOps.parquetStreamToSnapshot(
-            s, srcDir, tilesRoot, ckptDir, streamId, tileSchema)
-          q2.processAllAvailable(); q2.stop() // resume: only f2 → epoch 2
-        }
-        require(graft.sources.SnapshotTable.currentVersion(tilesRoot) == 3,
-          "resume must deliver exactly the one new epoch")
-        require(label("refresh epoch 2") { refresh(tilesRoot, mvRoot) } == 3)
-      }
-    }
-
-  /** q110: q42's per-pixel OLS trend, computed INCREMENTALLY — the trend
-    * stack lands in a snapshot-catalog table across three commits and a
-    * materialized view of the normal-equation moments (Σt, Σt², Σv, Σtv,
-    * Σv², count, t-envelope) advances by CDC after each
-    * (`TrendView.refresh`); slope/intercept/r²/T0 are then finished from
-    * the stored moments by the SAME `TileTrendAgg.finish` as the batch
-    * path. The strict oracle is q42's DuckDB twin VERBATIM (exact dyadic t
-    * on the 3-hour grid → moment sums associate), so any double-counted
-    * replay, missed delta, or wrong old⊕new merge fails the hash. */
-  def trendCellsIncremental(s: SparkSession, d: String): DataFrame =
-    // trendSubset already pins idx % 3 == 0 and drops (idx/3) % 3 == 0
-    // (raw fmt) — batch on idx/9 so all three commits are non-empty
-    appendViewChain(s, "q110", trendSubset(Engine.images(s, d)),
-      b => floor(idx / 9) % 3 === b,
-      (tilesRoot, mvRoot) => graft.operators.TrendView.refresh(s, tilesRoot, mvRoot),
-      mvRoot => graft.operators.TrendView.trend(s, mvRoot), TrendFields)
-
-  /** The frame every view protocol driver (q108, q110–q112, q114, q115)
-    * shares: the warp grid of `imgs`, a scratch dir `base` holding the
-    * tiles table (`base/tiles`) and the view (`base/mv`), the caller's
-    * protocol `drive(target, base)`, then the finished view exploded and
-    * detached before the scratch is deleted. */
-  private def viewDriver(s: SparkSession, tag: String, imgs: DataFrame,
-                         finished: String => DataFrame, fields: Seq[String])(
-      drive: (graft.geo.GridSpec, String) => Unit): DataFrame = {
-    val target = Warp.analyze(imgs, "min", "union")
-    val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
-    val base = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
-    try ParquetFiles.withFatRowScanConf(s) {
-      drive(target, base)
-      detachViaParquet(s, explodeStats(finished(s"$base/mv"), ntx, fields))
-    } finally graft.sources.SnapshotTable.deleteRecursively(base)
-  }
-
-  /** Append-protocol driver shared by q108/q110: commit each of three
-    * warped batches and refresh the view after every commit, then prove a
-    * refresh with nothing new to fold is a no-op. Batches are independent
-    * inputs, so while batch b commits/refreshes, the warps of b+1.. fill
-    * their caches on the idle cores of the driver-side phases (guide
-    * §2.6); the commit→refresh protocol itself stays strictly serial. */
-  private def appendViewChain(s: SparkSession, tag: String, imgs: DataFrame,
-                              batchPred: Int => Column,
-                              refresh: (String, String) => Long,
-                              finished: String => DataFrame,
-                              fields: Seq[String]): DataFrame =
-    viewDriver(s, tag, imgs, finished, fields) { (target, base) =>
-      val tilesRoot = s"$base/tiles"; val mvRoot = s"$base/mv"
-      val cached = (0 until 3).map(b => Warp.warpToTiles(s,
-          imgs.filter(batchPred(b)), target, "near").toDF()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      try Overlap(s) { ov =>
-        cached.head.count() // the immediately-needed batch first
-        val prefetch = cached.tail.map(df => ov.fork { df.count() })
-        cached.zipWithIndex.foreach { case (df, b) =>
-          if (b > 0) prefetch(b - 1).get() // cached before its commit
-          graft.sources.SnapshotTable.commit(s, tilesRoot, df)
-          val covered = refresh(tilesRoot, mvRoot)
-          require(covered == b + 1, s"refresh covered v$covered, expected v${b + 1}")
-        }
-      } finally cached.foreach(_.unpersist(blocking = false))
-      // idempotence: nothing new to fold → marker unchanged, no commit
-      val vBefore = graft.sources.SnapshotTable.currentVersion(mvRoot)
-      require(refresh(tilesRoot, mvRoot) == 3)
-      require(graft.sources.SnapshotTable.currentVersion(mvRoot) == vBefore,
-        "a no-op refresh must not commit")
-    }
-
-  /** Shared churn driver for q111/q112: land `imgs` in a snapshot tiles
-    * table through a NON-APPEND history — append b0, append b1, MERGE that
-    * corrupts b0's payloads (+1 on valid pixels), MERGE that restores
-    * them, row-level DELETE of b1, re-append of b1, append b2 — refreshing
-    * the view after EVERY commit. The final live state equals three plain
-    * appends of `imgs`, so the strict oracle is the batch twin verbatim;
-    * any adds-only double-count (corrupt kept + restore added), stale
-    * deleted moment, or missed recompute leaves the +1 shift or a ghost
-    * layer in the exact integer moments and fails the hash. */
-  private def churnViewChain(s: SparkSession, tag: String, imgs: DataFrame,
-                             batchOf: Column, batchSql: String,
-                             refresh: (String, String) => Long,
-                             finished: String => DataFrame,
-                             fields: Seq[String]): DataFrame =
-    viewDriver(s, tag, imgs, finished, fields) { (target, base) =>
-      churnSnapshots(s, imgs, target, s"$base/tiles", batchOf, batchSql,
-        () => refresh(s"$base/tiles", s"$base/mv"))
-    }
-
-  private def churnSnapshots(s: SparkSession, imgs: DataFrame,
-                             target: graft.geo.GridSpec, tilesRoot: String,
-                             batchOf: Column, batchSql: String,
-                             refresh: () => Long): Unit = {
-    val ST = graft.sources.SnapshotTable
-    // b0's tiles feed three commits (append, corrupt-merge, restore-merge)
-    // and b1's two — persist each batch's warp ONCE instead of re-running
-    // the image-scan + kernel per consumer (within this invocation only;
-    // released in the caller's finally)
-    val tileCache = scala.collection.mutable.Map.empty[Int, DataFrame]
-    def tiles(b: Int): DataFrame = tileCache.getOrElseUpdate(b,
-      Warp.warpToTiles(s, imgs.filter(batchOf === b), target, "near").toDF()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    def step(v: Long)(commit: => Unit): Unit = {
-      commit
-      val covered = refresh()
-      require(covered == v, s"refresh covered v$covered, expected v$v")
-    }
-    // b1/b2's warps are independent of the first protocol steps — overlap
-    // them (guide §2.6): b0 materializes on the protocol path first (s1
-    // needs it now), then the b1/b2 cache fills ride the idle cores of
-    // s1/s2's driver-side phases. Registration happens on THIS thread
-    // (tileCache is not thread-safe); the background work is only the
-    // count() that materializes the already-registered persist.
-    Seq(0, 1, 2).foreach(tiles)
-    // +1-corruption as a typed map, not a `transform(...)` higher-order
-    // expression: HOFs evaluate their lambda INTERPRETED per element
-    // (measured ~40 s of executor CPU over the batch's ~9·10⁷ elements);
-    // the compiled while-loop is the same arithmetic on the same floats
-    val ndvF = graft.sources.ImageTable.Ndv
-    import s.implicits._
-    def corrupt(df: DataFrame): DataFrame = df.as[graft.operators.TileRow].map { t =>
-      val p = new Array[Float](t.payload.length)
-      var i = 0
-      while (i < p.length) {
-        val v = t.payload(i); p(i) = if (v == ndvF) v else v + 1.0f; i += 1
-      }
-      t.copy(payload = p)
-    }.toDF()
-    try Overlap(s) { ov =>
-      tiles(0).count() // materialize the immediately-needed batch first
-      val prefetch = Seq(1, 2).map(b => ov.fork { tiles(b).count() })
-      step(1) { ST.commit(s, tilesRoot, tiles(0)) }
-      prefetch.head.get() // b1 cached before its commit
-      step(2) { ST.commit(s, tilesRoot, tiles(1)) }
-      step(3) { ST.merge(s, tilesRoot, corrupt(tiles(0)),
-        Seq("image_id", "tile_id")) }
-      step(4) { ST.merge(s, tilesRoot, tiles(0), Seq("image_id", "tile_id")) }
-      step(5) { ST.delete(s, tilesRoot, expr(s"$batchSql = 1")) }
-      step(6) { ST.commit(s, tilesRoot, tiles(1)) }
-      prefetch(1).get()
-      step(7) { ST.commit(s, tilesRoot, tiles(2)) }
-    } finally tileCache.values.foreach(_.unpersist(blocking = false))
-  }
-
-  /** q111: q108's incrementally-maintained stack stats, driven through
-    * source CHURN (merge/delete/re-append — the [[churnSnapshots]]
-    * history) instead of pure appends. The refresh engine must take the
-    * recompute path for the churned ranges and the O(delta) path for the
-    * appends; the strict oracle is the q41 twin over the same final state
-    * (even-index half of the oracle subset). */
-  def stackCellsIncrementalChurn(s: SparkSession, d: String): DataFrame =
-    churnViewChain(s, "q111", quantNoRipple(Engine.images(s, d)).filter(idx % 2 === 0),
-      floor(idx / 6) % 3,
-      "(CAST(substring(image_id, 5, 8) AS INT) DIV 6) % 3",
-      (tilesRoot, mvRoot) => graft.operators.StatsView.refresh(s, tilesRoot, mvRoot),
-      mvRoot => graft.operators.StatsView.stats(s, mvRoot), StatsFields)
-
-  /** q112: q110's incrementally-maintained OLS trend view, driven through
-    * the same churn history; strict oracle = the q42 twin over the final
-    * state (even-index trend subset). */
-  def trendCellsIncrementalChurn(s: SparkSession, d: String): DataFrame =
-    churnViewChain(s, "q112", trendSubset(Engine.images(s, d)).filter(idx % 2 === 0),
-      floor(idx / 18) % 3,
-      "(CAST(substring(image_id, 5, 8) AS INT) DIV 18) % 3",
-      (tilesRoot, mvRoot) => graft.operators.TrendView.refresh(s, tilesRoot, mvRoot),
-      mvRoot => graft.operators.TrendView.trend(s, mvRoot), TrendFields)
 
   /** q42 oracle form: per-pixel OLS slope/intercept/r²/t-stat over the
     * exact-time subset, via TileTrendAgg (diagnostics included). */
   def trendCells(s: SparkSession, d: String): DataFrame = {
-    val imgs = trendSubset(Engine.images(s, d))
-    val target = Warp.analyze(imgs, "min", "union")
-    val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
-    explodeStats(StackOps.trend(Warp.warpToTiles(s, imgs, target, "near")).toDF(),
-      ntx, TrendFields)
+    val st = TileCells.nearStack(s, trendSubset(Engine.images(s, d)))
+    explodeStats(StackOps.trend(st.tiles).toDF(), st.ntx, TrendFields)
   }
 
   /** q47 oracle form: per-pixel difference of the two half-set composites
@@ -399,21 +81,11 @@ object EngineOracle {
     // parity split (not id-range): both composites then cover every cluster,
     // so the diff surface spans the full region instead of a boundary sliver
     val imgs = quantNoRipple(Engine.images(s, d))
-    val a = imgs.filter(idx % 2 === 0)
-    val b = imgs.filter(idx % 2 === 1)
-    val target = Warp.analyze(imgs, "min", "union")
-    val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
-    val ta = StackOps.compositeMean(Warp.warpToTiles(s, a, target, "near"), label = "a")
-    val tb = StackOps.compositeMean(Warp.warpToTiles(s, b, target, "near"), label = "b")
-    RasterOps.tileDiff(ta, tb).toDF()
-      .select(col("tile_id"),
-        posexplode(col("payload")).as(Seq("pidx", "v")))
-      .filter(col("v") =!= graft.sources.ImageTable.Ndv)
-      .select(
-        ((col("tile_id") % ntx) * T + col("pidx") % T).cast("int").as("px"),
-        (expr(s"cast(tile_id div $ntx as int)") * T +
-          expr(s"cast(pidx div $T as int)")).as("py"),
-        col("v").cast("double").as("diff"))
+    val st = TileCells.nearStack(s, imgs)
+    val ta = StackOps.compositeMean(st.of(imgs.filter(idx % 2 === 0)), label = "a")
+    val tb = StackOps.compositeMean(st.of(imgs.filter(idx % 2 === 1)), label = "b")
+    TileCells.payloadPixels(RasterOps.tileDiff(ta, tb).toDF())
+      .select(col("px"), col("py"), col("v").cast("double").as("diff"))
   }
 
   /** q50 oracle form: the production point-sampling cogroup join over the
@@ -702,18 +374,19 @@ object EngineOracle {
     * even-count median (a+b)/2 is one rounded add + an exact halving —
     * which the SQL twin reproduces with explicit order statistics instead
     * of DuckDB's interpolating `median` (a + (b-a)·0.5 rounds differently). */
-  def theilSenCells(s: SparkSession, d: String): DataFrame = {
-    val imgs = trendSubset(Engine.images(s, d))
-    val target = Warp.analyze(imgs, "min", "union")
-    val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
-    val tiles = StackOps.stackClip(Warp.warpToTiles(s, imgs, target, "near"), 0, 0, 3, 3)
-    StackOps.theilSen(StackOps.toCells(tiles))
-      .select(
-        expr(s"cast((cell_id div $T2) % $ntx as int) * $T + cast((cell_id % $T2) % $T as int)").as("px"),
-        expr(s"cast((cell_id div $T2) div $ntx as int) * $T + cast((cell_id % $T2) div $T as int)").as("py"),
-        col("n"),
+  def theilSenCells(s: SparkSession, d: String): DataFrame =
+    clippedTrendCells(s, d)(StackOps.theilSen(_))
+
+  /** The q76/q98 robust-trend input — the trend subset's cells clipped to
+    * the 4×4 top-left tile window — through `fit`, emitted per (px, py)
+    * with NaN estimates as -9999; `extra` fit columns follow. */
+  private def clippedTrendCells(s: SparkSession, d: String)(
+      fit: DataFrame => DataFrame, extra: String*): DataFrame = {
+    val st = TileCells.nearStack(s, trendSubset(Engine.images(s, d)))
+    fit(StackOps.toCells(StackOps.stackClip(st.tiles, 0, 0, 3, 3)))
+      .select(TileCells.cellPixelXY(st.ntx) ++ Seq(col("n"),
         nanvl(col("slope_yr"), lit(-9999.0)).as("slope_yr"),
-        nanvl(col("intercept"), lit(-9999.0)).as("intercept"))
+        nanvl(col("intercept"), lit(-9999.0)).as("intercept")) ++ extra.map(col): _*)
   }
 
   /** DuckDB twin of q76: pairwise-slope self-join + exact-order-statistic
@@ -1666,9 +1339,7 @@ object EngineOracle {
     * round() is the cross-engine trap). tables=16, planes=6 = q59's exact
     * configuration. */
   def annLshExact(s: SparkSession, d: String): DataFrame = {
-    val e = s.read.parquet(s"$d/embeddings.parquet")
-    val q = e.filter(col("vec_id") < 50).select(col("vec_id").as("q_id"), col("embedding"))
-    val c = e.filter(col("vec_id") >= 50).select(col("vec_id").as("c_id"), col("embedding"))
+    val (q, c) = Engine.annSides(s.read.parquet(s"$d/embeddings.parquet"))
     graft.operators.Similarity.annCosine(s, q, c, k = 3, tables = 16, planes = 6)
       .select(col("q_id"), col("c_id"), col("cos"), col("rnk"))
   }
@@ -1724,11 +1395,9 @@ object EngineOracle {
     * operator's input instead of its rows. The operator under test is the
     * real one, untouched. */
   def annIvfExact(s: SparkSession, d: String): DataFrame = {
-    val e = s.read.parquet(s"$d/embeddings.parquet")
+    val (q, c) = Engine.annSides(s.read.parquet(s"$d/embeddings.parquet")
       .withColumn("vq",
-        expr("transform(embedding, x -> cast(floor(cast(x as double) * 64d) as float))"))
-    val q = e.filter(col("vec_id") < 50).select(col("vec_id").as("q_id"), col("vq").as("embedding"))
-    val c = e.filter(col("vec_id") >= 50).select(col("vec_id").as("c_id"), col("vq").as("embedding"))
+        expr("transform(embedding, x -> cast(floor(cast(x as double) * 64d) as float))")), "vq")
     graft.operators.Similarity.ivfCosine(s, q, c, k = 3, nLists = 16, nProbe = 4)
       .select(col("q_id"), col("c_id"), col("cos"), col("rnk"))
   }
@@ -1800,22 +1469,19 @@ object EngineOracle {
     * dyadic rationals (float sums ≤ 1020 are exact; /(8·res) with res = 2
     * is a power-of-two division), so the one-sqrt algebraic gdaldem form is
     * a fixed chain of correctly-rounded IEEE ops — replayable per-pixel. */
-  def hillshadeCells(s: SparkSession, d: String): DataFrame = {
-    val imgs = quantNoRipple(Engine.images(s, d))
-    val target = Warp.analyze(imgs, "min", "union")
-    val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
-    val nty = (target.h + Warp.TileSize - 1) / Warp.TileSize
-    val tiles = Warp.warpToTiles(s, imgs, target, "near")
-    val shade = graft.operators.Stencil(tiles, ntx, nty, halo = 1)(
-      graft.operators.Stencil.demKernel("hillshade", target.res))
-    shade.toDF()
-      .select(col("image_id"), col("tx"), col("ty"),
-              posexplode(col("payload")).as(Seq("pidx", "sv")))
-      .filter(col("sv") =!= graft.sources.ImageTable.Ndv)
-      .select(col("image_id"),
-        (col("tx") * T + col("pidx") % T).cast("int").as("px"),
-        (col("ty") * T + expr(s"cast(pidx div $T as int)")).cast("int").as("py"),
-        col("sv").cast("double").as("shade"))
+  def hillshadeCells(s: SparkSession, d: String): DataFrame =
+    stencilCells(s, d, halo = 1, "shade")(t =>
+      graft.operators.Stencil.demKernel("hillshade", t.res))
+
+  /** The q95/q96 engine side: the quantized subset's near stack through a
+    * halo-`halo` Stencil with `kernel(target grid)`, one row per valid
+    * output pixel, the value named `out`. */
+  private def stencilCells(s: SparkSession, d: String, halo: Int, out: String)(
+      kernel: graft.geo.GridSpec => (Array[Float], Int, Int, Float) => Array[Float]): DataFrame = {
+    val st = TileCells.nearStack(s, quantNoRipple(Engine.images(s, d)))
+    val cells = graft.operators.Stencil(st.tiles, st.ntx, st.nty, halo)(kernel(st.target))
+    TileCells.payloadPixels(cells.toDF(), "image_id")
+      .select(col("image_id"), col("px"), col("py"), col("v").cast("double").as(out))
   }
 
   /** q95 oracle — per-image 3×3 neighborhoods via a 9-way offset explode +
@@ -1860,23 +1526,8 @@ object EngineOracle {
   /** q96 engine side — the production warp("near") → halo-4 Stencil →
     * separable masked gaussKernel(σ=1.5) path (q48's exact kernel) on the
     * quantized subset, exploded to one row per smoothed pixel. */
-  def gaussCells(s: SparkSession, d: String): DataFrame = {
-    val imgs = quantNoRipple(Engine.images(s, d))
-    val target = Warp.analyze(imgs, "min", "union")
-    val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
-    val nty = (target.h + Warp.TileSize - 1) / Warp.TileSize
-    val tiles = Warp.warpToTiles(s, imgs, target, "near")
-    val sm = graft.operators.Stencil(tiles, ntx, nty, halo = 4)(
-      graft.operators.Stencil.gaussKernel(1.5))
-    sm.toDF()
-      .select(col("image_id"), col("tx"), col("ty"),
-              posexplode(col("payload")).as(Seq("pidx", "sv")))
-      .filter(col("sv") =!= graft.sources.ImageTable.Ndv)
-      .select(col("image_id"),
-        (col("tx") * T + col("pidx") % T).cast("int").as("px"),
-        (col("ty") * T + expr(s"cast(pidx div $T as int)")).cast("int").as("py"),
-        col("sv").cast("double").as("sv"))
-  }
+  def gaussCells(s: SparkSession, d: String): DataFrame =
+    stencilCells(s, d, halo = 4, "sv")(_ => graft.operators.Stencil.gaussKernel(1.5))
 
   /** q96 oracle — both separable passes replayed with the engine's w1 taps
     * embedded as string-cast literals: each pass is a per-center ordered
@@ -1922,20 +1573,8 @@ object EngineOracle {
     * an exactly-representable dyadic (3 fraction bits), y is integer, so
     * medians/NMAD/hypothesis slopes/inlier residuals and ALL refit sums are
     * replayable (the sums are exact in double, hence fold-order-free). */
-  def ransacCells(s: SparkSession, d: String): DataFrame = {
-    val imgs = trendSubset(Engine.images(s, d))
-    val target = Warp.analyze(imgs, "min", "union")
-    val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
-    val tiles = StackOps.stackClip(Warp.warpToTiles(s, imgs, target, "near"), 0, 0, 3, 3)
-    StackOps.ransac(StackOps.toCells(tiles))
-      .select(
-        expr(s"cast((cell_id div $T2) % $ntx as int) * $T + cast((cell_id % $T2) % $T as int)").as("px"),
-        expr(s"cast((cell_id div $T2) div $ntx as int) * $T + cast((cell_id % $T2) div $T as int)").as("py"),
-        col("n"),
-        nanvl(col("slope_yr"), lit(-9999.0)).as("slope_yr"),
-        nanvl(col("intercept"), lit(-9999.0)).as("intercept"),
-        col("n_inliers"))
-  }
+  def ransacCells(s: SparkSession, d: String): DataFrame =
+    clippedTrendCells(s, d)(StackOps.ransac(_), "n_inliers")
 
   /** q98 oracle — the r3 "splitmix64 has no DuckDB twin" verdict overturned:
     * the wrapping 64-bit multiplies replay EXACTLY in HUGEINT with 32-bit
@@ -2158,16 +1797,26 @@ object EngineOracle {
     * certifies the quantization margins. */
   private[graft] val WcQ = 16.0
 
-  private[graft] def wcImages(s: SparkSession): DataFrame = {
-    val rows = wcGrids.zipWithIndex.map { case (g, i) =>
-      val px = Array.tabulate(g.w * g.h)(idx => wcValue(i, idx % g.w, idx / g.w).toFloat)
-      graft.sources.ImageRow(s"wc$i", graft.sources.Codec.encode(px, g.w, g.h, "raw"),
+  private[graft] def wcImages(s: SparkSession): DataFrame =
+    rawImages(s, wcGrids.indices.map(i => s"wc$i"), wcGrids)(
+      (i, _, x, y) => wcValue(i, x, y).toFloat)
+
+  /** Raw float32 fixture images `ids(i)` on `grids(i)`, day i+1, with
+    * `bands` band-sequential bands: pixel (sx, sy) of band b holds
+    * `value(i, b, sx, sy)`. */
+  private def rawImages(s: SparkSession, ids: Seq[String], grids: Seq[graft.geo.GridSpec],
+                        bands: Int = 1)(value: (Int, Int, Int, Int) => Float): DataFrame = {
+    import s.implicits._
+    s.createDataset(ids.zip(grids).zipWithIndex.map { case ((id, g), i) =>
+      val px = Array.tabulate(bands * g.w * g.h) { k =>
+        val p = k % (g.w * g.h)
+        value(i, k / (g.w * g.h), p % g.w, p / g.w)
+      }
+      graft.sources.ImageRow(id, graft.sources.Codec.encode(px, g.w, g.h, "raw"),
         g.w, g.h, "raw", "", 0L, g.ulx, g.uly, g.res, g.crs,
         graft.sources.ImageTable.Ndv.toDouble,
         new java.sql.Timestamp(86400000L * (i + 1)))
-    }
-    import s.implicits._
-    s.createDataset(rows).toDF()
+    }).toDF()
   }
 
   /** Pure-Scala replica of the cross-CRS `Warp.analyze("min", "union",
@@ -2187,24 +1836,19 @@ object EngineOracle {
     * near and bilinear kernels → integer decisions per target pixel
     * (near: the integer source value itself; bilinear: floor(v·WcQ + ½) of
     * the float32 payload). (px, py) presence IS the tile-assignment check. */
-  def warpCross(s: SparkSession, d: String): DataFrame = {
-    val imgs = wcImages(s)
-    val target = Warp.analyze(imgs, "min", "union", tSrs = "EPSG:4326",
-      datum = "sphere")
-    def cells(kernel: String): DataFrame =
-      Warp.warpToTiles(s, imgs, target, kernel, datum = "sphere").toDF()
-        .select(col("image_id"), col("tx"), col("ty"),
-                posexplode(col("payload")).as(Seq("pidx", "v")))
-        .filter(col("v") =!= graft.sources.ImageTable.Ndv)
-        .select(substring(col("image_id"), 3, 1).cast("int").as("img"),
-          (col("tx") * T + col("pidx") % T).cast("int").as("px"),
-          (col("ty") * T + expr(s"cast(pidx div $T as int)")).cast("int").as("py"),
-          col("v"))
-    cells("near").select(col("img"), lit("near").as("krn"), col("px"), col("py"),
-        floor(col("v").cast("double") + 0.5).cast("long").as("q"))
-      .unionByName(cells("bilinear").select(col("img"), lit("bil").as("krn"),
-        col("px"), col("py"),
-        floor(col("v").cast("double") * WcQ + 0.5).cast("long").as("q")))
+  def warpCross(s: SparkSession, d: String): DataFrame =
+    warpDecisions(s, wcImages(s), datum = "sphere")
+
+  /** The q102/q105 engine side: analyze(tSrs=4326) → cross-CRS warp with
+    * both kernels under `datum` → the per-pixel integer decisions. */
+  private def warpDecisions(s: SparkSession, imgs: DataFrame, datum: String): DataFrame = {
+    val target = Warp.analyze(imgs, "min", "union", tSrs = "EPSG:4326", datum = datum)
+    def cells(kernel: String, krn: String, q: Column => Column): DataFrame =
+      TileCells.payloadPixels(
+          Warp.warpToTiles(s, imgs, target, kernel, datum = datum).toDF(), "image_id")
+        .select(substring(col("image_id"), 3, 1).cast("int").as("img"), lit(krn).as("krn"),
+          col("px"), col("py"), floor(q(col("v").cast("double")) + 0.5).cast("long").as("q"))
+    cells("near", "near", identity).unionByName(cells("bilinear", "bil", _ * WcQ))
   }
 
   /** q102 oracle: per-image pixel bounds from the DENSIFIED projected
@@ -2323,20 +1967,10 @@ object EngineOracle {
     graft.geo.GridSpec(497952.0, 8110000.0, 64.0, "EPSG:32623", 64, 48),
     graft.geo.GridSpec(-1920.0, -1853568.0, 96.0, "EPSG:3413", 48, 40))
 
-  private[graft] def weValue(i: Int, cx: Int, cy: Int): Int =
-    if (i == 0) 1 + (cx * 7 + cy * 13) % 199 else 1 + (cx * 11 + cy * 5) % 173
-
-  private[graft] def weImages(s: SparkSession): DataFrame = {
-    val rows = weGrids.zipWithIndex.map { case (g, i) =>
-      val px = Array.tabulate(g.w * g.h)(idx => weValue(i, idx % g.w, idx / g.w).toFloat)
-      graft.sources.ImageRow(s"we$i", graft.sources.Codec.encode(px, g.w, g.h, "raw"),
-        g.w, g.h, "raw", "", 0L, g.ulx, g.uly, g.res, g.crs,
-        graft.sources.ImageTable.Ndv.toDouble,
-        new java.sql.Timestamp(86400000L * (i + 1)))
-    }
-    import s.implicits._
-    s.createDataset(rows).toDF()
-  }
+  /** Pixel values are q102's closed form, [[wcValue]]. */
+  private[graft] def weImages(s: SparkSession): DataFrame =
+    rawImages(s, weGrids.indices.map(i => s"we$i"), weGrids)(
+      (i, _, x, y) => wcValue(i, x, y).toFloat)
 
   /** Pure-Scala replica of the ELLIPSOIDAL `Warp.analyze("min", "union",
     * tSrs = 4326)` (default datum) — embedded into the SQL twin as
@@ -2351,24 +1985,8 @@ object EngineOracle {
 
   /** q105 engine side: ellipsoidal analyze → cross-CRS warp (near +
     * bilinear) → the q102 integer decisions. */
-  def warpCrossEll(s: SparkSession, d: String): DataFrame = {
-    val imgs = weImages(s)
-    val target = Warp.analyze(imgs, "min", "union", tSrs = "EPSG:4326")
-    def cells(kernel: String): DataFrame =
-      Warp.warpToTiles(s, imgs, target, kernel).toDF()
-        .select(col("image_id"), col("tx"), col("ty"),
-                posexplode(col("payload")).as(Seq("pidx", "v")))
-        .filter(col("v") =!= graft.sources.ImageTable.Ndv)
-        .select(substring(col("image_id"), 3, 1).cast("int").as("img"),
-          (col("tx") * T + col("pidx") % T).cast("int").as("px"),
-          (col("ty") * T + expr(s"cast(pidx div $T as int)")).cast("int").as("py"),
-          col("v"))
-    cells("near").select(col("img"), lit("near").as("krn"), col("px"), col("py"),
-        floor(col("v").cast("double") + 0.5).cast("long").as("q"))
-      .unionByName(cells("bilinear").select(col("img"), lit("bil").as("krn"),
-        col("px"), col("py"),
-        floor(col("v").cast("double") * WcQ + 0.5).cast("long").as("q")))
-  }
+  def warpCrossEll(s: SparkSession, d: String): DataFrame =
+    warpDecisions(s, weImages(s), datum = graft.geo.Proj.Wgs84)
 
   /** q105 oracle: both ellipsoidal chains in DuckDB SQL. Per image:
     * densified footprint boundary → INVERSE chain (Krüger β/δ series for
@@ -2528,24 +2146,8 @@ object EngineOracle {
   // closed-form level pick → elided/near assignment at the overview res)
   // ---------------------------------------------------------------------
 
-  private[graft] def ovImages(s: SparkSession): DataFrame = {
-    val rows = (0 until MbImgs).map { i =>
-      val g = graft.sources.ImageTable.gridOf(i)
-      val marg = if (i % 5 == 0) 3 else 0
-      val px = new Array[Float](g.w * g.h)
-      for (sy <- 0 until g.h; sx <- 0 until g.w)
-        px(sy * g.w + sx) =
-          if (sx < marg || sy < marg || sx >= g.w - marg || sy >= g.h - marg)
-            graft.sources.ImageTable.Ndv
-          else mbValue(i, 0, sx, sy).toFloat
-      graft.sources.ImageRow(f"ov_$i%08d", graft.sources.Codec.encode(px, g.w, g.h, "raw"),
-        g.w, g.h, "raw", "", 0L, g.ulx, g.uly, g.res, g.crs,
-        graft.sources.ImageTable.Ndv.toDouble,
-        new java.sql.Timestamp(86400000L * (i + 1)))
-    }
-    import s.implicits._
-    s.createDataset(rows).toDF()
-  }
+  /** The q106 fixture's band 0 alone, ids `ov_…`. */
+  private[graft] def ovImages(s: SparkSession): DataFrame = bandImages(s, "ov_", 1)
 
   /** q109 engine side: build levels 0..2, pick per image for an 8 m
     * target, warp the picked overviews through the UNCHANGED warp path,
@@ -2553,20 +2155,11 @@ object EngineOracle {
   def ovrWarpCells(s: SparkSession, d: String): DataFrame = {
     val imgs = ovImages(s)
     val target = Warp.analyze(imgs, "8.0", "union")
-    val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
     val picked = graft.operators.Overviews.pick(
       s, graft.operators.Overviews.build(s, imgs, maxLevel = 2), 8.0, 2)
-    Warp.warpToTiles(s, picked, target, "near").toDF()
-      .select(
-        substring(col("image_id"), 4, 8).cast("int").as("i"),
-        col("tile_id"),
-        posexplode(col("payload")).as(Seq("pidx", "v")))
-      .filter(col("v") =!= graft.sources.ImageTable.Ndv)
-      .select(col("i"),
-        ((col("tile_id") % ntx) * T + col("pidx") % T).cast("int").as("px"),
-        (expr(s"cast(tile_id div $ntx as int)") * T +
-          expr(s"cast(pidx div $T as int)")).as("py"),
-        col("v").cast("double").as("v"))
+    TileCells.payloadPixels(Warp.warpToTiles(s, picked, target, "near").toDF(), "image_id")
+      .select(substring(col("image_id"), 4, 8).cast("int").as("i"),
+        col("px"), col("py"), col("v").cast("double").as("v"))
   }
 
   /** DuckDB twin of q109: the full overview chain restated — integer base
@@ -2659,23 +2252,16 @@ object EngineOracle {
     * both the elided fast path and the resampling near chain), 3-band raw
     * BSQ payloads, NDV margins on every 5th image IN ALL BANDS (the
     * per-band NDV fill of `warplib.py:146-153`). */
-  private[graft] def mbImages(s: SparkSession): DataFrame = {
-    val rows = (0 until MbImgs).map { i =>
-      val g = graft.sources.ImageTable.gridOf(i)
-      val marg = if (i % 5 == 0) 3 else 0
-      val px = new Array[Float](MbBands * g.w * g.h)
-      for (b <- 0 until MbBands; sy <- 0 until g.h; sx <- 0 until g.w)
-        px(b * g.w * g.h + sy * g.w + sx) =
-          if (sx < marg || sy < marg || sx >= g.w - marg || sy >= g.h - marg)
-            graft.sources.ImageTable.Ndv
-          else mbValue(i, b, sx, sy).toFloat
-      graft.sources.ImageRow(f"mb_$i%08d", graft.sources.Codec.encode(px, g.w, g.h, "raw"),
-        g.w, g.h, "raw", "", 0L, g.ulx, g.uly, g.res, g.crs,
-        graft.sources.ImageTable.Ndv.toDouble,
-        new java.sql.Timestamp(86400000L * (i + 1)))
+  private[graft] def mbImages(s: SparkSession): DataFrame = bandImages(s, "mb_", MbBands)
+
+  private def bandImages(s: SparkSession, prefix: String, bands: Int): DataFrame = {
+    val grids = (0 until MbImgs).map(graft.sources.ImageTable.gridOf)
+    rawImages(s, grids.indices.map(i => f"$prefix$i%08d"), grids, bands) { (i, b, sx, sy) =>
+      val g = grids(i); val marg = if (i % 5 == 0) 3 else 0
+      if (sx < marg || sy < marg || sx >= g.w - marg || sy >= g.h - marg)
+        graft.sources.ImageTable.Ndv
+      else mbValue(i, b, sx, sy).toFloat
     }
-    import s.implicits._
-    s.createDataset(rows).toDF()
   }
 
   /** q106 engine side: multi-band warp → per-band stack stats via the
@@ -2683,19 +2269,9 @@ object EngineOracle {
   def stackBandCells(s: SparkSession, d: String): DataFrame = {
     val imgs = mbImages(s)
     val target = Warp.analyze(imgs, "min", "union")
-    val ntx = (target.w + Warp.TileSize - 1) / Warp.TileSize
     val stats = graft.operators.StackOps.stackStatsBands(
       Warp.warpToTilesBands(s, imgs, target, MbBands, "near"), MbBands).toDF()
-    val fields = Seq("count", "mean", "std", "vmin", "vmax")
-    val zipped = stats.select(col("band"), col("tile_id"),
-      posexplode(arrays_zip(fields.map(col): _*)).as(Seq("pidx", "z")))
-    zipped.select(Seq(col("band"),
-      ((col("tile_id") % ntx) * T + col("pidx") % T).cast("int").as("px"),
-      (expr(s"cast(tile_id div $ntx as int)") * T +
-        expr(s"cast(pidx div $T as int)")).as("py"),
-      col("z.count").as("n")) ++
-      fields.filter(_ != "count").map(f => col(s"z.$f").cast("double").as(f)): _*)
-      .filter(col("n") > 0)
+    explodeStats(stats, Warp.tileGrid(target)._1, StatsFields, "band")
   }
 
   /** DuckDB twin of q106 — the cellSql warp-assignment chain restated for

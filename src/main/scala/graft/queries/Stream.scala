@@ -1,6 +1,6 @@
 package graft.queries
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamOps
@@ -31,14 +31,25 @@ object Stream {
   private def sinkName(tag: String): String =
     s"graft_${tag}_${java.util.UUID.randomUUID.toString.take(8)}"
 
+  /** Stamp a landed stream-source file with epoch `epoch`'s mtime: the file
+    * source orders its listing by (mtime, path), so strictly increasing
+    * stamps fix the micro-batch pickup order. */
+  private[queries] def stampPickup(file: Path, epoch: Int): Unit =
+    Files.setLastModifiedTime(file,
+      java.nio.file.attribute.FileTime.fromMillis(1704067200000L + epoch * 2000L))
+
+  /** `df`'s rows collected into a local-relation DataFrame, so it outlives
+    * the fixture files it was read from. */
+  private def collectLocal(s: SparkSession, df: DataFrame): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   /** Materialize the memory-sink result as a local-relation DataFrame, then
     * drop the global sink view and delete the fixture dir — repeated
     * Verify/Bench invocations would otherwise accumulate /tmp parquet
     * copies and driver-resident sink tables for the session's lifetime. */
   private def detach(s: SparkSession, sink: DataFrame, sinkTable: String,
                      dir: String): DataFrame = {
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(sink.collect(): _*), sink.schema)
+    val out = collectLocal(s, sink)
     s.catalog.dropTempView(sinkTable)
     graft.sources.SnapshotTable.deleteRecursively(dir)
     out
@@ -140,10 +151,7 @@ object Stream {
         .write.mode("append").parquet(srcDir)
       val q2 = StreamOps.tokenStreamToParquet(s, srcDir, outDir, ckptDir)
       q2.processAllAvailable(); q2.stop() // resume: only the new file
-      val sink = s.read.parquet(outDir) // reads via _spark_metadata (committed only)
-      val out = s.createDataFrame(
-        java.util.Arrays.asList(sink.collect(): _*), sink.schema)
-      out
+      collectLocal(s, s.read.parquet(outDir)) // reads via _spark_metadata (committed only)
     } finally Seq(srcDir, outRoot, ckptDir)
       .foreach(graft.sources.SnapshotTable.deleteRecursively)
   }
@@ -164,9 +172,9 @@ object Stream {
     *      exactly doc slice r, so commit_v = doc_id % 3 + 1 is a CLOSED
     *      FORM the oracle states independently (any lost/duplicated/
     *      misordered epoch breaks it).
-    * Source files get explicit names + strictly increasing mtimes: the
-    * file source orders its listing by (mtime, path), and part-file uuid
-    * names would make the f0/f1 batch order nondeterministic. */
+    * Source files get explicit names + strictly increasing mtimes
+    * ([[stampPickup]]): part-file uuid names would make the f0/f1 batch
+    * order nondeterministic. */
   def streamSnapshotSink(s: SparkSession, d: String): DataFrame = {
     val srcDir = fixtureDir("q107src")
     val root = fixtureDir("q107tbl")
@@ -174,16 +182,9 @@ object Stream {
     val streamId = "q107_tokens"
     val src = Text.docs(s, d).select(col("doc_id"), col("text"))
     def land(r: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft_q107w").toString
-      src.filter(col("doc_id") % 3 === r).coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head.toPath
-      val dst = java.nio.file.Paths.get(srcDir, s"f$r.parquet")
-      Files.move(part, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1704067200000L + r * 2000L))
-      graft.sources.SnapshotTable.deleteRecursively(tmp)
+      val dst = Paths.get(srcDir, s"f$r.parquet")
+      graft.sources.ParquetFiles.writeOneFile(s, src.filter(col("doc_id") % 3 === r), dst)
+      stampPickup(dst, r)
     }
     try {
       land(0); land(1)
@@ -191,25 +192,17 @@ object Stream {
       q1.processAllAvailable(); q1.stop() // "crash" after epochs 0,1
       // crash-window replay: epoch 1 re-delivered directly into the sink
       val replay = graft.sources.SnapshotTable.commitStreamBatch(
-        s, root,
-        src.filter(col("doc_id") % 3 === 1)
-          .select(col("doc_id"),
-            size(split(trim(col("text")), " +")).cast("long").as("n_tokens"),
-            length(col("text")).cast("long").as("n_chars_obs")),
-        streamId, 1L)
+        s, root, StreamOps.tokenFeatures(src.filter(col("doc_id") % 3 === 1)), streamId, 1L)
       require(replay.isEmpty, s"replayed epoch 1 must be a no-op, got $replay")
       land(2)
       val q2 = StreamOps.tokenStreamToSnapshot(s, srcDir, root, ckptDir, streamId)
       q2.processAllAvailable(); q2.stop() // resume: only f2 → epoch 2
       val cur = graft.sources.SnapshotTable.currentVersion(root)
       require(cur == 3, s"expected 3 snapshot versions (one per epoch), got $cur")
-      val tagged = (1 to cur).map { v =>
+      collectLocal(s, (1 to cur).map { v =>
         graft.sources.SnapshotTable.changes(s, root, v - 1, v)
           .withColumn("commit_v", lit(v))
-      }.reduce(_.unionByName(_))
-      val out = s.createDataFrame(
-        java.util.Arrays.asList(tagged.collect(): _*), tagged.schema)
-      out
+      }.reduce(_.unionByName(_)))
     } finally Seq(srcDir, root, ckptDir)
       .foreach(graft.sources.SnapshotTable.deleteRecursively)
   }

@@ -132,12 +132,6 @@ object Text {
     * Docs shorter than 3 tokens are dropped (both sides). */
   private[queries] def shinglesOf(docs: DataFrame): DataFrame =
     docs
-      // the doc table is a single small file (one scan split), but each
-      // shingle pays 4 md5s downstream — measured ~1 s single-task stages
-      // in the minhash paths; spreading the docs first costs a sub-MB
-      // shuffle and parallelizes the hash work (guide §2.1: the scan is
-      // cheap, the per-row work is not)
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .select(col("doc_id"), split(trim(col("text")), " +").as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), explode(expr(
@@ -163,12 +157,18 @@ object Text {
     * LSH band key (md5 of the signature pair-bands) — the shingle→minhash→
     * band→bucket pipeline; the bucket self-join runs in minhashPairs. */
   def minhashSig(s: SparkSession, d: String): DataFrame =
-    minhashSigOf(shingles(s, d))
+    minhashSigOf(docs(s, d))
 
-  private[queries] def minhashSigOf(shingled: DataFrame): DataFrame = {
+  private[queries] def minhashSigOf(docsDf: DataFrame): DataFrame = {
     def h(i: Int): Column =
       expr(s"cast(conv(substr(md5(concat('$i:', sh)), 1, 8), 16, 10) as bigint)")
-    shingled.groupBy(col("doc_id"))
+    // the doc table is a single small file (one scan split), but each
+    // shingle pays 4 md5s — measured ~1 s single-task stages in the
+    // minhash paths; spreading the docs first costs a sub-MB shuffle and
+    // parallelizes the hash work (guide §2.1: the scan is cheap, the
+    // per-row work is not)
+    shinglesOf(docsDf.repartition(docsDf.sparkSession.sparkContext.defaultParallelism))
+      .groupBy(col("doc_id"))
       .agg(min(h(0)).as("mh0"), min(h(1)).as("mh1"),
            min(h(2)).as("mh2"), min(h(3)).as("mh3"))
       .select(col("doc_id"), col("mh0"), col("mh1"), col("mh2"), col("mh3"),
@@ -199,7 +199,7 @@ object Text {
     minhashPairsOf(docs(s, d))
 
   def minhashPairsOf(docsDf: DataFrame): DataFrame = {
-    val sig = minhashSigOf(shinglesOf(docsDf))
+    val sig = minhashSigOf(docsDf)
     val bands = sig.select(col("doc_id"), explode(array(
         struct(lit(0).as("bi"), col("band0").as("bv")),
         struct(lit(1).as("bi"), col("band1").as("bv")))).as("b"))

@@ -66,23 +66,29 @@ object StreamOps {
     * property q100 proves by restarting across a fixture append. */
   def tokenStreamToParquet(spark: SparkSession, inDir: String, outDir: String,
                            ckptDir: String,
-                           maxFilesPerTrigger: Int = 1): StreamingQuery = {
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.functions._
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .select(col("doc_id"),
-        size(split(trim(col("text")), " +")).cast("long").as("n_tokens"),
-        length(col("text")).cast("long").as("n_chars_obs"))
+                           maxFilesPerTrigger: Int = 1): StreamingQuery =
+    tokenFeatures(docStream(spark, inDir, maxFilesPerTrigger))
       .writeStream.outputMode("append")
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", ckptDir)
       .start()
+
+  /** (doc_id long, text string) parquet files of `inDir` as a stream. */
+  private def docStream(spark: SparkSession, inDir: String,
+                        maxFilesPerTrigger: Int): DataFrame = {
+    import org.apache.spark.sql.types._
+    spark.readStream.schema(StructType(Seq(
+        StructField("doc_id", LongType), StructField("text", StringType))))
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .parquet(inDir)
   }
+
+  /** The per-doc token-count features both token sinks write. */
+  private[graft] def tokenFeatures(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      size(split(trim(col("text")), " +")).cast("long").as("n_tokens"),
+      length(col("text")).cast("long").as("n_chars_obs"))
 
   /** Streaming ingest landing in the SNAPSHOT CATALOG (the missing bridge
     * between the two halves of the ingest story): each micro-batch commits
@@ -94,16 +100,8 @@ object StreamOps {
     * oracle-comparable. */
   def tokenStreamToSnapshot(spark: SparkSession, inDir: String, root: String,
                             ckptDir: String, streamId: String,
-                            maxFilesPerTrigger: Int = 1): StreamingQuery = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .select(col("doc_id"),
-        size(split(trim(col("text")), " +")).cast("long").as("n_tokens"),
-        length(col("text")).cast("long").as("n_chars_obs"))
+                            maxFilesPerTrigger: Int = 1): StreamingQuery =
+    tokenFeatures(docStream(spark, inDir, maxFilesPerTrigger))
       .writeStream.outputMode("append")
       .option("checkpointLocation", ckptDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -112,7 +110,6 @@ object StreamOps {
         () // discard the Option — a skip IS success (replayed epoch)
       }
       .start()
-  }
 
   /** Generic-schema form of [[tokenStreamToSnapshot]]: stream any parquet
     * file source into the snapshot catalog unchanged, one epoch commit per

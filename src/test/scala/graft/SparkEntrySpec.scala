@@ -27,6 +27,15 @@ class SparkEntrySpec extends AnyFunSuite {
     }
   }
 
+  test("oracle dump bytes match the pinned DumpOracle md5") {
+    // the fixture-scale knob rewrites the twins' series bounds on purpose
+    assume(!sys.env.contains("SPARK_GRAFT_FIX_MULT"))
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(SparkEntry.oracleJson(_ => true).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
+    assert(md5 == "5f857abaaa9cfecf1de001e9db8236d6", "twin SQL text changed")
+  }
+
   test("select sorts the registry and filters it by name prefix") {
     assert(SparkEntry.select(Nil).map(_._1) == SparkEntry.queries.keys.toSeq.sorted)
     assert(SparkEntry.select(Seq("q93", "q04")).map(_._1) ==

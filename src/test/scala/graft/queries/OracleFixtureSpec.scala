@@ -61,4 +61,33 @@ class OracleFixtureSpec extends AnyFunSuite {
     }
     assert(checked > 4000, s"only $checked centers checked — fixture changed?")
   }
+
+  test("pixel decode: tile_id, (tx, ty) and cell_id forms agree on a non-square grid") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.IntegerType
+    import graft.operators.{StackOps, TestSpark, TileRow, Warp}
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val T = Warp.TileSize
+    val (ntx, nty) = (5, 3)
+    // (tx, ty, pidx): tx != ty and pidx % T != pidx / T wherever it matters
+    val cases = Seq((0, 0, 0), (4, 0, T + 2), (1, 2, 3 * T + 17),
+                    (3, 1, T * T - 1), (ntx - 1, nty - 1, 5 * T + 60))
+    val tiles = spark.createDataset(cases.map { case (tx, ty, pidx) =>
+      val p = Array.fill(T * T)(ImageTable.Ndv); p(pidx) = 7f
+      TileRow(s"img$tx$ty", 0L, ty.toLong * ntx + tx, tx, ty, p, 1, elided = false)
+    })
+    val want = cases.map { case (tx, ty, pidx) => (tx * T + pidx % T, ty * T + pidx / T) }.toSet
+    val byTileId = tiles.toDF()
+      .select(col("tile_id"), posexplode(col("payload")).as(Seq("pidx", "v")))
+      .filter(col("v") =!= ImageTable.Ndv)
+      .select(TileCells.tilePixelXY(ntx): _*)
+    val byTxTy = TileCells.payloadPixels(tiles.toDF()).select("px", "py")
+    val byCellId = StackOps.toCells(tiles).select(TileCells.cellPixelXY(ntx): _*)
+    for ((form, df) <- Seq("tile_id" -> byTileId, "(tx, ty)" -> byTxTy, "cell_id" -> byCellId)) {
+      assert(df.schema("px").dataType == IntegerType && df.schema("py").dataType == IntegerType,
+        s"$form: ${df.schema}")
+      assert(df.as[(Int, Int)].collect().toSet == want, form)
+    }
+  }
 }

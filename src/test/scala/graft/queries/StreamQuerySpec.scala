@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TestSpark
 
-/** q74/q75: the bounded streaming pipelines must equal their batch twins
-  * (the driver additionally hash-checks both against DuckDB). */
+/** q74/q75/q107: the bounded streaming pipelines must equal their batch
+  * twins (the driver additionally hash-checks them against DuckDB). */
 class StreamQuerySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
@@ -37,5 +37,18 @@ class StreamQuerySpec extends AnyFunSuite {
     assert(streamed.count() == batch.count(), "session count")
     val mismatch = streamed.except(batch).count() + batch.except(streamed).count()
     assert(mismatch == 0, s"$mismatch session rows differ between streaming and batch")
+  }
+
+  test("q107 streamed epochs land exactly once, one snapshot version per epoch") {
+    val rows = Stream.streamSnapshotSink(spark, sf)
+      .select(col("doc_id").cast("long"), col("commit_v")).collect()
+      .map(r => (r.getLong(0), r.getInt(1)))
+    val docs = Text.docs(spark, sf).select(col("doc_id").cast("long")).collect().map(_.getLong(0))
+    assert(rows.map(_._2).toSet == Set(1, 2, 3), "exactly 3 snapshot versions")
+    assert(rows.length == rows.map(_._1).distinct.length, "duplicate doc rows")
+    assert(rows.map(_._1).toSet == docs.toSet, "one row per doc")
+    rows.foreach { case (doc, v) =>
+      assert(v == doc % 3 + 1, s"doc $doc landed in version $v")
+    }
   }
 }

@@ -52,7 +52,7 @@ class WarpEllOracleSpec extends AnyFunSuite {
         val pyf = p((g.uly - sy) / g.res - 0.5)
         val cx = math.floor(pxf + 0.5).toInt; val cy = math.floor(pyf + 0.5).toInt
         if (cx >= 0 && cx < g.w && cy >= 0 && cy < g.h)
-          out += ((i, "near", px, py, EngineOracle.weValue(i, cx, cy).toLong))
+          out += ((i, "near", px, py, EngineOracle.wcValue(i, cx, cy).toLong))
         val x0 = math.floor(pxf).toInt; val y0 = math.floor(pyf).toInt
         val fx = pxf - x0; val fy = pyf - y0
         var sum = 0.0; var wsum = 0.0
@@ -63,7 +63,7 @@ class WarpEllOracleSpec extends AnyFunSuite {
             val x = x0 + dx; val y = y0 + dy
             if (x >= 0 && x < g.w && y >= 0 && y < g.h) {
               val wt = (if (dx == 0) 1 - fx else fx) * (if (dy == 0) 1 - fy else fy)
-              sum += EngineOracle.weValue(i, x, y) * wt; wsum += wt
+              sum += EngineOracle.wcValue(i, x, y) * wt; wsum += wt
             }
             dx += 1
           }
