@@ -175,22 +175,19 @@ private[operators] object IncrementalView {
       // explicit width (shared with the batch folds): the compressed
       // shuffle size would let AQE coalesce the decode-bound fold+combine
       // to 1-2 tasks
-      val p = StackOps.foldWidth(spark)
-      val combined: Dataset[V] = dU.unionByName(oU)
-        .repartition(p, col("_1")).sortWithinPartitions(col("_1"))
-        .as[(Long, TileRow, V)]
-        .mapPartitions((it: Iterator[(Long, TileRow, V)]) =>
-          StackOps.sortedRuns(it)(_._1) { (k, run) =>
-            val agg = view.agg
-            var b: B = null.asInstanceOf[B]   // delta buffer, once a row arrives
-            var o: V = null.asInstanceOf[V]   // old view row, unique per key
-            run.foreach { case (_, t, old) =>
-              if (t != null) b = agg.reduce(if (b == null) agg.zero else b, t)
-              if (old != null) o = old
-            }
-            if (b == null) o   // old-only tile: passes through untouched
-            else view.pack(k, if (o == null) b else agg.merge(b, view.unpack(o)))
-          })
+      val combined: Dataset[V] = StackOps.keyedRuns(
+          dU.unionByName(oU).as[(Long, TileRow, V)], StackOps.foldWidth(spark), "_1")(
+          _._1) { (k, run) =>
+        val agg = view.agg
+        var b: B = null.asInstanceOf[B]   // delta buffer, once a row arrives
+        var o: V = null.asInstanceOf[V]   // old view row, unique per key
+        run.foreach { case (_, t, old) =>
+          if (t != null) b = agg.reduce(if (b == null) agg.zero else b, t)
+          if (old != null) o = old
+        }
+        if (b == null) o   // old-only tile: passes through untouched
+        else view.pack(k, if (o == null) b else agg.merge(b, view.unpack(o)))
+      }
       // the combined set carries every surviving row of the pruned
       // old-view files (old-only tiles pass through untouched), so the
       // merge commit takes them as those files' full replacement

@@ -108,7 +108,7 @@ object StackOps {
 
   private[operators] def partialFold[B, O: Encoder](
       tiles: Dataset[TileRow], agg: Aggregator[TileRow, B, _])(
-      finish: (Long, B) => O): Dataset[O] = {
+      finish: (Long, B) => O): Dataset[O] =
     // explicit partition count (not AQE-advisory-sized): the fold is
     // CPU-bound per DECODED byte, and the ~100-200× compressed shuffle
     // size would coalesce it to 1-2 tasks (same pathology as the catalog
@@ -116,25 +116,29 @@ object StackOps {
     // one buffer per tile exists in total; the raw-row shuffle is small
     // (payloads compress well) — guide §2.3's "shuffle fewer bytes" here
     // means shuffling rows, not buffers.
-    val spark = tiles.sparkSession
-    import org.apache.spark.sql.functions.col
-    val p = foldWidth(spark)
-    val coloc = tiles.repartition(p, col("tile_id"))
-      .sortWithinPartitions(col("tile_id"))
-    coloc.mapPartitions((it: Iterator[TileRow]) =>
-      sortedRuns(it)(_.tile_id) { (tid, run) =>
-        var b = agg.zero
-        run.foreach(t => b = agg.reduce(b, t))
-        finish(tid, b)
-      })
+    keyedRuns(tiles, foldWidth(tiles.sparkSession), "tile_id")(_.tile_id) { (tid, run) =>
+      var b = agg.zero
+      run.foreach(t => b = agg.reduce(b, t))
+      finish(tid, b)
+    }
+
+  /** The one tile-keyed exchange: repartition `ds` to exactly `width`
+    * partitions on `keyCols`, sort each partition by them, and map every
+    * run of rows with an equal `key` through `f(key, run)` — one run live
+    * per task. Serves the batch fold, the views' fused refresh and the
+    * stencil frame assembly; `key` must be the value of `keyCols`. */
+  private[operators] def keyedRuns[T, K, O: Encoder](ds: Dataset[T], width: Int,
+      keyCols: String*)(key: T => K)(f: (K, Iterator[T]) => O): Dataset[O] = {
+    val cols = keyCols.map(col)
+    ds.repartition(width, cols: _*).sortWithinPartitions(cols: _*)
+      .mapPartitions((it: Iterator[T]) => sortedRuns(it)(key)(f))
   }
 
   /** The runs of equal keys in a key-sorted iterator, each mapped through
-    * `f(key, run)` as it streams past — one run live at a time. Serves the
-    * batch fold and the views' fused refresh; `f` may leave its run
-    * partly unread. */
-  private[operators] def sortedRuns[T, O](it: Iterator[T])(key: T => Long)(
-      f: (Long, Iterator[T]) => O): Iterator[O] = {
+    * `f(key, run)` as it streams past — one run live at a time; `f` may
+    * leave its run partly unread. */
+  private def sortedRuns[T, K, O](it: Iterator[T])(key: T => K)(
+      f: (K, Iterator[T]) => O): Iterator[O] = {
     val in = it.buffered
     new scala.collection.AbstractIterator[O] {
       def hasNext: Boolean = in.hasNext

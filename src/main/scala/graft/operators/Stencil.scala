@@ -5,9 +5,10 @@ import graft.sources.ImageTable
 
 /** 2-D neighborhood ("stencil") operators over tiled rasters — the filtlib
   * convolution family (`filtlib.py:90-394`) — executed as tile+halo exchange:
-  * every tile ships only its h-pixel edge strips to its 8 neighbors, a
-  * groupBy((image_id, tile_id)) assembles the padded (T+2h)² window, the
-  * kernel runs locally, and the core T² is re-emitted.
+  * every tile ships only its h-pixel edge strips to its 8 neighbors, one
+  * keyed-run exchange on (image_id, tile_id) (`StackOps.keyedRuns`)
+  * assembles the padded (T+2h)² window, the kernel runs locally, and the
+  * core T² is re-emitted.
   *
   * Shuffle cost, honestly: ONE invocation moves the full tile payload once
   * (the core rides the same exchange as the strips) plus O(perimeter·h) of
@@ -26,10 +27,16 @@ object Stencil {
                             tx: Int, ty: Int, px0: Int, py0: Int,
                             pw: Int, ph: Int, strip: Array[Float])
 
-  /** Apply `kernel(padded, P, ndv) -> core(T²)` to every tile with halo h. */
+  /** A stencil kernel: `(padded, P, h, ndv) -> core(T²)` over one P×P
+    * frame with a halo of h (T = P − 2h). */
+  type Kernel = (Array[Float], Int, Int, Float) => Array[Float]
+
+  /** Apply `kernel(padded, P, h, ndv) -> core(T²)` to every tile with halo h. */
   def apply(tiles: Dataset[TileRow], ntx: Int, nty: Int, halo: Int,
             tileSize: Int = Warp.TileSize, ndv: Float = ImageTable.Ndv)
-           (kernel: (Array[Float], Int, Int, Float) => Array[Float]): Dataset[TileRow] = {
+           (kernel: Kernel): Dataset[TileRow] = {
+    require(halo >= 0 && halo <= tileSize, s"halo $halo outside [0, $tileSize]: " +
+      "strips are cut from one tile (fillGapsDilate chunks deeper halos)")
     val spark = tiles.sparkSession
     import spark.implicits._
     val T = tileSize; val h = halo; val P = T + 2 * h
@@ -73,67 +80,57 @@ object Stencil {
     }
 
     // 2) assemble padded frames per (image, tile), run kernel, emit core.
-    //    A group may hold only neighbor halo strips and no core tile (every
-    //    image footprint border, since warpToTiles drops empty tiles): tx/ty
-    //    derive from tile_id (tile_id = ty·ntx + tx by construction) and ts
-    //    from any part (all parts of one image share its timestamp), so
-    //    grow-into-neighbor kernels (dilate/fill) emit correctly-addressed
-    //    tiles; all-NDV results are dropped like warpToTiles drops empties.
-    //    The grouping is an EXPLICIT-width repartition + local sort with a
-    //    streaming run iterator (one padded frame live at a time — the same
-    //    memory shape groupByKey's sorted stream had): the kernel stage is
-    //    pure CPU (40-55 s of executor time at sf0.1) and groupByKey would
-    //    run it on spark.sql.shuffle.partitions tasks — half the machine
-    //    idle at the bench's 16 (guide §2.6); 2× the core count also
-    //    smooths per-tile kernel-cost skew.
-    import org.apache.spark.sql.functions.col
+    frames(parts, ntx, P, ndv)(kernel(_, P, h, ndv))
+  }
+
+  /** Pastes the parts of each (image, tile) into one P×P frame (NDV where
+    * no part lands) and emits `f(frame)` as that tile; all-NDV results are
+    * dropped like warpToTiles drops empties. A tile may receive only
+    * neighbor halo strips and no core (every image footprint border, since
+    * warpToTiles drops empty tiles): tx/ty derive from tile_id
+    * (tile_id = ty·ntx + tx by construction) and ts from any part (all
+    * parts of one image share its timestamp), so grow-into-neighbor
+    * kernels (dilate/fill) emit correctly-addressed tiles. The exchange
+    * has an EXPLICIT width: the kernel stage is pure CPU (40-55 s of
+    * executor time at sf0.1) and a default-width grouping would run it on
+    * spark.sql.shuffle.partitions tasks — half the machine idle at the
+    * bench's 16 (guide §2.6); 2× the core count also smooths per-tile
+    * kernel-cost skew (at the folds' 1× width the sf0.01 stencil queries
+    * ran ~25 % slower on a 4-core host). */
+  private def frames(parts: Dataset[HaloPart], ntx: Int, P: Int, ndv: Float)(
+      f: Array[Float] => Array[Float]): Dataset[TileRow] = {
+    val spark = parts.sparkSession
+    import spark.implicits._
     val width = math.max(2 * spark.sparkContext.defaultParallelism,
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    parts.repartition(width, col("image_id"), col("tile_id"))
-      .sortWithinPartitions(col("image_id"), col("tile_id"))
-      .mapPartitions { it =>
-        val in = it.buffered
-        new scala.collection.AbstractIterator[TileRow] {
-          def hasNext: Boolean = in.hasNext
-          def next(): TileRow = {
-            val head = in.next()
-            val imageId = head.image_id; val tileId = head.tile_id
-            val padded = Array.fill(P * P)(ndv)
-            var tsUs = head.ts_us
-            var p = head
-            var more = true
-            while (more) {
-              tsUs = p.ts_us
-              var yy = 0
-              while (yy < p.ph) {
-                System.arraycopy(p.strip, yy * p.pw, padded,
-                  (p.py0 + yy) * P + p.px0, p.pw)
-                yy += 1
-              }
-              if (in.hasNext && in.head.image_id == imageId &&
-                  in.head.tile_id == tileId) p = in.next()
-              else more = false
-            }
-            val tx = (tileId % ntx).toInt; val ty = (tileId / ntx).toInt
-            val core = kernel(padded, P, h, ndv)
-            TileRow(imageId, tsUs, tileId, tx, ty, core,
-              core.count(_ != ndv), elided = false)
-          }
+    StackOps.keyedRuns(parts, width, "image_id", "tile_id")(
+        p => (p.image_id, p.tile_id)) { case ((imageId, tileId), run) =>
+      val frame = Array.fill(P * P)(ndv)
+      var tsUs = 0L
+      run.foreach { p =>
+        tsUs = p.ts_us
+        var yy = 0
+        while (yy < p.ph) {
+          System.arraycopy(p.strip, yy * p.pw, frame, (p.py0 + yy) * P + p.px0, p.pw)
+          yy += 1
         }
       }
-      .filter(_.n_valid > 0)
+      val out = f(frame)
+      TileRow(imageId, tsUs, tileId, (tileId % ntx).toInt, (tileId / ntx).toInt, out,
+        out.count(_ != ndv), elided = false)
+    }.filter(_.n_valid > 0)
   }
 
   /** Gaussian smooth — `gauss_fltr_astropy` `filtlib.py:101-170`: truncate=3,
     * size = 2·int(truncate·sigma)+1, weights renormalized over valid pixels. */
-  def gaussKernel(sigma: Double): (Array[Float], Int, Int, Float) => Array[Float] =
+  def gaussKernel(sigma: Double): Kernel =
     gaussLike(sigma, fill = false)
 
   /** Gaussian fill — `gaussfill` `filtlib.py:240-247`: gap pixels take the
     * NaN-aware smoothed value (renormalized over the valid support), while
     * valid pixels keep their ORIGINAL value (the reference restores
     * `smooth[~mask] = dem[~mask]`). */
-  def gaussFillKernel(sigma: Double): (Array[Float], Int, Int, Float) => Array[Float] =
+  def gaussFillKernel(sigma: Double): Kernel =
     gaussLike(sigma, fill = true)
 
   /** The 1-D gaussian taps (truncate=3, indices 0..2r ↔ offsets −r..r) —
@@ -147,7 +144,7 @@ object Stencil {
     }
   }
 
-  private def gaussLike(sigma: Double, fill: Boolean): (Array[Float], Int, Int, Float) => Array[Float] = {
+  private def gaussLike(sigma: Double, fill: Boolean): Kernel = {
     val r = (3.0 * sigma).toInt
     val w1 = gaussWeights(sigma)
     (padded, p, h, ndv) => {
@@ -203,114 +200,78 @@ object Stencil {
     }
   }
 
-  /** Rolling median — `rolling_fltr`/`median_fltr` `filtlib.py:271-339`
-    * (nanmedian over the size² window, original mask preserved). */
-  def medianKernel(radius: Int): (Array[Float], Int, Int, Float) => Array[Float] =
+  /** One core pixel's window, as the window walk hands it over: the
+    * center value, the valid values of the window in row-major order
+    * (`v(0 until n)`), and whether every kept cell was valid. */
+  private trait Window {
+    def apply(center: Float, v: Array[Float], n: Int, full: Boolean): Float
+  }
+
+  /** The window walk behind the size² window kernels: for every core pixel,
+    * gather the valid values of its window (cells where `keep` is false
+    * skipped) and write `at(ndv)(center, values, n, full)`; a pixel whose
+    * window holds no valid value stays NDV. */
+  private def windowKernel(size: Int, keep: Array[Boolean] = null)(at: Float => Window): Kernel = {
+    val k = size / 2
     (padded, p, h, ndv) => {
-      require(h >= radius)
+      require(h >= k, s"halo $h < window radius $k")
+      val f = at(ndv)
       val t = p - 2 * h
       val out = Array.fill(t * t)(ndv)
-      val buf = new Array[Float]((2 * radius + 1) * (2 * radius + 1))
+      val buf = new Array[Float](size * size)
       var y = 0
       while (y < t) {
         var x = 0
         while (x < t) {
-          if (padded((y + h) * p + (x + h)) != ndv) {
-            var n = 0
-            var dy = -radius
-            while (dy <= radius) {
-              var dx = -radius
-              while (dx <= radius) {
-                val v = padded((y + h + dy) * p + (x + h + dx))
-                if (v != ndv) { buf(n) = v; n += 1 }
-                dx += 1
+          var n = 0; var full = true
+          var i = 0
+          while (i < size) {
+            var j = 0
+            while (j < size) {
+              if (keep == null || keep(i * size + j)) {
+                val v = padded((y + h + i - k) * p + (x + h + j - k))
+                if (v != ndv) { buf(n) = v; n += 1 } else full = false
               }
-              dy += 1
+              j += 1
             }
-            if (n > 0) {
-              val s = buf.take(n).sorted
-              out(y * t + x) = if (n % 2 == 1) s(n / 2) else ((s(n / 2 - 1) + s(n / 2)) / 2).toFloat
-            }
+            i += 1
           }
+          if (n > 0) out(y * t + x) = f(padded((y + h) * p + (x + h)), buf, n, full)
           x += 1
         }
         y += 1
       }
       out
+    }
+  }
+
+  private def mean(v: Array[Float], n: Int): Float = {
+    var s = 0.0; var i = 0
+    while (i < n) { s += v(i); i += 1 }
+    (s / n).toFloat
+  }
+
+  /** Rolling median — `rolling_fltr`/`median_fltr` `filtlib.py:271-339`
+    * (nanmedian over the size² window, original mask preserved). */
+  def medianKernel(radius: Int): Kernel =
+    windowKernel(2 * radius + 1) { ndv => (c, v, n, _) =>
+      if (c == ndv) ndv
+      else {
+        val s = v.take(n).sorted
+        if (n % 2 == 1) s(n / 2) else ((s(n / 2 - 1) + s(n / 2)) / 2).toFloat
+      }
     }
 
   /** Morphology on the validity mask — `mask_dilate`/`mask_erode`/`maskfill`
     * `malib.py:1320-1375`. erode invalidates pixels whose window has any
     * invalid; dilate validates pixels with any valid neighbor (filled with
     * the neighbor mean). */
-  def morphKernel(op: String, radius: Int): (Array[Float], Int, Int, Float) => Array[Float] =
-    (padded, p, h, ndv) => {
-      require(h >= radius)
-      val t = p - 2 * h
-      val out = Array.fill(t * t)(ndv)
-      var y = 0
-      while (y < t) {
-        var x = 0
-        while (x < t) {
-          val c = padded((y + h) * p + (x + h))
-          var anyInvalid = false; var s = 0.0; var n = 0
-          var dy = -radius
-          while (dy <= radius) {
-            var dx = -radius
-            while (dx <= radius) {
-              val v = padded((y + h + dy) * p + (x + h + dx))
-              if (v == ndv) anyInvalid = true else { s += v; n += 1 }
-              dx += 1
-            }
-            dy += 1
-          }
-          op match {
-            case "erode"  => if (c != ndv && !anyInvalid) out(y * t + x) = c
-            case "dilate" => if (c != ndv) out(y * t + x) = c
-                             else if (n > 0) out(y * t + x) = (s / n).toFloat
-            case _ => throw new IllegalArgumentException(op)
-          }
-          x += 1
-        }
-        y += 1
-      }
-      out
-    }
-
-  /** Horn 3×3 slope (degrees) — the `gdaldem slope` analog
-    * (`gdaldem_mem_ds` `geolib.py:1563-1599`); NDV where the 3×3 support is
-    * incomplete. */
-  def slopeKernel(res: Double): (Array[Float], Int, Int, Float) => Array[Float] =
-    (padded, p, h, ndv) => {
-      require(h >= 1)
-      val t = p - 2 * h
-      val out = Array.fill(t * t)(ndv)
-      def v(px: Int, py: Int): Float = padded(py * p + px)
-      var y = 0
-      while (y < t) {
-        var x = 0
-        while (x < t) {
-          val cx = x + h; val cy = y + h
-          var ok = true
-          var dy = -1
-          while (dy <= 1 && ok) {
-            var dx = -1
-            while (dx <= 1 && ok) { if (v(cx + dx, cy + dy) == ndv) ok = false; dx += 1 }
-            dy += 1
-          }
-          if (ok) {
-            val dzdx = ((v(cx+1,cy-1) + 2*v(cx+1,cy) + v(cx+1,cy+1)) -
-                        (v(cx-1,cy-1) + 2*v(cx-1,cy) + v(cx-1,cy+1))) / (8 * res)
-            val dzdy = ((v(cx-1,cy+1) + 2*v(cx,cy+1) + v(cx+1,cy+1)) -
-                        (v(cx-1,cy-1) + 2*v(cx,cy-1) + v(cx+1,cy-1))) / (8 * res)
-            out(y * t + x) = math.toDegrees(math.atan(math.sqrt(dzdx*dzdx + dzdy*dzdy))).toFloat
-          }
-          x += 1
-        }
-        y += 1
-      }
-      out
-    }
+  def morphKernel(op: String, radius: Int): Kernel = op match {
+    case "erode" => windowKernel(2 * radius + 1) { ndv => (c, _, _, full) => if (full) c else ndv }
+    case "dilate" => windowKernel(2 * radius + 1) { ndv => (c, v, n, _) =>
+      if (c != ndv) c else mean(v, n) }
+    case _ => throw new IllegalArgumentException(s"unknown morphKernel op $op")
+  }
 
   /** Island removal — `remove_islands` `filtlib.py:472-481` / `mask_islands`
     * `malib.py:1320-1327`: morphological CLOSING of the invalid mask
@@ -320,7 +281,7 @@ object Stencil {
     * (the erode-then-dilate composition, evaluated in one pass with halo
     * 2k). Values are the ORIGINAL pixel values — unlike morphKernel's
     * dilate, nothing is fabricated. */
-  def removeIslandsKernel(k: Int): (Array[Float], Int, Int, Float) => Array[Float] =
+  def removeIslandsKernel(k: Int): Kernel =
     (padded, p, h, ndv) => {
       require(h >= 2 * k, s"halo $h < 2*iterations ${2 * k}")
       val t = p - 2 * h
@@ -381,11 +342,11 @@ object Stencil {
       removeIslandsKernel(iterations))
 
   /** gdaldem terrain derivatives — `gdaldem_mem_ds`/`gdaldem_wrapper`
-    * `geolib.py:1563-1599` wraps all modes; slope lives in slopeKernel.
-    * For geographic CRS pass res·111120 (the reference's gdaldem scale,
-    * `geolib.py:1589-1590`).
+    * `geolib.py:1563-1599` wraps all modes. For geographic CRS pass
+    * res·111120 (the reference's gdaldem scale, `geolib.py:1589-1590`).
     * All use the Horn 3×3 gradient (p = dz/dx east+, q = dz/dy with rows
     * increasing south) and require full 3×3 support (NDV otherwise):
+    *  - slope:     atan(√(p²+q²)) in degrees
     *  - aspect:    compass azimuth of the downslope direction, degrees
     *               clockwise from north in [0, 360); flat cells → NDV
     *  - hillshade: 255·max(0, sin(alt)·cos(s) + cos(alt)·sin(s)·cos(azL−asp))
@@ -393,143 +354,78 @@ object Stencil {
     *               315/45); flat cells shade to 255·sin(alt)
     *  - tri:       mean |center − neighbor| over the 8 neighbors (Wilson)
     *  - tpi:       center − mean(8 neighbors)
-    *  - roughness: max − min of the 3×3 window */
+    *  - roughness: max − min of the 3×3 window
+    * An unknown mode fails here, when the kernel is built. */
   def demKernel(mode: String, res: Double, lightAz: Double = 315.0,
-                lightAlt: Double = 45.0): (Array[Float], Int, Int, Float) => Array[Float] =
-    (padded, p, h, ndv) => {
-      require(h >= 1)
-      val t = p - 2 * h
-      val out = Array.fill(t * t)(ndv)
-      def v(px: Int, py: Int): Float = padded(py * p + px)
-      val azR = math.toRadians(lightAz); val altR = math.toRadians(lightAlt)
-      // hillshade constants hoisted: the per-pixel form below is gdaldem's
-      // algebraic identity with NO trig in the loop
-      val sinAlt = math.sin(altR); val cosAlt = math.cos(altR)
-      val sinAz = math.sin(azR); val cosAz = math.cos(azR)
-      var y = 0
-      while (y < t) {
-        var x = 0
-        while (x < t) {
-          val cx = x + h; val cy = y + h
-          var ok = true
-          var dy = -1
-          while (dy <= 1 && ok) {
-            var dx = -1
-            while (dx <= 1 && ok) { if (v(cx + dx, cy + dy) == ndv) ok = false; dx += 1 }
-            dy += 1
-          }
-          if (ok) {
-            val c = v(cx, cy)
-            mode match {
-              case "aspect" | "hillshade" =>
-                val dzdx = ((v(cx+1,cy-1) + 2*v(cx+1,cy) + v(cx+1,cy+1)) -
-                            (v(cx-1,cy-1) + 2*v(cx-1,cy) + v(cx-1,cy+1))) / (8 * res)
-                val dzdyS = ((v(cx-1,cy+1) + 2*v(cx,cy+1) + v(cx+1,cy+1)) -
-                             (v(cx-1,cy-1) + 2*v(cx,cy-1) + v(cx+1,cy-1))) / (8 * res)
-                if (mode == "aspect") {
-                  if (dzdx == 0 && dzdyS == 0) out(y * t + x) = ndv // flat
-                  else {
-                    // downslope east comp = −p, north comp = +q_south
-                    var az = math.toDegrees(math.atan2(-dzdx, dzdyS))
-                    if (az < 0) az += 360.0
-                    out(y * t + x) = az.toFloat
-                  }
-                } else {
-                  // ≡ sinAlt·cos(slope) + cosAlt·sin(slope)·cos(azR − asp)
-                  // with cos(slope) = 1/√(1+p²+q²), sin(slope)·cos(asp) =
-                  // qS/√(1+p²+q²), sin(slope)·sin(asp) = −p/√(1+p²+q²):
-                  // one sqrt + one division per pixel, no trig (the
-                  // standard gdaldem inner-loop form)
-                  val shade = (sinAlt + cosAlt * (cosAz * dzdyS - sinAz * dzdx)) /
-                    math.sqrt(1.0 + dzdx * dzdx + dzdyS * dzdyS)
-                  out(y * t + x) = (255.0 * math.max(0.0, shade)).toFloat
-                }
-              case "tri" =>
-                var s = 0.0
-                var dy2 = -1
-                while (dy2 <= 1) {
-                  var dx2 = -1
-                  while (dx2 <= 1) {
-                    if (!(dx2 == 0 && dy2 == 0)) s += math.abs(c - v(cx + dx2, cy + dy2))
-                    dx2 += 1
-                  }
-                  dy2 += 1
-                }
-                out(y * t + x) = (s / 8.0).toFloat
-              case "tpi" =>
-                var s = 0.0
-                var dy2 = -1
-                while (dy2 <= 1) {
-                  var dx2 = -1
-                  while (dx2 <= 1) {
-                    if (!(dx2 == 0 && dy2 == 0)) s += v(cx + dx2, cy + dy2)
-                    dx2 += 1
-                  }
-                  dy2 += 1
-                }
-                out(y * t + x) = (c - s / 8.0).toFloat
-              case "roughness" =>
-                var mn = Float.MaxValue; var mx = Float.MinValue
-                var dy2 = -1
-                while (dy2 <= 1) {
-                  var dx2 = -1
-                  while (dx2 <= 1) {
-                    val w = v(cx + dx2, cy + dy2)
-                    if (w < mn) mn = w
-                    if (w > mx) mx = w
-                    dx2 += 1
-                  }
-                  dy2 += 1
-                }
-                out(y * t + x) = mx - mn
-              case m => throw new IllegalArgumentException(m)
-            }
-          }
-          x += 1
-        }
-        y += 1
+                lightAlt: Double = 45.0): Kernel = {
+    // the full window in row-major order: v(4) is the center
+    def dzdx(v: Array[Float]): Double =
+      ((v(2) + 2 * v(5) + v(8)) - (v(0) + 2 * v(3) + v(6))) / (8 * res)
+    def dzdy(v: Array[Float]): Double =
+      ((v(6) + 2 * v(7) + v(8)) - (v(0) + 2 * v(1) + v(2))) / (8 * res)
+    val azR = math.toRadians(lightAz); val altR = math.toRadians(lightAlt)
+    // hillshade constants hoisted: the per-pixel form below is gdaldem's
+    // algebraic identity with NO trig in the loop
+    val sinAlt = math.sin(altR); val cosAlt = math.cos(altR)
+    val sinAz = math.sin(azR); val cosAz = math.cos(azR)
+    val cell: Float => Window = mode match {
+      case "slope" => _ => (_, v, _, _) => {
+        val p = dzdx(v); val q = dzdy(v)
+        math.toDegrees(math.atan(math.sqrt(p * p + q * q))).toFloat
       }
-      out
+      case "aspect" => ndv => (_, v, _, _) => {
+        val p = dzdx(v); val q = dzdy(v)
+        if (p == 0 && q == 0) ndv // flat
+        else {
+          // downslope east comp = −p, north comp = +q_south
+          var az = math.toDegrees(math.atan2(-p, q))
+          if (az < 0) az += 360.0
+          az.toFloat
+        }
+      }
+      case "hillshade" => _ => (_, v, _, _) => {
+        val p = dzdx(v); val q = dzdy(v)
+        // ≡ sinAlt·cos(slope) + cosAlt·sin(slope)·cos(azR − asp) with
+        // cos(slope) = 1/√(1+p²+q²), sin(slope)·cos(asp) = q/√(1+p²+q²),
+        // sin(slope)·sin(asp) = −p/√(1+p²+q²): one sqrt + one division per
+        // pixel, no trig (the standard gdaldem inner-loop form)
+        val shade = (sinAlt + cosAlt * (cosAz * q - sinAz * p)) / math.sqrt(1.0 + p * p + q * q)
+        (255.0 * math.max(0.0, shade)).toFloat
+      }
+      case "tri" => _ => (c, v, _, _) => {
+        var s = 0.0; var i = 0
+        while (i < 9) { if (i != 4) s += math.abs(c - v(i)); i += 1 }
+        (s / 8.0).toFloat
+      }
+      case "tpi" => _ => (c, v, _, _) => {
+        var s = 0.0; var i = 0
+        while (i < 9) { if (i != 4) s += v(i); i += 1 }
+        (c - s / 8.0).toFloat
+      }
+      case "roughness" => _ => (_, v, _, _) => {
+        var mn = Float.MaxValue; var mx = Float.MinValue; var i = 0
+        while (i < 9) { if (v(i) < mn) mn = v(i); if (v(i) > mx) mx = v(i); i += 1 }
+        mx - mn
+      }
+      case m => throw new IllegalArgumentException(s"unknown demKernel mode $m")
     }
+    windowKernel(3) { ndv =>
+      val f = cell(ndv)
+      (c, v, n, full) => if (full) f(c, v, n, full) else ndv
+    }
+  }
 
   /** Uniform (mean) filter — `uniform_fltr` `filtlib.py:382-394`:
     * window mean over valid pixels, original mask preserved. */
-  def uniformKernel(radius: Int): (Array[Float], Int, Int, Float) => Array[Float] =
-    (padded, p, h, ndv) => {
-      require(h >= radius)
-      val t = p - 2 * h
-      val out = Array.fill(t * t)(ndv)
-      var y = 0
-      while (y < t) {
-        var x = 0
-        while (x < t) {
-          if (padded((y + h) * p + (x + h)) != ndv) {
-            var s = 0.0; var n = 0
-            var dy = -radius
-            while (dy <= radius) {
-              var dx = -radius
-              while (dx <= radius) {
-                val v = padded((y + h + dy) * p + (x + h + dx))
-                if (v != ndv) { s += v; n += 1 }
-                dx += 1
-              }
-              dy += 1
-            }
-            if (n > 0) out(y * t + x) = (s / n).toFloat
-          }
-          x += 1
-        }
-        y += 1
-      }
-      out
-    }
+  def uniformKernel(radius: Int): Kernel =
+    windowKernel(2 * radius + 1) { ndv => (c, v, n, _) => if (c == ndv) ndv else mean(v, n) }
 
   /** `rounds` radius-1 neighbor-mean dilations run LOCALLY on the padded
     * frame — bit-identical to `rounds` chained exchanges by the halo-shrink
     * argument (after local pass j, every frame cell ≥ j from the frame edge
     * equals the global iteration; the core sits ≥ h ≥ rounds deep), at ONE
     * payload shuffle instead of `rounds`. */
-  def iteratedDilateKernel(rounds: Int): (Array[Float], Int, Int, Float) => Array[Float] =
+  def iteratedDilateKernel(rounds: Int): Kernel =
     (padded, p, h, ndv) => {
       require(h >= rounds, s"halo $h < rounds $rounds")
       var cur = padded
@@ -606,42 +502,13 @@ object Stencil {
     * half-pixel-offset disc (offsets are i − size/2 with float division),
     * applied only for size > 3 like the reference. */
   def rollingKernel(size: Int, f: (Array[Float], Int) => Float,
-                    circular: Boolean = true): (Array[Float], Int, Int, Float) => Array[Float] = {
-    val k = size / 2
+                    circular: Boolean = true): Kernel = {
     val r = size / 2.0
     val keep = Array.tabulate(size * size) { idx =>
       val oy = idx / size - r; val ox = idx % size - r
       !circular || size <= 3 || ox * ox + oy * oy <= r * r
     }
-    (padded, p, h, ndv) => {
-      require(h >= k, s"halo $h < window radius $k")
-      val t = p - 2 * h
-      val out = Array.fill(t * t)(ndv)
-      val buf = new Array[Float](size * size)
-      var y = 0
-      while (y < t) {
-        var x = 0
-        while (x < t) {
-          var n = 0
-          var i = 0
-          while (i < size) {
-            var j = 0
-            while (j < size) {
-              if (keep(i * size + j)) {
-                val v = padded((y + h + i - k) * p + (x + h + j - k))
-                if (v != ndv) { buf(n) = v; n += 1 }
-              }
-              j += 1
-            }
-            i += 1
-          }
-          if (n > 0) out(y * t + x) = f(buf, n)
-          x += 1
-        }
-        y += 1
-      }
-      out
-    }
+    windowKernel(size, keep) { _ => (_, v, n, _) => f(v, n) }
   }
 
   /** Band-pass — `bandpass` `filtlib.py:262-268` = highpass(lowpass(v, σ1),
@@ -650,7 +517,7 @@ object Stencil {
     * from it at the core. Requires halo ≥ 3σ1 + 3σ2. (The reference's
     * unsigned-input min-shift in `highpass` is an integer-dtype artifact;
     * float payloads skip it.) */
-  def bandpassKernel(sigma1: Double, sigma2: Double): (Array[Float], Int, Int, Float) => Array[Float] = {
+  def bandpassKernel(sigma1: Double, sigma2: Double): Kernel = {
     require(sigma2 > sigma1, "bandpass needs size2 > size1 (filtlib.py:265)")
     val r1 = (3.0 * sigma1).toInt; val r2 = (3.0 * sigma2).toInt
     val g1 = gaussKernel(sigma1); val g2 = gaussKernel(sigma2)
@@ -685,7 +552,7 @@ object Stencil {
     import spark.implicits._
     val T = tileSize; val half = T / 2
     val ntx2 = (ntx + 1) / 2
-    tiles.map { t =>
+    val parts = tiles.map { t =>
       val sub = new Array[Float](half * half)
       var y = 0
       while (y < half) {
@@ -697,20 +564,8 @@ object Stencil {
       val nx = t.tx / 2; val ny = t.ty / 2
       HaloPart(t.image_id, t.ts_us, ny.toLong * ntx2 + nx, nx, ny,
         qx * half, qy * half, half, half, sub)
-    }.groupByKey(p => (p.image_id, p.tile_id)).mapGroups { (key, it) =>
-      val (imageId, tileId) = key
-      val payload = Array.fill(T * T)(ndv)
-      var tsUs = 0L; var tx = 0; var ty = 0
-      it.foreach { p =>
-        tsUs = p.ts_us; tx = p.tx; ty = p.ty
-        var yy = 0
-        while (yy < p.ph) {
-          System.arraycopy(p.strip, yy * p.pw, payload, (p.py0 + yy) * T + p.px0, p.pw)
-          yy += 1
-        }
-      }
-      TileRow(imageId, tsUs, tileId, tx, ty, payload, payload.count(_ != ndv), elided = false)
-    }.filter(_.n_valid > 0)
+    }
+    frames(parts, ntx2, T, ndv)(identity)
   }
 
   /** Pyramidal gaussian — `gauss_fltr_pyramid` `filtlib.py:175-226` (the
@@ -746,7 +601,7 @@ object Stencil {
     * with fewer than ~2× the coefficient count of support pixels (or a
     * singular fit) stay masked. Exactly reproduces surfaces that are
     * polynomials of total degree ≤ `degree` — the golden contract. */
-  def interpKernel(degree: Int = 3): (Array[Float], Int, Int, Float) => Array[Float] = {
+  def interpKernel(degree: Int = 3): Kernel = {
     val terms = (for { i <- 0 to degree; j <- 0 to degree - i } yield (i, j)).toArray
     val nT = terms.length
     (padded, p, h, ndv) => {
@@ -880,7 +735,7 @@ object Stencil {
   }
 
   /** High-pass = v − gauss(v) — `highpass` `filtlib.py:249-257`. */
-  def highpassKernel(sigma: Double): (Array[Float], Int, Int, Float) => Array[Float] = {
+  def highpassKernel(sigma: Double): Kernel = {
     val g = gaussKernel(sigma)
     (padded, p, h, ndv) => {
       val t = p - 2 * h

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geo.{Extent, GridSpec, Proj}
 import graft.sources.{Codec, ImageRow}
@@ -81,30 +81,10 @@ object Warp {
     if (m.getSeq[String](13).exists(_ != targetCrs))
       return analyzeCross(images, resStrategy, extentStrategy, targetCrs, datum)
 
-    val res = resStrategy match {
-      case "first" => m.getStruct(12).getDouble(2)
-      case "min"   => m.getDouble(0)
-      case "max"   => m.getDouble(1)
-      case "mean"  => m.getDouble(2)
-      case "med"   => m.getDouble(3)
-      case "common_scale_factor" => math.sqrt(m.getDouble(1) / m.getDouble(0)) * m.getDouble(0)
-      case s => s.toDouble
-    }
-    val extent = extentStrategy match {
-      case "union" => Extent(m.getDouble(4), m.getDouble(5), m.getDouble(6), m.getDouble(7))
-      case "intersection" =>
-        val e = Extent(m.getDouble(8), m.getDouble(9), m.getDouble(10), m.getDouble(11))
-        require(!e.isEmpty, "Input extents do not intersect") // warplib.py:404-405
-        e
-      case "first" =>
-        val f = m.getStruct(12)
-        GridSpec(f.getDouble(0), f.getDouble(1), f.getDouble(2), f.getString(5),
-                 f.getInt(3), f.getInt(4)).extent
-      case s =>
-        val p = s.split("[ ,]+").map(_.toDouble); Extent(p(0), p(1), p(2), p(3))
-    }
-    val crs = m.getStruct(12).getString(5)
-    GridSpec.fromExtentRes(extent, res, crs)
+    val first = m.getStruct(12)
+    resolveGrid(m, resStrategy, extentStrategy, first.getDouble(2),
+      GridSpec(first.getDouble(0), first.getDouble(1), first.getDouble(2), first.getString(5),
+        first.getInt(3), first.getInt(4)).extent, first.getString(5))
   }
 
   /** Cross-CRS stage A: one narrow pass projects each image's metadata
@@ -134,8 +114,20 @@ object Warp {
       min_by(struct(col("xmin"), col("ymin"), col("xmax"), col("ymax"), col("res")),
              col("image_id")).as("first")
     ).head()
+    val first = m.getStruct(12)
+    resolveGrid(m, resStrategy, extentStrategy, first.getDouble(4),
+      Extent(first.getDouble(0), first.getDouble(1), first.getDouble(2), first.getDouble(3)),
+      targetCrs)
+  }
+
+  /** The res and extent strategies over one metadata aggregate row (fields
+    * 0-3: res min/max/mean/median; 4-7: union extent; 8-11: intersection
+    * extent), given the first image's res and extent in the target CRS. */
+  private def resolveGrid(m: Row, resStrategy: String, extentStrategy: String,
+                          firstRes: => Double, firstExtent: => Extent,
+                          crs: String): GridSpec = {
     val res = resStrategy match {
-      case "first" => m.getStruct(12).getDouble(4)
+      case "first" => firstRes
       case "min"   => m.getDouble(0)
       case "max"   => m.getDouble(1)
       case "mean"  => m.getDouble(2)
@@ -149,13 +141,11 @@ object Warp {
         val e = Extent(m.getDouble(8), m.getDouble(9), m.getDouble(10), m.getDouble(11))
         require(!e.isEmpty, "Input extents do not intersect") // warplib.py:404-405
         e
-      case "first" =>
-        val f = m.getStruct(12)
-        Extent(f.getDouble(0), f.getDouble(1), f.getDouble(2), f.getDouble(3))
+      case "first" => firstExtent
       case s =>
         val p = s.split("[ ,]+").map(_.toDouble); Extent(p(0), p(1), p(2), p(3))
     }
-    GridSpec.fromExtentRes(extent, res, targetCrs)
+    GridSpec.fromExtentRes(extent, res, crs)
   }
 
   /** No-op elision test for one image grid vs the target —

@@ -126,7 +126,7 @@ object Engine {
       .select(col("q_id"), col("c_id"), col("dist"), col("rnk"))
   }
 
-  /** Stencil sweep: gaussian smooth + slope over warped tiles (tile+halo). */
+  /** Stencil sweep: gaussian smooth over warped tiles (tile+halo). */
   def stencilGauss(s: SparkSession, d: String): DataFrame = {
     val st = TileCells.nearStack(s, images(s, d))
     perImage(Stencil(st.tiles, st.ntx, st.nty, halo = 4)(Stencil.gaussKernel(1.5)), "n_valid_px")
@@ -291,8 +291,8 @@ object Engine {
       .select(col("q_id"), col("c_id"), round(col("cos"), 6).as("cos"), col("rnk"))
   }
 
-  /** gdaldem terrain family over warped tiles: aspect + hillshade + TRI
-    * summarized per image (Horn 3×3 stencil, halo 1). */
+  /** gdaldem terrain family over warped tiles: hillshade summarized per
+    * image (Horn 3×3 stencil, halo 1). */
   def demFamily(s: SparkSession, d: String): DataFrame = {
     val st = TileCells.nearStack(s, images(s, d))
     perImage(Stencil(st.tiles, st.ntx, st.nty, halo = 1)(

@@ -1477,7 +1477,7 @@ object EngineOracle {
     * halo-`halo` Stencil with `kernel(target grid)`, one row per valid
     * output pixel, the value named `out`. */
   private def stencilCells(s: SparkSession, d: String, halo: Int, out: String)(
-      kernel: graft.geo.GridSpec => (Array[Float], Int, Int, Float) => Array[Float]): DataFrame = {
+      kernel: graft.geo.GridSpec => graft.operators.Stencil.Kernel): DataFrame = {
     val st = TileCells.nearStack(s, quantNoRipple(Engine.images(s, d)))
     val cells = graft.operators.Stencil(st.tiles, st.ntx, st.nty, halo)(kernel(st.target))
     TileCells.payloadPixels(cells.toDF(), "image_id")

@@ -358,17 +358,29 @@ object SnapshotTable {
     * routing column from the data files, so both halves keep the exact
     * table schema. Stats run over the SURVIVOR files only: tombstones
     * live under `removed`, never in the live list, so their stats would
-    * be computed and thrown away (one wasted scan per merge/delete). */
+    * be computed and thrown away (one wasted scan per merge/delete).
+    * With `cdc` off (Delta's change-data-feed-off default analog) the
+    * tombstone pre-images are not written at all — a high-churn derived
+    * table (e.g. the incremental views) would otherwise persist a full
+    * copy of every replaced row per commit for a stream nobody reads; the
+    * manifest declares that commit's row-level history ABSENT and
+    * changesCdc fails loudly over the range instead of silently missing
+    * deletes. */
   private def writeSplit(spark: SparkSession, root: String, v: Int,
-                         df: DataFrame, keptCol: String)
-      : (Seq[String], Map[String, FileStats], Seq[String]) = {
-    val attempt = newAttempt(v)
-    df.write.mode(SaveMode.Overwrite).partitionBy(keptCol)
-      .parquet(s"$root/data/$attempt")
-    val survivors = attemptFiles(root, s"data/$attempt/$keptCol=true")
-    val tombstones = attemptFiles(root, s"data/$attempt/$keptCol=false")
-    (survivors, computeStats(spark, root, survivors), tombstones)
-  }
+                         df: DataFrame, keptCol: String, cdc: Boolean)
+      : (Seq[String], Map[String, FileStats], Seq[String]) =
+    if (!cdc) {
+      val (survivors, stats) = writeAttempt(spark, root, v,
+        df.filter(org.apache.spark.sql.functions.col(keptCol)).drop(keptCol))
+      (survivors, stats, Seq.empty[String])
+    } else {
+      val attempt = newAttempt(v)
+      df.write.mode(SaveMode.Overwrite).partitionBy(keptCol)
+        .parquet(s"$root/data/$attempt")
+      val survivors = attemptFiles(root, s"data/$attempt/$keptCol=true")
+      val tombstones = attemptFiles(root, s"data/$attempt/$keptCol=false")
+      (survivors, computeStats(spark, root, survivors), tombstones)
+    }
 
   /** Column expression whose min/max are the manifest-stat bounds for a
     * field: epoch MICROS for timestamps (NTZ pinned as-if-UTC), the NATIVE
@@ -1099,19 +1111,7 @@ object SnapshotTable {
         val routed = old.join(marked, keyCols, "left")
           .withColumn("__kept", col("__hit").isNull)
           .drop("__hit")
-        if (cdc) writeSplit(spark, root, v, routed, "__kept")
-        else {
-          // CDC off (Delta's change-data-feed-off default analog): skip
-          // writing the tombstone pre-images entirely — a high-churn
-          // derived table (e.g. the incremental views) would otherwise
-          // persist a full copy of every replaced row per refresh for a
-          // stream nobody reads. Row-level history for such a commit is
-          // declared ABSENT in the manifest and changesCdc fails loudly
-          // over the range instead of silently missing deletes.
-          val (sf, ss) = writeAttempt(spark, root, v,
-            routed.filter(col("__kept")).drop("__kept"))
-          (sf, ss, Seq.empty[String])
-        }
+        writeSplit(spark, root, v, routed, "__kept", cdc)
       }
     val live = untouched ++ copyFiles ++ survFiles ++ deltaFiles
     val stats = prev.stats.filter { case (f, _) => !candidates.contains(f) } ++
@@ -1174,14 +1174,7 @@ object SnapshotTable {
         // Replaces a filter + negated-filter pair that scanned twice.
         val routed = reader.parquet(touched.map(f => s"$root/$f"): _*)
           .withColumn("__kept", not(coalesce(predicate, lit(false))))
-        if (cdc) writeSplit(spark, root, v, routed, "__kept")
-        else {
-          // CDC off: survivors only (see merge) — deleted pre-images are
-          // declared absent in the manifest, changesCdc fails loudly
-          val (sf, ss) = writeAttempt(spark, root, v,
-            routed.filter(col("__kept")).drop("__kept"))
-          (sf, ss, Seq.empty[String])
-        }
+        writeSplit(spark, root, v, routed, "__kept", cdc)
       }
     val live = untouched ++ newFiles
     val stats = prev.stats.filter { case (f, _) => !replaced.contains(f) } ++ newStats

@@ -12,7 +12,7 @@ class StencilSpec extends AnyFunSuite {
   /** Whole-array reference implementation of a stencil (no tiling) for
     * halo-correctness comparison. */
   def wholeArray(img: Array[Float], w: Int, h: Int,
-                 kernel: (Array[Float], Int, Int, Float) => Array[Float],
+                 kernel: Stencil.Kernel,
                  halo: Int): Array[Float] = {
     // pad the full image by halo with ndv and run the kernel once
     val p = math.max(w, h) + 2 * halo
@@ -50,7 +50,13 @@ class StencilSpec extends AnyFunSuite {
         ("median", Stencil.medianKernel(2), 2),
         ("erode", Stencil.morphKernel("erode", 1), 1),
         ("dilate", Stencil.morphKernel("dilate", 1), 1),
-        ("slope", Stencil.slopeKernel(2.0), 1),
+        ("slope", Stencil.demKernel("slope", 2.0), 1),
+        ("uniform", Stencil.uniformKernel(2), 2),
+        ("aspect", Stencil.demKernel("aspect", 2.0), 1),
+        ("hillshade", Stencil.demKernel("hillshade", 2.0), 1),
+        ("tri", Stencil.demKernel("tri", 2.0), 1),
+        ("tpi", Stencil.demKernel("tpi", 2.0), 1),
+        ("roughness", Stencil.demKernel("roughness", 2.0), 1),
         ("highpass", Stencil.highpassKernel(1.0), 3),
         ("interp", Stencil.interpKernel(3), 4),
         ("iterdilate", Stencil.iteratedDilateKernel(3), 3),
@@ -94,7 +100,7 @@ class StencilSpec extends AnyFunSuite {
     val g = ImageTable.gridOf(0)
     val tiles = Warp.warpToTiles(spark, images, g, "near")
     val sl = Stencil(tiles, (g.w + 63) / 64, (g.h + 63) / 64, 1)(
-      Stencil.slopeKernel(g.res)).collect()
+      Stencil.demKernel("slope", g.res)).collect()
     val grad = math.sqrt(ImageTable.B * ImageTable.B + ImageTable.C * ImageTable.C)
     val want = math.toDegrees(math.atan(grad))
     val vals = sl.flatMap(_.payload.filter(_ != ndv))
@@ -286,6 +292,92 @@ class StencilSpec extends AnyFunSuite {
     }
     assert(checked > 20, s"only $checked interior coarse pixels")
     tiles.unpersist()
+  }
+
+  test("every kernel's output bits on a gappy frame match the pinned digests") {
+    // seeded 40×40 frame, ~20 % NDV holes, non-integer values so any change
+    // in float/double evaluation order moves a digest
+    val rng = new scala.util.Random(20261017L)
+    val p = 40
+    val frame = Array.fill(p * p)(
+      if (rng.nextDouble() < 0.2) ndv else (100.0 + 25.0 * rng.nextGaussian()).toFloat)
+    // order-sensitive reducer: pins the row-major gather order as well
+    val fold: (Array[Float], Int) => Float = (v, n) => {
+      var s = 0f; var i = 0
+      while (i < n) { s = 0.5f * s + v(i); i += 1 }; s
+    }
+    val res = 1.7
+    val kernels = Seq(
+      ("gauss", Stencil.gaussKernel(1.5), 4),
+      ("gaussfill", Stencil.gaussFillKernel(1.5), 4),
+      ("median", Stencil.medianKernel(2), 2),
+      ("median_r1", Stencil.medianKernel(1), 1),
+      ("uniform", Stencil.uniformKernel(2), 2),
+      ("erode", Stencil.morphKernel("erode", 1), 1),
+      ("dilate", Stencil.morphKernel("dilate", 2), 2),
+      ("aspect", Stencil.demKernel("aspect", res), 1),
+      ("hillshade", Stencil.demKernel("hillshade", res), 1),
+      ("hillshade_az", Stencil.demKernel("hillshade", res, 200.0, 30.0), 1),
+      ("tri", Stencil.demKernel("tri", res), 1),
+      ("tpi", Stencil.demKernel("tpi", res), 1),
+      ("roughness", Stencil.demKernel("roughness", res), 1),
+      ("slope", Stencil.demKernel("slope", res), 1),
+      ("rolling_circular", Stencil.rollingKernel(5, fold), 2),
+      ("rolling_square", Stencil.rollingKernel(5, fold, circular = false), 2),
+      ("highpass", Stencil.highpassKernel(1.0), 3),
+      ("bandpass", Stencil.bandpassKernel(1.0, 2.0), 9),
+      ("interp", Stencil.interpKernel(3), 4),
+      ("iterdilate", Stencil.iteratedDilateKernel(3), 3),
+      ("removeislands", Stencil.removeIslandsKernel(2), 4))
+    def md5(a: Array[Float]): String = {
+      val bb = java.nio.ByteBuffer.allocate(4 * a.length)
+      a.foreach(v => bb.putInt(java.lang.Float.floatToRawIntBits(v)))
+      java.security.MessageDigest.getInstance("MD5").digest(bb.array())
+        .map(b => f"${b & 0xff}%02x").mkString
+    }
+    val got = kernels.map { case (name, k, h) => name -> md5(k(frame.clone(), p, h, ndv)) }.toMap
+    // recorded from the per-kernel loops before they shared one window walk
+    // ("slope" from the standalone Horn slope kernel); a change here means
+    // the output bits moved
+    val pinned = Map(
+      "aspect" -> "96d6ebbb14f7f9f5e4ac3f9c75493fe5",
+      "bandpass" -> "7362bbe11f23c78ec05d0734adc7c439",
+      "dilate" -> "139170a3846836a402b32be7d2da2629",
+      "erode" -> "1512242bb08dc28abe5917bb8a5a1f09",
+      "gauss" -> "314b01e92f0356a623c09c29cdd54307",
+      "gaussfill" -> "c5c9f79c681a287936cd0f32c051da1b",
+      "highpass" -> "a1fb37104455d982fe43ddc9e99e4f14",
+      "hillshade" -> "85181943b604ed11b5dfcc526bb3b7c6",
+      "hillshade_az" -> "ac02f5681eb51d0e0edf3fa0ef6a2c6e",
+      "interp" -> "c3cab363858c45aa842d35bfd8a8e68e",
+      "iterdilate" -> "1f5b12a06b71a3bf0503824b6001c29a",
+      "median" -> "26eee9225df3f57279c025ab3b43e595",
+      "median_r1" -> "c13ff150956cd3a517f3b9b4adcd789f",
+      "removeislands" -> "937ce4078afe2a1d9ac60232b3f020e5",
+      "rolling_circular" -> "d4e5e75618e8f7d6e6ab483ee12f3dab",
+      "rolling_square" -> "8013e4c3c6c9ea7f369048faaafc212a",
+      "roughness" -> "6cc8f7d8e0e305e682c12fc92bac2a94",
+      "slope" -> "26668ea3fa8f52bd7ca2f638316bedf6",
+      "tpi" -> "ce23554e23e794f24f4e4a9144bbb76c",
+      "tri" -> "c07f8191b22e583b92bbb5579e30a9a6",
+      "uniform" -> "5e6904a900093e0c63a9036186781ed1")
+    assert(got == pinned, got.toSeq.sorted.filter { case (k, v) => pinned.get(k) != Some(v) }
+      .mkString("moved: ", ", ", ""))
+  }
+
+  test("a halo wider than the tile fails at call time, before any stage runs") {
+    import spark.implicits._
+    val t = spark.createDataset(Seq(
+      TileRow("x", 0L, 0L, 0, 0, Array.fill(64 * 64)(1f), 64 * 64, false)))
+    val e = intercept[IllegalArgumentException](
+      Stencil(t, 1, 1, halo = 65)(Stencil.gaussKernel(1.5)))
+    assert(e.getMessage.contains("halo 65"))
+    intercept[IllegalArgumentException](Stencil(t, 1, 1, halo = -1)(Stencil.gaussKernel(1.5)))
+  }
+
+  test("an unknown dem or morph mode fails when the kernel is built") {
+    intercept[IllegalArgumentException](Stencil.demKernel("curvature", 2.0))
+    intercept[IllegalArgumentException](Stencil.morphKernel("open", 1))
   }
 
   test("erode shrinks validity; dilate then erode restores interior") {
