@@ -185,8 +185,9 @@ private[operators] object IncrementalView {
           if (t != null) b = agg.reduce(if (b == null) agg.zero else b, t)
           if (old != null) o = old
         }
-        if (b == null) o   // old-only tile: passes through untouched
-        else view.pack(k, if (o == null) b else agg.merge(b, view.unpack(o)))
+        Iterator.single(
+          if (b == null) o   // old-only tile: passes through untouched
+          else view.pack(k, if (o == null) b else agg.merge(b, view.unpack(o))))
       }
       // the combined set carries every surviving row of the pruned
       // old-view files (old-only tiles pass through untouched), so the

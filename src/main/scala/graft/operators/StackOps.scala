@@ -119,16 +119,17 @@ object StackOps {
     keyedRuns(tiles, foldWidth(tiles.sparkSession), "tile_id")(_.tile_id) { (tid, run) =>
       var b = agg.zero
       run.foreach(t => b = agg.reduce(b, t))
-      finish(tid, b)
+      Iterator.single(finish(tid, b))
     }
 
-  /** The one tile-keyed exchange: repartition `ds` to exactly `width`
+  /** The one keyed exchange: repartition `ds` to exactly `width`
     * partitions on `keyCols`, sort each partition by them, and map every
-    * run of rows with an equal `key` through `f(key, run)` — one run live
-    * per task. Serves the batch fold, the views' fused refresh and the
-    * stencil frame assembly; `key` must be the value of `keyCols`. */
+    * run of rows with an equal `key` through `f(key, run)` to its output
+    * rows — one run live per task. Serves the batch fold, the views' fused
+    * refresh, the stencil frame assembly and the kNN block solve; `key`
+    * must be the value of `keyCols`. */
   private[operators] def keyedRuns[T, K, O: Encoder](ds: Dataset[T], width: Int,
-      keyCols: String*)(key: T => K)(f: (K, Iterator[T]) => O): Dataset[O] = {
+      keyCols: String*)(key: T => K)(f: (K, Iterator[T]) => IterableOnce[O]): Dataset[O] = {
     val cols = keyCols.map(col)
     ds.repartition(width, cols: _*).sortWithinPartitions(cols: _*)
       .mapPartitions((it: Iterator[T]) => sortedRuns(it)(key)(f))
@@ -138,21 +139,19 @@ object StackOps {
     * `f(key, run)` as it streams past — one run live at a time; `f` may
     * leave its run partly unread. */
   private def sortedRuns[T, K, O](it: Iterator[T])(key: T => K)(
-      f: (K, Iterator[T]) => O): Iterator[O] = {
+      f: (K, Iterator[T]) => IterableOnce[O]): Iterator[O] = {
     val in = it.buffered
-    new scala.collection.AbstractIterator[O] {
+    new scala.collection.AbstractIterator[Iterator[O]] {
       def hasNext: Boolean = in.hasNext
-      def next(): O = {
+      def next(): Iterator[O] = {
         val k = key(in.head)
         val run = new scala.collection.AbstractIterator[T] {
           def hasNext: Boolean = in.hasNext && key(in.head) == k
           def next(): T = in.next()
         }
-        val o = f(k, run)
-        run.foreach(_ => ())
-        o
+        f(k, run).iterator ++ { run.foreach(_ => ()); Iterator.empty }
       }
-    }
+    }.flatten
   }
 
   def stackStats(tiles: Dataset[TileRow], tileSize: Int = Warp.TileSize,

@@ -116,9 +116,10 @@ object Stencil {
         }
       }
       val out = f(frame)
-      TileRow(imageId, tsUs, tileId, (tileId % ntx).toInt, (tileId / ntx).toInt, out,
-        out.count(_ != ndv), elided = false)
-    }.filter(_.n_valid > 0)
+      val nValid = out.count(_ != ndv)
+      Option.when(nValid > 0)(TileRow(imageId, tsUs, tileId, (tileId % ntx).toInt,
+        (tileId / ntx).toInt, out, nValid, elided = false))
+    }
   }
 
   /** Gaussian smooth — `gauss_fltr_astropy` `filtlib.py:101-170`: truncate=3,

@@ -37,7 +37,6 @@ object Engine {
   def clearImageCache(): Unit = {
     imageCache.values.foreach(df => scala.util.Try(df.unpersist()))
     imageCache.clear()
-    graft.operators.Knn.releaseCaches() // lazy knnRing caches (q46)
   }
 
   /** Flagship: warp all images to the (min-res, union-extent) common grid —
@@ -107,22 +106,16 @@ object Engine {
       .toDF().select(col("image_id"), col("tile_id"), col("n_valid"))
   }
 
-  /** kNN via k-ring expansion with distance-bounded refine (north rule). */
+  /** kNN over the block-keyed halo exchange (north rule). */
   def knnRing(s: SparkSession, d: String): DataFrame = {
     val pts = PolygonTable.points(s, nPoints(d))
-    // filter, not limit: limit() funnels the query side into one partition
-    // and serializes every downstream ring join (measured 167 s vs 4 s)
     val nq = math.max(200, nPoints(d) / 40)
     val queries = pts.filter(col("pt_id") < f"pt_$nq%07d")
-    // cell size left to the density-derived auto-sizing: a fixed 128 m cell
-    // held ~640 points here, dragging ~16k candidates per query into the
-    // top-k window (measured 200+ s vs ~5 s with auto cells)
+    // auto cell size: a fixed 128 m cell held ~640 points here
     // dist emitted unrounded (q62 precedent): both engines compute the
     // identical IEEE sqrt/pow chain, so the DuckDB brute-force twin must
-    // match bit-for-bit — the ring expansion is checked SET-EXACT
-    // lazy form: Verify/Bench materialize once (write/count) and drain via
-    // clearImageCache → Knn.releaseCaches; saves the ~1 s output checkpoint
-    Knn.knn(s, queries, pts, k = 5, eager = false)
+    // match bit-for-bit — the kNN is checked SET-EXACT
+    Knn.knn(s, queries, pts, k = 5)
       .select(col("q_id"), col("c_id"), col("dist"), col("rnk"))
   }
 

@@ -123,10 +123,10 @@ object Rel2 {
       |WHERE l_extendedprice BETWEEN med - 2*nmad AND med + 2*nmad
       |GROUP BY l_linestatus""".stripMargin
 
-  /** Ring-kNN with a SQL twin: the k-ring expansion operator (north rule)
-    * over points derived arithmetically from orders, oracle-checked against
+  /** kNN with a SQL twin: the block-keyed kNN operator (north rule) over
+    * points derived arithmetically from orders, oracle-checked against
     * DuckDB's brute-force window — the engine result must be SET-EXACT, not
-    * just approximate (KnnSpec proves the ring bound; this proves it against
+    * just approximate (KnnSpec proves the resolution bound; this proves it against
     * an independent engine). dist emitted unrounded: both engines compute
     * the identical IEEE sqrt/pow chain. */
   def knnOrders(s: SparkSession, d: String): DataFrame = {
