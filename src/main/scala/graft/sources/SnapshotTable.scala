@@ -242,24 +242,133 @@ object SnapshotTable {
                                   df: DataFrame, op: String,
                                   txn: Option[(String, Long)] = None): Int = {
     require(op == "append" || op == "overwrite", s"bad op $op")
-    val v = base + 1
-    // data dir is unique PER ATTEMPT, not per version: two racers of the
-    // same v must not clobber each other's files before the manifest CAS
-    // resolves — the loser's orphaned directory is unreferenced garbage
-    // (cleaned by maintenance), never a dangling reference in the winner's
-    // manifest (Iceberg's uuid-named data files, same reasoning)
-    val prev = if (op == "overwrite" || base == 0) None else Some(snapshot(root, base))
-    prev.foreach(p => requireCompatible(p.schema, df.schema, base))
-    val (newFiles, newStats) = writeAttempt(spark, root, v, df)
-    val live = prev.map(_.files).getOrElse(Nil) ++ newFiles
-    val rows = prev.map(_.rows).getOrElse(0L) + newStats.valuesIterator.map(_.rows).sum
-    val stats = prev.map(_.stats).getOrElse(Map.empty) ++ newStats
-    // overwrite replaces DATA, not stream-idempotence history: markers
-    // carry through so a replayed epoch stays a no-op after a reshape
-    val ptxns = prev.fold(carriedTxns(root, base))(mergedTxns(root, _))
-    publish(root, v, manifestJson(v, base, op, rows, live, stats, df.schema,
-                                  txn = txn, txns = ptxns ++ txn))
-    v
+    transact(spark, root, base) { t =>
+      // overwrite replaces DATA, not stream-idempotence history: the
+      // transaction still carries the markers, so a replayed epoch stays a
+      // no-op after a reshape
+      val prev = if (op == "overwrite") None else t.prev
+      prev.foreach(p => requireCompatible(p.schema, df.schema, base))
+      val (newFiles, newStats) = t.write(df)
+      Snapshot(t.v, base, op,
+        prev.fold(0L)(_.rows) + newStats.valuesIterator.map(_.rows).sum,
+        prev.fold(Seq.empty[String])(_.files) ++ newFiles,
+        prev.fold(Map.empty[String, FileStats])(_.stats) ++ newStats,
+        Some(df.schema), txn = txn)
+    }
+  }
+
+  /** One mutating op as a transaction on top of version `base`, run by
+    * [[transact]]: the body writes its files through the Txn and returns
+    * the manifest of version `v` = base + 1. Every write lands in its own
+    * attempt dir `data/s<v>-<uuid>` (`expire` maps a file to its dir by the
+    * second path segment), unique PER ATTEMPT, not per version: two racers
+    * of the same v must not clobber each other's files before the manifest
+    * CAS resolves — the loser's dirs are unreferenced garbage (cleaned by
+    * [[expire]]), never a dangling reference in the winner's manifest
+    * (Iceberg's uuid-named data files, same reasoning). */
+  private final class Txn(spark: SparkSession, root: String, val base: Int) {
+    val v: Int = base + 1
+    /** The base snapshot, read once; None on an empty table. */
+    lazy val prev: Option[Snapshot] = if (base >= 1) Some(snapshot(root, base)) else None
+    def reader: org.apache.spark.sql.DataFrameReader = // pinned to the base schema
+      prev.flatMap(_.schema).fold(spark.read)(spark.read.schema)
+    /** Root-relative attempt dirs made so far. */
+    val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
+
+    private def attempt(): String = {
+      val d = s"data/${newAttempt(v)}"
+      dirs += d
+      d
+    }
+
+    /** Write `df` into a fresh attempt dir and return its (relative file
+      * list, per-file stats) — ONE pass, O(new data); carried-forward
+      * stats stay manifest text. */
+    def write(df: DataFrame): (Seq[String], Map[String, FileStats]) = {
+      val dir = attempt()
+      df.write.mode(SaveMode.Overwrite).parquet(s"$root/$dir")
+      val files = attemptFiles(root, dir)
+      (files, computeStats(spark, root, files))
+    }
+
+    /** Single-pass copy-on-write split for merge/delete: one scan of the
+      * touched `files` writes BOTH the survivor rewrite and the CDC
+      * tombstone pre-images, routed by the boolean `__kept` column that
+      * `route` adds to the scan, through a `partitionBy` dynamic write
+      * (kept=true → survivors, kept=false → tombstones) — the touched data
+      * is read ONCE per commit, where an anti-join + semi-join pair read it
+      * twice. `partitionBy` drops the routing column from the data files,
+      * so both halves keep the exact table schema. Stats run over the
+      * SURVIVOR files only: tombstones live under `removed`, never in the
+      * live list, so their stats would be computed and thrown away (one
+      * wasted scan per merge/delete).
+      * With `cdc` off (Delta's change-data-feed-off default analog) the
+      * tombstone pre-images are not written at all — a high-churn derived
+      * table (e.g. the incremental views) would otherwise persist a full
+      * copy of every replaced row per commit for a stream nobody reads; the
+      * manifest declares that commit's row-level history ABSENT and
+      * changesCdc fails loudly over the range instead of silently missing
+      * deletes. Returns (survivors, their stats, tombstones). */
+    def split(files: Seq[String], cdc: Boolean)(route: DataFrame => DataFrame)
+        : (Seq[String], Map[String, FileStats], Seq[String]) = {
+      if (files.isEmpty) return (Nil, Map.empty, Nil)
+      val df = route(reader.parquet(files.map(f => s"$root/$f"): _*))
+      if (!cdc) {
+        val (survivors, stats) =
+          write(df.filter(org.apache.spark.sql.functions.col("__kept")).drop("__kept"))
+        (survivors, stats, Nil)
+      } else {
+        val dir = attempt()
+        df.write.mode(SaveMode.Overwrite).partitionBy("__kept").parquet(s"$root/$dir")
+        val survivors = attemptFiles(root, s"$dir/__kept=true")
+        (survivors, computeStats(spark, root, survivors),
+         attemptFiles(root, s"$dir/__kept=false"))
+      }
+    }
+
+    /** Byte-identical copies of base `files` in one fresh attempt dir,
+      * hardlinked when the filesystem allows it, and their stats: the
+      * original's, or for an original without recorded stats (a legacy
+      * manifest) the copy's footer — left stats-less, it would stay a merge
+      * candidate forever. A copy never replaces an existing file: live
+      * basenames are unique per Spark write job, so a collision is a broken
+      * invariant, not a retry. */
+    def copy(files: Seq[String]): (Seq[String], Map[String, FileStats]) = {
+      if (files.isEmpty) return (Nil, Map.empty)
+      val dir = attempt()
+      Files.createDirectories(Paths.get(root, dir))
+      val moved = files.map { f =>
+        val n = s"$dir/${Paths.get(f).getFileName}"
+        ParquetFiles.linkOrCopy(Paths.get(root, f), Paths.get(root, n))
+        f -> n
+      }
+      val (known, unknown) = moved.partition { case (o, _) => prev.get.stats.contains(o) }
+      (moved.map(_._2), known.map { case (o, n) => n -> prev.get.stats(o) }.toMap ++
+        computeStats(spark, root, unknown.map(_._2)))
+    }
+  }
+
+  /** Run `body` as one [[Txn]] and publish its manifest — the one publish
+    * of every mutating op — with the publish-time clock and the base's
+    * stream markers plus the body's own `txn` (ops change data, not
+    * stream-idempotence history). A body that throws before publish
+    * deletes every attempt dir it made. Once publish is entered nothing is
+    * deleted: a lost CAS leaves its dirs to `expire`, and a fallback
+    * publish that fails its post-move fence may already be referenced. */
+  private def transact(spark: SparkSession, root: String, base: Int)(
+      body: Txn => Snapshot): Int = {
+    val t = new Txn(spark, root, base)
+    val json = try {
+      val sn = body(t)
+      manifestJson(sn.copy(tsMs = System.currentTimeMillis(),
+        txns = Some(t.prev.fold(Map.empty[String, Long])(mergedTxns(root, _)) ++ sn.txn)))
+    } catch { case e: Throwable =>
+      try t.dirs.foreach(d => deleteRecursively(s"$root/$d"))
+      catch { case c: java.io.IOException => e.addSuppressed(c) }
+      throw e
+    }
+    publish(root, t.v, json)
+    t.v
   }
 
   /** The full (streamId → latest epoch) marker map as of snapshot `sn` —
@@ -280,14 +389,10 @@ object SnapshotTable {
       if (legacyTxnsCache.size > 4096) legacyTxnsCache.clear()
       legacyTxnsCache.computeIfAbsent((root, sn.version), _ =>
         (1 to sn.version).foldLeft(Map.empty[String, Long]) { (m, v) =>
-          if (!Files.exists(metaDir(root).resolve(s"v$v.json"))) m
+          if (!hasSnapshot(root, v)) m
           else m ++ snapshot(root, v).txn
         })
     }
-
-  /** [[mergedTxns]] for a version number, empty below v1. */
-  private def carriedTxns(root: String, base: Int): Map[String, Long] =
-    if (base < 1) Map.empty else mergedTxns(root, snapshot(root, base))
 
   /** Latest committed epoch for an idempotent-writer id (Delta's
     * txnAppId/txnVersion pattern), or -1 if none. O(1): every commit
@@ -328,59 +433,13 @@ object SnapshotTable {
     None // unreachable
   }
 
-  /** Write `df` into a fresh attempt dir for version `v` and return its
-    * (relative file list, per-file stats — ONE pass, O(new data); the
-    * parent's stats are carried forward as manifest text by the caller).
-    * Shared by commitFrom and compact so the write/list/stats sequence
-    * cannot diverge. */
-  private def writeAttempt(spark: SparkSession, root: String, v: Int,
-                           df: DataFrame): (Seq[String], Map[String, FileStats]) = {
-    val attempt = newAttempt(v)
-    df.write.mode(SaveMode.Overwrite).parquet(s"$root/data/$attempt")
-    val newFiles = attemptFiles(root, s"data/$attempt")
-    (newFiles, computeStats(spark, root, newFiles))
-  }
-
-  /** Fresh attempt-dir name for version `v` (see [[commitFrom]]). */
+  /** Fresh attempt-dir name for version `v` (see [[Txn]]). */
   private def newAttempt(v: Int): String =
     s"s$v-${java.util.UUID.randomUUID().toString.take(8)}"
 
   /** Root-relative paths of the part files under root-relative `dir`. */
   private def attemptFiles(root: String, dir: String): Seq[String] =
     ParquetFiles.partFiles(s"$root/$dir").map(f => s"$dir/${f.getName}")
-
-  /** Single-pass copy-on-write split for merge/delete: one scan of the
-    * touched files writes BOTH the survivor rewrite and the CDC tombstone
-    * pre-images, routed by the boolean `keptCol` through a
-    * `partitionBy` dynamic write (kept=true → survivors, kept=false →
-    * tombstones) — the touched data is read ONCE per commit, where an
-    * anti-join + semi-join pair read it twice. `partitionBy` drops the
-    * routing column from the data files, so both halves keep the exact
-    * table schema. Stats run over the SURVIVOR files only: tombstones
-    * live under `removed`, never in the live list, so their stats would
-    * be computed and thrown away (one wasted scan per merge/delete).
-    * With `cdc` off (Delta's change-data-feed-off default analog) the
-    * tombstone pre-images are not written at all — a high-churn derived
-    * table (e.g. the incremental views) would otherwise persist a full
-    * copy of every replaced row per commit for a stream nobody reads; the
-    * manifest declares that commit's row-level history ABSENT and
-    * changesCdc fails loudly over the range instead of silently missing
-    * deletes. */
-  private def writeSplit(spark: SparkSession, root: String, v: Int,
-                         df: DataFrame, keptCol: String, cdc: Boolean)
-      : (Seq[String], Map[String, FileStats], Seq[String]) =
-    if (!cdc) {
-      val (survivors, stats) = writeAttempt(spark, root, v,
-        df.filter(org.apache.spark.sql.functions.col(keptCol)).drop(keptCol))
-      (survivors, stats, Seq.empty[String])
-    } else {
-      val attempt = newAttempt(v)
-      df.write.mode(SaveMode.Overwrite).partitionBy(keptCol)
-        .parquet(s"$root/data/$attempt")
-      val survivors = attemptFiles(root, s"data/$attempt/$keptCol=true")
-      val tombstones = attemptFiles(root, s"data/$attempt/$keptCol=false")
-      (survivors, computeStats(spark, root, survivors), tombstones)
-    }
 
   /** Column expression whose min/max are the manifest-stat bounds for a
     * field: epoch MICROS for timestamps (NTZ pinned as-if-UTC), the NATIVE
@@ -542,7 +601,6 @@ object SnapshotTable {
                         files: Seq[String]): Map[String, FileStats] = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    if (files.isEmpty) return Map.empty
     val df = spark.read.parquet(files.map(f => s"$root/$f"): _*)
     // timestamps are recorded as epoch MICROS; NTZ wall-clocks are pinned
     // AS-IF-UTC regardless of the committing session's timezone (cast to
@@ -588,40 +646,44 @@ object SnapshotTable {
   }
 
   /** The keys-only hit scan merge and delete share: ONE pass over `files`
-    * yields, per file, (rows, rows where the hit column is true), grouped
-    * on `input_file_name()`. `hits` receives the scan with the file name
-    * captured in `__f` (before any join — input_file_name is
-    * single-source) and returns the frame to count and its hit column.
-    * Files with no rows get no entry. */
+    * counts, per file, its rows and the rows where the hit column is true,
+    * grouped on `input_file_name()`, and sorts `files` into (no row hit,
+    * every row hit, some rows hit) — a file with no rows has no hit.
+    * `hits` receives the scan with the file name captured in `__f` (before
+    * any join — input_file_name is single-source) and returns the frame to
+    * count and its hit column. */
   private def hitScan(root: String, reader: org.apache.spark.sql.DataFrameReader,
                       files: Seq[String])(
       hits: DataFrame => (DataFrame, org.apache.spark.sql.Column))
-      : Map[String, (Long, Long)] = {
+      : (Seq[String], Seq[String], Seq[String]) = {
     import org.apache.spark.sql.functions._
+    if (files.isEmpty) return (Nil, Nil, Nil)
     val (scan, hit) = hits(reader.parquet(files.map(f => s"$root/$f"): _*)
       .withColumn("__f", input_file_name()))
     val resolve = fileResolver(root, files)
-    scan.groupBy(col("__f"))
+    val counts = scan.groupBy(col("__f"))
       .agg(count(lit(1)), count(when(hit, 1)))
       .collect()
       .map(r => resolve(r.getString(0)) -> (r.getLong(1), r.getLong(2)))
       .toMap
+    val (none, some) = files.partition(f => counts.get(f).forall(_._2 == 0L))
+    val (all, part) = some.partition(f => counts(f)._2 == counts(f)._1)
+    (none, all, part)
   }
 
-  private def manifestJson(v: Int, parent: Int, op: String, rows: Long,
-                           files: Seq[String], stats: Map[String, FileStats],
-                           schema: org.apache.spark.sql.types.StructType,
-                           delta: Seq[String] = Nil,
-                           removed: Seq[String] = Nil,
-                           txn: Option[(String, Long)] = None,
-                           txns: Map[String, Long] = Map.empty,
-                           cdcOff: Boolean = false): String = {
+  /** The manifest text of `sn`, the shape [[snapshot]] parses back. Field
+    * order and number formatting must not change: carried-forward stats
+    * are re-serialized by every commit and stay byte-stable. */
+  private def manifestJson(sn: Snapshot): String = {
+    import sn.{version => v, _}
     // every string is escaped: stream ids embed caller paths (e.g.
     // "statsview:/tmp/…"), and one id with a quote would otherwise corrupt
     // every later manifest (the merged txns map carries forward forever)
     import graft.Json.{str => js}
     def jd(d: Double): String =
       if (d.isNaN || d.isInfinite) "null" else d.toString
+    val schemaJson = schema.getOrElse(
+      throw new IllegalArgumentException(s"manifest v$v needs a schema")).json
     val statsJson = files.filter(stats.contains).map { f =>
       val fs = stats(f)
       val cols = fs.cols.toSeq.sortBy(_._1)
@@ -635,7 +697,7 @@ object SnapshotTable {
     // the MERGED marker map is always emitted (even empty): its presence is
     // what tells lastCommittedEpoch this manifest supports the O(1) lookup
     val txnsJson = "\n \"txns\": {" +
-      txns.toSeq.sortBy(_._1).map { case (id, e) => s"${js(id)}: $e" }
+      txns.getOrElse(Map.empty).toSeq.sortBy(_._1).map { case (id, e) => s"${js(id)}: $e" }
         .mkString(", ") + "}," +
       (if (cdcOff) "\n \"cdc_off\": true," else "")
     s"""{"version": $v, "parent": $parent, "op": "$op", "rows": $rows,$txnJson$txnsJson
@@ -643,8 +705,8 @@ object SnapshotTable {
        | "stats": {$statsJson},
        | "delta": [${delta.map(js).mkString(", ")}],
        | "removed": [${removed.map(js).mkString(", ")}],
-       | "ts_ms": ${System.currentTimeMillis()},
-       | "schema": ${schema.json}}""".stripMargin
+       | "ts_ms": $tsMs,
+       | "schema": $schemaJson}""".stripMargin
   }
 
   /** Lease window for abandoned publish claims: a claim older than this
@@ -810,7 +872,7 @@ object SnapshotTable {
   def versionAsOfTime(root: String, tsMs: Long): Int = {
     val cur = currentVersion(root)
     (1 to cur).filter { v =>
-      Files.exists(metaDir(root).resolve(s"v$v.json")) &&
+      hasSnapshot(root, v) &&
         snapshot(root, v).tsMs <= tsMs
     }.foldLeft(0)(math.max)
   }
@@ -839,42 +901,54 @@ object SnapshotTable {
     val reader = snap.schema.fold(spark.read)(spark.read.schema)
     val files = planFiles(root, v, prune)
     if (files.nonEmpty) reader.parquet(files.map(f => s"$root/$f"): _*)
-    else snap.schema match {
-      // pruning legitimately eliminated every file: an EMPTY result with
-      // the manifest schema, not an error (a range query before the data's
-      // time window is a normal empty read, not a bug)
-      case Some(st) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-      case None => // pre-schema manifest: any live file's footer
-        require(snap.files.nonEmpty, s"snapshot v$v has no files at $root")
-        spark.read.parquet(s"$root/${snap.files.head}").limit(0)
-    }
+    // pruning legitimately eliminated every file: an EMPTY result with the
+    // table schema, not an error (a range query before the data's time
+    // window is a normal empty read, not a bug)
+    else emptyFrame(spark, schemaOf(spark, root, snap.schema, snap.files, v))
   }
 
-  /** Incremental read: rows ADDED between `fromV` (exclusive) and `toV`
-    * (inclusive), walking the version CHAIN — each append/overwrite
-    * contributes the files it introduced over its parent; `compact`
-    * snapshots contribute NOTHING (a rewrite is not a data change —
-    * endpoint-manifest diffing would replay the whole table to CDC
-    * consumers after every compaction) and `rollback` republishes old
-    * files, also nothing. `prune` as in `read`; an empty increment is an
-    * empty DataFrame, not an error. */
+  /** The schema a read plans with: the manifest-`recorded` one, else (a
+    * pre-schema manifest) the footer of the first of `files`, which belong
+    * to snapshot `v`. */
+  private def schemaOf(spark: SparkSession, root: String,
+                       recorded: Option[org.apache.spark.sql.types.StructType],
+                       files: Seq[String], v: Int): org.apache.spark.sql.types.StructType =
+    recorded.getOrElse {
+      require(files.nonEmpty, s"snapshot v$v has no files at $root")
+      spark.read.parquet(s"$root/${files.head}").schema
+    }
+
+  private def emptyFrame(spark: SparkSession,
+                         schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  /** Snapshot `v`, which a change read needs (`what`, e.g. "changes(v1,
+    * v3) needs manifest"): an expired manifest fails loudly instead of
+    * shortening the range. */
+  private def neededSnapshot(root: String, v: Int, what: => String): Snapshot = {
+    require(hasSnapshot(root, v), s"$what v$v, which is expired")
+    snapshot(root, v)
+  }
+
+  /** The files `sn` introduced over its parent, for the change read `what`. */
+  private def introduced(root: String, sn: Snapshot, what: => String): Seq[String] =
+    if (sn.parent < 1) sn.files
+    else sn.files.filterNot(
+      neededSnapshot(root, sn.parent, s"$what needs parent manifest").files.toSet)
+
+  /** A change read over versions that disagree on (name -> type) would
+    * union-scan whichever footer plans first: fail loudly with `msg`. */
+  private def requireOneSchema(schemas: Seq[org.apache.spark.sql.types.StructType],
+                               msg: => String): Unit =
+    require(schemas.map(_.fields.map(f => f.name -> f.dataType).toMap).distinct.size <= 1, msg)
+
   /** Files ADDED over (fromV, toV] — the walk shared by [[changes]] and
     * [[changedRange]] so the two can never disagree on what the delta is. */
   private def addedFilesIn(root: String, fromV: Int, toV: Int): Seq[String] = {
     (math.max(1, fromV + 1) to toV).flatMap { v =>
-      require(Files.exists(metaDir(root).resolve(s"v$v.json")),
-        s"changes(v$fromV, v$toV) needs manifest v$v, which is expired")
-      val snap = snapshot(root, v)
+      val snap = neededSnapshot(root, v, s"changes(v$fromV, v$toV) needs manifest")
       snap.op match {
-        case "append" | "overwrite" =>
-          val parentFiles =
-            if (snap.parent >= 1) {
-              require(Files.exists(metaDir(root).resolve(s"v${snap.parent}.json")),
-                s"changes(v$fromV, v$toV) needs parent manifest v${snap.parent}, which is expired")
-              snapshot(root, snap.parent).files.toSet
-            } else Set.empty[String]
-          snap.files.filterNot(parentFiles)
+        case "append" | "overwrite" => introduced(root, snap, s"changes(v$fromV, v$toV)")
         // merge: ONLY its recorded delta files (the upserted rows); the
         // survivor-rewrite carriers are not data changes — including them
         // would replay untouched rows to CDC consumers after every merge
@@ -921,42 +995,35 @@ object SnapshotTable {
     Some((rows, if (haveBounds && rows > 0) Some((lo, hi)) else None))
   }
 
+  /** Incremental read: rows ADDED between `fromV` (exclusive) and `toV`
+    * (inclusive), walking the version CHAIN — each append/overwrite
+    * contributes the files it introduced over its parent; `compact`
+    * snapshots contribute NOTHING (a rewrite is not a data change —
+    * endpoint-manifest diffing would replay the whole table to CDC
+    * consumers after every compaction) and `rollback` republishes old
+    * files, also nothing. `prune` as in `read`; an empty increment is an
+    * empty DataFrame, not an error. */
   def changes(spark: SparkSession, root: String, fromV: Int, toV: Int,
               prune: Seq[ColRange] = Nil): DataFrame = {
     require(toV > fromV && toV >= 1, s"bad change range v$fromV..v$toV")
     val allAdded = addedFilesIn(root, fromV, toV)
+    val live = snapshot(root, toV).files
     val planned = planFiles(root, toV, prune).toSet ++
       // files added mid-range but no longer live in toV carry no toV stats;
       // keep them (conservative) unless their own snapshot pruned them out
-      allAdded.filterNot(snapshot(root, toV).files.toSet)
+      allAdded.filterNot(live.toSet)
     val added = allAdded.filter(planned)
     // surface the recorded schema: every contributing version must agree on
-    // (name -> type) or the union scan silently reads whichever footer
-    // plans first — a mid-range overwrite that reshaped the table is a
+    // (name -> type) — a mid-range overwrite that reshaped the table is a
     // LOUD error directing the caller to read per-version instead
     val schemas = (math.max(1, fromV + 1) to toV)
       .map(snapshot(root, _))
       .filter(s => s.op == "append" || s.op == "overwrite" || s.op == "merge")
       .flatMap(_.schema)
-    schemas.headOption.foreach { first =>
-      val fm = first.fields.map(f => f.name -> f.dataType).toMap
-      schemas.foreach { st =>
-        require(st.fields.map(f => f.name -> f.dataType).toMap == fm,
-          s"changes(v$fromV, v$toV) spans a schema change; read per-version")
-      }
-    }
+    requireOneSchema(schemas, s"changes(v$fromV, v$toV) spans a schema change; read per-version")
     val reader = schemas.headOption.fold(spark.read)(spark.read.schema)
     if (added.nonEmpty) reader.parquet(added.map(f => s"$root/$f"): _*)
-    else schemas.headOption match {
-      case Some(st) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-      case None =>
-        val live = snapshot(root, toV).files
-        require(live.nonEmpty || allAdded.nonEmpty,
-          s"snapshot v$toV has no files at $root")
-        val schemaFrom = allAdded.headOption.getOrElse(live.head)
-        spark.read.parquet(s"$root/$schemaFrom").limit(0)
-    }
+    else emptyFrame(spark, schemaOf(spark, root, schemas.headOption, allAdded ++ live, toV))
   }
 
   /** Row totals for a live file list: manifest stats where recorded, one
@@ -993,139 +1060,104 @@ object SnapshotTable {
       "replaceAllPrune requires cdc = false (no pre-image pass runs)")
     val base = currentVersion(root)
     require(base >= 1, s"merge into an empty table at $root — commit first")
-    val prev = snapshot(root, base)
-    requireCompatible(prev.schema, df.schema, base)
-    val v = base + 1
-    // incoming key envelope → pruning conjuncts; key columns without stats
-    // support (strings, arrays) contribute no conjunct — planFiles then
-    // keeps more files, which is conservative, never wrong
-    val statKeys = df.schema.fields.filter(f => keyCols.contains(f.name) &&
-      (f.dataType.isInstanceOf[NumericType] ||
-       f.dataType == TimestampType || f.dataType == TimestampNTZType)).toSeq
-    // the delta lands first; BOTH the key envelope and the anti-join read
-    // it back from its own files, so `df` is computed exactly once — the
-    // previous pre-write envelope agg recomputed the caller's whole plan a
-    // second time (for the incremental views: the entire old⊕new merge
-    // join, measured ~40% of a refresh at sf0.1)
-    val (deltaFiles, deltaStats) = writeAttempt(spark, root, v, df)
-    // an EMPTY incoming batch (or all-null keys → no stats) must not
-    // degrade to a full-table rewrite: zero delta rows replace nothing
-    val deltaRows = deltaStats.valuesIterator.map(_.rows).sum
-    // incoming key envelope from the delta's own per-file stats (same
-    // statExpr units; directed rounding is monotone, so the min/max over
-    // per-file directed-rounded bounds equals the directed-rounded global
-    // envelope the old agg computed). Key columns without stats support
-    // (strings, arrays, all-null files) contribute no conjunct — planFiles
-    // then keeps more files, which is conservative, never wrong.
-    val ranges: Seq[ColRange] = statKeys.flatMap { f =>
-      val bs = deltaStats.valuesIterator.flatMap(_.cols.get(f.name)).toSeq
-      if (bs.isEmpty) None
-      else Some(ColRange(f.name, bs.map(_._1).min, bs.map(_._2).max))
-    }
-    // replaceAllPrune (the incremental views' refresh contract): the caller
-    // read EXACTLY planFiles(base, p), merged every surviving row of those
-    // files into `df` itself (full-outer combine), and commits the result as
-    // the touched files' full replacement — no survivor-routing scan, so the
-    // old rows are read ONCE per refresh (by the caller) instead of twice.
-    // The touched set is recomputed here from the SAME prune against the
-    // SAME base manifest (planFiles is pure), so caller and merge can never
-    // disagree on which files are replaced.
-    val candidates =
-      if (deltaRows == 0L) Nil
-      else replaceAllPrune.fold(planFiles(root, base, ranges))(
-        p => planFiles(root, base, p))
-    // The file-level contract is unchanged: every candidate file (key-stats
-    // envelope intersection) is REPLACED in this version — the documented
-    // write-amplification bound that q103's twin pins. What the hit-scan
-    // optimizes is the BYTES each replacement moves (guide §2.3 — decide
-    // with small rows, move big rows once): ONE keys-only columnar pass
-    // counts, per candidate file, its rows and how many match an incoming
-    // key, then
-    //   - 0 matches  → the "survivor rewrite" is a byte-identical file:
-    //     hardlink/copy the original into the new attempt dir (stats carry
-    //     over; no decode, no re-encode);
-    //   - all match  → no survivors exist and the tombstone pre-image set
-    //     IS the file: `removed` references the ORIGINAL (changesCdc reads
-    //     it as the exact pre-images, expire's GC tracks `removed` refs);
-    //   - partial    → the one-pass survivor/tombstone routing, as before,
-    //     now over only the files that genuinely mix both.
-    // A merge that replaces or misses whole files — the common shapes at
-    // scale — thus decodes and re-encodes nothing.
-    val reader = prev.schema.fold(spark.read)(spark.read.schema)
-    // the distinct incoming keys, read back from the delta's own files
-    // (`df` is computed once): the join side of the hit scan and the split
-    def incomingKeys: DataFrame =
-      (if (deltaFiles.nonEmpty)
-         spark.read.schema(df.schema).parquet(deltaFiles.map(f => s"$root/$f"): _*)
-       else df).select(keyCols.map(col): _*).distinct()
-    val (zeroHit, fullHit, partial) =
-      if (candidates.isEmpty || replaceAllPrune.isDefined)
-        (Seq.empty[String], Seq.empty[String], candidates)
-      else {
-        val hit = hitScan(root, reader, candidates) { scan =>
+    transact(spark, root, base) { t =>
+      val prev = t.prev.get
+      requireCompatible(prev.schema, df.schema, base)
+      // incoming key envelope → pruning conjuncts; key columns without stats
+      // support (strings, arrays) contribute no conjunct — planFiles then
+      // keeps more files, which is conservative, never wrong
+      val statKeys = df.schema.fields.filter(f => keyCols.contains(f.name) &&
+        (f.dataType.isInstanceOf[NumericType] ||
+         f.dataType == TimestampType || f.dataType == TimestampNTZType)).toSeq
+      // the delta lands first; BOTH the key envelope and the anti-join read
+      // it back from its own files, so `df` is computed exactly once — the
+      // previous pre-write envelope agg recomputed the caller's whole plan a
+      // second time (for the incremental views: the entire old⊕new merge
+      // join, measured ~40% of a refresh at sf0.1)
+      val (deltaFiles, deltaStats) = t.write(df)
+      // an EMPTY incoming batch (or all-null keys → no stats) must not
+      // degrade to a full-table rewrite: zero delta rows replace nothing
+      val deltaRows = deltaStats.valuesIterator.map(_.rows).sum
+      // incoming key envelope from the delta's own per-file stats (same
+      // statExpr units; directed rounding is monotone, so the min/max over
+      // per-file directed-rounded bounds equals the directed-rounded global
+      // envelope the old agg computed). Key columns without stats support
+      // (strings, arrays, all-null files) contribute no conjunct — planFiles
+      // then keeps more files, which is conservative, never wrong.
+      val ranges: Seq[ColRange] = statKeys.flatMap { f =>
+        val bs = deltaStats.valuesIterator.flatMap(_.cols.get(f.name)).toSeq
+        if (bs.isEmpty) None
+        else Some(ColRange(f.name, bs.map(_._1).min, bs.map(_._2).max))
+      }
+      // replaceAllPrune (the incremental views' refresh contract): the caller
+      // read EXACTLY planFiles(base, p), merged every surviving row of those
+      // files into `df` itself (full-outer combine), and commits the result as
+      // the touched files' full replacement — no survivor-routing scan, so the
+      // old rows are read ONCE per refresh (by the caller) instead of twice.
+      // The touched set is recomputed here from the SAME prune against the
+      // SAME base manifest (planFiles is pure), so caller and merge can never
+      // disagree on which files are replaced.
+      val candidates =
+        if (deltaRows == 0L) Nil
+        else replaceAllPrune.fold(planFiles(root, base, ranges))(
+          p => planFiles(root, base, p))
+      // the distinct incoming keys, read back from the delta's own files
+      // (`df` is computed once): the join side of the hit scan and the split
+      def incomingKeys: DataFrame =
+        (if (deltaFiles.nonEmpty)
+           spark.read.schema(df.schema).parquet(deltaFiles.map(f => s"$root/$f"): _*)
+         else df).select(keyCols.map(col): _*).distinct()
+      // The file-level contract is unchanged: every candidate file (key-stats
+      // envelope intersection) is REPLACED in this version — the documented
+      // write-amplification bound that q103's twin pins. What the hit-scan
+      // optimizes is the BYTES each replacement moves (guide §2.3 — decide
+      // with small rows, move big rows once): ONE keys-only columnar pass
+      // counts, per candidate file, its rows and how many match an incoming
+      // key, then
+      //   - 0 matches  → the "survivor rewrite" is a byte-identical file:
+      //     hardlink/copy the original into the new attempt dir (stats carry
+      //     over; no decode, no re-encode);
+      //   - all match  → no survivors exist and the tombstone pre-image set
+      //     IS the file: `removed` references the ORIGINAL (changesCdc reads
+      //     it as the exact pre-images, expire's GC tracks `removed` refs);
+      //   - partial    → the one-pass survivor/tombstone routing, as before,
+      //     now over only the files that genuinely mix both.
+      // A merge that replaces or misses whole files — the common shapes at
+      // scale — thus decodes and re-encodes nothing. With replaceAllPrune
+      // the delta replaces every candidate wholesale: no scan at all.
+      val (zeroHit, fullHit, partial) =
+        if (replaceAllPrune.isDefined) (Nil, Nil, Nil)
+        else hitScan(root, t.reader, candidates) { scan =>
           (scan.select((keyCols :+ "__f").map(col): _*)
              .join(incomingKeys.withColumn("__hit", lit(1)), keyCols, "left"),
            col("__hit").isNotNull)
         }
-        // a candidate with stats but no scan row is empty — zero matches
-        (candidates.filter(f => hit.get(f).forall(_._2 == 0L)),
-         candidates.filter(f => hit.get(f).exists(x => x._2 > 0 && x._2 == x._1)),
-         candidates.filter(f => hit.get(f).exists(x => x._2 > 0 && x._2 < x._1)))
-      }
-    val untouched = prev.files.filterNot(candidates.toSet)
-    // byte-identical replacements for the match-free candidates: hardlink
-    // when the filesystem allows it, plain copy otherwise — either way the
-    // original's stats describe the new file exactly. An original without
-    // recorded stats (a legacy manifest) gets them from the copy's footer:
-    // left stats-less, it would stay a merge candidate forever. The copy
-    // never replaces an existing file: live basenames are unique per
-    // Spark write job, so a collision is a broken invariant, not a retry.
-    val (copyFiles, copyStats) =
-      if (zeroHit.isEmpty) (Seq.empty[String], Map.empty[String, FileStats])
-      else {
-        val attempt = newAttempt(v)
-        Files.createDirectories(Paths.get(root, "data", attempt))
-        val moved = zeroHit.map { f =>
-          val n = s"data/$attempt/${Paths.get(f).getFileName}"
-          ParquetFiles.linkOrCopy(Paths.get(root, f), Paths.get(root, n))
-          f -> n
-        }
-        val (known, unknown) = moved.partition { case (o, _) => prev.stats.contains(o) }
-        (moved.map(_._2),
-         known.map { case (o, n) => n -> prev.stats(o) }.toMap ++
-           computeStats(spark, root, unknown.map(_._2)))
-      }
-    val (survFiles, survStats, tombFiles) =
-      if (partial.isEmpty || replaceAllPrune.isDefined)
-        (Seq.empty[String], Map.empty[String, FileStats], Seq.empty[String])
-      else {
-        val old = reader.parquet(partial.map(f => s"$root/$f"): _*)
-        // ONE pass over the partially-hit files: a left join against the
-        // (distinct, broadcastable) incoming keys routes each row to the
-        // survivor rewrite (no key match) or the CDC tombstone pre-images
-        // (key match, i.e. the rows this upsert replaces — recorded under
-        // `removed`, outside the live list, so changesCdc streams deletes
-        // without diffing row sets). Replaces an anti-join + semi-join
-        // pair that scanned the touched set twice.
-        val marked = incomingKeys.withColumn("__hit", lit(1))
-        val routed = old.join(marked, keyCols, "left")
+      val untouched = prev.files.filterNot(candidates.toSet)
+      // byte-identical replacements for the match-free candidates
+      val (copyFiles, copyStats) = t.copy(zeroHit)
+      // ONE pass over the partially-hit files: a left join against the
+      // (distinct, broadcastable) incoming keys routes each row to the
+      // survivor rewrite (no key match) or the CDC tombstone pre-images
+      // (key match, i.e. the rows this upsert replaces — recorded under
+      // `removed`, outside the live list, so changesCdc streams deletes
+      // without diffing row sets). Replaces an anti-join + semi-join
+      // pair that scanned the touched set twice.
+      val (survFiles, survStats, tombFiles) = t.split(partial, cdc) { old =>
+        old.join(incomingKeys.withColumn("__hit", lit(1)), keyCols, "left")
           .withColumn("__kept", col("__hit").isNull)
           .drop("__hit")
-        writeSplit(spark, root, v, routed, "__kept", cdc)
       }
-    val live = untouched ++ copyFiles ++ survFiles ++ deltaFiles
-    val stats = prev.stats.filter { case (f, _) => !candidates.contains(f) } ++
-      copyStats ++ survStats ++ deltaStats
-    // fully-replaced originals become tombstones only when this commit
-    // records CDC; with cdc = false they simply leave the live list (the
-    // manifest's cdcOff flag already declares the history absent)
-    val zeroCopyTombs = if (cdc) fullHit else Seq.empty[String]
-    publish(root, v, manifestJson(v, base, "merge",
-      liveRows(spark, root, live, stats), live, stats, df.schema,
-      delta = deltaFiles, removed = zeroCopyTombs ++ tombFiles, txn = txn,
-      txns = mergedTxns(root, prev) ++ txn,
-      cdcOff = !cdc && candidates.nonEmpty))
-    v
+      val live = untouched ++ copyFiles ++ survFiles ++ deltaFiles
+      val stats = prev.stats.filter { case (f, _) => !candidates.contains(f) } ++
+        copyStats ++ survStats ++ deltaStats
+      // fully-replaced originals become tombstones only when this commit
+      // records CDC; with cdc = false they simply leave the live list (the
+      // manifest's cdcOff flag already declares the history absent)
+      val zeroCopyTombs = if (cdc) fullHit else Seq.empty[String]
+      Snapshot(t.v, base, "merge", liveRows(spark, root, live, stats), live, stats,
+        Some(df.schema), delta = deltaFiles, removed = zeroCopyTombs ++ tombFiles,
+        txn = txn, cdcOff = !cdc && candidates.nonEmpty)
+    }
   }
 
   /** Row-level DELETE (copy-on-write): drop every row where `predicate` is
@@ -1142,54 +1174,35 @@ object SnapshotTable {
     import org.apache.spark.sql.functions._
     val base = currentVersion(root)
     require(base >= 1, s"nothing to delete at $root")
-    val prev = snapshot(root, base)
-    val v = base + 1
-    val reader = prev.schema.fold(spark.read)(spark.read.schema)
-    val candidates = planFiles(root, base, prune)
-    // ONE pass over the candidates counts, per file, its rows and its
-    // predicate matches: match-free candidates carry forward untouched
-    // (as before), and FULLY-matched files — every row deleted — need no
-    // rewrite at all: the original file becomes the CDC tombstone
-    // (`removed` references it directly; changesCdc reads it as the exact
-    // pre-image set, expire's GC tracks `removed` references), so a
-    // delete that drops whole files moves no payload bytes.
-    val (touched: Seq[String], fullyDeleted: Seq[String]) =
-      if (candidates.isEmpty) (Nil, Nil)
-      else {
-        val hit = hitScan(root, reader, candidates)(
-          scan => (scan, coalesce(predicate, lit(false))))
-        val withHits = candidates.filter(f => hit.get(f).exists(_._2 > 0))
-        (withHits.filter(f => { val (n, h) = hit(f); h < n }),
-         withHits.filter(f => { val (n, h) = hit(f); h == n }))
-      }
-    val replaced = (touched ++ fullyDeleted).toSet
-    val untouched = prev.files.filterNot(replaced)
-    val (newFiles, newStats, tombFiles) =
-      if (touched.isEmpty)
-        (Seq.empty[String], Map.empty[String, FileStats], Seq.empty[String])
-      else {
-        // ONE pass over the touched files: the predicate routes each row
-        // to the survivor rewrite (false/null — SQL DELETE keeps
-        // null-valued rows) or the CDC tombstone pre-images (true).
-        // Replaces a filter + negated-filter pair that scanned twice.
-        val routed = reader.parquet(touched.map(f => s"$root/$f"): _*)
-          .withColumn("__kept", not(coalesce(predicate, lit(false))))
-        writeSplit(spark, root, v, routed, "__kept", cdc)
-      }
-    val live = untouched ++ newFiles
-    val stats = prev.stats.filter { case (f, _) => !replaced.contains(f) } ++ newStats
-    val schema = prev.schema.getOrElse {
-      require(prev.files.nonEmpty, s"snapshot v$base has no files at $root")
-      spark.read.parquet(s"$root/${prev.files.head}").schema
+    transact(spark, root, base) { t =>
+      val prev = t.prev.get
+      val candidates = planFiles(root, base, prune)
+      // ONE pass over the candidates counts, per file, its rows and its
+      // predicate matches: match-free candidates carry forward untouched
+      // (as before), and FULLY-matched files — every row deleted — need no
+      // rewrite at all: the original file becomes the CDC tombstone
+      // (`removed` references it directly; changesCdc reads it as the exact
+      // pre-image set, expire's GC tracks `removed` references), so a
+      // delete that drops whole files moves no payload bytes.
+      val (_, fullyDeleted, touched) = hitScan(root, t.reader, candidates)(
+        scan => (scan, coalesce(predicate, lit(false))))
+      val replaced = (touched ++ fullyDeleted).toSet
+      val untouched = prev.files.filterNot(replaced)
+      // ONE pass over the touched files: the predicate routes each row to
+      // the survivor rewrite (false/null — SQL DELETE keeps null-valued
+      // rows) or the CDC tombstone pre-images (true). Replaces a filter +
+      // negated-filter pair that scanned twice.
+      val (newFiles, newStats, tombFiles) = t.split(touched, cdc)(
+        _.withColumn("__kept", not(coalesce(predicate, lit(false)))))
+      val live = untouched ++ newFiles
+      val stats = prev.stats.filter { case (f, _) => !replaced.contains(f) } ++ newStats
+      // fully-matched originals become tombstones only when this commit
+      // records CDC; with cdc = false they simply leave the live list
+      val zeroCopyTombs = if (cdc) fullyDeleted else Seq.empty[String]
+      Snapshot(t.v, base, "delete", liveRows(spark, root, live, stats), live, stats,
+        Some(schemaOf(spark, root, prev.schema, prev.files, base)),
+        removed = zeroCopyTombs ++ tombFiles, cdcOff = !cdc && replaced.nonEmpty)
     }
-    // fully-matched originals become tombstones only when this commit
-    // records CDC; with cdc = false they simply leave the live list
-    val zeroCopyTombs = if (cdc) fullyDeleted else Seq.empty[String]
-    publish(root, v, manifestJson(v, base, "delete",
-      liveRows(spark, root, live, stats), live, stats, schema,
-      removed = zeroCopyTombs ++ tombFiles, txns = mergedTxns(root, prev),
-      cdcOff = !cdc && replaced.nonEmpty))
-    v
   }
 
   /** Full CDC stream over (fromV, toV]: every row change with a
@@ -1205,11 +1218,8 @@ object SnapshotTable {
                  toV: Int): DataFrame = {
     import org.apache.spark.sql.functions.lit
     require(toV > fromV && toV >= 1, s"bad change range v$fromV..v$toV")
-    val snaps = (math.max(1, fromV + 1) to toV).map { v =>
-      require(Files.exists(metaDir(root).resolve(s"v$v.json")),
-        s"changesCdc(v$fromV, v$toV) needs manifest v$v, which is expired")
-      snapshot(root, v)
-    }
+    val snaps = (math.max(1, fromV + 1) to toV).map(
+      neededSnapshot(root, _, s"changesCdc(v$fromV, v$toV) needs manifest"))
     snaps.filter(_.cdcOff).foreach(sn => throw new IllegalStateException(
       s"changesCdc(v$fromV, v$toV): v${sn.version} (${sn.op}) was committed " +
         "with cdc=false — its delete pre-images were never recorded; read " +
@@ -1225,13 +1235,8 @@ object SnapshotTable {
       .flatMap(sn => snapshot(root, sn.parent).schema)
     val schemas = snaps.filter(sn => sn.op != "compact" && sn.op != "rollback")
       .flatMap(_.schema)
-    schemas.headOption.foreach { first =>
-      val fm = first.fields.map(f => f.name -> f.dataType).toMap
-      (schemas ++ preImageSchemas).foreach { st =>
-        require(st.fields.map(f => f.name -> f.dataType).toMap == fm,
-          s"changesCdc(v$fromV, v$toV) spans a schema change; read per-version")
-      }
-    }
+    requireOneSchema(schemas ++ preImageSchemas,
+      s"changesCdc(v$fromV, v$toV) spans a schema change; read per-version")
     val reader = schemas.headOption.fold(spark.read)(spark.read.schema)
     def scan(files: Seq[String], kind: String): Option[DataFrame] =
       if (files.isEmpty) None
@@ -1240,9 +1245,7 @@ object SnapshotTable {
     val parts = snaps.flatMap { sn =>
       sn.op match {
         case "append" =>
-          val parentFiles = if (sn.parent >= 1) snapshot(root, sn.parent).files.toSet
-                            else Set.empty[String]
-          scan(sn.files.filterNot(parentFiles), "insert").toSeq
+          scan(introduced(root, sn, s"changesCdc(v$fromV, v$toV)"), "insert").toSeq
         case "overwrite" =>
           val dels = if (sn.parent >= 1)
             scan(snapshot(root, sn.parent).files, "delete") else None
@@ -1253,30 +1256,24 @@ object SnapshotTable {
         case _ => Nil // compact / rollback: rewrites, not data changes
       }
     }
-    parts.reduceOption(_ unionByName _).getOrElse {
-      val live = snapshot(root, toV).files
-      require(live.nonEmpty, s"snapshot v$toV has no files at $root")
-      reader.parquet(s"$root/${live.head}")
-        .withColumn("_change_type", lit("insert")).limit(0)
-    }
+    parts.reduceOption(_ unionByName _).getOrElse(
+      emptyFrame(spark, schemaOf(spark, root, schemas.headOption, snapshot(root, toV).files, toV))
+        .withColumn("_change_type", lit("insert")))
   }
 
   /** Roll the table back to `toV` as a NEW snapshot (history stays intact,
     * like Iceberg's rollback: the old file list is re-published). */
   def rollback(spark: SparkSession, root: String, toV: Int): Int = {
     val target = snapshot(root, toV)
-    val base = currentVersion(root)
-    val v = base + 1
-    // markers carry from the CURRENT version, not the rollback target:
-    // rollback discards data, not stream-idempotence history (Delta
-    // RESTORE's latest-wins txn semantics) — a replayed epoch whose rows
-    // were rolled back stays skipped; re-ingesting it is an explicit
-    // re-run with a fresh checkpoint, never an accidental replay
-    publish(root, v, manifestJson(v, base, "rollback", target.rows,
-      target.files, target.stats,
-      target.schema.getOrElse(read(spark, root, toV).schema),
-      txns = carriedTxns(root, base)))
-    v
+    // markers carry from the CURRENT version (the transaction's base), not
+    // the rollback target: rollback discards data, not stream-idempotence
+    // history (Delta RESTORE's latest-wins txn semantics) — a replayed
+    // epoch whose rows were rolled back stays skipped; re-ingesting it is
+    // an explicit re-run with a fresh checkpoint, never an accidental replay
+    transact(spark, root, currentVersion(root)) { t =>
+      Snapshot(t.v, t.base, "rollback", target.rows, target.files, target.stats,
+        Some(schemaOf(spark, root, target.schema, target.files, toV)))
+    }
   }
 
   /** Compaction — Iceberg's `rewrite_data_files`: rewrite the CURRENT
@@ -1303,18 +1300,17 @@ object SnapshotTable {
   }
 
   /** Both compactions' commit: `arrange` the current rows, write them as
-    * one attempt, publish as op "compact" (fresh stats, markers carried). */
+    * one attempt, publish as op "compact" (fresh stats). */
   private def rewriteCurrent(spark: SparkSession, root: String)(
       arrange: DataFrame => DataFrame): Int = {
     val base = currentVersion(root)
     require(base >= 1, s"nothing to compact at $root")
-    val v = base + 1
-    val cur = read(spark, root)
-    val (newFiles, stats) = writeAttempt(spark, root, v, arrange(cur))
-    publish(root, v, manifestJson(v, base, "compact",
-      stats.valuesIterator.map(_.rows).sum, newFiles, stats, cur.schema,
-      txns = carriedTxns(root, base)))
-    v
+    transact(spark, root, base) { t =>
+      val cur = read(spark, root, asOf = base)
+      val (files, stats) = t.write(arrange(cur))
+      Snapshot(t.v, base, "compact", stats.valuesIterator.map(_.rows).sum, files, stats,
+        Some(cur.schema))
+    }
   }
 
   /** Z-ORDER compaction (Delta's OPTIMIZE ZORDER BY / Iceberg's z-order
@@ -1334,7 +1330,7 @@ object SnapshotTable {
     require(zCols.size == 2 || zCols.size == 3,
       s"z-order interleaves 2 or 3 columns, got ${zCols.size}")
     rewriteCurrent(spark, root) { cur =>
-      val bits = if (zCols.size == 2) 21 else 21 // 2×21 or 3×21 ≤ 63 bits
+      val bits = 21 // 2×21 or 3×21 ≤ 63 bits
       // per-column [min, max] over the table: one bounded agg (2k doubles)
       val aggs = zCols.flatMap(c =>
         Seq(min(col(c)).cast("double"), max(col(c)).cast("double")))
@@ -1382,8 +1378,8 @@ object SnapshotTable {
     * `remove_orphan_files`: drop every version older than the newest
     * `keepLast`, then delete (a) data attempt-dirs referenced by NO
     * retained manifest whose version is ≤ current — including the orphaned
-    * dirs of LOSING concurrent committers, which commitFrom documents as
-    * "cleaned by maintenance"; dirs at versions > current belong to
+    * dirs of LOSING concurrent committers, which [[Txn]] documents as
+    * "cleaned by expire"; dirs at versions > current belong to
     * in-flight commits that would win and are never touched — and
     * (b) `.claim`/`.tmp` publish residue for versions < the retention
     * window (never by an exists() probe, which would race an in-flight
@@ -1400,7 +1396,7 @@ object SnapshotTable {
     // a prior expire with a smaller keepLast may already have removed
     // manifests inside this window — retain what actually exists
     val retained = (keepFrom to cur)
-      .filter(v => Files.exists(metaDir(root).resolve(s"v$v.json")))
+      .filter(hasSnapshot(root, _))
       .map(snapshot(root, _))
     val liveDirs = retained.flatMap(sn => sn.files ++ sn.removed)
       .map(f => f.split("/")(1)).toSet // "data/<attempt>/<file>" → attempt
@@ -1429,7 +1425,7 @@ object SnapshotTable {
       // auto-recovery after such a crash.
       residue.filter(_ >= keepFrom).foreach { rv =>
         if (n.endsWith(".claim") &&
-            !Files.exists(metaDir(root).resolve(s"v$rv.json")) &&
+            !hasSnapshot(root, rv) &&
             claimIsStale(metaDir(root).resolve(n)))
           breakStaleClaim(root, rv)
       }

@@ -816,4 +816,110 @@ class SnapshotSpec extends AnyFunSuite {
     assert(snapshot(root, v4).files.contains(copy))
     assert(read(spark, root).count() == 200)
   }
+
+  test("golden manifests: commit/merge/delete/rollback/compact write pinned text") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val root = freshRoot("golden")
+    def mk(r: Seq[Int], tag: String) =
+      r.map(i => (i.toLong, s"$tag$i")).toDF("id", "s").coalesce(1)
+    commit(spark, root, mk(0 until 10, "a"))                              // v1
+    commitWithTxn(spark, root, mk(10 until 20, "b"), "append", "g" -> 3L) // v2
+    // v3: file 1 is partly hit (split, with CDC pre-images), file 2 has no
+    // hit (copied)
+    merge(spark, root, mk((5 until 10) ++ (25 until 30), "m"), Seq("id"))
+    // v4: the survivor file is fully deleted, the delta partly (no CDC)
+    delete(spark, root, col("id") < 5L || col("id") >= 25L, cdc = false)
+    rollback(spark, root, toV = 2)                                        // v5
+    compact(spark, root)                                                  // v6
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    val text = (1 to 6).map { v =>
+      java.nio.file.Files.readString(java.nio.file.Paths.get(root, "meta", s"v$v.json"))
+    }.mkString("\n").replaceAll("\"ts_ms\": \\d+", "\"ts_ms\": <ts>")
+      .replaceAll(uuid, "<uuid>")
+    // attempt dirs are numbered in order of first appearance, so the pin
+    // still shows which files share a dir
+    val got = "s\\d+-[0-9a-f]{8}/".r.findAllIn(text).distinct.zipWithIndex
+      .foldLeft(text) { case (t, (a, i)) => t.replace(a, a.take(a.indexOf('-')) + s"-<a$i>/") }
+    assert(got == GoldenManifests, s"\n$got")
+    deleteRecursively(root)
+  }
+
+  private val GoldenManifests =
+    """{"version": 1, "parent": 0, "op": "append", "rows": 10,
+      | "txns": {},
+      | "files": ["data/s1-<a0>/part-00000-<uuid>-c000.snappy.parquet"],
+      | "stats": {"data/s1-<a0>/part-00000-<uuid>-c000.snappy.parquet": {"rows": 10, "cols": {"id": [0.0, 9.0]}}},
+      | "delta": [],
+      | "removed": [],
+      | "ts_ms": <ts>,
+      | "schema": {"type":"struct","fields":[{"name":"id","type":"long","nullable":false,"metadata":{}},{"name":"s","type":"string","nullable":true,"metadata":{}}]}}
+      |{"version": 2, "parent": 1, "op": "append", "rows": 20,
+      | "txn_id": "g", "txn_epoch": 3,
+      | "txns": {"g": 3},
+      | "files": ["data/s1-<a0>/part-00000-<uuid>-c000.snappy.parquet", "data/s2-<a1>/part-00000-<uuid>-c000.snappy.parquet"],
+      | "stats": {"data/s1-<a0>/part-00000-<uuid>-c000.snappy.parquet": {"rows": 10, "cols": {"id": [0.0, 9.0]}}, "data/s2-<a1>/part-00000-<uuid>-c000.snappy.parquet": {"rows": 10, "cols": {"id": [10.0, 19.0]}}},
+      | "delta": [],
+      | "removed": [],
+      | "ts_ms": <ts>,
+      | "schema": {"type":"struct","fields":[{"name":"id","type":"long","nullable":false,"metadata":{}},{"name":"s","type":"string","nullable":true,"metadata":{}}]}}
+      |{"version": 3, "parent": 2, "op": "merge", "rows": 25,
+      | "txns": {"g": 3},
+      | "files": ["data/s3-<a2>/part-00000-<uuid>-c000.snappy.parquet", "data/s3-<a3>/__kept=true/part-00000-<uuid>.c000.snappy.parquet", "data/s3-<a4>/part-00000-<uuid>-c000.snappy.parquet"],
+      | "stats": {"data/s3-<a2>/part-00000-<uuid>-c000.snappy.parquet": {"rows": 10, "cols": {"id": [10.0, 19.0]}}, "data/s3-<a3>/__kept=true/part-00000-<uuid>.c000.snappy.parquet": {"rows": 5, "cols": {"id": [0.0, 4.0]}}, "data/s3-<a4>/part-00000-<uuid>-c000.snappy.parquet": {"rows": 10, "cols": {"id": [5.0, 29.0]}}},
+      | "delta": ["data/s3-<a4>/part-00000-<uuid>-c000.snappy.parquet"],
+      | "removed": ["data/s3-<a3>/__kept=false/part-00000-<uuid>.c000.snappy.parquet"],
+      | "ts_ms": <ts>,
+      | "schema": {"type":"struct","fields":[{"name":"id","type":"long","nullable":false,"metadata":{}},{"name":"s","type":"string","nullable":true,"metadata":{}}]}}
+      |{"version": 4, "parent": 3, "op": "delete", "rows": 15,
+      | "txns": {"g": 3},
+      | "cdc_off": true,
+      | "files": ["data/s3-<a2>/part-00000-<uuid>-c000.snappy.parquet", "data/s4-<a5>/part-00000-<uuid>-c000.snappy.parquet"],
+      | "stats": {"data/s3-<a2>/part-00000-<uuid>-c000.snappy.parquet": {"rows": 10, "cols": {"id": [10.0, 19.0]}}, "data/s4-<a5>/part-00000-<uuid>-c000.snappy.parquet": {"rows": 5, "cols": {"id": [5.0, 9.0]}}},
+      | "delta": [],
+      | "removed": [],
+      | "ts_ms": <ts>,
+      | "schema": {"type":"struct","fields":[{"name":"id","type":"long","nullable":false,"metadata":{}},{"name":"s","type":"string","nullable":true,"metadata":{}}]}}
+      |{"version": 5, "parent": 4, "op": "rollback", "rows": 20,
+      | "txns": {"g": 3},
+      | "files": ["data/s1-<a0>/part-00000-<uuid>-c000.snappy.parquet", "data/s2-<a1>/part-00000-<uuid>-c000.snappy.parquet"],
+      | "stats": {"data/s1-<a0>/part-00000-<uuid>-c000.snappy.parquet": {"rows": 10, "cols": {"id": [0.0, 9.0]}}, "data/s2-<a1>/part-00000-<uuid>-c000.snappy.parquet": {"rows": 10, "cols": {"id": [10.0, 19.0]}}},
+      | "delta": [],
+      | "removed": [],
+      | "ts_ms": <ts>,
+      | "schema": {"type":"struct","fields":[{"name":"id","type":"long","nullable":false,"metadata":{}},{"name":"s","type":"string","nullable":true,"metadata":{}}]}}
+      |{"version": 6, "parent": 5, "op": "compact", "rows": 20,
+      | "txns": {"g": 3},
+      | "files": ["data/s6-<a6>/part-00000-<uuid>-c000.snappy.parquet"],
+      | "stats": {"data/s6-<a6>/part-00000-<uuid>-c000.snappy.parquet": {"rows": 20, "cols": {"id": [0.0, 19.0]}}},
+      | "delta": [],
+      | "removed": [],
+      | "ts_ms": <ts>,
+      | "schema": {"type":"struct","fields":[{"name":"id","type":"long","nullable":true,"metadata":{}},{"name":"s","type":"string","nullable":true,"metadata":{}}]}}""".stripMargin
+
+  test("a failed commit or merge leaves no attempt dir, manifest or tmp behind") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val root = freshRoot("failclean")
+    commit(spark, root, df(0 until 10))
+    def names(dir: String) =
+      Option(new java.io.File(s"$root/$dir").list()).map(_.toSet).getOrElse(Set.empty)
+    val dataBefore = names("data")
+    val rowsBefore = read(spark, root).collect().toSet
+    def poisoned(ids: Range) = df(ids).withColumn("s",
+      when(col("id") === ids.head.toLong, raise_error(lit("boom"))).otherwise(col("s")))
+    intercept[Exception] { commit(spark, root, poisoned(10 until 20)) }
+    intercept[Exception] { merge(spark, root, poisoned(5 until 15), Seq("id")) }
+    // a merge whose delta write lands and whose hit scan then fails in a
+    // task, on a live file that is not parquet
+    val live = java.nio.file.Paths.get(root, snapshot(root, 1).files.last)
+    val bytes = java.nio.file.Files.readAllBytes(live)
+    java.nio.file.Files.write(live, "not parquet".getBytes)
+    try intercept[Exception] { merge(spark, root, df(0 until 15), Seq("id")) }
+    finally java.nio.file.Files.write(live, bytes)
+    assert(names("data") == dataBefore, "no data/s2-* attempt dir may survive")
+    assert(names("meta") == Set("v1.json"), s"meta holds ${names("meta")}")
+    assert(currentVersion(root) == 1)
+    assert(read(spark, root).collect().toSet == rowsBefore)
+    deleteRecursively(root)
+  }
 }
