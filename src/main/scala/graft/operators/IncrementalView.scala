@@ -8,14 +8,16 @@ import graft.sources.{ParquetFiles, SnapshotTable}
 /** The refresh engine shared by the incrementally-maintained materialized
   * views ([[StatsView]], [[TrendView]]): a view table keyed on `tile_id`
   * whose non-key columns are MERGEABLE buffers (per-pixel moment arrays +
-  * a scalar layer count). A refresh classifies the source commits in
-  * (from, to] and picks the cheapest SAFE path (the reference analog is
-  * `loadstack`'s recompute-only-missing, `malib.py:482-542` — recompute
-  * what changed, reuse the rest):
+  * a scalar layer count). A refresh reads the source's change range
+  * (from, to] once (`SnapshotTable.ChangeRange`, every in-range manifest
+  * parsed once), classifies its commits and picks the cheapest SAFE path
+  * (the reference analog is `loadstack`'s recompute-only-missing,
+  * `malib.py:482-542` — recompute what changed, reuse the rest):
   *
   *   - APPEND-ONLY range (appends + compactions): the O(delta) fast path —
-  *       1. `SnapshotTable.changes(from, to)` — only the source layers
-  *          committed since the last refresh (file-level scan);
+  *       1. the range's adds — only the source layers committed since
+  *          the last refresh (file-level scan), with their tile envelope
+  *          from the same manifests' stats;
   *       2. the view aggregator's fold of those layers, FUSED with
   *       3. the old⊕new merge against the current view rows of the
   *          affected tiles (stats-pruned read) — one tagged-union
@@ -27,16 +29,17 @@ import graft.sources.{ParquetFiles, SnapshotTable}
   *     already folded in cannot be SUBTRACTED (min/max aren't invertible,
   *     and a silent adds-only fold would double-count merge post-images
   *     and keep deleted layers forever — VERDICT r6 Wrong #1). Instead the
-  *     CDC pre+post images name every AFFECTED tile; those tiles are
-  *     re-folded from the live source (tile-range-pruned read + semi-join)
-  *     and REPLACE their view rows via the keyed merge. Tiles whose layers
-  *     all vanished get the fold's identity row (zero buffers — finished
-  *     stats read as "no data"), so stale contributions can never linger.
+  *     range's CDC pre+post images name every AFFECTED tile; those tiles
+  *     are re-folded from the source at `to` (tile-range-pruned read +
+  *     semi-join) and REPLACE their view rows via the keyed merge. Tiles
+  *     whose layers all vanished get the fold's identity row (zero buffers
+  *     — finished stats read as "no data"), so stale contributions can
+  *     never linger.
   *     O(affected-tile history), not O(delta) — churn costs what it costs,
   *     loudly in the plan, never silently wrong.
   *   - UNREPLAYABLE range (rollback, cdc_off commits, expired mid-range
-  *     manifests) and FIRST refresh: full rebuild — fold the live snapshot
-  *     at `to` and overwrite the view in one marker-carrying commit.
+  *     manifests) and FIRST refresh: full rebuild — fold the snapshot at
+  *     `to` and overwrite the view in one marker-carrying commit.
   *
   * Every path commits with the refreshed SOURCE VERSION as an idempotent-
   * writer marker, so a crashed/replayed refresh is a no-op, never a
@@ -70,46 +73,32 @@ private[operators] object IncrementalView {
   def refresh[B, V](spark: SparkSession, tilesRoot: String, mvRoot: String,
                     kind: String, view: ViewDef[B, V])
                    (implicit enc: Encoder[V]): Long = {
-    val to = SnapshotTable.currentVersion(tilesRoot).toLong
+    val to = SnapshotTable.currentVersion(tilesRoot)
     val from = refreshedVersion(mvRoot, tilesRoot, kind)
     if (to <= math.max(from, 0L)) return from
-    // fat-row split/partition sizing, scoped to the refresh
-    ParquetFiles.withFatRowScanConf(spark) {
-      refreshInner(spark, tilesRoot, mvRoot, kind, view, to, from)
-    }
-  }
-
-  private def refreshInner[B, V](spark: SparkSession, tilesRoot: String,
-                                 mvRoot: String, kind: String,
-                                 view: ViewDef[B, V], to: Long, from: Long)
-                                (implicit enc: Encoder[V]): Long = {
     val marker = markerId(tilesRoot, kind)
     // source layers → packed view rows (the rebuild and churn folds)
     val fold: DataFrame => Dataset[V] = df =>
       StackOps.partialFold(df.as(Encoders.product[TileRow]), view.agg)(view.pack)
-    val fromI = math.max(from, 0L).toInt
-
-    // classify (from, to]: a mid-range manifest may be expired (None) —
-    // unreadable history can't be classified, so it rebuilds
-    val rangeOps: Seq[Option[SnapshotTable.Snapshot]] =
-      ((fromI + 1) to to.toInt).map { v =>
-        if (SnapshotTable.hasSnapshot(tilesRoot, v))
-          Some(SnapshotTable.snapshot(tilesRoot, v))
-        else None
-      }
+    // classify (from, to]: history with an expired manifest (mid-range, or
+    // the base the first commit is diffed against) can't be replayed, so
+    // it rebuilds
+    val range = new SnapshotTable.ChangeRange(tilesRoot, math.max(from, 0L).toInt, to)
     val mvEmpty = SnapshotTable.currentVersion(mvRoot) == 0
-    val appendOnly = !mvEmpty && rangeOps.forall(_.exists(sn =>
-      sn.op == "append" || sn.op == "compact"))
-    val cdcReplayable = rangeOps.forall(_.exists(sn =>
-      sn.op != "rollback" && !sn.cdcOff))
-
-    if (appendOnly)
-      refreshAppendOnly(spark, tilesRoot, mvRoot, marker, fromI, to, view)
-    else if (mvEmpty || !cdcReplayable)
-      rebuild(spark, tilesRoot, mvRoot, marker, to, fold, mvEmpty)
-    else
-      refreshChurned(spark, tilesRoot, mvRoot, marker, fromI, to, fold,
-        tid => view.pack(tid, view.agg.zero))
+    val ops = range.snaps.flatten
+    val appendOnly = !mvEmpty && range.replayable &&
+      ops.forall(sn => sn.op == "append" || sn.op == "compact")
+    val cdcReplayable = range.replayable && ops.forall(sn => sn.op != "rollback" && !sn.cdcOff)
+    // fat-row split/partition sizing, scoped to the refresh
+    ParquetFiles.withFatRowScanConf(spark) {
+      if (appendOnly)
+        refreshAppendOnly(spark, range, mvRoot, marker, view)
+      else if (mvEmpty || !cdcReplayable)
+        rebuild(spark, range, mvRoot, marker, fold, mvEmpty)
+      else
+        refreshChurned(spark, range, mvRoot, marker, fold,
+          tid => view.pack(tid, view.agg.zero))
+    }
     to
   }
 
@@ -127,11 +116,13 @@ private[operators] object IncrementalView {
     * order-independent on the engine's exact-sum payloads, which the
     * strict oracles gate. The old-view side still never broadcasts (no
     * join exists to mis-broadcast); each fat row moves exactly once. */
-  private def refreshAppendOnly[B, V](spark: SparkSession, tilesRoot: String,
-                                      mvRoot: String, marker: String, fromI: Int,
-                                      to: Long, view: ViewDef[B, V])
+  private def refreshAppendOnly[B, V](spark: SparkSession,
+                                      range: SnapshotTable.ChangeRange,
+                                      mvRoot: String, marker: String,
+                                      view: ViewDef[B, V])
                                      (implicit enc: Encoder[V]): Unit = {
-    val delta = SnapshotTable.changes(spark, tilesRoot, fromI, to.toInt)
+    val to = range.toV.toLong
+    val delta = range.adds(spark)
     // affected-tile envelope bounds BOTH the old-view read and the
     // merge's file rewrites; conservative (range, not id set). Derived
     // from the SOURCE manifests' added-file stats when recorded — zero
@@ -140,7 +131,7 @@ private[operators] object IncrementalView {
     // outward; pruning stays conservative). Falls back to one agg job
     // over the raw delta for legacy manifests without stats.
     val env: Option[(Double, Double)] =
-      SnapshotTable.changedRange(tilesRoot, fromI, to.toInt, "tile_id") match {
+      range.envelope("tile_id") match {
         case Some((0L, _)) => None                     // empty delta
         case Some((_, Some(b))) => Some(b)
         case _ => // legacy manifests without stats: one agg job
@@ -204,11 +195,12 @@ private[operators] object IncrementalView {
   }
 
   /** Full rebuild: fold the live snapshot at `to`, replace the view. */
-  private def rebuild[V](spark: SparkSession, tilesRoot: String,
-                         mvRoot: String, marker: String, to: Long,
+  private def rebuild[V](spark: SparkSession, range: SnapshotTable.ChangeRange,
+                         mvRoot: String, marker: String,
                          fold: DataFrame => Dataset[V], mvEmpty: Boolean)
                         (implicit enc: Encoder[V]): Unit = {
-    val all = fold(SnapshotTable.read(spark, tilesRoot)).toDF()
+    val to = range.toV.toLong
+    val all = fold(SnapshotTable.read(spark, range.root, asOf = range.toV)).toDF()
     if (mvEmpty) SnapshotTable.commitStreamBatch(spark, mvRoot, all, marker, to)
     else SnapshotTable.commitWithTxn(spark, mvRoot, all, "overwrite",
       marker -> to)
@@ -218,13 +210,13 @@ private[operators] object IncrementalView {
     * the live source and REPLACE their view rows (vanished tiles get the
     * identity row). Subsumes any appends in the same range — an appended
     * layer's tiles are CDC inserts, so they land in the recompute set. */
-  private def refreshChurned[V](spark: SparkSession, tilesRoot: String,
-                                mvRoot: String, marker: String, fromI: Int,
-                                to: Long, fold: DataFrame => Dataset[V],
-                                zero: Long => V)
+  private def refreshChurned[V](spark: SparkSession,
+                                range: SnapshotTable.ChangeRange,
+                                mvRoot: String, marker: String,
+                                fold: DataFrame => Dataset[V], zero: Long => V)
                                (implicit enc: Encoder[V]): Unit = {
-    val affected = SnapshotTable.changesCdc(spark, tilesRoot, fromI, to.toInt)
-      .select(col("tile_id")).distinct()
+    val to = range.toV.toLong
+    val affected = range.cdc(spark).select(col("tile_id")).distinct()
     // three consumers: envelope agg, recompute semi-join, vanished anti-join
     affected.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -237,7 +229,7 @@ private[operators] object IncrementalView {
       }
       val prune = Seq(SnapshotTable.colRangeLong("tile_id",
         env.getLong(0), env.getLong(1)))
-      val src = SnapshotTable.read(spark, tilesRoot, prune = prune)
+      val src = SnapshotTable.read(spark, range.root, asOf = range.toV, prune = prune)
         .join(affected, Seq("tile_id"), "left_semi")
       val recomputed = fold(src)
       // two consumers: the vanished-tile probe and the merge commit

@@ -14,8 +14,10 @@ import graft.sources.{ImageTable, SnapshotTable}
   * same `StatsBuf` the batch aggregator folds) as a second catalog table
   * and advances it per refresh by
   *
-  *   1. `SnapshotTable.changes(from, to)` — ONLY the layers committed
-  *      since the last refresh (O(delta) scan, file-level);
+  *   1. the source's change range (from, to], read once
+  *      (`SnapshotTable.ChangeRange`): ONLY the layers committed since the
+  *      last refresh (O(delta) scan, file-level) and their tile envelope
+  *      from the same manifests' stats;
   *   2. the fold of those layers into per-tile buffers FUSED with the
   *      old⊕new merge against the current view rows of the affected tiles
   *      (stats-pruned read) — one exchange keyed on tile_id; both the fold

@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The parquet-format primitives shared by the snapshot catalog, the stage
   * checkpoints and the protocol drivers: part-file listing, driver-side
   * footer reads, the one-file write-and-concat, link-or-copy and the
-  * fat-row scan sizing. One definition each, so the callers cannot drift. */
+  * scoped scan confs. One definition each, so the callers cannot drift. */
 private[graft] object ParquetFiles {
 
   /** Non-empty `*.parquet` part files directly under `dir`, by name. */
@@ -91,8 +91,14 @@ private[graft] object ParquetFiles {
       // (observed reader reserve failure at 10x scale); 128 rows bounds a
       // batch to a few MB per column at any scale
       "spark.sql.parquet.columnarReaderBatchSize" -> "128")
-    val saved = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    withConf(spark, scoped: _*)(body)
+  }
+
+  /** `confs` set on the session for `body`, the previous values (or their
+    * absence) restored on exit: the one conf-scoping primitive. */
+  def withConf[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** Snapshot-log table format over parquet — the catalog semantics the north
@@ -19,9 +20,10 @@ import scala.jdk.CollectionConverters._
   *   <root>/meta/v<N>.json                    snapshot N: live file list
   * }}}
   *
-  * A snapshot manifest lists EVERY live file (not a delta), so a read plans
-  * one parquet scan over an explicit file list — no directory listing on the
-  * hot path, the property that matters on object stores at 100 TB. Commits
+  * A snapshot manifest lists EVERY live file (not a delta), so every read
+  * is one [[scan]] of an explicit file list: no directory is listed, and
+  * the named files are stat'ed on the driver, never by a Spark listing
+  * job (the property that matters on object stores at 100 TB). Commits
   * are optimistic: the writer materializes data files, then publishes
   * `meta/v<N>.json` with a create-exclusive move — a concurrent committer of
   * the same N loses with `ConcurrentCommitException` and must retry on top
@@ -46,7 +48,7 @@ object SnapshotTable {
   final case class Snapshot(version: Int, parent: Int, op: String,
                             rows: Long, files: Seq[String],
                             stats: Map[String, FileStats] = Map.empty,
-                            schema: Option[org.apache.spark.sql.types.StructType] = None,
+                            schema: Option[StructType] = None,
                             delta: Seq[String] = Nil,
                             tsMs: Long = 0L,
                             removed: Seq[String] = Nil,
@@ -94,18 +96,18 @@ object SnapshotTable {
     import org.json4s._
     val txt = Files.readString(metaDir(root).resolve(s"v$version.json"))
     val j = org.json4s.jackson.JsonMethods.parse(txt)
-    def num(k: String): Long = (j \ k) match {
-      case JInt(n) => n.toLong
-      case JLong(n) => n
-      case _ => throw new IllegalStateException(s"manifest v$version lacks $k")
+    def lng(v: JValue): Option[Long] = v match {
+      case JInt(n) => Some(n.toLong); case JLong(n) => Some(n); case _ => None
+    }
+    def num(k: String): Long = lng(j \ k).getOrElse(
+      throw new IllegalStateException(s"manifest v$version lacks $k"))
+    def strs(k: String): List[String] = (j \ k) match {
+      case JArray(fs) => fs.collect { case JString(f) => f }
+      case _ => Nil
     }
     val op = (j \ "op") match {
       case JString(s) => s
       case _ => throw new IllegalStateException(s"manifest v$version lacks op")
-    }
-    val files = (j \ "files") match {
-      case JArray(fs) => fs.collect { case JString(f) => f }
-      case _ => Nil
     }
     def dbl(v: JValue): Double = v match {
       case JDouble(d) => d
@@ -117,9 +119,7 @@ object SnapshotTable {
     val stats = (j \ "stats") match {
       case JObject(fields) => fields.collect {
         case (file, fj) =>
-          val rows = (fj \ "rows") match {
-            case JInt(n) => n.toLong; case JLong(n) => n; case _ => 0L
-          }
+          val rows = lng(fj \ "rows").getOrElse(0L)
           val cols = (fj \ "cols") match {
             // bounds are loaded VERBATIM — the one-ulp outward widening for
             // legacy (nearest-rounded) manifests is applied at COMPARISON
@@ -136,48 +136,31 @@ object SnapshotTable {
       }.toMap
       case _ => Map.empty[String, FileStats]
     }
-    val delta = (j \ "delta") match {
-      case JArray(fs) => fs.collect { case JString(f) => f }
-      case _ => Nil
-    }
-    val tsMs = (j \ "ts_ms") match {
-      case JInt(n) => n.toLong; case JLong(n) => n; case _ => 0L
-    }
-    val removed = (j \ "removed") match {
-      case JArray(fs) => fs.collect { case JString(f) => f }
-      case _ => Nil
-    }
     val schema = (j \ "schema") match {
       case JNothing => None
       case sj =>
         val txt = org.json4s.jackson.JsonMethods.compact(
           org.json4s.jackson.JsonMethods.render(sj))
         org.apache.spark.sql.types.DataType.fromJson(txt) match {
-          case st: org.apache.spark.sql.types.StructType => Some(st)
+          case st: StructType => Some(st)
           case _ => None
         }
     }
-    val txn = ((j \ "txn_id"), (j \ "txn_epoch")) match {
-      case (JString(id), JInt(e)) => Some(id -> e.toLong)
-      case (JString(id), JLong(e)) => Some(id -> e)
+    val txn = (j \ "txn_id") match {
+      case JString(id) => lng(j \ "txn_epoch").map(id -> _)
       case _ => None
     }
     // merged idempotence markers (Delta's setTransactions): None = legacy
     // manifest written before the carry-forward — readers fall back to the
     // chain walk ONCE and the next commit upgrades the chain to O(1)
     val txns = (j \ "txns") match {
-      case JObject(fs) => Some(fs.collect {
-        case (id, JInt(e)) => id -> e.toLong
-        case (id, JLong(e)) => id -> e
-      }.toMap)
+      case JObject(fs) => Some(fs.flatMap { case (id, e) => lng(e).map(id -> _) }.toMap)
       case _ => None
     }
-    val cdcOff = (j \ "cdc_off") match {
-      case JBool(b) => b
-      case _ => false
-    }
+    val cdcOff = (j \ "cdc_off") match { case JBool(b) => b; case _ => false }
     Snapshot(num("version").toInt, num("parent").toInt, op, num("rows"),
-             files, stats, schema, delta, tsMs, removed, txn, txns, cdcOff)
+             strs("files"), stats, schema, strs("delta"), lng(j \ "ts_ms").getOrElse(0L),
+             strs("removed"), txn, txns, cdcOff)
   }
 
   /** Schema compatibility gate for append-family commits: the commit schema
@@ -187,8 +170,7 @@ object SnapshotTable {
     * drift reads differently depending on which file plans first — silent).
     * Widening the table shape goes through `overwrite` (full rewrite, new
     * schema) by design. */
-  private def requireCompatible(parent: Option[org.apache.spark.sql.types.StructType],
-                                next: org.apache.spark.sql.types.StructType,
+  private def requireCompatible(parent: Option[StructType], next: StructType,
                                 v: Int): Unit = parent.foreach { p =>
     // nullability is normalized away before comparing: parquet writes every
     // Spark field as optional regardless of the logical flag, so a
@@ -270,8 +252,8 @@ object SnapshotTable {
     val v: Int = base + 1
     /** The base snapshot, read once; None on an empty table. */
     lazy val prev: Option[Snapshot] = if (base >= 1) Some(snapshot(root, base)) else None
-    def reader: org.apache.spark.sql.DataFrameReader = // pinned to the base schema
-      prev.flatMap(_.schema).fold(spark.read)(spark.read.schema)
+    /** The base schema, which reads of base files are pinned to. */
+    def schema: Option[StructType] = prev.flatMap(_.schema)
     /** Root-relative attempt dirs made so far. */
     val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
 
@@ -312,7 +294,7 @@ object SnapshotTable {
     def split(files: Seq[String], cdc: Boolean)(route: DataFrame => DataFrame)
         : (Seq[String], Map[String, FileStats], Seq[String]) = {
       if (files.isEmpty) return (Nil, Map.empty, Nil)
-      val df = route(reader.parquet(files.map(f => s"$root/$f"): _*))
+      val df = route(scan(spark, root, schema, files))
       if (!cdc) {
         val (survivors, stats) =
           write(df.filter(org.apache.spark.sql.functions.col("__kept")).drop("__kept"))
@@ -601,7 +583,7 @@ object SnapshotTable {
                         files: Seq[String]): Map[String, FileStats] = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val df = spark.read.parquet(files.map(f => s"$root/$f"): _*)
+    val df = scan(spark, root, None, files)
     // timestamps are recorded as epoch MICROS; NTZ wall-clocks are pinned
     // AS-IF-UTC regardless of the committing session's timezone (cast to
     // LTZ interprets the wall in the session tz, to_utc_timestamp undoes
@@ -652,16 +634,16 @@ object SnapshotTable {
     * `hits` receives the scan with the file name captured in `__f` (before
     * any join — input_file_name is single-source) and returns the frame to
     * count and its hit column. */
-  private def hitScan(root: String, reader: org.apache.spark.sql.DataFrameReader,
+  private def hitScan(spark: SparkSession, root: String, schema: Option[StructType],
                       files: Seq[String])(
       hits: DataFrame => (DataFrame, org.apache.spark.sql.Column))
       : (Seq[String], Seq[String], Seq[String]) = {
     import org.apache.spark.sql.functions._
     if (files.isEmpty) return (Nil, Nil, Nil)
-    val (scan, hit) = hits(reader.parquet(files.map(f => s"$root/$f"): _*)
+    val (scanned, hit) = hits(scan(spark, root, schema, files)
       .withColumn("__f", input_file_name()))
     val resolve = fileResolver(root, files)
-    val counts = scan.groupBy(col("__f"))
+    val counts = scanned.groupBy(col("__f"))
       .agg(count(lit(1)), count(when(hit, 1)))
       .collect()
       .map(r => resolve(r.getString(0)) -> (r.getLong(1), r.getLong(2)))
@@ -841,8 +823,11 @@ object SnapshotTable {
     * conjuncts. Files without stats for a referenced column are kept —
     * pruning is an optimization, never a semantic filter. Exposed so tests
     * (and operators) can assert the planned list. */
-  def planFiles(root: String, version: Int, prune: Seq[ColRange]): Seq[String] = {
-    val snap = snapshot(root, version)
+  def planFiles(root: String, version: Int, prune: Seq[ColRange]): Seq[String] =
+    prunedFiles(snapshot(root, version), prune)
+
+  /** [[planFiles]] over an already-parsed snapshot. */
+  private def prunedFiles(snap: Snapshot, prune: Seq[ColRange]): Seq[String] =
     snap.files.filter { f =>
       val st = snap.stats.get(f)
       prune.forall { p =>
@@ -859,7 +844,6 @@ object SnapshotTable {
         }
       }
     }
-  }
 
   /** Version visible at wall-clock `tsMs` — the newest snapshot whose
     * commit timestamp is ≤ tsMs (Iceberg's timestamp time travel). Commit
@@ -898,9 +882,8 @@ object SnapshotTable {
     val v = if (asOf >= 0) asOf else currentVersion(root)
     require(v >= 1, s"no snapshot $v at $root")
     val snap = snapshot(root, v)
-    val reader = snap.schema.fold(spark.read)(spark.read.schema)
-    val files = planFiles(root, v, prune)
-    if (files.nonEmpty) reader.parquet(files.map(f => s"$root/$f"): _*)
+    val files = prunedFiles(snap, prune)
+    if (files.nonEmpty) scan(spark, root, snap.schema, files)
     // pruning legitimately eliminated every file: an EMPTY result with the
     // table schema, not an error (a range query before the data's time
     // window is a normal empty read, not a bug)
@@ -910,89 +893,163 @@ object SnapshotTable {
   /** The schema a read plans with: the manifest-`recorded` one, else (a
     * pre-schema manifest) the footer of the first of `files`, which belong
     * to snapshot `v`. */
-  private def schemaOf(spark: SparkSession, root: String,
-                       recorded: Option[org.apache.spark.sql.types.StructType],
-                       files: Seq[String], v: Int): org.apache.spark.sql.types.StructType =
+  private def schemaOf(spark: SparkSession, root: String, recorded: Option[StructType],
+                       files: Seq[String], v: Int): StructType =
     recorded.getOrElse {
       require(files.nonEmpty, s"snapshot v$v has no files at $root")
-      spark.read.parquet(s"$root/${files.head}").schema
+      scan(spark, root, None, files.take(1)).schema
     }
 
-  private def emptyFrame(spark: SparkSession,
-                         schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** Snapshot `v`, which a change read needs (`what`, e.g. "changes(v1,
-    * v3) needs manifest"): an expired manifest fails loudly instead of
-    * shortening the range. */
-  private def neededSnapshot(root: String, v: Int, what: => String): Snapshot = {
-    require(hasSnapshot(root, v), s"$what v$v, which is expired")
-    snapshot(root, v)
+  private val scanLock = new Object
+  /** The catalog's one parquet read: root-relative `files` from a manifest,
+    * with `schema` pinned (else inferred from a footer). The manifest holds
+    * the exact file list, so Spark must not list it again: above
+    * `parallelPartitionDiscovery.threshold` paths its file index runs a
+    * distributed listing job. It lists when the DataFrame is created, so
+    * the threshold is raised for that call only, under a lock so that
+    * concurrent scans restore the session's own value. */
+  private def scan(spark: SparkSession, root: String, schema: Option[StructType],
+                   files: Seq[String]): DataFrame = {
+    val reader = schema.fold(spark.read)(spark.read.schema)
+    scanLock.synchronized {
+      ParquetFiles.withConf(spark,
+          "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString) {
+        reader.parquet(files.map(f => s"$root/$f"): _*)
+      }
+    }
   }
 
-  /** The files `sn` introduced over its parent, for the change read `what`. */
-  private def introduced(root: String, sn: Snapshot, what: => String): Seq[String] =
-    if (sn.parent < 1) sn.files
-    else sn.files.filterNot(
-      neededSnapshot(root, sn.parent, s"$what needs parent manifest").files.toSet)
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** A change read over versions that disagree on (name -> type) would
     * union-scan whichever footer plans first: fail loudly with `msg`. */
-  private def requireOneSchema(schemas: Seq[org.apache.spark.sql.types.StructType],
-                               msg: => String): Unit =
+  private def requireOneSchema(schemas: Seq[StructType], msg: => String): Unit =
     require(schemas.map(_.fields.map(f => f.name -> f.dataType).toMap).distinct.size <= 1, msg)
 
-  /** Files ADDED over (fromV, toV] — the walk shared by [[changes]] and
-    * [[changedRange]] so the two can never disagree on what the delta is. */
-  private def addedFilesIn(root: String, fromV: Int, toV: Int): Seq[String] = {
-    (math.max(1, fromV + 1) to toV).flatMap { v =>
-      val snap = neededSnapshot(root, v, s"changes(v$fromV, v$toV) needs manifest")
-      snap.op match {
-        case "append" | "overwrite" => introduced(root, snap, s"changes(v$fromV, v$toV)")
-        // merge: ONLY its recorded delta files (the upserted rows); the
-        // survivor-rewrite carriers are not data changes — including them
-        // would replay untouched rows to CDC consumers after every merge
-        case "merge" => snap.delta
-        // compact/rollback rewrites + delete (rows REMOVED, none added):
-        // nothing for an adds stream
-        case _ => Nil
-      }
-    }.distinct
-  }
+  /** The change range (fromV, toV] of `root`, each manifest it needs parsed
+    * once. [[changes]], [[changesCdc]], the adds' [[envelope]] and the
+    * incremental views' classification all derive from it, so none of
+    * them can disagree on what the range holds. */
+  private[graft] final class ChangeRange(val root: String, val fromV: Int, val toV: Int) {
+    require(toV > fromV && toV >= 1, s"bad change range v$fromV..v$toV")
+    private val first = math.max(1, fromV + 1)
+    private def load(v: Int): Option[Snapshot] =
+      if (hasSnapshot(root, v)) Some(snapshot(root, v)) else None
+    /** Snapshots `fromV + 1` to `toV` in order; None = expired manifest. */
+    val snaps: IndexedSeq[Option[Snapshot]] = (first to toV).map(load)
+    private val outside = scala.collection.mutable.Map.empty[Int, Option[Snapshot]]
+    private def at(v: Int): Option[Snapshot] =
+      if (v >= first && v <= toV) snaps(v - first) else outside.getOrElseUpdate(v, load(v))
 
-  /** Row count + bounds of one column over the files a [[changes]] call
-    * for the same range would read, straight from the manifests — zero
-    * Spark jobs (the incremental views' envelope shortcut). Returns None
-    * when any added file lacks recorded stats, or the column's bounds are
-    * missing on a file that has rows — callers fall back to aggregating.
-    * Bounds are the commit-time directed-rounded values, so intervals are
-    * conservative and identical in meaning to the scan-side stats. */
-  def changedRange(root: String, fromV: Int, toV: Int,
-                   colName: String): Option[(Long, Option[(Double, Double)])] = {
-    val added = addedFilesIn(root, fromV, toV)
-    if (added.isEmpty) return Some((0L, None))
-    // each added file's stats live in the manifest of the version that
-    // introduced it (and ride forward while live); walk the range newest-
-    // last so later re-records win
-    val statsByFile = (math.max(1, fromV + 1) to toV)
-      .foldLeft(Map.empty[String, FileStats]) { (m, v) =>
-        m ++ snapshot(root, v).stats
-      }
-    var rows = 0L
-    var lo = Double.PositiveInfinity; var hi = Double.NegativeInfinity
-    var haveBounds = true
-    added.foreach { f =>
-      statsByFile.get(f) match {
-        case None => return None // legacy file without stats: aggregate
-        case Some(fs) =>
-          rows += fs.rows
-          fs.cols.get(colName) match {
-            case Some((l, h)) => lo = math.min(lo, l); hi = math.max(hi, h)
-            case None => if (fs.rows > 0) haveBounds = false
-          }
-      }
+    /** Whether every manifest the range's reads need is retained: each
+      * in-range one, and the base `fromV` the first is diffed against. */
+    def replayable: Boolean = snaps.forall(_.isDefined) && (first == 1 || at(fromV).isDefined)
+
+    /** Snapshot `v`, which the read `what` needs: an expired manifest
+      * fails loudly instead of shortening the range. */
+    private def need(v: Int, what: => String): Snapshot = {
+      val sn = at(v)
+      require(sn.isDefined, s"$what v$v, which is expired")
+      sn.get
     }
-    Some((rows, if (haveBounds && rows > 0) Some((lo, hi)) else None))
+
+    /** Every in-range snapshot, which the read `what` needs. */
+    private def all(what: String): Seq[Snapshot] =
+      (first to toV).map(need(_, s"$what needs manifest"))
+
+    /** The files `sn` introduced over its parent, for the read `what`. */
+    private def introduced(sn: Snapshot, what: String): Seq[String] =
+      if (sn.parent < 1) sn.files
+      else sn.files.filterNot(need(sn.parent, s"$what needs parent manifest").files.toSet)
+
+    /** Each file ADDED over the range, with its introducing manifest's
+      * stats: an append or overwrite adds what it introduced over its
+      * parent; a merge ONLY its delta (its survivor rewrites are not data
+      * changes: they would replay untouched rows to CDC consumers). */
+    private lazy val added: Seq[(String, Option[FileStats])] = {
+      val what = s"changes(v$fromV, v$toV)"
+      (first to toV).flatMap { v =>
+        val sn = need(v, s"$what needs manifest")
+        (sn.op match {
+          case "append" | "overwrite" => introduced(sn, what)
+          case "merge" => sn.delta
+          case _ => Nil
+        }).map(f => f -> sn.stats.get(f))
+      }.distinctBy(_._1)
+    }
+
+    /** The rows of [[changes]]. */
+    def adds(spark: SparkSession, prune: Seq[ColRange] = Nil): DataFrame = {
+      val what = s"changes(v$fromV, v$toV)"
+      val allAdded = added.map(_._1)
+      val last = need(toV, s"$what needs manifest")
+      // files added mid-range but no longer live in toV carry no toV
+      // stats: keep them (conservative)
+      val planned = prunedFiles(last, prune).toSet ++ allAdded.filterNot(last.files.toSet)
+      val files = allAdded.filter(planned)
+      // surface the recorded schema: every contributing version must agree
+      // on (name -> type) — a mid-range overwrite that reshaped the table
+      // is a LOUD error directing the caller to read per-version instead
+      val schemas = all(what)
+        .filter(s => s.op == "append" || s.op == "overwrite" || s.op == "merge")
+        .flatMap(_.schema)
+      requireOneSchema(schemas, s"$what spans a schema change; read per-version")
+      if (files.nonEmpty) scan(spark, root, schemas.headOption, files)
+      else emptyFrame(spark, schemaOf(spark, root, schemas.headOption, allAdded ++ last.files, toV))
+    }
+
+    /** Row count + directed-rounded bounds of `colName` over the unpruned
+      * [[adds]], from the manifests' stats: zero Spark jobs. None when an
+      * added file lacks stats, no bounds when a file with rows lacks them
+      * for the column: callers then aggregate. */
+    def envelope(colName: String): Option[(Long, Option[(Double, Double)])] =
+      if (added.exists(_._2.isEmpty)) None // legacy file without stats
+      else {
+        val stats = added.flatMap(_._2)
+        val rows = stats.map(_.rows).sum
+        val bounds = stats.flatMap(_.cols.get(colName))
+        val covered = stats.forall(fs => fs.rows == 0 || fs.cols.contains(colName))
+        Some((rows, if (covered && rows > 0) Some((bounds.map(_._1).min, bounds.map(_._2).max))
+                    else None))
+      }
+
+    /** The rows of [[changesCdc]]. */
+    def cdc(spark: SparkSession): DataFrame = {
+      import org.apache.spark.sql.functions.lit
+      val what = s"changesCdc(v$fromV, v$toV)"
+      val in = all(what)
+      in.filter(_.cdcOff).foreach(sn => throw new IllegalStateException(
+        s"$what: v${sn.version} (${sn.op}) was committed with cdc=false — its " +
+          "delete pre-images were never recorded; read per-version snapshots instead"))
+      // an overwrite's delete pre-images are its parent's live files, read
+      // with the common schema: the parent's schema must agree too, even
+      // when it lies outside the range (fromV = parent), or a reshaping
+      // overwrite would silently null-pad / drop pre-image columns
+      def parentOf(sn: Snapshot) = need(sn.parent, s"$what needs parent manifest")
+      val preImageSchemas = in.filter(sn => sn.op == "overwrite" && sn.parent >= 1)
+        .flatMap(parentOf(_).schema)
+      val schemas = in.filter(sn => sn.op != "compact" && sn.op != "rollback")
+        .flatMap(_.schema)
+      requireOneSchema(schemas ++ preImageSchemas, s"$what spans a schema change; read per-version")
+      def part(files: Seq[String], kind: String): Seq[DataFrame] =
+        if (files.isEmpty) Nil
+        else Seq(scan(spark, root, schemas.headOption, files).withColumn("_change_type", lit(kind)))
+      val parts = in.flatMap { sn =>
+        sn.op match {
+          case "append" => part(introduced(sn, what), "insert")
+          case "overwrite" =>
+            (if (sn.parent >= 1) part(parentOf(sn).files, "delete") else Nil) ++
+              part(sn.files, "insert")
+          case "merge" => part(sn.removed, "delete") ++ part(sn.delta, "insert")
+          case "delete" => part(sn.removed, "delete")
+          case _ => Nil // compact / rollback: rewrites, not data changes
+        }
+      }
+      parts.reduceOption(_ unionByName _).getOrElse(
+        emptyFrame(spark, schemaOf(spark, root, schemas.headOption, in.last.files, toV))
+          .withColumn("_change_type", lit("insert")))
+    }
   }
 
   /** Incremental read: rows ADDED between `fromV` (exclusive) and `toV`
@@ -1004,27 +1061,8 @@ object SnapshotTable {
     * files, also nothing. `prune` as in `read`; an empty increment is an
     * empty DataFrame, not an error. */
   def changes(spark: SparkSession, root: String, fromV: Int, toV: Int,
-              prune: Seq[ColRange] = Nil): DataFrame = {
-    require(toV > fromV && toV >= 1, s"bad change range v$fromV..v$toV")
-    val allAdded = addedFilesIn(root, fromV, toV)
-    val live = snapshot(root, toV).files
-    val planned = planFiles(root, toV, prune).toSet ++
-      // files added mid-range but no longer live in toV carry no toV stats;
-      // keep them (conservative) unless their own snapshot pruned them out
-      allAdded.filterNot(live.toSet)
-    val added = allAdded.filter(planned)
-    // surface the recorded schema: every contributing version must agree on
-    // (name -> type) — a mid-range overwrite that reshaped the table is a
-    // LOUD error directing the caller to read per-version instead
-    val schemas = (math.max(1, fromV + 1) to toV)
-      .map(snapshot(root, _))
-      .filter(s => s.op == "append" || s.op == "overwrite" || s.op == "merge")
-      .flatMap(_.schema)
-    requireOneSchema(schemas, s"changes(v$fromV, v$toV) spans a schema change; read per-version")
-    val reader = schemas.headOption.fold(spark.read)(spark.read.schema)
-    if (added.nonEmpty) reader.parquet(added.map(f => s"$root/$f"): _*)
-    else emptyFrame(spark, schemaOf(spark, root, schemas.headOption, allAdded ++ live, toV))
-  }
+              prune: Seq[ColRange] = Nil): DataFrame =
+    new ChangeRange(root, fromV, toV).adds(spark, prune)
 
   /** Row totals for a live file list: manifest stats where recorded, one
     * counting scan for legacy files without stats. */
@@ -1032,7 +1070,7 @@ object SnapshotTable {
                        stats: Map[String, FileStats]): Long = {
     val missing = live.filterNot(stats.contains)
     val counted = if (missing.isEmpty) 0L
-      else spark.read.parquet(missing.map(f => s"$root/$f"): _*).count()
+      else scan(spark, root, None, missing).count()
     live.flatMap(stats.get).map(_.rows).sum + counted
   }
 
@@ -1095,17 +1133,16 @@ object SnapshotTable {
       // the touched files' full replacement — no survivor-routing scan, so the
       // old rows are read ONCE per refresh (by the caller) instead of twice.
       // The touched set is recomputed here from the SAME prune against the
-      // SAME base manifest (planFiles is pure), so caller and merge can never
+      // SAME base manifest (pruning is pure), so caller and merge can never
       // disagree on which files are replaced.
       val candidates =
         if (deltaRows == 0L) Nil
-        else replaceAllPrune.fold(planFiles(root, base, ranges))(
-          p => planFiles(root, base, p))
+        else prunedFiles(prev, replaceAllPrune.getOrElse(ranges))
       // the distinct incoming keys, read back from the delta's own files
       // (`df` is computed once): the join side of the hit scan and the split
       def incomingKeys: DataFrame =
         (if (deltaFiles.nonEmpty)
-           spark.read.schema(df.schema).parquet(deltaFiles.map(f => s"$root/$f"): _*)
+           scan(spark, root, Some(df.schema), deltaFiles)
          else df).select(keyCols.map(col): _*).distinct()
       // The file-level contract is unchanged: every candidate file (key-stats
       // envelope intersection) is REPLACED in this version — the documented
@@ -1127,7 +1164,7 @@ object SnapshotTable {
       // the delta replaces every candidate wholesale: no scan at all.
       val (zeroHit, fullHit, partial) =
         if (replaceAllPrune.isDefined) (Nil, Nil, Nil)
-        else hitScan(root, t.reader, candidates) { scan =>
+        else hitScan(spark, root, t.schema, candidates) { scan =>
           (scan.select((keyCols :+ "__f").map(col): _*)
              .join(incomingKeys.withColumn("__hit", lit(1)), keyCols, "left"),
            col("__hit").isNotNull)
@@ -1176,7 +1213,7 @@ object SnapshotTable {
     require(base >= 1, s"nothing to delete at $root")
     transact(spark, root, base) { t =>
       val prev = t.prev.get
-      val candidates = planFiles(root, base, prune)
+      val candidates = prunedFiles(prev, prune)
       // ONE pass over the candidates counts, per file, its rows and its
       // predicate matches: match-free candidates carry forward untouched
       // (as before), and FULLY-matched files — every row deleted — need no
@@ -1184,7 +1221,7 @@ object SnapshotTable {
       // (`removed` references it directly; changesCdc reads it as the exact
       // pre-image set, expire's GC tracks `removed` references), so a
       // delete that drops whole files moves no payload bytes.
-      val (_, fullyDeleted, touched) = hitScan(root, t.reader, candidates)(
+      val (_, fullyDeleted, touched) = hitScan(spark, root, t.schema, candidates)(
         scan => (scan, coalesce(predicate, lit(false))))
       val replaced = (touched ++ fullyDeleted).toSet
       val untouched = prev.files.filterNot(replaced)
@@ -1215,51 +1252,8 @@ object SnapshotTable {
     * compact/rollback contribute nothing. The adds-only [[changes]]
     * remains the cheap path when deletes don't matter. */
   def changesCdc(spark: SparkSession, root: String, fromV: Int,
-                 toV: Int): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    require(toV > fromV && toV >= 1, s"bad change range v$fromV..v$toV")
-    val snaps = (math.max(1, fromV + 1) to toV).map(
-      neededSnapshot(root, _, s"changesCdc(v$fromV, v$toV) needs manifest"))
-    snaps.filter(_.cdcOff).foreach(sn => throw new IllegalStateException(
-      s"changesCdc(v$fromV, v$toV): v${sn.version} (${sn.op}) was committed " +
-        "with cdc=false — its delete pre-images were never recorded; read " +
-        "per-version snapshots instead"))
-    // the agreement set includes the PARENT schema of every in-range
-    // overwrite: its delete pre-images are the parent's files, scanned
-    // below with the common reader — when the range starts AT the
-    // overwrite's parent (fromV = parent) that schema is otherwise
-    // outside the range, and a reshaping overwrite would silently
-    // null-pad / drop pre-image columns instead of the loud error
-    val preImageSchemas = snaps
-      .filter(sn => sn.op == "overwrite" && sn.parent >= 1)
-      .flatMap(sn => snapshot(root, sn.parent).schema)
-    val schemas = snaps.filter(sn => sn.op != "compact" && sn.op != "rollback")
-      .flatMap(_.schema)
-    requireOneSchema(schemas ++ preImageSchemas,
-      s"changesCdc(v$fromV, v$toV) spans a schema change; read per-version")
-    val reader = schemas.headOption.fold(spark.read)(spark.read.schema)
-    def scan(files: Seq[String], kind: String): Option[DataFrame] =
-      if (files.isEmpty) None
-      else Some(reader.parquet(files.map(f => s"$root/$f"): _*)
-        .withColumn("_change_type", lit(kind)))
-    val parts = snaps.flatMap { sn =>
-      sn.op match {
-        case "append" =>
-          scan(introduced(root, sn, s"changesCdc(v$fromV, v$toV)"), "insert").toSeq
-        case "overwrite" =>
-          val dels = if (sn.parent >= 1)
-            scan(snapshot(root, sn.parent).files, "delete") else None
-          dels.toSeq ++ scan(sn.files, "insert").toSeq
-        case "merge" =>
-          scan(sn.removed, "delete").toSeq ++ scan(sn.delta, "insert").toSeq
-        case "delete" => scan(sn.removed, "delete").toSeq
-        case _ => Nil // compact / rollback: rewrites, not data changes
-      }
-    }
-    parts.reduceOption(_ unionByName _).getOrElse(
-      emptyFrame(spark, schemaOf(spark, root, schemas.headOption, snapshot(root, toV).files, toV))
-        .withColumn("_change_type", lit("insert")))
-  }
+                 toV: Int): DataFrame =
+    new ChangeRange(root, fromV, toV).cdc(spark)
 
   /** Roll the table back to `toV` as a NEW snapshot (history stays intact,
     * like Iceberg's rollback: the old file list is re-published). */

@@ -29,36 +29,20 @@ class SamplingSpec extends AnyFunSuite {
 
   test("pointSample ships image payloads ~once: shuffle bytes bounded") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
     val images = ImageTable.generate(spark, 40).cache(); images.count()
     val payloadBytes = images.select(sum(length(col("bytes")))).head().getLong(0)
     // many points per image: the old shape shipped bytes per covering cell
     // AND per matched point; the cogroup ships each image's bytes once
     val pts = graft.sources.PolygonTable.points(spark, 4000)
-    val shuffleWriteAcc = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffleWriteAcc.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val n = Sampling.pointSample(spark, pts, images, cellSize = 256.0).count()
-      // drain the listener bus: poll until the counter is stable (a fixed
-      // sleep undercounts on a loaded host → flaky bound)
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      var last = -1L; var stable = 0
-      while (System.nanoTime() < deadline && stable < 5) {
-        val cur = shuffleWriteAcc.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-        Thread.sleep(100)
-      }
-      val shuffleWrite = shuffleWriteAcc.get()
-      assert(n > 0)
-      // bytes cross the wire once for the image side plus small point rows:
-      // well under 3× the raw payload (the per-covering-cell form was ~10×+)
-      assert(shuffleWrite < 3L * payloadBytes + 20L * 4000 * 64,
-        s"shuffleWrite=$shuffleWrite payload=$payloadBytes")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    var n = 0L
+    val shuffleWrite = TestSpark.usage {
+      n = Sampling.pointSample(spark, pts, images, cellSize = 256.0).count()
+    }.shuffleBytesWritten
+    assert(n > 0)
+    // bytes cross the wire once for the image side plus small point rows:
+    // well under 3× the raw payload (the per-covering-cell form was ~10×+)
+    assert(shuffleWrite < 3L * payloadBytes + 20L * 4000 * 64,
+      s"shuffleWrite=$shuffleWrite payload=$payloadBytes")
   }
 
   test("points outside every image are dropped; NDV margins lower the count") {

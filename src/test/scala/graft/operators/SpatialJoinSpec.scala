@@ -121,33 +121,6 @@ class KnnSpec extends AnyFunSuite {
       .map(r => (r.get(0), r.get(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
       .sortBy(t => (t._1.toString, t._4)).toSeq
 
-  /** Jobs launched by `body` on this thread, after the listener bus settles. */
-  def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null && js.properties.getProperty("knn.spec") == tag) n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setLocalProperty("knn.spec", tag)
-    try {
-      body
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      var last = -1; var stable = 0
-      while (System.nanoTime() < deadline && stable < 5) {
-        val cur = n.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-        Thread.sleep(100)
-      }
-      n.get()
-    } finally {
-      spark.sparkContext.setLocalProperty("knn.spec", null)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
-
   test("k-ring kNN matches brute force exactly (k=5)") {
     val pts = PolygonTable.points(spark, 2000)
     val queries = pts.filter(col("pt_id") < "pt_0000100")
@@ -265,7 +238,7 @@ class KnnSpec extends AnyFunSuite {
       pts.count()
       val q = pts.filter(col("pt_id") < "pt_0000040")
       var got: DataFrame = null
-      val jobs = jobsOf { got = Knn.knn(spark, q, pts, k = 5) }
+      val jobs = TestSpark.usage { got = Knn.knn(spark, q, pts, k = 5) }.jobs.size
       assert(got.queryExecution.analyzed
         .find(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Window]).isEmpty,
         "the fixture must resolve every query in the block pass")

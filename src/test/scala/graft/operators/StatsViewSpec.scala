@@ -15,27 +15,6 @@ class StatsViewSpec extends AnyFunSuite {
     SnapshotTable.deleteRecursively(r); r
   }
 
-  private def recordsReadDuring(body: => Unit): Long = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    val acc = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        acc.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      var last = -1L; var stable = 0
-      while (System.nanoTime() < deadline && stable < 5) {
-        val cur = acc.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-        Thread.sleep(100)
-      }
-      acc.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("view after N incremental refreshes == batch stackStats over everything") {
     import spark.implicits._
     val tilesRoot = freshRoot("eq_t"); val mvRoot = freshRoot("eq_mv")
@@ -102,7 +81,7 @@ class StatsViewSpec extends AnyFunSuite {
     SnapshotTable.commit(spark, tilesRoot,
       Warp.warpToTiles(spark, images.filter(idx === 60), target, "near").toDF())
     val deltaTiles = SnapshotTable.read(spark, tilesRoot).count() - historyTiles
-    val rr = recordsReadDuring { StatsView.refresh(spark, tilesRoot, mvRoot) }
+    val rr = TestSpark.usage { StatsView.refresh(spark, tilesRoot, mvRoot) }.recordsRead
     // scans in refresh #2: CDC delta tiles (NOT the history), the affected
     // view rows (≤ whole view here — one file), the merge's delta read-back
     // + touched rewrite over view rows. Bound well under one history scan:
@@ -272,6 +251,14 @@ class StatsViewSpec extends AnyFunSuite {
     SnapshotTable.merge(spark, tilesRoot, tiles(idx < 3),
       Seq("image_id", "tile_id"), cdc = false)                         // v4
     assert(StatsView.refresh(spark, tilesRoot, mvRoot) == 4)
+    assertViewEqualsLive(tilesRoot, mvRoot)
+    // the source expires v4, the version the view covers, and keeps every
+    // commit after it: the first append cannot be diffed against v4, so
+    // the refresh must rebuild rather than fail
+    SnapshotTable.commit(spark, tilesRoot, tiles(idx >= 6 && idx < 9))  // v5
+    SnapshotTable.commit(spark, tilesRoot, tiles(idx >= 9))             // v6
+    SnapshotTable.expire(tilesRoot, keepLast = 2)
+    assert(StatsView.refresh(spark, tilesRoot, mvRoot) == 6)
     assertViewEqualsLive(tilesRoot, mvRoot)
   }
 }

@@ -5,15 +5,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.geo.{Extent, GridSpec}
 import graft.sources.{Codec, ImageRow, ImageTable}
 
-object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-}
-
 class CodecSpec extends AnyFunSuite {
   test("raw/png/bmp roundtrip restores pixels + NDV exactly (lossless, PSNR=inf)") {
     for (i <- Seq(0, 4, 8)) {  // one per fmt

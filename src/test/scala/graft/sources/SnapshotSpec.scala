@@ -2,6 +2,7 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TestSpark
+import graft.operators.TestSpark.usage
 
 class SnapshotSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -266,6 +267,20 @@ class SnapshotSpec extends AnyFunSuite {
         assert(got == history(v - 1), s"trial $trial v$v: $got != ${history(v - 1)}")
         assert(snapshot(root, v).rows == history(v - 1).size.toLong)
       }
+      // every change range agrees with changes() over it: the manifest row
+      // count is its row count, and the id envelope contains its ids
+      for (to <- 1 to history.length; from <- 0 until to) {
+        import org.apache.spark.sql.functions.{count, lit, max, min}
+        val got = changes(spark, root, from, to)
+          .agg(count(lit(1)), min("id"), max("id")).head()
+        val (rows, env) = new ChangeRange(root, from, to).envelope("id").get
+        assert(rows == got.getLong(0), s"trial $trial ($from, $to]: $rows rows")
+        if (rows > 0) {
+          val (lo, hi) = env.get
+          assert(lo <= got.getLong(1) && hi >= got.getLong(2),
+            s"trial $trial ($from, $to]: [$lo, $hi] misses [${got.get(1)}, ${got.get(2)}]")
+        }
+      }
     }
   }
 
@@ -471,30 +486,6 @@ class SnapshotSpec extends AnyFunSuite {
     }
   }
 
-  /** Sum of parquet input records across all jobs in `body` (listener
-    * drained by polling to a stable value — fixed sleeps undercount on a
-    * loaded host). */
-  private def recordsReadDuring(body: => Unit): Long = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    val acc = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        acc.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      var last = -1L; var stable = 0
-      while (System.nanoTime() < deadline && stable < 5) {
-        val cur = acc.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-        Thread.sleep(100)
-      }
-      acc.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("merge and delete scan the touched files ONCE per commit (single-pass split)") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -512,9 +503,9 @@ class SnapshotSpec extends AnyFunSuite {
     // = 2100. The previous anti+semi shape added a second 1000-row touched
     // scan plus a 100-row tombstone stats scan (~3200). Bound at 2600:
     // fails loudly if either the double scan or tombstone stats return.
-    val rr = recordsReadDuring {
+    val rr = usage {
       merge(spark, root, mk(0 until 100), Seq("id"))
-    }
+    }.recordsRead
     assert(rr <= 2600, s"merge read $rr records; touched set must be scanned once")
     assert(read(spark, root).count() == 3000)
     // delete in file 2 only: candidates via prune = file 2 (1000 rows).
@@ -523,10 +514,10 @@ class SnapshotSpec extends AnyFunSuite {
     //   survivor stats           900
     // = 2900; the old shape re-scanned touched for tombstones (+1000) and
     // ran tombstone stats (+100).
-    val rrDel = recordsReadDuring {
+    val rrDel = usage {
       delete(spark, root, col("id") % 10 === 3 && col("id") < 2000,
         prune = Seq(ColRange("id", 1000, 1999)))
-    }
+    }.recordsRead
     assert(rrDel <= 3400, s"delete read $rrDel records; touched set must be scanned once")
     assert(read(spark, root).count() == 2900)
   }
@@ -920,6 +911,38 @@ class SnapshotSpec extends AnyFunSuite {
     assert(names("meta") == Set("v1.json"), s"meta holds ${names("meta")}")
     assert(currentVersion(root) == 1)
     assert(read(spark, root).collect().toSet == rowsBefore)
+    deleteRecursively(root)
+  }
+
+  test("catalog reads plan from the manifest: no listing job over 40+ files") {
+    import org.apache.spark.sql.functions.col
+    val root = freshRoot("nolisting")
+    commit(spark, root, df(0 until 400).repartition(40))
+    commit(spark, root, df(400 until 800).repartition(40))
+    assert(snapshot(root, 2).files.size >= 80)
+    def listing(u: TestSpark.Usage) = u.jobs.filter(_.startsWith("Listing leaf files"))
+    // creating each DataFrame runs no job at all; the reads stay exact
+    var got: Seq[org.apache.spark.sql.DataFrame] = Nil
+    val planned = usage {
+      got = Seq(read(spark, root), changes(spark, root, 0, 2), changesCdc(spark, root, 0, 2))
+    }
+    assert(planned.jobs.isEmpty, s"planning the reads ran ${planned.jobs}")
+    assert(got.map(_.count()) == Seq(800L, 800L, 800L))
+    // merge's and delete's hit scans (and their splits) over every live file
+    val mergeUse = usage { merge(spark, root, df(0 until 800 by 100), Seq("id")) }
+    assert(listing(mergeUse).isEmpty, s"merge listed files: ${listing(mergeUse)}")
+    val deleteUse = usage { delete(spark, root, col("id") % 7 === 0) }
+    assert(listing(deleteUse).isEmpty, s"delete listed files: ${listing(deleteUse)}")
+    assert(read(spark, root).count() == 800L - (0 until 800 by 7).size)
+    // two threads scanning at once leave the session's own threshold
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val before = spark.conf.getOption(key)
+    val racers = usage {
+      val ts = (0 until 2).map(_ => new Thread(() => (0 until 20).foreach(_ => read(spark, root))))
+      ts.foreach(_.start()); ts.foreach(_.join())
+    }
+    assert(racers.jobs.isEmpty, s"concurrent reads ran ${racers.jobs}")
+    assert(spark.conf.getOption(key) == before)
     deleteRecursively(root)
   }
 }
