@@ -125,31 +125,18 @@ private[operators] object IncrementalView {
     val delta = range.adds(spark)
     // affected-tile envelope bounds BOTH the old-view read and the
     // merge's file rewrites; conservative (range, not id set). Derived
-    // from the SOURCE manifests' added-file stats when recorded — zero
-    // jobs, and the fold keys are exactly the delta's tile ids so the
-    // envelope is the same interval (manifest bounds are directed-rounded
-    // outward; pruning stays conservative). Falls back to one agg job
-    // over the raw delta for legacy manifests without stats.
-    val env: Option[(Double, Double)] =
-      range.envelope("tile_id") match {
-        case Some((0L, _)) => None                     // empty delta
-        case Some((_, Some(b))) => Some(b)
-        case _ => // legacy manifests without stats: one agg job
-          val r = delta.agg(min(col("tile_id")), max(col("tile_id"))).head()
-          if (r.isNullAt(0)) None
-          else {
-            val cr = SnapshotTable.colRangeLong("tile_id",
-              r.getLong(0), r.getLong(1))
-            Some((cr.lo, cr.hi))
-          }
-      }
-    if (env.isEmpty) {
+    // from the SOURCE manifests' added-file stats — zero jobs, and the
+    // fold keys are exactly the delta's tile ids so the envelope is the
+    // same interval (manifest bounds are directed-rounded outward; pruning
+    // stays conservative). A delta with rows but no tile_id bounds prunes
+    // nothing: every view file is replaced, which stays exact.
+    val (rows, env) = range.envelope("tile_id")
+    if (rows == 0L) {
       // empty delta (all-NDV commit): marker-only merge
       SnapshotTable.merge(spark, mvRoot, spark.emptyDataset[V](enc).toDF(),
         Seq("tile_id"), txn = Some(marker -> to), cdc = false)
     } else {
-      val (lo, hi) = env.get
-      val prune = Seq(SnapshotTable.ColRange("tile_id", lo, hi))
+      val prune = env.map { case (lo, hi) => SnapshotTable.ColRange("tile_id", lo, hi) }.toSeq
       val oldDf = SnapshotTable.read(spark, mvRoot, prune = prune)
       val tEnc = Encoders.product[TileRow]
       // tagged union rows (_1 = tile_id, _2 = delta TileRow | null,

@@ -42,18 +42,24 @@ object SnapshotTable {
     * rounding — lo toward −∞, hi toward +∞ — so the recorded interval
     * always CONTAINS the true one and pruning stays conservative (a
     * nearest-rounding cast can shrink the interval and silently drop a
-    * file holding matching rows; hash-like int64 ids are realistic). */
+    * file holding matching rows; hash-like int64 ids are realistic).
+    * Every live file has an entry; a column without bounds (strings, NaN
+    * bounds, all-null or zero-row files) is simply absent from `cols`. */
   final case class FileStats(rows: Long, cols: Map[String, (Double, Double)])
 
+  /** One parsed manifest. The format has no optional parts: every manifest
+    * records the commit `schema`, the merged stream markers `txns` and a
+    * [[FileStats]] entry for every live file, and [[snapshot]] fails on one
+    * that lacks any of them. */
   final case class Snapshot(version: Int, parent: Int, op: String,
                             rows: Long, files: Seq[String],
-                            stats: Map[String, FileStats] = Map.empty,
-                            schema: Option[StructType] = None,
+                            stats: Map[String, FileStats],
+                            schema: StructType,
                             delta: Seq[String] = Nil,
                             tsMs: Long = 0L,
                             removed: Seq[String] = Nil,
                             txn: Option[(String, Long)] = None,
-                            txns: Option[Map[String, Long]] = None,
+                            txns: Map[String, Long] = Map.empty,
                             cdcOff: Boolean = false)
 
   /** A conjunct for scan planning: keep files whose [min, max] for `colName`
@@ -64,9 +70,10 @@ object SnapshotTable {
   final case class ColRange(colName: String, lo: Double, hi: Double)
 
   /** [[ColRange]] from exact Long bounds with DIRECTED rounding (lo toward
-    * −∞, hi toward +∞) — a plain `.toDouble` nearest-rounds and can shrink
-    * the interval by ½ ulp above 2⁵³, silently pruning a matching file in
-    * any consumer that lacks planFiles' comparison-time widening. */
+    * −∞, hi toward +∞), the rounding the manifest bounds use. A plain
+    * `.toDouble` nearest-rounds, which is still safe against outward-rounded
+    * bounds (rounding is monotone); directed bounds are the tightest probe
+    * that contains every true value. */
   def colRangeLong(colName: String, lo: Long, hi: Long): ColRange =
     ColRange(colName, dirDouble(lo, up = false), dirDouble(hi, up = true))
 
@@ -92,6 +99,8 @@ object SnapshotTable {
   def hasSnapshot(root: String, version: Int): Boolean =
     Files.exists(metaDir(root).resolve(s"v$version.json"))
 
+  /** Manifest `version` of `root`; fails naming the version and the field
+    * when the manifest lacks a required part (see [[Snapshot]]). */
   def snapshot(root: String, version: Int): Snapshot = {
     import org.json4s._
     val txt = Files.readString(metaDir(root).resolve(s"v$version.json"))
@@ -99,15 +108,15 @@ object SnapshotTable {
     def lng(v: JValue): Option[Long] = v match {
       case JInt(n) => Some(n.toLong); case JLong(n) => Some(n); case _ => None
     }
-    def num(k: String): Long = lng(j \ k).getOrElse(
-      throw new IllegalStateException(s"manifest v$version lacks $k"))
+    def lacks(k: String) = new IllegalStateException(s"manifest v$version lacks $k")
+    def num(k: String): Long = lng(j \ k).getOrElse(throw lacks(k))
     def strs(k: String): List[String] = (j \ k) match {
       case JArray(fs) => fs.collect { case JString(f) => f }
-      case _ => Nil
+      case _ => throw lacks(k)
     }
     val op = (j \ "op") match {
       case JString(s) => s
-      case _ => throw new IllegalStateException(s"manifest v$version lacks op")
+      case _ => throw lacks("op")
     }
     def dbl(v: JValue): Double = v match {
       case JDouble(d) => d
@@ -119,14 +128,10 @@ object SnapshotTable {
     val stats = (j \ "stats") match {
       case JObject(fields) => fields.collect {
         case (file, fj) =>
-          val rows = lng(fj \ "rows").getOrElse(0L)
+          val rows = lng(fj \ "rows").getOrElse(throw lacks(s"rows for $file"))
           val cols = (fj \ "cols") match {
-            // bounds are loaded VERBATIM — the one-ulp outward widening for
-            // legacy (nearest-rounded) manifests is applied at COMPARISON
-            // time in planFiles, not here: widening on load would be
-            // re-serialized for carried-forward files by every
-            // commit/merge/delete and drift the persisted bounds one ulp
-            // outward per commit, blurring the directed-rounded invariant
+            // bounds are loaded VERBATIM: carried-forward files re-serialize
+            // them on every commit, so any adjustment here would drift
             case JObject(cf) => cf.collect {
               case (c, JArray(List(lo, hi))) => c -> (dbl(lo), dbl(hi))
             }.toMap.filter { case (_, (lo, hi)) => !lo.isNaN && !hi.isNaN }
@@ -136,30 +141,30 @@ object SnapshotTable {
       }.toMap
       case _ => Map.empty[String, FileStats]
     }
+    val files = strs("files")
+    files.find(f => !stats.contains(f)).foreach(f => throw lacks(s"stats for $f"))
     val schema = (j \ "schema") match {
-      case JNothing => None
+      case JNothing => throw lacks("schema")
       case sj =>
         val txt = org.json4s.jackson.JsonMethods.compact(
           org.json4s.jackson.JsonMethods.render(sj))
         org.apache.spark.sql.types.DataType.fromJson(txt) match {
-          case st: StructType => Some(st)
-          case _ => None
+          case st: StructType => st
+          case _ => throw lacks("a struct schema")
         }
     }
     val txn = (j \ "txn_id") match {
       case JString(id) => lng(j \ "txn_epoch").map(id -> _)
       case _ => None
     }
-    // merged idempotence markers (Delta's setTransactions): None = legacy
-    // manifest written before the carry-forward — readers fall back to the
-    // chain walk ONCE and the next commit upgrades the chain to O(1)
+    // merged idempotence markers (Delta's setTransactions)
     val txns = (j \ "txns") match {
-      case JObject(fs) => Some(fs.flatMap { case (id, e) => lng(e).map(id -> _) }.toMap)
-      case _ => None
+      case JObject(fs) => fs.flatMap { case (id, e) => lng(e).map(id -> _) }.toMap
+      case _ => throw lacks("txns")
     }
     val cdcOff = (j \ "cdc_off") match { case JBool(b) => b; case _ => false }
     Snapshot(num("version").toInt, num("parent").toInt, op, num("rows"),
-             strs("files"), stats, schema, strs("delta"), lng(j \ "ts_ms").getOrElse(0L),
+             files, stats, schema, strs("delta"), num("ts_ms"),
              strs("removed"), txn, txns, cdcOff)
   }
 
@@ -170,8 +175,7 @@ object SnapshotTable {
     * drift reads differently depending on which file plans first — silent).
     * Widening the table shape goes through `overwrite` (full rewrite, new
     * schema) by design. */
-  private def requireCompatible(parent: Option[StructType], next: StructType,
-                                v: Int): Unit = parent.foreach { p =>
+  private def requireCompatible(p: StructType, next: StructType, v: Int): Unit = {
     // nullability is normalized away before comparing: parquet writes every
     // Spark field as optional regardless of the logical flag, so a
     // containsNull/nullable drift can never make footers disagree — while
@@ -235,7 +239,7 @@ object SnapshotTable {
         prev.fold(0L)(_.rows) + newStats.valuesIterator.map(_.rows).sum,
         prev.fold(Seq.empty[String])(_.files) ++ newFiles,
         prev.fold(Map.empty[String, FileStats])(_.stats) ++ newStats,
-        Some(df.schema), txn = txn)
+        df.schema, txn = txn)
     }
   }
 
@@ -253,7 +257,7 @@ object SnapshotTable {
     /** The base snapshot, read once; None on an empty table. */
     lazy val prev: Option[Snapshot] = if (base >= 1) Some(snapshot(root, base)) else None
     /** The base schema, which reads of base files are pinned to. */
-    def schema: Option[StructType] = prev.flatMap(_.schema)
+    def schema: StructType = prev.get.schema
     /** Root-relative attempt dirs made so far. */
     val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
 
@@ -294,7 +298,7 @@ object SnapshotTable {
     def split(files: Seq[String], cdc: Boolean)(route: DataFrame => DataFrame)
         : (Seq[String], Map[String, FileStats], Seq[String]) = {
       if (files.isEmpty) return (Nil, Map.empty, Nil)
-      val df = route(scan(spark, root, schema, files))
+      val df = route(scan(spark, root, Some(schema), files))
       if (!cdc) {
         val (survivors, stats) =
           write(df.filter(org.apache.spark.sql.functions.col("__kept")).drop("__kept"))
@@ -309,12 +313,10 @@ object SnapshotTable {
     }
 
     /** Byte-identical copies of base `files` in one fresh attempt dir,
-      * hardlinked when the filesystem allows it, and their stats: the
-      * original's, or for an original without recorded stats (a legacy
-      * manifest) the copy's footer — left stats-less, it would stay a merge
-      * candidate forever. A copy never replaces an existing file: live
-      * basenames are unique per Spark write job, so a collision is a broken
-      * invariant, not a retry. */
+      * hardlinked when the filesystem allows it, each with its original's
+      * stats. A copy never replaces an existing file: live basenames are
+      * unique per Spark write job, so a collision is a broken invariant,
+      * not a retry. */
     def copy(files: Seq[String]): (Seq[String], Map[String, FileStats]) = {
       if (files.isEmpty) return (Nil, Map.empty)
       val dir = attempt()
@@ -322,11 +324,9 @@ object SnapshotTable {
       val moved = files.map { f =>
         val n = s"$dir/${Paths.get(f).getFileName}"
         ParquetFiles.linkOrCopy(Paths.get(root, f), Paths.get(root, n))
-        f -> n
+        n -> prev.get.stats(f)
       }
-      val (known, unknown) = moved.partition { case (o, _) => prev.get.stats.contains(o) }
-      (moved.map(_._2), known.map { case (o, n) => n -> prev.get.stats(o) }.toMap ++
-        computeStats(spark, root, unknown.map(_._2)))
+      (moved.map(_._1), moved.toMap)
     }
   }
 
@@ -343,7 +343,7 @@ object SnapshotTable {
     val json = try {
       val sn = body(t)
       manifestJson(sn.copy(tsMs = System.currentTimeMillis(),
-        txns = Some(t.prev.fold(Map.empty[String, Long])(mergedTxns(root, _)) ++ sn.txn)))
+        txns = t.prev.fold(Map.empty[String, Long])(_.txns) ++ sn.txn))
     } catch { case e: Throwable =>
       try t.dirs.foreach(d => deleteRecursively(s"$root/$d"))
       catch { case c: java.io.IOException => e.addSuppressed(c) }
@@ -353,29 +353,6 @@ object SnapshotTable {
     t.v
   }
 
-  /** The full (streamId → latest epoch) marker map as of snapshot `sn` —
-    * the carried-forward `txns` field when present; for a legacy chain
-    * (pre-carry-forward manifests) reconstructed by walking the retained
-    * manifests oldest→newest (later epochs win). The walk result is
-    * MEMOIZED per (root, version): a published manifest is immutable, so
-    * the reconstruction can never go stale — without the cache a read-only
-    * check loop against a legacy table (no commit ever follows to persist
-    * the map) pays O(versions) manifest parses per lastCommittedEpoch call.
-    * The cache holds entries only for pre-upgrade manifests and is
-    * size-capped as a leak guard (JVM-lifetime process, many temp tables). */
-  private val legacyTxnsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Map[String, Long]]()
-
-  private def mergedTxns(root: String, sn: Snapshot): Map[String, Long] =
-    sn.txns.getOrElse {
-      if (legacyTxnsCache.size > 4096) legacyTxnsCache.clear()
-      legacyTxnsCache.computeIfAbsent((root, sn.version), _ =>
-        (1 to sn.version).foldLeft(Map.empty[String, Long]) { (m, v) =>
-          if (!hasSnapshot(root, v)) m
-          else m ++ snapshot(root, v).txn
-        })
-    }
-
   /** Latest committed epoch for an idempotent-writer id (Delta's
     * txnAppId/txnVersion pattern), or -1 if none. O(1): every commit
     * carries the MERGED (streamId → epoch) map forward in its manifest
@@ -384,12 +361,11 @@ object SnapshotTable {
     * each of which hauls the full per-file stats block, i.e. O(V²) metadata
     * I/O over a stream's life at one-commit-per-epoch rates. Markers
     * survive `compact`/`rollback`/`expire` with the carry (an expired
-    * history no longer forces a re-ingest). Legacy chains (manifests
-    * without the map) fall back to the one-time reconstruction walk. */
+    * history no longer forces a re-ingest). */
   def lastCommittedEpoch(root: String, streamId: String): Long = {
     val cur = currentVersion(root)
     if (cur < 1) return -1L
-    mergedTxns(root, snapshot(root, cur)).getOrElse(streamId, -1L)
+    snapshot(root, cur).txns.getOrElse(streamId, -1L)
   }
 
   /** Exactly-once streaming sink commit (`foreachBatch` body): append
@@ -578,7 +554,8 @@ object SnapshotTable {
     * timestamp column (timestamps as epoch MICROS). min/max run in the
     * column's NATIVE type (long for BIGINT/timestamps, decimal for
     * DECIMAL); the lossy narrowing to the manifest's double bounds happens
-    * once on the driver via [[dirDouble]], outward. */
+    * once on the driver via [[dirDouble]], outward. A file with no rows
+    * forms no group, so it gets zero rows and no bounds. */
   private def scanStats(spark: SparkSession, root: String,
                         files: Seq[String]): Map[String, FileStats] = {
     import org.apache.spark.sql.functions._
@@ -601,7 +578,7 @@ object SnapshotTable {
     val byFile = df.groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*).collect()
     val resolve = fileResolver(root, files)
-    byFile.map { r =>
+    val found = byFile.map { r =>
       val rel = resolve(r.getString(0))
       val cols = statCols.zipWithIndex.flatMap { case (c, i) =>
         val lo = r.get(2 * i + 2); val hi = r.get(2 * i + 3)
@@ -610,6 +587,7 @@ object SnapshotTable {
       }.toMap
       rel -> FileStats(r.getLong(1), cols)
     }.toMap
+    files.map(f => f -> found.getOrElse(f, FileStats(0L, Map.empty))).toMap
   }
 
   /** Maps the file names a scan reports (`input_file_name()`, a
@@ -634,13 +612,13 @@ object SnapshotTable {
     * `hits` receives the scan with the file name captured in `__f` (before
     * any join — input_file_name is single-source) and returns the frame to
     * count and its hit column. */
-  private def hitScan(spark: SparkSession, root: String, schema: Option[StructType],
+  private def hitScan(spark: SparkSession, root: String, schema: StructType,
                       files: Seq[String])(
       hits: DataFrame => (DataFrame, org.apache.spark.sql.Column))
       : (Seq[String], Seq[String], Seq[String]) = {
     import org.apache.spark.sql.functions._
     if (files.isEmpty) return (Nil, Nil, Nil)
-    val (scanned, hit) = hits(scan(spark, root, schema, files)
+    val (scanned, hit) = hits(scan(spark, root, Some(schema), files)
       .withColumn("__f", input_file_name()))
     val resolve = fileResolver(root, files)
     val counts = scanned.groupBy(col("__f"))
@@ -655,7 +633,8 @@ object SnapshotTable {
 
   /** The manifest text of `sn`, the shape [[snapshot]] parses back. Field
     * order and number formatting must not change: carried-forward stats
-    * are re-serialized by every commit and stay byte-stable. */
+    * are re-serialized by every commit and stay byte-stable. Every live
+    * file must have stats: the reader requires them. */
   private def manifestJson(sn: Snapshot): String = {
     import sn.{version => v, _}
     // every string is escaped: stream ids embed caller paths (e.g.
@@ -664,10 +643,9 @@ object SnapshotTable {
     import graft.Json.{str => js}
     def jd(d: Double): String =
       if (d.isNaN || d.isInfinite) "null" else d.toString
-    val schemaJson = schema.getOrElse(
-      throw new IllegalArgumentException(s"manifest v$v needs a schema")).json
-    val statsJson = files.filter(stats.contains).map { f =>
-      val fs = stats(f)
+    val statsJson = files.map { f =>
+      val fs = stats.getOrElse(f,
+        throw new IllegalArgumentException(s"manifest v$v has no stats for $f"))
       val cols = fs.cols.toSeq.sortBy(_._1)
         .map { case (c, (lo, hi)) => s"${js(c)}: [${jd(lo)}, ${jd(hi)}]" }
         .mkString(", ")
@@ -676,10 +654,10 @@ object SnapshotTable {
     val txnJson = txn.fold("") { case (id, e) =>
       s"""\n       | "txn_id": ${js(id)}, "txn_epoch": $e,""".stripMargin
     }
-    // the MERGED marker map is always emitted (even empty): its presence is
-    // what tells lastCommittedEpoch this manifest supports the O(1) lookup
+    // the MERGED marker map is always emitted (even empty): the reader
+    // requires it
     val txnsJson = "\n \"txns\": {" +
-      txns.getOrElse(Map.empty).toSeq.sortBy(_._1).map { case (id, e) => s"${js(id)}: $e" }
+      txns.toSeq.sortBy(_._1).map { case (id, e) => s"${js(id)}: $e" }
         .mkString(", ") + "}," +
       (if (cdcOff) "\n \"cdc_off\": true," else "")
     s"""{"version": $v, "parent": $parent, "op": "$op", "rows": $rows,$txnJson$txnsJson
@@ -688,7 +666,7 @@ object SnapshotTable {
        | "delta": [${delta.map(js).mkString(", ")}],
        | "removed": [${removed.map(js).mkString(", ")}],
        | "ts_ms": $tsMs,
-       | "schema": $schemaJson}""".stripMargin
+       | "schema": ${schema.json}}""".stripMargin
   }
 
   /** Lease window for abandoned publish claims: a claim older than this
@@ -826,23 +804,14 @@ object SnapshotTable {
   def planFiles(root: String, version: Int, prune: Seq[ColRange]): Seq[String] =
     prunedFiles(snapshot(root, version), prune)
 
-  /** [[planFiles]] over an already-parsed snapshot. */
+  /** [[planFiles]] over an already-parsed snapshot. Recorded bounds are
+    * compared exactly: they are rounded outward and rounding is monotone,
+    * so a probe rounded either way still plans every file holding a
+    * matching value. */
   private def prunedFiles(snap: Snapshot, prune: Seq[ColRange]): Seq[String] =
     snap.files.filter { f =>
-      val st = snap.stats.get(f)
-      prune.forall { p =>
-        st.flatMap(_.cols.get(p.colName)) match {
-          // recorded bounds widen one ulp outward AT COMPARISON TIME:
-          // manifests written before directed-rounding stats may carry
-          // nearest-rounded bounds one ulp too tight (silent pruning of a
-          // matching file). Widening here instead of on load keeps the
-          // PERSISTED bounds byte-stable across carried-forward
-          // re-serialization (no per-commit ulp drift); one ulp of extra
-          // keep-probability per read is free.
-          case Some((lo, hi)) => Math.nextUp(hi) >= p.lo && Math.nextDown(lo) <= p.hi
-          case None => true
-        }
-      }
+      val cols = snap.stats(f).cols
+      prune.forall(p => cols.get(p.colName).forall { case (lo, hi) => hi >= p.lo && lo <= p.hi })
     }
 
   /** Version visible at wall-clock `tsMs` — the newest snapshot whose
@@ -883,22 +852,12 @@ object SnapshotTable {
     require(v >= 1, s"no snapshot $v at $root")
     val snap = snapshot(root, v)
     val files = prunedFiles(snap, prune)
-    if (files.nonEmpty) scan(spark, root, snap.schema, files)
+    if (files.nonEmpty) scan(spark, root, Some(snap.schema), files)
     // pruning legitimately eliminated every file: an EMPTY result with the
     // table schema, not an error (a range query before the data's time
     // window is a normal empty read, not a bug)
-    else emptyFrame(spark, schemaOf(spark, root, snap.schema, snap.files, v))
+    else emptyFrame(spark, snap.schema)
   }
-
-  /** The schema a read plans with: the manifest-`recorded` one, else (a
-    * pre-schema manifest) the footer of the first of `files`, which belong
-    * to snapshot `v`. */
-  private def schemaOf(spark: SparkSession, root: String, recorded: Option[StructType],
-                       files: Seq[String], v: Int): StructType =
-    recorded.getOrElse {
-      require(files.nonEmpty, s"snapshot v$v has no files at $root")
-      scan(spark, root, None, files.take(1)).schema
-    }
 
   private val scanLock = new Object
   /** The catalog's one parquet read: root-relative `files` from a manifest,
@@ -967,7 +926,7 @@ object SnapshotTable {
       * stats: an append or overwrite adds what it introduced over its
       * parent; a merge ONLY its delta (its survivor rewrites are not data
       * changes: they would replay untouched rows to CDC consumers). */
-    private lazy val added: Seq[(String, Option[FileStats])] = {
+    private lazy val added: Seq[(String, FileStats)] = {
       val what = s"changes(v$fromV, v$toV)"
       (first to toV).flatMap { v =>
         val sn = need(v, s"$what needs manifest")
@@ -975,7 +934,7 @@ object SnapshotTable {
           case "append" | "overwrite" => introduced(sn, what)
           case "merge" => sn.delta
           case _ => Nil
-        }).map(f => f -> sn.stats.get(f))
+        }).map(f => f -> sn.stats(f))
       }.distinctBy(_._1)
     }
 
@@ -993,26 +952,24 @@ object SnapshotTable {
       // is a LOUD error directing the caller to read per-version instead
       val schemas = all(what)
         .filter(s => s.op == "append" || s.op == "overwrite" || s.op == "merge")
-        .flatMap(_.schema)
+        .map(_.schema)
       requireOneSchema(schemas, s"$what spans a schema change; read per-version")
-      if (files.nonEmpty) scan(spark, root, schemas.headOption, files)
-      else emptyFrame(spark, schemaOf(spark, root, schemas.headOption, allAdded ++ last.files, toV))
+      val schema = schemas.headOption.getOrElse(last.schema)
+      if (files.nonEmpty) scan(spark, root, Some(schema), files)
+      else emptyFrame(spark, schema)
     }
 
     /** Row count + directed-rounded bounds of `colName` over the unpruned
-      * [[adds]], from the manifests' stats: zero Spark jobs. None when an
-      * added file lacks stats, no bounds when a file with rows lacks them
-      * for the column: callers then aggregate. */
-    def envelope(colName: String): Option[(Long, Option[(Double, Double)])] =
-      if (added.exists(_._2.isEmpty)) None // legacy file without stats
-      else {
-        val stats = added.flatMap(_._2)
-        val rows = stats.map(_.rows).sum
-        val bounds = stats.flatMap(_.cols.get(colName))
-        val covered = stats.forall(fs => fs.rows == 0 || fs.cols.contains(colName))
-        Some((rows, if (covered && rows > 0) Some((bounds.map(_._1).min, bounds.map(_._2).max))
-                    else None))
-      }
+      * [[adds]], from the manifests' stats: zero Spark jobs. No bounds when
+      * the adds have no rows or a file with rows has none for the column. */
+    def envelope(colName: String): (Long, Option[(Double, Double)]) = {
+      val stats = added.map(_._2)
+      val rows = stats.map(_.rows).sum
+      val bounds = stats.flatMap(_.cols.get(colName))
+      val covered = stats.forall(fs => fs.rows == 0 || fs.cols.contains(colName))
+      (rows, if (covered && rows > 0) Some((bounds.map(_._1).min, bounds.map(_._2).max))
+             else None)
+    }
 
     /** The rows of [[changesCdc]]. */
     def cdc(spark: SparkSession): DataFrame = {
@@ -1028,13 +985,14 @@ object SnapshotTable {
       // overwrite would silently null-pad / drop pre-image columns
       def parentOf(sn: Snapshot) = need(sn.parent, s"$what needs parent manifest")
       val preImageSchemas = in.filter(sn => sn.op == "overwrite" && sn.parent >= 1)
-        .flatMap(parentOf(_).schema)
+        .map(parentOf(_).schema)
       val schemas = in.filter(sn => sn.op != "compact" && sn.op != "rollback")
-        .flatMap(_.schema)
+        .map(_.schema)
       requireOneSchema(schemas ++ preImageSchemas, s"$what spans a schema change; read per-version")
+      val schema = schemas.headOption.getOrElse(in.last.schema)
       def part(files: Seq[String], kind: String): Seq[DataFrame] =
         if (files.isEmpty) Nil
-        else Seq(scan(spark, root, schemas.headOption, files).withColumn("_change_type", lit(kind)))
+        else Seq(scan(spark, root, Some(schema), files).withColumn("_change_type", lit(kind)))
       val parts = in.flatMap { sn =>
         sn.op match {
           case "append" => part(introduced(sn, what), "insert")
@@ -1047,8 +1005,7 @@ object SnapshotTable {
         }
       }
       parts.reduceOption(_ unionByName _).getOrElse(
-        emptyFrame(spark, schemaOf(spark, root, schemas.headOption, in.last.files, toV))
-          .withColumn("_change_type", lit("insert")))
+        emptyFrame(spark, schema).withColumn("_change_type", lit("insert")))
     }
   }
 
@@ -1063,16 +1020,6 @@ object SnapshotTable {
   def changes(spark: SparkSession, root: String, fromV: Int, toV: Int,
               prune: Seq[ColRange] = Nil): DataFrame =
     new ChangeRange(root, fromV, toV).adds(spark, prune)
-
-  /** Row totals for a live file list: manifest stats where recorded, one
-    * counting scan for legacy files without stats. */
-  private def liveRows(spark: SparkSession, root: String, live: Seq[String],
-                       stats: Map[String, FileStats]): Long = {
-    val missing = live.filterNot(stats.contains)
-    val counted = if (missing.isEmpty) 0L
-      else scan(spark, root, None, missing).count()
-    live.flatMap(stats.get).map(_.rows).sum + counted
-  }
 
   /** MERGE / upsert (Iceberg's copy-on-write MERGE): rows of `df` REPLACE
     * existing rows with equal `keyCols`, the rest append. Write
@@ -1191,8 +1138,8 @@ object SnapshotTable {
       // records CDC; with cdc = false they simply leave the live list (the
       // manifest's cdcOff flag already declares the history absent)
       val zeroCopyTombs = if (cdc) fullHit else Seq.empty[String]
-      Snapshot(t.v, base, "merge", liveRows(spark, root, live, stats), live, stats,
-        Some(df.schema), delta = deltaFiles, removed = zeroCopyTombs ++ tombFiles,
+      Snapshot(t.v, base, "merge", live.map(stats(_).rows).sum, live, stats,
+        df.schema, delta = deltaFiles, removed = zeroCopyTombs ++ tombFiles,
         txn = txn, cdcOff = !cdc && candidates.nonEmpty)
     }
   }
@@ -1236,9 +1183,8 @@ object SnapshotTable {
       // fully-matched originals become tombstones only when this commit
       // records CDC; with cdc = false they simply leave the live list
       val zeroCopyTombs = if (cdc) fullyDeleted else Seq.empty[String]
-      Snapshot(t.v, base, "delete", liveRows(spark, root, live, stats), live, stats,
-        Some(schemaOf(spark, root, prev.schema, prev.files, base)),
-        removed = zeroCopyTombs ++ tombFiles, cdcOff = !cdc && replaced.nonEmpty)
+      Snapshot(t.v, base, "delete", live.map(stats(_).rows).sum, live, stats,
+        prev.schema, removed = zeroCopyTombs ++ tombFiles, cdcOff = !cdc && replaced.nonEmpty)
     }
   }
 
@@ -1266,7 +1212,7 @@ object SnapshotTable {
     // an explicit re-run with a fresh checkpoint, never an accidental replay
     transact(spark, root, currentVersion(root)) { t =>
       Snapshot(t.v, t.base, "rollback", target.rows, target.files, target.stats,
-        Some(schemaOf(spark, root, target.schema, target.files, toV)))
+        target.schema)
     }
   }
 
@@ -1303,7 +1249,7 @@ object SnapshotTable {
       val cur = read(spark, root, asOf = base)
       val (files, stats) = t.write(arrange(cur))
       Snapshot(t.v, base, "compact", stats.valuesIterator.map(_.rows).sum, files, stats,
-        Some(cur.schema))
+        cur.schema)
     }
   }
 
