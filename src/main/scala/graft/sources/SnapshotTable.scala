@@ -36,7 +36,8 @@ object SnapshotTable {
   /** Per-file pruning stats recorded at commit: row count + [min, max] per
     * numeric/timestamp column (Iceberg's manifest column stats — the
     * split-planning half of the spec; the reference analog is the OGR
-    * `SetSpatialFilter` scan pushdown, geolib.py:663). Bounds are doubles;
+    * `SetSpatialFilter` scan pushdown, geolib.py:663), read from the
+    * footer of the file the commit just wrote. Bounds are doubles;
     * values whose source type can exceed double precision (BIGINT,
     * DECIMAL, epoch-micro timestamps ≥ 2^53) are converted with DIRECTED
     * rounding — lo toward −∞, hi toward +∞ — so the recorded interval
@@ -44,7 +45,8 @@ object SnapshotTable {
     * nearest-rounding cast can shrink the interval and silently drop a
     * file holding matching rows; hash-like int64 ids are realistic).
     * Every live file has an entry; a column without bounds (strings, NaN
-    * bounds, all-null or zero-row files) is simply absent from `cols`. */
+    * bounds, all-null or zero-row files, and the types the footer cannot
+    * bound, such as TIME or unsigned ints) is simply absent from `cols`. */
   final case class FileStats(rows: Long, cols: Map[String, (Double, Double)])
 
   /** One parsed manifest. The format has no optional parts: every manifest
@@ -272,9 +274,9 @@ object SnapshotTable {
       * stats stay manifest text. */
     def write(df: DataFrame): (Seq[String], Map[String, FileStats]) = {
       val dir = attempt()
-      df.write.mode(SaveMode.Overwrite).parquet(s"$root/$dir")
+      microsTimestamps(spark, df.schema)(df.write.mode(SaveMode.Overwrite).parquet(s"$root/$dir"))
       val files = attemptFiles(root, dir)
-      (files, computeStats(spark, root, files))
+      (files, footerStats(spark, root, files))
     }
 
     /** Single-pass copy-on-write split for merge/delete: one scan of the
@@ -284,10 +286,9 @@ object SnapshotTable {
       * (kept=true → survivors, kept=false → tombstones) — the touched data
       * is read ONCE per commit, where an anti-join + semi-join pair read it
       * twice. `partitionBy` drops the routing column from the data files,
-      * so both halves keep the exact table schema. Stats run over the
+      * so both halves keep the exact table schema. Stats are read for the
       * SURVIVOR files only: tombstones live under `removed`, never in the
-      * live list, so their stats would be computed and thrown away (one
-      * wasted scan per merge/delete).
+      * live list, so their stats would be read and thrown away.
       * With `cdc` off (Delta's change-data-feed-off default analog) the
       * tombstone pre-images are not written at all — a high-churn derived
       * table (e.g. the incremental views) would otherwise persist a full
@@ -298,16 +299,17 @@ object SnapshotTable {
     def split(files: Seq[String], cdc: Boolean)(route: DataFrame => DataFrame)
         : (Seq[String], Map[String, FileStats], Seq[String]) = {
       if (files.isEmpty) return (Nil, Map.empty, Nil)
-      val df = route(scan(spark, root, Some(schema), files))
+      val df = route(scan(spark, root, schema, files))
       if (!cdc) {
         val (survivors, stats) =
           write(df.filter(org.apache.spark.sql.functions.col("__kept")).drop("__kept"))
         (survivors, stats, Nil)
       } else {
         val dir = attempt()
-        df.write.mode(SaveMode.Overwrite).partitionBy("__kept").parquet(s"$root/$dir")
+        microsTimestamps(spark, df.schema)(
+          df.write.mode(SaveMode.Overwrite).partitionBy("__kept").parquet(s"$root/$dir"))
         val survivors = attemptFiles(root, s"$dir/__kept=true")
-        (survivors, computeStats(spark, root, survivors),
+        (survivors, footerStats(spark, root, survivors),
          attemptFiles(root, s"$dir/__kept=false"))
       }
     }
@@ -391,6 +393,19 @@ object SnapshotTable {
     None // unreachable
   }
 
+  private val timestampWriteLock = new Object
+  /** Runs `write`, a parquet write of rows with `schema`, so that its
+    * TIMESTAMP columns land as INT64 micros (Iceberg's timestamp encoding)
+    * instead of Spark's default INT96, whose footers carry no min/max for
+    * [[footerStats]]. The output type is a session conf, so it is set for
+    * this write only, under a lock so that concurrent writes restore the
+    * session's own value; a write without a timestamp column takes no lock. */
+  private def microsTimestamps[T](spark: SparkSession, schema: StructType)(write: => T): T =
+    if (!schema.exists(_.dataType == org.apache.spark.sql.types.TimestampType)) write
+    else timestampWriteLock.synchronized {
+      ParquetFiles.withConf(spark, "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")(write)
+    }
+
   /** Fresh attempt-dir name for version `v` (see [[Txn]]). */
   private def newAttempt(v: Int): String =
     s"s$v-${java.util.UUID.randomUUID().toString.take(8)}"
@@ -398,24 +413,6 @@ object SnapshotTable {
   /** Root-relative paths of the part files under root-relative `dir`. */
   private def attemptFiles(root: String, dir: String): Seq[String] =
     ParquetFiles.partFiles(s"$root/$dir").map(f => s"$dir/${f.getName}")
-
-  /** Column expression whose min/max are the manifest-stat bounds for a
-    * field: epoch MICROS for timestamps (NTZ pinned as-if-UTC), the NATIVE
-    * value for long/decimal (directed-rounded on the driver), a double cast
-    * otherwise. Shared by commit-time stats and merge's key-envelope agg so
-    * the two sides of the pruning comparison can never diverge in units. */
-  private def statExpr(f: org.apache.spark.sql.types.StructField,
-                       sessionTz: String): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    f.dataType match {
-      case TimestampType => unix_micros(col(f.name))
-      case TimestampNTZType =>
-        unix_micros(to_utc_timestamp(col(f.name).cast("timestamp"), sessionTz))
-      case LongType | _: DecimalType => col(f.name) // native: see dirDouble
-      case _ => col(f.name).cast("double")
-    }
-  }
 
   /** Exact-value → double with DIRECTED rounding: the nearest-rounded
     * double, nudged one ulp outward when the conversion moved the value
@@ -440,154 +437,76 @@ object SnapshotTable {
     case n: java.lang.Number => n.doubleValue() // int/short/byte: exact
   }
 
-  /** Manifest stats for freshly-written files: per-file row count + min/max
-    * of every numeric / timestamp column (timestamps as epoch MICROS).
-    * Fast path ([[footerStats]], guide §6 — stats from metadata, not data):
-    * the parquet FOOTERS the write just produced already carry exact
-    * per-column min/max and row counts, readable on the driver with zero
-    * Spark jobs; used whenever every tracked column's footer statistics are
-    * provably bit-identical to the scan aggregation's (plain signed
-    * int32/int64, float/double, int64 micro timestamps). Anything else
-    * (INT96 timestamps, decimals, unsigned ints) falls back to the one-pass
-    * [[scanStats]] so recorded bounds never change meaning. */
-  private def computeStats(spark: SparkSession, root: String,
-                           files: Seq[String]): Map[String, FileStats] = {
-    if (files.isEmpty) return Map.empty
-    footerStats(spark, root, files).getOrElse(scanStats(spark, root, files))
-  }
-
-  /** Driver-side footer read for [[computeStats]]. Returns None when any
-    * column the scan path would track cannot be replicated exactly from
-    * footer statistics — the caller then runs the scan; bounds in the two
-    * paths are otherwise identical (per-file directed rounding is monotone,
-    * so per-file mins/maxes compose to the same global envelope the agg
-    * computed; parquet's ±0.0 widening compares identically in planFiles).
-    * Float/double stats carrying NaN drop that column for the file — the
-    * same "no usable bound, keep the file" outcome the scan's NaN bounds
-    * produce through the manifest's NaN filter. */
+  /** Manifest stats for freshly-written files, read from the parquet
+    * FOOTERS the write just produced (guide §6 — stats from metadata, not
+    * data): zero Spark jobs for any column type. Per file: its row count
+    * and, per top-level column [[footerValue]] can bound, the [min, max]
+    * over its row groups, directed-rounded by [[dirDouble]] (per-group
+    * directed rounding is monotone, so the min/max over groups is the
+    * directed-rounded file envelope). A column with a row group the footer
+    * cannot bound — NaN bounds, no statistics, or no min/max while holding
+    * values (an all-null group contributes nothing, but only a recorded
+    * null count proves it all-null) — records no bounds for that file and
+    * never prunes it. A zero-row file gets `FileStats(0, Map.empty)`. */
   private def footerStats(spark: SparkSession, root: String,
-                          files: Seq[String]): Option[Map[String, FileStats]] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.parquet.schema.LogicalTypeAnnotation
+                          files: Seq[String]): Map[String, FileStats] = {
     val conf = spark.sessionState.newHadoopConf()
-    val out = Map.newBuilder[String, FileStats]
-    for (f <- files) {
+    files.map { f =>
       val md = ParquetFiles.footer(s"$root/$f", conf)
-      val msg = md.getFileMetaData.getSchema
-      // classify top-level fields: Some(name) = track, None = skip; a
-      // tracked-but-unreplicable type aborts the whole fast path
-      val tracked: Seq[String] = msg.getFields.asScala.toSeq.flatMap { t =>
-        if (!t.isPrimitive) None // arrays/structs: scan skips them too
-        else {
-          val pt = t.asPrimitiveType().getPrimitiveTypeName
-          val ann = t.getLogicalTypeAnnotation
-          pt match {
-            case PrimitiveTypeName.BOOLEAN => None
-            case PrimitiveTypeName.BINARY |
-                 PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY => ann match {
-              case _: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-                return None // decimal: scan tracks natively — fall back
-              case _ => None // strings/uuids: scan skips
-            }
-            case PrimitiveTypeName.INT96 => return None // legacy ts: fall back
-            case PrimitiveTypeName.INT32 => ann match {
-              case null => Some(t.getName)
-              case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
-                if i.isSigned => Some(t.getName)
-              case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation =>
-                None // DateType: scan skips it
-              case _ => return None
-            }
-            case PrimitiveTypeName.INT64 => ann match {
-              case null => Some(t.getName)
-              case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
-                if i.isSigned => Some(t.getName)
-              case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-                if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS =>
-                // LTZ: instant micros == unix_micros; NTZ: wall micros ==
-                // the as-if-UTC pin — both equal the scan's statExpr
-                Some(t.getName)
-              case _ => return None
-            }
-            case PrimitiveTypeName.FLOAT | PrimitiveTypeName.DOUBLE =>
-              Some(t.getName)
-          }
-        }
-      }
-      var rows = 0L
+      val value = md.getFileMetaData.getSchema.getFields.asScala
+        .flatMap(t => footerValue(t).map(t.getName -> _)).toMap
       val lo = scala.collection.mutable.Map.empty[String, Double]
       val hi = scala.collection.mutable.Map.empty[String, Double]
-      val dropped = scala.collection.mutable.Set.empty[String] // NaN bounds
-      for (b <- md.getBlocks.asScala) {
-        rows += b.getRowCount
-        for (cc <- b.getColumns.asScala if cc.getPath.size == 1) {
-          val name = cc.getPath.toDotString
-          if (tracked.contains(name)) {
-            val st = cc.getStatistics
-            if (st == null) return None // stats absent: fall back
-            if (!st.hasNonNullValue) {
-              // all-null chunk contributes nothing; an unset-stats chunk
-              // with values present cannot be distinguished from it safely
-              // unless null counts are recorded — fall back in that case
-              if (!st.isNumNullsSet || st.getNumNulls != cc.getValueCount)
-                return None
-            } else {
-              val bLo = dirDouble(st.genericGetMin, up = false)
-              val bHi = dirDouble(st.genericGetMax, up = true)
-              if (bLo.isNaN || bHi.isNaN) dropped += name
-              else {
-                lo.updateWith(name)(o => Some(o.fold(bLo)(math.min(_, bLo))))
-                hi.updateWith(name)(o => Some(o.fold(bHi)(math.max(_, bHi))))
-              }
-            }
+      val unbounded = scala.collection.mutable.Set.empty[String]
+      for (b <- md.getBlocks.asScala; cc <- b.getColumns.asScala if cc.getPath.size == 1;
+           name = cc.getPath.toDotString; v <- value.get(name)) {
+        val st = cc.getStatistics
+        if (st != null && st.hasNonNullValue) {
+          val bLo = dirDouble(v(st.genericGetMin), up = false)
+          val bHi = dirDouble(v(st.genericGetMax), up = true)
+          if (bLo.isNaN || bHi.isNaN) unbounded += name
+          else {
+            lo.updateWith(name)(o => Some(o.fold(bLo)(math.min(_, bLo))))
+            hi.updateWith(name)(o => Some(o.fold(bHi)(math.max(_, bHi))))
           }
-        }
+        } else if (st == null || !st.isNumNullsSet || st.getNumNulls != cc.getValueCount)
+          unbounded += name
       }
-      dropped.foreach { n => lo.remove(n); hi.remove(n) }
-      out += f -> FileStats(rows,
+      unbounded.foreach { n => lo.remove(n); hi.remove(n) }
+      f -> FileStats(md.getBlocks.asScala.map(_.getRowCount).sum,
         lo.keys.map(n => n -> (lo(n), hi(n))).toMap)
-    }
-    Some(out.result())
+    }.toMap
   }
 
-  /** One scan over `files`: per-file row count + min/max of every numeric /
-    * timestamp column (timestamps as epoch MICROS). min/max run in the
-    * column's NATIVE type (long for BIGINT/timestamps, decimal for
-    * DECIMAL); the lossy narrowing to the manifest's double bounds happens
-    * once on the driver via [[dirDouble]], outward. A file with no rows
-    * forms no group, so it gets zero rows and no bounds. */
-  private def scanStats(spark: SparkSession, root: String,
-                        files: Seq[String]): Map[String, FileStats] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    val df = scan(spark, root, None, files)
-    // timestamps are recorded as epoch MICROS; NTZ wall-clocks are pinned
-    // AS-IF-UTC regardless of the committing session's timezone (cast to
-    // LTZ interprets the wall in the session tz, to_utc_timestamp undoes
-    // exactly that offset) — otherwise a non-UTC committer writes shifted
-    // bounds and a reader's pruning can silently drop matching files
-    val sessionTz = spark.conf.get("spark.sql.session.timeZone")
-    def statExpr(f: StructField) = SnapshotTable.statExpr(f, sessionTz)
-    val statFields = df.schema.fields.filter(f =>
-      f.dataType.isInstanceOf[NumericType] ||
-      f.dataType == TimestampType || f.dataType == TimestampNTZType).toSeq
-    val statCols = statFields.map(_.name)
-    val aggs = count(lit(1)).as("__n") +:
-      statFields.flatMap(f => Seq(min(statExpr(f)).as(s"__lo_${f.name}"),
-                                  max(statExpr(f)).as(s"__hi_${f.name}")))
-    val byFile = df.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    val resolve = fileResolver(root, files)
-    val found = byFile.map { r =>
-      val rel = resolve(r.getString(0))
-      val cols = statCols.zipWithIndex.flatMap { case (c, i) =>
-        val lo = r.get(2 * i + 2); val hi = r.get(2 * i + 3)
-        if (lo == null || hi == null) None
-        else Some(c -> (dirDouble(lo, up = false), dirDouble(hi, up = true)))
-      }.toMap
-      rel -> FileStats(r.getLong(1), cols)
-    }.toMap
-    files.map(f => f -> found.getOrElse(f, FileStats(0L, Map.empty))).toMap
+  /** How [[footerStats]] reads top-level column `t`'s footer min/max: a map
+    * to the exact value [[dirDouble]] rounds, in the manifest's units, or
+    * None for a column it does not bound. Signed ints, floats and doubles
+    * are taken as they are; timestamps as epoch MICROS (an LTZ column
+    * stores instant micros, an NTZ column wall micros, which is the
+    * as-if-UTC pin; the catalog writes both as INT64 micros, see
+    * [[microsTimestamps]]); decimals as the unscaled footer value (an
+    * `Integer`, `Long` or two's-complement `Binary`) scaled by the
+    * annotation's scale. Not bounded: booleans, strings, dates, nested
+    * columns, INT96 timestamps, TIME, unsigned ints and any other
+    * annotation. */
+  private def footerValue(t: org.apache.parquet.schema.Type): Option[Any => Any] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    def unscaled(v: Any): java.math.BigInteger = v match {
+      case i: java.lang.Integer => java.math.BigInteger.valueOf(i.longValue)
+      case l: java.lang.Long => java.math.BigInteger.valueOf(l)
+      case b: org.apache.parquet.io.api.Binary => new java.math.BigInteger(b.getBytes)
+    }
+    if (!t.isPrimitive) None
+    else (t.asPrimitiveType.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+      case (INT32 | INT64, null) | (FLOAT | DOUBLE, _) => Some(identity)
+      case (INT32 | INT64, i: IntLogicalTypeAnnotation) if i.isSigned => Some(identity)
+      case (INT64, ts: TimestampLogicalTypeAnnotation) if ts.getUnit == TimeUnit.MICROS =>
+        Some(identity)
+      case (INT32 | INT64 | BINARY | FIXED_LEN_BYTE_ARRAY, d: DecimalLogicalTypeAnnotation) =>
+        Some(v => new java.math.BigDecimal(unscaled(v), d.getScale))
+      case _ => None
+    }
   }
 
   /** Maps the file names a scan reports (`input_file_name()`, a
@@ -618,7 +537,7 @@ object SnapshotTable {
       : (Seq[String], Seq[String], Seq[String]) = {
     import org.apache.spark.sql.functions._
     if (files.isEmpty) return (Nil, Nil, Nil)
-    val (scanned, hit) = hits(scan(spark, root, Some(schema), files)
+    val (scanned, hit) = hits(scan(spark, root, schema, files)
       .withColumn("__f", input_file_name()))
     val resolve = fileResolver(root, files)
     val counts = scanned.groupBy(col("__f"))
@@ -809,10 +728,24 @@ object SnapshotTable {
     * so a probe rounded either way still plans every file holding a
     * matching value. */
   private def prunedFiles(snap: Snapshot, prune: Seq[ColRange]): Seq[String] =
-    snap.files.filter { f =>
-      val cols = snap.stats(f).cols
-      prune.forall(p => cols.get(p.colName).forall { case (lo, hi) => hi >= p.lo && lo <= p.hi })
-    }
+    snap.files.filter(f => mayMatch(snap.stats(f), prune))
+
+  /** Whether a file with stats `fs` may hold a row satisfying every `prune`
+    * conjunct: false only when its recorded bounds for a conjunct's column
+    * miss that conjunct's range. The one pruning test of every read. */
+  private def mayMatch(fs: FileStats, prune: Seq[ColRange]): Boolean =
+    prune.forall(p => fs.cols.get(p.colName).forall { case (lo, hi) => hi >= p.lo && lo <= p.hi })
+
+  /** [lo, hi] of `colName` over files with `stats`: the min/max of their
+    * directed-rounded bounds, which is the directed-rounded envelope
+    * (rounding is monotone). None when they hold no rows or a file with
+    * rows has no bounds for the column, so a read pruned by it never
+    * misses a row. */
+  private def boundsOver(stats: Iterable[FileStats], colName: String): Option[(Double, Double)] = {
+    val held = stats.filter(_.rows > 0)
+    if (held.isEmpty || !held.forall(_.cols.contains(colName))) None
+    else Some((held.map(_.cols(colName)._1).min, held.map(_.cols(colName)._2).max))
+  }
 
   /** Version visible at wall-clock `tsMs` — the newest snapshot whose
     * commit timestamp is ≤ tsMs (Iceberg's timestamp time travel). Commit
@@ -820,15 +753,14 @@ object SnapshotTable {
     * monotone per table under the single-winner publish protocol up to
     * clock skew between committers (document the skew, don't hide it —
     * resolution walks versions, not timestamps, so a skewed pair only
-    * affects reads aimed INSIDE the skew window). 0 when no snapshot is
-    * old enough. */
-  def versionAsOfTime(root: String, tsMs: Long): Int = {
-    val cur = currentVersion(root)
-    (1 to cur).filter { v =>
-      hasSnapshot(root, v) &&
-        snapshot(root, v).tsMs <= tsMs
-    }.foldLeft(0)(math.max)
-  }
+    * affects reads aimed INSIDE the skew window). 0 when no retained
+    * snapshot is old enough. Walks down from the current version, skipping
+    * expired manifests, so only the manifests newer than the answer are
+    * parsed. */
+  def versionAsOfTime(root: String, tsMs: Long): Int =
+    (currentVersion(root) to 1 by -1)
+      .find(v => hasSnapshot(root, v) && snapshot(root, v).tsMs <= tsMs)
+      .getOrElse(0)
 
   /** Read the table as of a wall-clock timestamp. */
   def readAsOfTime(spark: SparkSession, root: String, tsMs: Long,
@@ -852,7 +784,7 @@ object SnapshotTable {
     require(v >= 1, s"no snapshot $v at $root")
     val snap = snapshot(root, v)
     val files = prunedFiles(snap, prune)
-    if (files.nonEmpty) scan(spark, root, Some(snap.schema), files)
+    if (files.nonEmpty) scan(spark, root, snap.schema, files)
     // pruning legitimately eliminated every file: an EMPTY result with the
     // table schema, not an error (a range query before the data's time
     // window is a normal empty read, not a bug)
@@ -861,22 +793,20 @@ object SnapshotTable {
 
   private val scanLock = new Object
   /** The catalog's one parquet read: root-relative `files` from a manifest,
-    * with `schema` pinned (else inferred from a footer). The manifest holds
-    * the exact file list, so Spark must not list it again: above
+    * with `schema` pinned. The manifest holds the exact file list, so
+    * Spark must not list it again: above
     * `parallelPartitionDiscovery.threshold` paths its file index runs a
     * distributed listing job. It lists when the DataFrame is created, so
     * the threshold is raised for that call only, under a lock so that
     * concurrent scans restore the session's own value. */
-  private def scan(spark: SparkSession, root: String, schema: Option[StructType],
-                   files: Seq[String]): DataFrame = {
-    val reader = schema.fold(spark.read)(spark.read.schema)
+  private def scan(spark: SparkSession, root: String, schema: StructType,
+                   files: Seq[String]): DataFrame =
     scanLock.synchronized {
       ParquetFiles.withConf(spark,
           "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString) {
-        reader.parquet(files.map(f => s"$root/$f"): _*)
+        spark.read.schema(schema).parquet(files.map(f => s"$root/$f"): _*)
       }
     }
-  }
 
   private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -941,21 +871,19 @@ object SnapshotTable {
     /** The rows of [[changes]]. */
     def adds(spark: SparkSession, prune: Seq[ColRange] = Nil): DataFrame = {
       val what = s"changes(v$fromV, v$toV)"
-      val allAdded = added.map(_._1)
-      val last = need(toV, s"$what needs manifest")
-      // files added mid-range but no longer live in toV carry no toV
-      // stats: keep them (conservative)
-      val planned = prunedFiles(last, prune).toSet ++ allAdded.filterNot(last.files.toSet)
-      val files = allAdded.filter(planned)
+      // each add is pruned by its introducing manifest's stats, whether or
+      // not it is still live at toV
+      val files = added.collect { case (f, fs) if mayMatch(fs, prune) => f }
+      val in = all(what)
       // surface the recorded schema: every contributing version must agree
       // on (name -> type) — a mid-range overwrite that reshaped the table
       // is a LOUD error directing the caller to read per-version instead
-      val schemas = all(what)
+      val schemas = in
         .filter(s => s.op == "append" || s.op == "overwrite" || s.op == "merge")
         .map(_.schema)
       requireOneSchema(schemas, s"$what spans a schema change; read per-version")
-      val schema = schemas.headOption.getOrElse(last.schema)
-      if (files.nonEmpty) scan(spark, root, Some(schema), files)
+      val schema = schemas.headOption.getOrElse(in.last.schema)
+      if (files.nonEmpty) scan(spark, root, schema, files)
       else emptyFrame(spark, schema)
     }
 
@@ -964,11 +892,7 @@ object SnapshotTable {
       * the adds have no rows or a file with rows has none for the column. */
     def envelope(colName: String): (Long, Option[(Double, Double)]) = {
       val stats = added.map(_._2)
-      val rows = stats.map(_.rows).sum
-      val bounds = stats.flatMap(_.cols.get(colName))
-      val covered = stats.forall(fs => fs.rows == 0 || fs.cols.contains(colName))
-      (rows, if (covered && rows > 0) Some((bounds.map(_._1).min, bounds.map(_._2).max))
-             else None)
+      (stats.map(_.rows).sum, boundsOver(stats, colName))
     }
 
     /** The rows of [[changesCdc]]. */
@@ -992,7 +916,7 @@ object SnapshotTable {
       val schema = schemas.headOption.getOrElse(in.last.schema)
       def part(files: Seq[String], kind: String): Seq[DataFrame] =
         if (files.isEmpty) Nil
-        else Seq(scan(spark, root, Some(schema), files).withColumn("_change_type", lit(kind)))
+        else Seq(scan(spark, root, schema, files).withColumn("_change_type", lit(kind)))
       val parts = in.flatMap { sn =>
         sn.op match {
           case "append" => part(introduced(sn, what), "insert")
@@ -1037,7 +961,6 @@ object SnapshotTable {
             cdc: Boolean = true,
             replaceAllPrune: Option[Seq[ColRange]] = None): Int = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
     require(keyCols.nonEmpty, "merge needs at least one key column")
     // replaceAll skips the tombstone pre-image pass, so row-level CDC for
     // such a commit cannot be recorded — callers must opt out of CDC too
@@ -1048,12 +971,6 @@ object SnapshotTable {
     transact(spark, root, base) { t =>
       val prev = t.prev.get
       requireCompatible(prev.schema, df.schema, base)
-      // incoming key envelope → pruning conjuncts; key columns without stats
-      // support (strings, arrays) contribute no conjunct — planFiles then
-      // keeps more files, which is conservative, never wrong
-      val statKeys = df.schema.fields.filter(f => keyCols.contains(f.name) &&
-        (f.dataType.isInstanceOf[NumericType] ||
-         f.dataType == TimestampType || f.dataType == TimestampNTZType)).toSeq
       // the delta lands first; BOTH the key envelope and the anti-join read
       // it back from its own files, so `df` is computed exactly once — the
       // previous pre-write envelope agg recomputed the caller's whole plan a
@@ -1063,17 +980,13 @@ object SnapshotTable {
       // an EMPTY incoming batch (or all-null keys → no stats) must not
       // degrade to a full-table rewrite: zero delta rows replace nothing
       val deltaRows = deltaStats.valuesIterator.map(_.rows).sum
-      // incoming key envelope from the delta's own per-file stats (same
-      // statExpr units; directed rounding is monotone, so the min/max over
-      // per-file directed-rounded bounds equals the directed-rounded global
-      // envelope the old agg computed). Key columns without stats support
-      // (strings, arrays, all-null files) contribute no conjunct — planFiles
-      // then keeps more files, which is conservative, never wrong.
-      val ranges: Seq[ColRange] = statKeys.flatMap { f =>
-        val bs = deltaStats.valuesIterator.flatMap(_.cols.get(f.name)).toSeq
-        if (bs.isEmpty) None
-        else Some(ColRange(f.name, bs.map(_._1).min, bs.map(_._2).max))
-      }
+      // incoming key envelope from the delta's own per-file footer stats,
+      // in the units every manifest bound uses. A key without bounds in a
+      // delta file that holds rows (strings, NaN, all-null) contributes no
+      // conjunct — planFiles then keeps more files, which is conservative,
+      // never wrong.
+      val ranges: Seq[ColRange] = keyCols.flatMap(k =>
+        boundsOver(deltaStats.values, k).map { case (lo, hi) => ColRange(k, lo, hi) })
       // replaceAllPrune (the incremental views' refresh contract): the caller
       // read EXACTLY planFiles(base, p), merged every surviving row of those
       // files into `df` itself (full-outer combine), and commits the result as
@@ -1089,7 +1002,7 @@ object SnapshotTable {
       // (`df` is computed once): the join side of the hit scan and the split
       def incomingKeys: DataFrame =
         (if (deltaFiles.nonEmpty)
-           scan(spark, root, Some(df.schema), deltaFiles)
+           scan(spark, root, df.schema, deltaFiles)
          else df).select(keyCols.map(col): _*).distinct()
       // The file-level contract is unchanged: every candidate file (key-stats
       // envelope intersection) is REPLACED in this version — the documented

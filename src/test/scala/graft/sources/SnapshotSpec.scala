@@ -127,6 +127,19 @@ class SnapshotSpec extends AnyFunSuite {
     val ch = changes(spark, root, fromV = 1, toV = 3, prune = Seq(ColRange("id", 250, 260)))
       .select("id").collect().map(_.getLong(0))
     assert(ch.forall(id => id >= 200 && id < 300))
+    // an add replaced later in the range is pruned by the stats of the
+    // manifest that introduced it: the delete rewrites the v2 file holding
+    // id 150, which lies outside [250, 260]
+    delete(spark, root, col("id") === 150)
+    val (v4, v5) = (snapshot(root, 4), snapshot(root, 5))
+    val replaced = v4.files.filterNot(v5.files.toSet)
+    assert(replaced.nonEmpty && replaced.forall(_.startsWith("data/s2-")), replaced.toString)
+    val replacedRange = changes(spark, root, fromV = 1, toV = 5, prune = Seq(ColRange("id", 250, 260)))
+    val scanned = replacedRange.inputFiles
+    assert(replaced.forall(f => !scanned.exists(_.endsWith(f))),
+      s"replaced $replaced must be pruned, scanned ${scanned.toSeq}")
+    assert(replacedRange.select("id").collect().map(_.getLong(0))
+      .forall(id => id >= 200 && id < 300))
   }
 
   test("stats edge cases: all-null columns never prune; timestamps prune in epoch micros") {
@@ -152,9 +165,8 @@ class SnapshotSpec extends AnyFunSuite {
     assert(tsLow.nonEmpty && tsLow.forall(_.startsWith("data/s1-")), tsLow.toString)
     val tsHit = planFiles(root, v, Seq(ColRange("ts", 60.0e9, 70.0e9)))
     assert(tsHit.exists(_.startsWith("data/s2-")))
-    // a decimal column takes the scan-stats path, where a file with no rows
-    // forms no group: the empty commit's zero-row part file still gets an
-    // entry, with zero rows and no bounds
+    // a zero-row file has a footer with no row groups: the empty commit's
+    // zero-row part file still gets an entry, with zero rows and no bounds
     val dec = freshRoot("statsedge_decimal")
     commit(spark, dec, Seq.empty[(Long, BigDecimal)].toDF("id", "d"))
     val sn = snapshot(dec, 1)
@@ -313,6 +325,67 @@ class SnapshotSpec extends AnyFunSuite {
                       ColRange("id", (big + 100).toDouble, (big + 100).toDouble),
                       ColRange("id", (big + 100).toDouble, (big + 200).toDouble)))
       assert(planFiles(root, 1, Seq(probe)).nonEmpty, s"$probe pruned the file")
+    // decimals are bounded from the footer's unscaled values, scaled before
+    // the directed rounding: INT32-backed decimal(5,2), INT64-backed
+    // decimal(15,3), and a two's-complement FIXED_LEN_BYTE_ARRAY
+    // decimal(30,2) with unscaled values of ±(2^53 + 3) and beyond
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val decCols = Seq(
+      "d5" -> (DecimalType(5, 2), Seq("-999.99", "-0.01", "123.45", "999.99")),
+      "d15" -> (DecimalType(15, 3), Seq("-123456789012.345", "0.001", "999999999999.999", "7.5")),
+      "d30" -> (DecimalType(30, 2), Seq("-90071992547409.95", "-0.05", "90071992547409.95",
+                                        "1234567890123456789012345.67")))
+    val schema = StructType(StructField("id", LongType) +:
+      decCols.map { case (c, (t, _)) => StructField(c, t) })
+    val rows = (0 until 4).map(i => Row.fromSeq(i.toLong +:
+      decCols.map { case (_, (_, vs)) => new java.math.BigDecimal(vs(i)) }))
+    val dec = freshRoot("bigdecimal")
+    commit(spark, dec, spark.createDataFrame(rows.asJava, schema).coalesce(1))
+    val ds = snapshot(dec, 1)
+    val dcols = ds.stats(ds.files.head).cols
+    for ((c, (_, vs)) <- decCols) {
+      val exact = vs.map(new java.math.BigDecimal(_))
+      val (min, max) = (exact.reduce(_ min _), exact.reduce(_ max _))
+      val (lo, hi) = dcols(c)
+      assert(new java.math.BigDecimal(lo).compareTo(min) <= 0 &&
+             new java.math.BigDecimal(hi).compareTo(max) >= 0,
+        s"$c: [$lo, $hi] misses [$min, $max]")
+      for (v <- Seq(min, max))
+        assert(planFiles(dec, 1, Seq(ColRange(c, v.doubleValue, v.doubleValue))).nonEmpty,
+          s"$c: exact probe $v pruned the file")
+      assert(planFiles(dec, 1, Seq(ColRange(c, hi * 2 + 1, hi * 2 + 2))).isEmpty)
+    }
+    // bit-equal to the bounds of a min/max aggregate in the decimal type,
+    // directed-rounded to doubles
+    def bits(b: (Double, Double)) =
+      (java.lang.Double.doubleToRawLongBits(b._1), java.lang.Double.doubleToRawLongBits(b._2))
+    assert(decCols.map { case (c, _) => c -> bits(dcols(c)) }.toMap == Map(
+      "d5" -> (0xc08f3feb851eb852L, 0x408f3feb851eb852L),
+      "d15" -> (0xc23cbe991a145852L, 0x426d1a94a1fffff8L),
+      "d30" -> (0xc2d47ae147ae147dL, 0x44f056e0f36a6444L)))
+    deleteRecursively(dec)
+  }
+
+  test("a commit with a decimal or timestamp column runs as many Spark jobs as one without") {
+    import org.apache.spark.sql.functions.{col, timestamp_micros}
+    val plain = df(0 until 100)
+    // (tag, frame, the column it must record bounds for)
+    val jobs = Seq(
+      ("plain", plain, "id"),
+      ("decimal", plain.withColumn("d", (col("id") / 4).cast("decimal(15,3)")), "d"),
+      ("timestamp", plain.withColumn("ts", timestamp_micros(col("id") * 1000L)), "ts")).map {
+      case (tag, in, bounded) =>
+        val root = freshRoot(s"jobs_$tag")
+        val n = usage { commit(spark, root, in) }.jobs.size
+        val sn = snapshot(root, 1)
+        assert(sn.files.exists(f => sn.stats(f).cols.contains(bounded)),
+          s"$tag: no bounds recorded for $bounded")
+        deleteRecursively(root)
+        tag -> n
+    }
+    assert(jobs.head._2 >= 1 && jobs.forall(_._2 == jobs.head._2), s"jobs per commit: $jobs")
   }
 
   test("crashed fallback publish: stale claim is broken, fresh claim still loses") {
@@ -450,6 +523,26 @@ class SnapshotSpec extends AnyFunSuite {
       .head().getString(1) == "base150")
   }
 
+  test("merge: a delta file holding rows without key bounds disables key pruning") {
+    import spark.implicits._
+    val root = freshRoot("mergenan")
+    commit(spark, root, Seq((1.0, "old1")).toDF("k", "s").coalesce(1)) // k in [1, 1]
+    commit(spark, root, Seq((5.0, "old5")).toDF("k", "s").coalesce(1)) // k in [5, 5]
+    // two delta files: {1.0, NaN} records no k bounds (NaN), {5.0} records
+    // [5, 5]; an envelope over the bounded file alone would prune the file
+    // holding key 1.0 and leave its old row beside the upsert
+    val delta = spark.sparkContext
+      .parallelize(Seq((5.0, "new5"), (1.0, "new1"), (Double.NaN, "newNaN")), 2).toDF("k", "s")
+    val v = merge(spark, root, delta, Seq("k"))
+    val sn = snapshot(root, v)
+    assert(sn.delta.size == 2 && sn.delta.count(f => sn.stats(f).cols.contains("k")) == 1,
+      s"delta stats ${sn.delta.map(sn.stats)}")
+    val got = read(spark, root).collect().map(r => r.getDouble(0) -> r.getString(1))
+    assert(got.filter(_._1 == 1.0).map(_._2).toSeq == Seq("new1"), got.toSeq)
+    assert(got.filter(_._1 == 5.0).map(_._2).toSeq == Seq("new5"), got.toSeq)
+    assert(got.length == 3)
+  }
+
   test("delete: predicate rows gone; match-free candidates and non-candidates untouched") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -500,6 +593,19 @@ class SnapshotSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       readAsOfTime(spark, root, snapshot(root, 1).tsMs - 1000)
     }
+    // the walk down skips expired manifests: once v1 is expired, an instant
+    // before the oldest retained version resolves to 0
+    Thread.sleep(15)
+    val mid2 = System.currentTimeMillis()
+    Thread.sleep(15)
+    commit(spark, root, df(30 until 40))
+    expire(root, keepLast = 2)
+    assert(!hasSnapshot(root, 1) && hasSnapshot(root, 2))
+    assert(versionAsOfTime(root, mid) == 0)
+    intercept[IllegalArgumentException] { readAsOfTime(spark, root, mid) }
+    assert(versionAsOfTime(root, mid2) == 2)
+    assert(readAsOfTime(spark, root, mid2).count() == 30)
+    assert(versionAsOfTime(root, System.currentTimeMillis()) == 3)
   }
 
   test("merge and delete scan the touched files ONCE per commit (single-pass split)") {
