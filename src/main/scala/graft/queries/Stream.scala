@@ -104,7 +104,7 @@ object Stream {
       .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
               col("value").as("v"))
     evs.write.mode("append").parquet(dir)
-    val maxTsUs = evs.agg(max(unix_micros(col("ts")))).head.getLong(0)
+    val maxTsUs = evs.agg(max(unix_micros(col("ts")))).head().getLong(0)
     val name = sinkName("q75")
     val q = StreamOps.sessionStream(s, dir, name, gap = "4 hours")
     q.processAllAvailable()

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.column.ParquetProperties
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
@@ -57,7 +58,10 @@ private[graft] object ParquetFiles {
       Files.deleteIfExists(dst)
       val w = new ParquetFileWriter(
         HadoopOutputFile.fromPath(new HPath(dst.toString), conf),
-        meta.getSchema, ParquetFileWriter.Mode.CREATE, 256L * 1024, 0)
+        meta.getSchema, ParquetFileWriter.Mode.CREATE, 256L * 1024, 0,
+        ParquetProperties.DEFAULT_COLUMN_INDEX_TRUNCATE_LENGTH,
+        ParquetProperties.DEFAULT_STATISTICS_TRUNCATE_LENGTH,
+        ParquetProperties.DEFAULT_PAGE_WRITE_CHECKSUM_ENABLED)
       w.start()
       parts.foreach(p =>
         w.appendFile(HadoopInputFile.fromPath(new HPath(p.getPath), conf)))

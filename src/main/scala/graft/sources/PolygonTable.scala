@@ -95,7 +95,7 @@ object PolygonTable {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val withId = spark.createDataFrame(
-      df.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(f"pt_$i%09d" +: r.toSeq) },
+      df.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(f"pt_$i%09d" +: r.toSeq) },
       StructType(StructField("pt_id", StringType, nullable = false) +: df.schema.fields))
     val base = withId
       .withColumn("x", col(xCol).cast("double"))

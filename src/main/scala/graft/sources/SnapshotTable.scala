@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
@@ -25,10 +25,10 @@ import scala.jdk.CollectionConverters._
   * the named files are stat'ed on the driver, never by a Spark listing
   * job (the property that matters on object stores at 100 TB). Commits
   * are optimistic: the writer materializes data files, then publishes
-  * `meta/v<N>.json` with a create-exclusive move — a concurrent committer of
-  * the same N loses with `ConcurrentCommitException` and must retry on top
-  * of the new state (Iceberg's CAS-on-metadata-pointer model; a cluster
-  * deployment swaps the filesystem move for the catalog's CAS). */
+  * `meta/v<N>.json` with a create-exclusive hard link ([[publish]]) — a
+  * concurrent committer of the same N loses with `ConcurrentCommitException`
+  * and must retry on top of the new state (Iceberg's CAS-on-metadata-pointer
+  * model; a cluster deployment swaps the hard link for the catalog's CAS). */
 object SnapshotTable {
   final class ConcurrentCommitException(v: Int)
     extends RuntimeException(s"snapshot v$v was committed concurrently")
@@ -337,8 +337,7 @@ object SnapshotTable {
     * stream markers plus the body's own `txn` (ops change data, not
     * stream-idempotence history). A body that throws before publish
     * deletes every attempt dir it made. Once publish is entered nothing is
-    * deleted: a lost CAS leaves its dirs to `expire`, and a fallback
-    * publish that fails its post-move fence may already be referenced. */
+    * deleted: a lost CAS leaves its dirs to `expire`. */
   private def transact(spark: SparkSession, root: String, base: Int)(
       body: Txn => Snapshot): Int = {
     val t = new Txn(spark, root, base)
@@ -588,131 +587,25 @@ object SnapshotTable {
        | "schema": ${schema.json}}""".stripMargin
   }
 
-  /** Lease window for abandoned publish claims: a claim older than this
-    * with no matching manifest is treated as a CRASHED fallback publish and
-    * may be broken by a later committer (or deleted by maintenance). Must
-    * exceed any plausible write-claim→move gap — the gap holds no data
-    * write, only two metadata ops, so minutes is conservative.
-    * `private[sources] var` so tests can shrink the lease. */
-  @volatile private[sources] var claimGraceMs: Long = 15L * 60 * 1000
-  /** Test hook: route publish through the no-hardlink fallback. */
-  @volatile private[sources] var forceFallbackPublish: Boolean = false
-
-  private def claimIsStale(claim: Path): Boolean =
-    try {
-      val age = System.currentTimeMillis() -
-        Files.getLastModifiedTime(claim).toMillis
-      age > claimGraceMs
-    } catch { case _: java.nio.file.NoSuchFileException => true }
-
-  private def tryCreateNew(p: Path, content: Array[Byte] = Array.emptyByteArray): Boolean =
-    try {
-      Files.write(p, content,
-        java.nio.file.StandardOpenOption.CREATE_NEW,
-        java.nio.file.StandardOpenOption.WRITE)
-      true
-    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-
-  /** Break an expired claim lease, serialized through a create-exclusive
-    * BREAKER lock so two breakers can never both delete-and-reclaim (a
-    * naive delete+recreate is a TOCTOU: breaker B could delete breaker A's
-    * FRESH claim and both would publish — POSIX rename replaces, so the
-    * second move silently overwrites the first manifest and a committer
-    * that returned success loses its rows). Holding the breaker, the claim
-    * is re-checked and deleted; the breaker is removed afterwards. A crash
-    * INSIDE this window leaves a breaker file that blocks further
-    * auto-breaks (fail-safe: the table waits for maintenance — expire
-    * sweeps lease-expired breakers — rather than risking a double
-    * publish). Before deleting the claim, its owner token is recorded in a
-    * FENCE file (`v<N>.json.fence.<token>`): a broken claimant that was
-    * merely PAUSED (not crashed) re-reads its claim before moving and
-    * checks its fence after moving, so a break can never silently orphan
-    * a resumed mover — see [[publish]]. Returns true iff this caller
-    * broke the lease and may try to re-claim. */
-  private def breakStaleClaim(root: String, v: Int): Boolean = {
-    val claim = metaDir(root).resolve(s"v$v.json.claim")
-    val breaker = metaDir(root).resolve(s"v$v.json.breaker")
-    if (!tryCreateNew(breaker)) return false // another breaker is live (or crashed: maintenance)
-    try {
-      if (claimIsStale(claim)) {
-        val token = try Files.readString(claim).trim
-                    catch { case _: java.io.IOException => "" }
-        if (token.nonEmpty)
-          tryCreateNew(metaDir(root).resolve(s"v$v.json.fence.$token"))
-        Files.deleteIfExists(claim); true
-      }
-      else false
-    } finally Files.deleteIfExists(breaker)
-  }
-
   /** Publish a snapshot manifest create-exclusively — this IS the
     * optimistic-concurrency gate: a racing committer of the same version
     * finds the target name taken and loses cleanly. NOT a rename: POSIX
     * rename() silently REPLACES an existing target (ATOMIC_MOVE included),
-    * so the atomic claim is a hard link, which fails with
-    * FileAlreadyExistsException when the version is taken. */
+    * so the complete manifest is written to a tmp file of this attempt's
+    * own and hard-linked to `v<N>.json`, which fails with
+    * FileAlreadyExistsException when the version is taken. The tmp name
+    * is unique per attempt: two racers of one version never write into
+    * each other's file, so neither can rewrite the winner's manifest
+    * through its link or delete the other's tmp before it is linked. */
   private[sources] def publish(root: String, v: Int, json: String): Unit = {
-    val target = metaDir(root).resolve(s"v$v.json")
-    val tmp = metaDir(root).resolve(s".v$v.json.tmp")
     Files.createDirectories(metaDir(root))
-    Files.writeString(tmp, json)
+    val tmp = metaDir(root).resolve(s".v$v.json.${java.util.UUID.randomUUID()}.tmp")
     try {
-      if (forceFallbackPublish) throw new UnsupportedOperationException("test hook")
-      Files.createLink(target, tmp)
-    }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new ConcurrentCommitException(v)
-      case _: UnsupportedOperationException =>
-        // filesystems without hard links (some network/object-store mounts):
-        // two-phase fallback — (1) a create-exclusive CLAIM file serializes
-        // writers of this version, (2) ATOMIC_MOVE publishes the complete
-        // manifest, so readers NEVER observe partial JSON (a raw CREATE_NEW
-        // write of the target would expose truncated content mid-write and
-        // a crash would brick the version). A crash between claim and move
-        // leaves an orphan claim at v = cur+1 that every later committer of
-        // the table recomputes — without recovery the table is permanently
-        // unwritable (expire's version rule only reaches claims BELOW the
-        // retention window). Recovery is lease-based: a claim older than
-        // `claimGraceMs` with no published manifest is a definite crash
-        // (the claim→move gap holds no long operation) and is broken ONCE;
-        // a fresh claim still loses cleanly to the in-flight owner.
-        // claims carry an owner TOKEN so a break is fenced, not silent:
-        // (1) the claim file's content identifies its owner; (2) a breaker
-        // records that token in a fence file BEFORE deleting the claim;
-        // (3) the owner re-reads its claim immediately before moving — a
-        // broken-and-reclaimed claim has a different token and the paused
-        // owner loses loudly instead of replacing the new winner's
-        // manifest (POSIX rename replaces); (4) after the move the owner
-        // checks for its own fence — if present, the break raced the move
-        // itself and the clobber is DETECTED (loud error naming the lost
-        // version) rather than a silent lost commit. The residual window
-        // is the single move syscall; a pause longer than claimGraceMs
-        // between two adjacent metadata ops is required to reach it.
-        val token = java.util.UUID.randomUUID().toString
-        val claim = metaDir(root).resolve(s"v$v.json.claim")
-        val fence = metaDir(root).resolve(s"v$v.json.fence.$token")
-        val tokenBytes = token.getBytes("UTF-8")
-        val claimed = tryCreateNew(claim, tokenBytes) || {
-          (!Files.exists(target) && claimIsStale(claim) &&
-            breakStaleClaim(root, v)) && tryCreateNew(claim, tokenBytes)
-        }
-        if (!claimed) throw new ConcurrentCommitException(v)
-        if (Files.exists(target)) throw new ConcurrentCommitException(v)
-        val owned = try Files.readString(claim).trim == token
-                    catch { case _: java.io.IOException => false }
-        if (!owned) throw new ConcurrentCommitException(v)
-        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-        if (Files.exists(fence)) {
-          Files.deleteIfExists(fence)
-          throw new IllegalStateException(
-            s"snapshot v$v: this publish's claim was lease-broken during " +
-              "the move; the manifest may have replaced a concurrently " +
-              "committed one — manual reconciliation required (republish " +
-              "from the surviving attempt dirs)")
-        }
-    }
-    finally Files.deleteIfExists(tmp)
+      Files.writeString(tmp, json)
+      Files.createLink(metaDir(root).resolve(s"v$v.json"), tmp)
+    } catch { case _: java.nio.file.FileAlreadyExistsException =>
+      throw new ConcurrentCommitException(v)
+    } finally Files.deleteIfExists(tmp)
   }
 
   /** Plan the file list for a read: the snapshot's live files, minus every
@@ -1234,11 +1127,9 @@ object SnapshotTable {
     * dirs of LOSING concurrent committers, which [[Txn]] documents as
     * "cleaned by expire"; dirs at versions > current belong to
     * in-flight commits that would win and are never touched — and
-    * (b) `.claim`/`.tmp` publish residue for versions < the retention
-    * window (never by an exists() probe, which would race an in-flight
-    * fallback publish), plus (c) LEASE-EXPIRED claims at any version with
-    * no published manifest — the crashed-fallback-publish case, aged out
-    * via `claimGraceMs` so a live publish's fresh claim survives. Time
+    * (b) the `.v<N>.json.<uuid>.tmp` residue of crashed publishes for
+    * versions < the retention window (never by an exists() probe: a tmp at
+    * or above the window may belong to an in-flight [[publish]]). Time
     * travel to an expired version becomes an error by design. Returns
     * (versionsDropped, dataDirsDeleted). */
   def expire(root: String, keepLast: Int = 3): (Int, Int) = {
@@ -1253,41 +1144,16 @@ object SnapshotTable {
       .map(snapshot(root, _))
     val liveDirs = retained.flatMap(sn => sn.files ++ sn.removed)
       .map(f => f.split("/")(1)).toSet // "data/<attempt>/<file>" → attempt
-    // drop expired manifests; claims and publish tmp residue are deleted by
-    // the SAME version rule (< keepFrom), never by a point-in-time
-    // exists() probe — a claim/tmp of an IN-FLIGHT publish must survive or
-    // the fallback path's mutual exclusion breaks (two movers onto one
-    // target; POSIX rename silently replaces)
+    // drop expired manifests and the publish tmp residue below the window
+    val man = "v(\\d+)\\.json".r
+    val tmp = "\\.v(\\d+)\\.json\\.[0-9a-f-]+\\.tmp".r
     var dropped = 0
-    listNames(metaDir(root)).foreach { n =>
-      val man = "^v(\\d+)\\.json$".r.findFirstMatchIn(n).map(_.group(1).toInt)
-      val residue = "^\\.?v(\\d+)\\.json(\\.claim|\\.tmp|\\.fence\\.[A-Za-z0-9._-]+)$".r
-        .findFirstMatchIn(n).map(_.group(1).toInt)
-      if (man.exists(_ < keepFrom)) {
+    listNames(metaDir(root)).foreach {
+      case n @ man(d) if d.toInt < keepFrom =>
         Files.delete(metaDir(root).resolve(n)); dropped += 1
-      }
-      if (residue.exists(_ < keepFrom))
+      case n @ tmp(d) if d.toInt < keepFrom =>
         Files.deleteIfExists(metaDir(root).resolve(n))
-      // claims AT OR ABOVE the window with no published manifest: a crashed
-      // fallback publish (the common crash point — publish recovers these
-      // lazily on the next commit of the same version; maintenance sweeps
-      // them too). Lease-gated AND breaker-serialized (the same protocol as
-      // publish's recovery — an exists()/stat probe alone races a live
-      // breaker that just re-created a fresh claim); stale BREAKERS (a
-      // crash inside the break window) are lease-aged too, restoring
-      // auto-recovery after such a crash.
-      residue.filter(_ >= keepFrom).foreach { rv =>
-        if (n.endsWith(".claim") &&
-            !hasSnapshot(root, rv) &&
-            claimIsStale(metaDir(root).resolve(n)))
-          breakStaleClaim(root, rv)
-      }
-      val breakerV = "^v(\\d+)\\.json\\.breaker$".r
-        .findFirstMatchIn(n).map(_.group(1).toInt)
-      breakerV.foreach { _ =>
-        val p = metaDir(root).resolve(n)
-        if (claimIsStale(p)) Files.deleteIfExists(p)
-      }
+      case _ =>
     }
     // GC attempt dirs no retained manifest references — but ONLY versions
     // ≤ cur: a dir at version > cur belongs to an in-flight commit that

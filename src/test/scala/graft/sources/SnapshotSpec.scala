@@ -91,11 +91,45 @@ class SnapshotSpec extends AnyFunSuite {
     intercept[SnapshotTable.ConcurrentCommitException] {
       SnapshotTable.publish(root, 2, """{"version": 2, "parent": 1}""")
     }
-    // the winner's state is untouched and no tmp debris remains
+    // the winner's state is untouched and no tmp debris of any name remains
     assert(read(spark, root).count() == 8)
     assert(snapshot(root, 2).rows == 8)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(root, "meta", ".v2.json.tmp")))
+    val meta = new java.io.File(s"$root/meta").list().toSet
+    assert(meta == Set("v1.json", "v2.json"), s"meta holds $meta")
+  }
+
+  test("same-version publish racers: one winner, its own manifest bytes, no tmp left") {
+    import java.util.concurrent.{CyclicBarrier, TimeUnit}
+    val root = freshRoot("publishrace")
+    val rounds = 300
+    val barrier = new CyclicBarrier(2)
+    // racer r's manifest for version v: ~600 distinct bytes per racer
+    def json(r: Int, v: Int) = s"""{"version": $v, "racer": $r, "pad": "${r.toString * 600}"}"""
+    val won = Array.fill(2, rounds)(false)
+    val lost = Array.fill[Throwable](2, rounds)(null)
+    val racers = (0 until 2).map { r =>
+      new Thread(() => (1 to rounds).foreach { v =>
+        barrier.await(60, TimeUnit.SECONDS)
+        try { publish(root, v, json(r, v)); won(r)(v - 1) = true }
+        catch { case e: Exception => lost(r)(v - 1) = e }
+      })
+    }
+    racers.foreach(_.start()); racers.foreach(_.join())
+    val versions = 1 to rounds
+    val notOneWinner = versions.filter(v => won.count(_(v - 1)) != 1)
+    val badLoser = versions.filterNot(v => lost.exists(_(v - 1).isInstanceOf[ConcurrentCommitException]))
+    val foreign = versions.filter { v =>
+      val text = java.nio.file.Files.readString(java.nio.file.Paths.get(root, "meta", s"v$v.json"))
+      !(0 until 2).exists(r => won(r)(v - 1) && text == json(r, v))
+    }
+    val loserErrors = badLoser.flatMap(v => lost.map(_(v - 1))).filter(_ != null)
+      .map(_.getClass.getSimpleName).distinct
+    val tmps = new java.io.File(s"$root/meta").list().filter(_.endsWith(".tmp"))
+    assert(notOneWinner.isEmpty && badLoser.isEmpty && foreign.isEmpty && tmps.isEmpty,
+      s"of $rounds rounds: ${notOneWinner.size} without exactly one winner, " +
+        s"${badLoser.size} whose loser got $loserErrors, " +
+        s"${foreign.size} whose manifest is not the winner's bytes; ${tmps.length} tmp left")
+    deleteRecursively(root)
   }
 
   test("manifest stats prune the planned file list; pruned read stays exact") {
@@ -253,8 +287,16 @@ class SnapshotSpec extends AnyFunSuite {
     // a dir for a version ABOVE current (in-flight commit) is never GC'd
     val inflight = java.nio.file.Paths.get(root, "data", "s99-deadbeef")
     java.nio.file.Files.createDirectories(inflight)
+    // a crashed publish's tmp below the window is swept; one at or above it
+    // may belong to an in-flight publish and is kept
+    val tmp = (v: Int) => java.nio.file.Paths.get(root, "meta", s".v$v.json.${java.util.UUID.randomUUID()}.tmp")
+    val (crashed, atWindow, above) = (tmp(4), tmp(5), tmp(6))
+    Seq(crashed, atWindow, above).foreach(java.nio.file.Files.writeString(_, "{}"))
     expire(root, keepLast = 1)
     assert(java.nio.file.Files.exists(inflight), "in-flight attempt dir must survive")
+    assert(!java.nio.file.Files.exists(crashed), "tmp below the window must be swept")
+    assert(java.nio.file.Files.exists(atWindow) && java.nio.file.Files.exists(above),
+      "tmp at or above the window must survive")
   }
 
   test("property: random op sequences match an in-memory model, incl. all history") {
@@ -386,53 +428,6 @@ class SnapshotSpec extends AnyFunSuite {
         tag -> n
     }
     assert(jobs.head._2 >= 1 && jobs.forall(_._2 == jobs.head._2), s"jobs per commit: $jobs")
-  }
-
-  test("crashed fallback publish: stale claim is broken, fresh claim still loses") {
-    val root = freshRoot("claim")
-    commit(spark, root, df(0 until 5)) // v1 (hard-link path)
-    // simulate the crash window: v2 claim exists, no v2 manifest
-    val claim = java.nio.file.Paths.get(root, "meta", "v2.json.claim")
-    java.nio.file.Files.write(claim, Array.emptyByteArray)
-    SnapshotTable.forceFallbackPublish = true
-    try {
-      // fresh claim = a live publish may own it: the committer must LOSE
-      intercept[ConcurrentCommitException] { commit(spark, root, df(5 until 8)) }
-      // age past the lease → the next committer breaks it and succeeds
-      java.nio.file.Files.setLastModifiedTime(claim,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - SnapshotTable.claimGraceMs - 60000))
-      assert(commit(spark, root, df(5 until 8)) == 2)
-      assert(read(spark, root).count() == 8)
-      // maintenance sweep: a stale orphan claim ABOVE current goes too…
-      val c3 = java.nio.file.Paths.get(root, "meta", "v3.json.claim")
-      java.nio.file.Files.write(c3, Array.emptyByteArray)
-      java.nio.file.Files.setLastModifiedTime(c3,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - SnapshotTable.claimGraceMs - 60000))
-      expire(root, keepLast = 3)
-      assert(!java.nio.file.Files.exists(c3), "stale orphan claim must be swept")
-      // …but a FRESH orphan claim survives maintenance (in-flight publish)
-      val c4 = java.nio.file.Paths.get(root, "meta", "v3.json.claim")
-      java.nio.file.Files.write(c4, Array.emptyByteArray)
-      expire(root, keepLast = 3)
-      assert(java.nio.file.Files.exists(c4), "fresh claim must survive expire")
-      // a live BREAKER lock blocks auto-break even for a stale claim (the
-      // double-publish TOCTOU guard): the committer must lose cleanly
-      java.nio.file.Files.setLastModifiedTime(c4,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - SnapshotTable.claimGraceMs - 60000))
-      val brk = java.nio.file.Paths.get(root, "meta", "v3.json.breaker")
-      java.nio.file.Files.write(brk, Array.emptyByteArray)
-      intercept[ConcurrentCommitException] { commit(spark, root, df(8 until 9)) }
-      // …until the breaker itself ages out and maintenance sweeps it
-      java.nio.file.Files.setLastModifiedTime(brk,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - SnapshotTable.claimGraceMs - 60000))
-      expire(root, keepLast = 3)
-      assert(!java.nio.file.Files.exists(brk), "stale breaker must be swept")
-      assert(commit(spark, root, df(8 until 9)) == 3)
-    } finally SnapshotTable.forceFallbackPublish = false
   }
 
   test("empty merge is a metadata-only commit: zero files rewritten") {
@@ -705,40 +700,6 @@ class SnapshotSpec extends AnyFunSuite {
     val (lo, hi) = s1.cols("id")
     assert(planFiles(root, 6, Seq(ColRange("id", hi, hi + 5))).contains(f1))
     assert(planFiles(root, 6, Seq(ColRange("id", lo - 5, lo))).contains(f1))
-  }
-
-  test("fallback publish: broken claims are fenced; a foreign-token claim loses pre-move") {
-    val root = freshRoot("fence")
-    commit(spark, root, df(0 until 5)) // v1 (hard-link path)
-    SnapshotTable.forceFallbackPublish = true
-    try {
-      // a stale claim with a recorded owner token: the breaker must leave
-      // that token's fence behind before deleting the claim, so the paused
-      // owner can detect the break when it resumes
-      val claim = java.nio.file.Paths.get(root, "meta", "v2.json.claim")
-      java.nio.file.Files.writeString(claim, "tok-paused-owner")
-      java.nio.file.Files.setLastModifiedTime(claim,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - SnapshotTable.claimGraceMs - 60000))
-      assert(commit(spark, root, df(5 until 8)) == 2)
-      val fence = java.nio.file.Paths.get(root, "meta",
-        "v2.json.fence.tok-paused-owner")
-      assert(java.nio.file.Files.exists(fence),
-        "breaking a tokened claim must leave its owner's fence")
-      // a FRESH claim owned by someone else: the committer can neither
-      // create nor break it, and must lose BEFORE any move (the paused
-      // owner's pre-move token re-read is the same check from its side)
-      val c3 = java.nio.file.Paths.get(root, "meta", "v3.json.claim")
-      java.nio.file.Files.writeString(c3, "tok-other-live")
-      intercept[ConcurrentCommitException] { commit(spark, root, df(8 until 9)) }
-      java.nio.file.Files.delete(c3)
-      // fences are publish residue: swept once their version leaves the
-      // retention window
-      (0 until 4).foreach(i => commit(spark, root, df((i + 2) * 10 until (i + 3) * 10)))
-      expire(root, keepLast = 2)
-      assert(!java.nio.file.Files.exists(fence),
-        "expired-version fence residue must be swept")
-    } finally SnapshotTable.forceFallbackPublish = false
   }
 
   test("z-order compact: a trailing-key predicate prunes files a 1-D sort cannot") {
