@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.sources.{ParquetFiles, SnapshotTable}
@@ -15,39 +15,37 @@ import graft.sources.{ParquetFiles, SnapshotTable}
   * `malib.py:482-542` — recompute what changed, reuse the rest):
   *
   *   - APPEND-ONLY range (appends + compactions): the O(delta) fast path —
-  *       1. the range's adds — only the source layers committed since
-  *          the last refresh (file-level scan), with their tile envelope
-  *          from the same manifests' stats;
-  *       2. the view aggregator's fold of those layers, FUSED with
-  *       3. the old⊕new merge against the current view rows of the
-  *          affected tiles (stats-pruned read) — one tagged-union
-  *          exchange keyed on tile_id; old⊕new is the aggregator's own
-  *          `merge` on unpacked buffers (compiled while-loops; the
-  *          Column-level alternative, `zip_with`, is a CodegenFallback
-  *          higher-order function measured ~30× slower).
+  *     the range's adds (only the source layers committed since the last
+  *     refresh) are folded and merged into the old view rows (old⊕new is
+  *     the aggregator's own `merge` on unpacked buffers: compiled
+  *     while-loops, where the Column-level `zip_with` is a
+  *     CodegenFallback measured ~30× slower).
   *   - CHURNED range (merge / delete / overwrite, CDC intact): moments
   *     already folded in cannot be SUBTRACTED (min/max aren't invertible,
   *     and a silent adds-only fold would double-count merge post-images
   *     and keep deleted layers forever — VERDICT r6 Wrong #1). Instead the
   *     range's CDC pre+post images name every AFFECTED tile; those tiles
-  *     are re-folded from the source at `to` (tile-range-pruned read +
-  *     semi-join) and REPLACE their view rows via the keyed merge. Tiles
-  *     whose layers all vanished get the fold's identity row (zero buffers
-  *     — finished stats read as "no data"), so stale contributions can
-  *     never linger.
+  *     are re-folded from the source at `to` (semi-join on the CDC tile
+  *     ids) and REPLACE their view rows. A tile whose layers all vanished
+  *     gets the fold's identity row (zero buffers — finished stats read as
+  *     "no data"), so stale contributions can never linger.
   *     O(affected-tile history), not O(delta) — churn costs what it costs,
-  *     loudly in the plan, never silently wrong.
+  *     loudly in the plan, never silently wrong. Appends in the same range
+  *     are subsumed: an appended layer's tiles are CDC inserts.
   *   - UNREPLAYABLE range (rollback, cdc_off commits, expired mid-range
   *     manifests) and FIRST refresh: full rebuild — fold the snapshot at
   *     `to` and overwrite the view in one marker-carrying commit.
   *
-  * Every path commits with the refreshed SOURCE VERSION as an idempotent-
-  * writer marker, so a crashed/replayed refresh is a no-op, never a
-  * double-count. On exact-sum inputs (integer-valued payloads, dyadic time
-  * coordinates) double addition is associative, so a view refreshed in ANY
-  * commit grouping — including through churn — is bit-identical to the
-  * batch fold, which is exactly what the q108/q110/q111/q112 strict
-  * oracles check. */
+  * The two incremental paths are one [[walk]]: both plan from the range's
+  * manifest [[SnapshotTable.ChangeRange.envelope]] (zero jobs), and differ
+  * only in the source rows they fold and the affected-tile markers churn
+  * adds. Every path commits with the refreshed SOURCE VERSION as an
+  * idempotent-writer marker, so a crashed/replayed refresh is a no-op,
+  * never a double-count. On exact-sum inputs (integer-valued payloads,
+  * dyadic time coordinates) double addition is associative, so a view
+  * refreshed in ANY commit grouping — including through churn — is
+  * bit-identical to the batch fold, which is exactly what the
+  * q108/q110/q111/q112 strict oracles check. */
 private[operators] object IncrementalView {
 
   private def markerId(tilesRoot: String, kind: String): String =
@@ -59,7 +57,7 @@ private[operators] object IncrementalView {
 
   /** A view's ONE definition: the batch aggregator over source layers plus
     * the codec between its buffer and the stored row `V`. Every refresh
-    * path derives from it — the delta and rebuild folds, the identity row
+    * path derives from it — the walk and rebuild folds, the identity row
     * (`pack(agg.zero)`) and old⊕new (`agg.merge(delta, unpack(old))`,
     * delta first: the batch folds' operand order, whose min/max tie rule
     * keeps the delta operand). */
@@ -76,170 +74,118 @@ private[operators] object IncrementalView {
     val to = SnapshotTable.currentVersion(tilesRoot)
     val from = refreshedVersion(mvRoot, tilesRoot, kind)
     if (to <= math.max(from, 0L)) return from
-    val marker = markerId(tilesRoot, kind)
-    // source layers → packed view rows (the rebuild and churn folds)
-    val fold: DataFrame => Dataset[V] = df =>
-      StackOps.partialFold(df.as(Encoders.product[TileRow]), view.agg)(view.pack)
+    val txn = markerId(tilesRoot, kind) -> to.toLong
     // classify (from, to]: history with an expired manifest (mid-range, or
     // the base the first commit is diffed against) can't be replayed, so
     // it rebuilds
     val range = new SnapshotTable.ChangeRange(tilesRoot, math.max(from, 0L).toInt, to)
     val mvEmpty = SnapshotTable.currentVersion(mvRoot) == 0
     val ops = range.snaps.flatten
-    val appendOnly = !mvEmpty && range.replayable &&
-      ops.forall(sn => sn.op == "append" || sn.op == "compact")
-    val cdcReplayable = range.replayable && ops.forall(sn => sn.op != "rollback" && !sn.cdcOff)
+    val appendOnly = ops.forall(sn => sn.op == "append" || sn.op == "compact")
+    val cdcReplayable = ops.forall(sn => sn.op != "rollback" && !sn.cdcOff)
     // fat-row split/partition sizing, scoped to the refresh
     ParquetFiles.withFatRowScanConf(spark) {
-      if (appendOnly)
-        refreshAppendOnly(spark, range, mvRoot, marker, view)
-      else if (mvEmpty || !cdcReplayable)
-        rebuild(spark, range, mvRoot, marker, fold, mvEmpty)
-      else
-        refreshChurned(spark, range, mvRoot, marker, fold,
-          tid => view.pack(tid, view.agg.zero))
+      if (mvEmpty || !range.replayable || !cdcReplayable)
+        rebuild(spark, range, mvRoot, txn, view, mvEmpty)
+      else range.envelope("tile_id")._2 match {
+        case None =>
+          // the range changed no rows (all-NDV append, empty merge or
+          // delete): marker-only merge
+          SnapshotTable.merge(spark, mvRoot, spark.emptyDataset[V](enc).toDF(),
+            Seq("tile_id"), txn = Some(txn), cdc = false)
+        case Some((lo, hi)) =>
+          // the changed-tile envelope bounds the old-view read, the churn
+          // source read and the merge's file rewrites; conservative (range,
+          // not id set), from the source manifests alone. Changed rows
+          // without tile_id bounds give (−∞, ∞): every view file is
+          // replaced, which stays exact.
+          val prune = Seq(SnapshotTable.ColRange("tile_id", lo, hi))
+          val old = SnapshotTable.read(spark, mvRoot, prune = prune)
+          if (appendOnly) walk(spark, mvRoot, txn, view, prune, range.adds(spark), old, None)
+          else {
+            val affected = range.cdc(spark).select(col("tile_id")).distinct()
+            // three consumers: the source semi-join, the old-view
+            // anti-join and the marker leg
+            affected.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try walk(spark, mvRoot, txn, view, prune,
+              SnapshotTable.read(spark, tilesRoot, asOf = range.toV, prune = prune)
+                .join(affected, Seq("tile_id"), "left_semi"),
+              old.join(affected, Seq("tile_id"), "left_anti"), Some(affected))
+            finally affected.unpersist(blocking = false)
+          }
+      }
     }
     to
   }
 
-  /** Fast path: adds-only delta fold + old⊕new keyed merge (O(delta)),
-    * FUSED into one shuffle. The raw delta rows and the envelope-pruned
-    * old-view rows travel through a single tagged-union exchange keyed on
-    * tile_id; the post-shuffle stage sorts each partition by tile_id and
-    * streams one tile at a time — folding that tile's delta rows and
-    * merging in its at-most-one old row — straight into the merge
-    * commit's write. The earlier two-stage form (fold to a
-    * partial Dataset, then a full-outer sort-merge join) paid an extra
-    * Exchange of the fat ~100-300 KB fold buffers plus a separate join
-    * stage (guide §2.4 — remove shuffles outright). Fold/combine order is
-    * unchanged in spirit (delta-first operand order) and outputs are
-    * order-independent on the engine's exact-sum payloads, which the
-    * strict oracles gate. The old-view side still never broadcasts (no
-    * join exists to mis-broadcast); each fat row moves exactly once. */
-  private def refreshAppendOnly[B, V](spark: SparkSession,
-                                      range: SnapshotTable.ChangeRange,
-                                      mvRoot: String, marker: String,
-                                      view: ViewDef[B, V])
-                                     (implicit enc: Encoder[V]): Unit = {
-    val to = range.toV.toLong
-    val delta = range.adds(spark)
-    // affected-tile envelope bounds BOTH the old-view read and the
-    // merge's file rewrites; conservative (range, not id set). Derived
-    // from the SOURCE manifests' added-file stats — zero jobs, and the
-    // fold keys are exactly the delta's tile ids so the envelope is the
-    // same interval (manifest bounds are directed-rounded outward; pruning
-    // stays conservative). A delta with rows but no tile_id bounds prunes
-    // nothing: every view file is replaced, which stays exact.
-    val (rows, env) = range.envelope("tile_id")
-    if (rows == 0L) {
-      // empty delta (all-NDV commit): marker-only merge
-      SnapshotTable.merge(spark, mvRoot, spark.emptyDataset[V](enc).toDF(),
-        Seq("tile_id"), txn = Some(marker -> to), cdc = false)
-    } else {
-      val prune = env.map { case (lo, hi) => SnapshotTable.ColRange("tile_id", lo, hi) }.toSeq
-      val oldDf = SnapshotTable.read(spark, mvRoot, prune = prune)
-      val tEnc = Encoders.product[TileRow]
-      // tagged union rows (_1 = tile_id, _2 = delta TileRow | null,
-      // _3 = old view row | null); the null legs deserialize to null
-      // tuple components (the joinWith contract this replaces)
-      val dU = delta.select(col("tile_id").cast("long").as("_1"),
-        struct(tEnc.schema.fieldNames.map(col).toSeq: _*).as("_2"),
-        lit(null).cast(enc.schema).as("_3"))
-      val oU = oldDf.select(col("tile_id").cast("long").as("_1"),
-        lit(null).cast(tEnc.schema).as("_2"),
-        struct(enc.schema.fieldNames.map(col).toSeq: _*).as("_3"))
-      implicit val tup: Encoder[(Long, TileRow, V)] =
-        Encoders.tuple(Encoders.scalaLong, tEnc, enc)
-      // explicit width (shared with the batch folds): the compressed
-      // shuffle size would let AQE coalesce the decode-bound fold+combine
-      // to 1-2 tasks
-      val combined: Dataset[V] = StackOps.keyedRuns(
-          dU.unionByName(oU).as[(Long, TileRow, V)], StackOps.foldWidth(spark), "_1")(
-          _._1) { (k, run) =>
-        val agg = view.agg
-        var b: B = null.asInstanceOf[B]   // delta buffer, once a row arrives
-        var o: V = null.asInstanceOf[V]   // old view row, unique per key
-        run.foreach { case (_, t, old) =>
-          if (t != null) b = agg.reduce(if (b == null) agg.zero else b, t)
-          if (old != null) o = old
-        }
-        Iterator.single(
-          if (b == null) o   // old-only tile: passes through untouched
-          else view.pack(k, if (o == null) b else agg.merge(b, view.unpack(o))))
+  /** The incremental refresh: fold `src` (source rows) into `old` (the
+    * view rows of the `prune`d view files) through ONE tagged-union
+    * exchange keyed on tile_id, streamed one tile at a time straight into
+    * the merge commit's write. A tile named by `affected` (churn) is
+    * REPLACED by its fold, or by the identity row when no source row
+    * survives (the caller dropped its old row before the exchange); any
+    * other tile gets old⊕fold, or passes through untouched without a
+    * fold. Each fat row moves exactly once and is never a join's build
+    * side (churn's anti-join builds on the tile-id set). The combined set
+    * holds every surviving row of the pruned view files, so the merge
+    * takes it as those files' full replacement (replaceAllPrune) and skips
+    * its survivor-routing scan — the old view is read ONCE per refresh. */
+  private def walk[B, V](spark: SparkSession, mvRoot: String,
+                         txn: (String, Long), view: ViewDef[B, V],
+                         prune: Seq[SnapshotTable.ColRange], src: DataFrame,
+                         old: DataFrame, affected: Option[DataFrame])
+                        (implicit enc: Encoder[V]): Unit = {
+    val tEnc = Encoders.product[TileRow]
+    // tagged union rows (_1 = tile_id, _2 = source TileRow | null,
+    // _3 = old view row | null, _4 = affected marker); the null legs
+    // deserialize to null tuple components
+    def leg(df: DataFrame, t: Column, o: Column, hit: Boolean) =
+      df.select(col("tile_id").cast("long").as("_1"), t.as("_2"), o.as("_3"),
+        lit(hit).as("_4"))
+    val noT = lit(null).cast(tEnc.schema)
+    val noO = lit(null).cast(enc.schema)
+    val legs = Seq(
+      leg(src, struct(tEnc.schema.fieldNames.map(col).toSeq: _*), noO, hit = false),
+      leg(old, noT, struct(enc.schema.fieldNames.map(col).toSeq: _*), hit = false)) ++
+      affected.map(leg(_, noT, noO, hit = true))
+    implicit val tup: Encoder[(Long, TileRow, V, Boolean)] =
+      Encoders.tuple(Encoders.scalaLong, tEnc, enc, Encoders.scalaBoolean)
+    // explicit width (shared with the batch folds): the compressed
+    // shuffle size would let AQE coalesce the decode-bound fold+combine
+    // to 1-2 tasks
+    val combined: Dataset[V] = StackOps.keyedRuns(
+        legs.reduce(_ unionByName _).as[(Long, TileRow, V, Boolean)],
+        StackOps.foldWidth(spark), "_1")(_._1) { (k, run) =>
+      val agg = view.agg
+      var b: B = null.asInstanceOf[B]   // fold buffer, once a row arrives
+      var o: V = null.asInstanceOf[V]   // old view row, unique per key
+      var hit = false
+      run.foreach { case (_, t, v, h) =>
+        if (t != null) b = agg.reduce(if (b == null) agg.zero else b, t)
+        if (v != null) o = v
+        hit ||= h
       }
-      // the combined set carries every surviving row of the pruned
-      // old-view files (old-only tiles pass through untouched), so the
-      // merge commit takes them as those files' full replacement
-      // (replaceAllPrune) and skips its survivor-routing scan — the old
-      // view is read ONCE per refresh.
-      // cdc = false: the view's row-level history is replayable from the
-      // SOURCE table's CDC; persisting a full pre-image copy of every
-      // refreshed view row would be pure write amplification
-      SnapshotTable.merge(spark, mvRoot, combined.toDF(), Seq("tile_id"),
-        txn = Some(marker -> to), cdc = false,
-        replaceAllPrune = Some(prune))
+      Iterator.single(
+        if (hit) view.pack(k, if (b == null) agg.zero else b)
+        else if (b == null) o
+        else view.pack(k, if (o == null) b else agg.merge(b, view.unpack(o))))
     }
+    // cdc = false: the view's row-level history is replayable from the
+    // SOURCE table's CDC; persisting a full pre-image copy of every
+    // refreshed view row would be pure write amplification
+    SnapshotTable.merge(spark, mvRoot, combined.toDF(), Seq("tile_id"),
+      txn = Some(txn), cdc = false, replaceAllPrune = Some(prune))
   }
 
   /** Full rebuild: fold the live snapshot at `to`, replace the view. */
-  private def rebuild[V](spark: SparkSession, range: SnapshotTable.ChangeRange,
-                         mvRoot: String, marker: String,
-                         fold: DataFrame => Dataset[V], mvEmpty: Boolean)
-                        (implicit enc: Encoder[V]): Unit = {
-    val to = range.toV.toLong
-    val all = fold(SnapshotTable.read(spark, range.root, asOf = range.toV)).toDF()
-    if (mvEmpty) SnapshotTable.commitStreamBatch(spark, mvRoot, all, marker, to)
-    else SnapshotTable.commitWithTxn(spark, mvRoot, all, "overwrite",
-      marker -> to)
-  }
-
-  /** Churn path: CDC names the affected tiles; re-fold exactly those from
-    * the live source and REPLACE their view rows (vanished tiles get the
-    * identity row). Subsumes any appends in the same range — an appended
-    * layer's tiles are CDC inserts, so they land in the recompute set. */
-  private def refreshChurned[V](spark: SparkSession,
-                                range: SnapshotTable.ChangeRange,
-                                mvRoot: String, marker: String,
-                                fold: DataFrame => Dataset[V], zero: Long => V)
-                               (implicit enc: Encoder[V]): Unit = {
-    val to = range.toV.toLong
-    val affected = range.cdc(spark).select(col("tile_id")).distinct()
-    // three consumers: envelope agg, recompute semi-join, vanished anti-join
-    affected.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val env = affected.agg(min(col("tile_id")), max(col("tile_id"))).head()
-      if (env.isNullAt(0)) {
-        // churn that touched no rows (empty merge/delete): marker-only
-        SnapshotTable.merge(spark, mvRoot, spark.emptyDataset[V](enc).toDF(),
-          Seq("tile_id"), txn = Some(marker -> to), cdc = false)
-        return
-      }
-      val prune = Seq(SnapshotTable.colRangeLong("tile_id",
-        env.getLong(0), env.getLong(1)))
-      val src = SnapshotTable.read(spark, range.root, asOf = range.toV, prune = prune)
-        .join(affected, Seq("tile_id"), "left_semi")
-      val recomputed = fold(src)
-      // two consumers: the vanished-tile probe and the merge commit
-      recomputed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val vanished = affected
-          .join(recomputed.toDF().select(col("tile_id")), Seq("tile_id"),
-            "left_anti")
-          .as(org.apache.spark.sql.Encoders.scalaLong)
-          .map(zero)(enc)
-        // the UNAFFECTED rows of the envelope-pruned view files ride along
-        // as survivors, so the merge commit can take the union as those
-        // files' full replacement (replaceAllPrune) instead of re-scanning
-        // them for survivor routing — one view read and one write per
-        // churn refresh where there were two of each (guide §2.4)
-        val survivors = SnapshotTable.read(spark, mvRoot, prune = prune)
-          .join(affected, Seq("tile_id"), "left_anti").as[V]
-        SnapshotTable.merge(spark, mvRoot,
-          recomputed.union(vanished).union(survivors).toDF(), Seq("tile_id"),
-          txn = Some(marker -> to), cdc = false,
-          replaceAllPrune = Some(prune))
-      } finally recomputed.unpersist(blocking = false)
-    } finally affected.unpersist(blocking = false)
+  private def rebuild[B, V](spark: SparkSession, range: SnapshotTable.ChangeRange,
+                            mvRoot: String, txn: (String, Long), view: ViewDef[B, V],
+                            mvEmpty: Boolean)
+                           (implicit enc: Encoder[V]): Unit = {
+    val all = StackOps.partialFold(SnapshotTable.read(spark, range.root, asOf = range.toV)
+      .as(Encoders.product[TileRow]), view.agg)(view.pack).toDF()
+    if (mvEmpty) SnapshotTable.commitStreamBatch(spark, mvRoot, all, txn._1, txn._2)
+    else SnapshotTable.commitWithTxn(spark, mvRoot, all, "overwrite", txn)
   }
 
   /** View-table maintenance: every refresh is a `merge` commit, so a

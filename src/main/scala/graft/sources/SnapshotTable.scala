@@ -251,9 +251,10 @@ object SnapshotTable {
     * attempt dir `data/s<v>-<uuid>` (`expire` maps a file to its dir by the
     * second path segment), unique PER ATTEMPT, not per version: two racers
     * of the same v must not clobber each other's files before the manifest
-    * CAS resolves — the loser's dirs are unreferenced garbage (cleaned by
-    * [[expire]]), never a dangling reference in the winner's manifest
-    * (Iceberg's uuid-named data files, same reasoning). */
+    * CAS resolves — the loser's dirs are unreferenced garbage (deleted by
+    * [[transact]]; a crashed committer's by [[expire]]), never a dangling
+    * reference in the winner's manifest (Iceberg's uuid-named data files,
+    * same reasoning). */
   private final class Txn(spark: SparkSession, root: String, val base: Int) {
     val v: Int = base + 1
     /** The base snapshot, read once; None on an empty table. */
@@ -335,22 +336,26 @@ object SnapshotTable {
   /** Run `body` as one [[Txn]] and publish its manifest — the one publish
     * of every mutating op — with the publish-time clock and the base's
     * stream markers plus the body's own `txn` (ops change data, not
-    * stream-idempotence history). A body that throws before publish
-    * deletes every attempt dir it made. Once publish is entered nothing is
-    * deleted: a lost CAS leaves its dirs to `expire`. */
+    * stream-idempotence history). A body that throws before publish, or
+    * a publish that loses the CAS (`ConcurrentCommitException`: its
+    * manifest never became visible), deletes every attempt dir it made.
+    * Any other publish failure leaves them to `expire`: that manifest may
+    * be visible. */
   private def transact(spark: SparkSession, root: String, base: Int)(
       body: Txn => Snapshot): Int = {
     val t = new Txn(spark, root, base)
-    val json = try {
-      val sn = body(t)
-      manifestJson(sn.copy(tsMs = System.currentTimeMillis(),
-        txns = t.prev.fold(Map.empty[String, Long])(_.txns) ++ sn.txn))
-    } catch { case e: Throwable =>
+    def abandon(e: Throwable): Nothing = {
       try t.dirs.foreach(d => deleteRecursively(s"$root/$d"))
       catch { case c: java.io.IOException => e.addSuppressed(c) }
       throw e
     }
-    publish(root, t.v, json)
+    val json = try {
+      val sn = body(t)
+      manifestJson(sn.copy(tsMs = System.currentTimeMillis(),
+        txns = t.prev.fold(Map.empty[String, Long])(_.txns) ++ sn.txn))
+    } catch { case e: Throwable => abandon(e) }
+    try publish(root, t.v, json)
+    catch { case e: ConcurrentCommitException => abandon(e) }
     t.v
   }
 
@@ -459,7 +464,7 @@ object SnapshotTable {
       val unbounded = scala.collection.mutable.Set.empty[String]
       for (b <- md.getBlocks.asScala; cc <- b.getColumns.asScala if cc.getPath.size == 1;
            name = cc.getPath.toDotString; v <- value.get(name)) {
-        val st = cc.getStatistics
+        val st: org.apache.parquet.column.statistics.Statistics[_] = cc.getStatistics
         if (st != null && st.hasNonNullValue) {
           val bLo = dirDouble(v(st.genericGetMin), up = false)
           val bHi = dirDouble(v(st.genericGetMax), up = true)
@@ -631,12 +636,14 @@ object SnapshotTable {
 
   /** [lo, hi] of `colName` over files with `stats`: the min/max of their
     * directed-rounded bounds, which is the directed-rounded envelope
-    * (rounding is monotone). None when they hold no rows or a file with
-    * rows has no bounds for the column, so a read pruned by it never
-    * misses a row. */
+    * (rounding is monotone). None when they hold no rows; (−∞, ∞) when a
+    * file with rows has no bounds for the column, so a read pruned by it
+    * never misses a row. */
   private def boundsOver(stats: Iterable[FileStats], colName: String): Option[(Double, Double)] = {
     val held = stats.filter(_.rows > 0)
-    if (held.isEmpty || !held.forall(_.cols.contains(colName))) None
+    if (held.isEmpty) None
+    else if (!held.forall(_.cols.contains(colName)))
+      Some((Double.NegativeInfinity, Double.PositiveInfinity))
     else Some((held.map(_.cols(colName)._1).min, held.map(_.cols(colName)._2).max))
   }
 
@@ -710,7 +717,7 @@ object SnapshotTable {
     require(schemas.map(_.fields.map(f => f.name -> f.dataType).toMap).distinct.size <= 1, msg)
 
   /** The change range (fromV, toV] of `root`, each manifest it needs parsed
-    * once. [[changes]], [[changesCdc]], the adds' [[envelope]] and the
+    * once. [[changes]], [[changesCdc]], the change [[envelope]] and the
     * incremental views' classification all derive from it, so none of
     * them can disagree on what the range holds. */
   private[graft] final class ChangeRange(val root: String, val fromV: Int, val toV: Int) {
@@ -780,12 +787,22 @@ object SnapshotTable {
       else emptyFrame(spark, schema)
     }
 
-    /** Row count + directed-rounded bounds of `colName` over the unpruned
-      * [[adds]], from the manifests' stats: zero Spark jobs. No bounds when
-      * the adds have no rows or a file with rows has none for the column. */
+    /** Row count of [[adds]] + directed-rounded bounds of `colName` over
+      * every file whose rows the range changes, from the manifests' stats:
+      * zero Spark jobs. Those files are the adds (what an append or
+      * overwrite introduces, a merge's delta) and the parent files a
+      * merge, delete or overwrite drops, which every pre-image [[cdc]]
+      * reads comes from. So the bounds cover every row of [[adds]] and
+      * [[cdc]]; over an append-only range they are the adds' bounds. No
+      * bounds when those files hold no rows (see [[boundsOver]]). */
     def envelope(colName: String): (Long, Option[(Double, Double)]) = {
-      val stats = added.map(_._2)
-      (stats.map(_.rows).sum, boundsOver(stats, colName))
+      val what = s"envelope(v$fromV, v$toV)"
+      val dropped = all(what).filter(sn => sn.parent >= 1 &&
+          Seq("merge", "delete", "overwrite").contains(sn.op)).flatMap { sn =>
+        val p = need(sn.parent, s"$what needs parent manifest")
+        p.files.filterNot(sn.files.toSet).map(p.stats)
+      }
+      (added.map(_._2.rows).sum, boundsOver(added.map(_._2) ++ dropped, colName))
     }
 
     /** The rows of [[changesCdc]]. */
@@ -875,9 +892,9 @@ object SnapshotTable {
       val deltaRows = deltaStats.valuesIterator.map(_.rows).sum
       // incoming key envelope from the delta's own per-file footer stats,
       // in the units every manifest bound uses. A key without bounds in a
-      // delta file that holds rows (strings, NaN, all-null) contributes no
-      // conjunct — planFiles then keeps more files, which is conservative,
-      // never wrong.
+      // delta file that holds rows (strings, NaN, all-null) contributes the
+      // unbounded conjunct — planFiles then keeps more files, which is
+      // conservative, never wrong.
       val ranges: Seq[ColRange] = keyCols.flatMap(k =>
         boundsOver(deltaStats.values, k).map { case (lo, hi) => ColRange(k, lo, hi) })
       // replaceAllPrune (the incremental views' refresh contract): the caller
@@ -1123,9 +1140,9 @@ object SnapshotTable {
   /** Snapshot expiry + orphan GC — Iceberg's `expire_snapshots` +
     * `remove_orphan_files`: drop every version older than the newest
     * `keepLast`, then delete (a) data attempt-dirs referenced by NO
-    * retained manifest whose version is ≤ current — including the orphaned
-    * dirs of LOSING concurrent committers, which [[Txn]] documents as
-    * "cleaned by expire"; dirs at versions > current belong to
+    * retained manifest whose version is ≤ current — the orphaned dirs of
+    * committers that crashed before publishing or before [[transact]]
+    * could delete a lost attempt; dirs at versions > current belong to
     * in-flight commits that would win and are never touched — and
     * (b) the `.v<N>.json.<uuid>.tmp` residue of crashed publishes for
     * versions < the retention window (never by an exists() probe: a tmp at

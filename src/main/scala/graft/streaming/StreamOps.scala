@@ -101,15 +101,8 @@ object StreamOps {
   def tokenStreamToSnapshot(spark: SparkSession, inDir: String, root: String,
                             ckptDir: String, streamId: String,
                             maxFilesPerTrigger: Int = 1): StreamingQuery =
-    tokenFeatures(docStream(spark, inDir, maxFilesPerTrigger))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.SnapshotTable.commitStreamBatch(
-          spark, root, batch, streamId, batchId)
-        () // discard the Option — a skip IS success (replayed epoch)
-      }
-      .start()
+    snapshotSink(spark, tokenFeatures(docStream(spark, inDir, maxFilesPerTrigger)),
+      root, ckptDir, streamId)
 
   /** Generic-schema form of [[tokenStreamToSnapshot]]: stream any parquet
     * file source into the snapshot catalog unchanged, one epoch commit per
@@ -122,19 +115,24 @@ object StreamOps {
   def parquetStreamToSnapshot(spark: SparkSession, inDir: String,
                               root: String, ckptDir: String, streamId: String,
                               schema: org.apache.spark.sql.types.StructType,
-                              maxFilesPerTrigger: Int = 1): StreamingQuery = {
-    spark.readStream.schema(schema)
+                              maxFilesPerTrigger: Int = 1): StreamingQuery =
+    snapshotSink(spark, spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream.outputMode("append")
+      .parquet(inDir), root, ckptDir, streamId)
+
+  /** The snapshot-catalog sink of both streams above: one
+    * `commitStreamBatch` per micro-batch, exactly-once per (streamId,
+    * batchId). */
+  private def snapshotSink(spark: SparkSession, stream: DataFrame, root: String,
+                           ckptDir: String, streamId: String): StreamingQuery =
+    stream.writeStream.outputMode("append")
       .option("checkpointLocation", ckptDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.sources.SnapshotTable.commitStreamBatch(
           spark, root, batch, streamId, batchId)
-        ()
+        () // discard the Option — a skip IS success (replayed epoch)
       }
       .start()
-  }
 
   /** Streaming per-key custom state — flatMapGroupsWithState: running
     * per-cell (count, mean, min, max) maintained explicitly, the shape for

@@ -163,6 +163,31 @@ class StatsViewSpec extends AnyFunSuite {
     assertViewEqualsLive(tilesRoot, mvRoot)
   }
 
+  test("refresh job budget: append, churn (merge, then delete) and rebuild") {
+    val tilesRoot = freshRoot("jobs_t"); val mvRoot = freshRoot("jobs_mv")
+    val images = ImageTable.generate(spark, 6)
+    val target = Warp.analyze(images, "min", "union")
+    val idx = substring(col("image_id"), 5, 8).cast("int")
+    def tiles(f: org.apache.spark.sql.Column) =
+      Warp.warpToTiles(spark, images.filter(f), target, "near").toDF()
+    def jobs(): Int =
+      TestSpark.usage { StatsView.refresh(spark, tilesRoot, mvRoot) }.jobs.size
+    SnapshotTable.commit(spark, tilesRoot, tiles(idx < 3))             // v1
+    val rebuild = jobs() // a fresh view rebuilds
+    SnapshotTable.commit(spark, tilesRoot, tiles(idx >= 3))            // v2
+    val append = jobs()
+    SnapshotTable.merge(spark, tilesRoot, tiles(idx < 2),
+      Seq("image_id", "tile_id"))                                      // v3
+    SnapshotTable.delete(spark, tilesRoot,
+      expr("CAST(substring(image_id, 5, 8) AS INT) = 5"))              // v4
+    val churn = jobs()
+    // the pins may only go down; raising one is a recorded test edit
+    assert(rebuild <= 2, s"rebuild refresh launched $rebuild jobs")
+    assert(append <= 2, s"append refresh launched $append jobs")
+    assert(churn <= 8, s"churn refresh launched $churn jobs")
+    assertViewEqualsLive(tilesRoot, mvRoot)
+  }
+
   test("vanished tiles read empty; a later re-append revives them exactly") {
     val tilesRoot = freshRoot("van_t"); val mvRoot = freshRoot("van_mv")
     val images = ImageTable.generate(spark, 3)

@@ -243,17 +243,23 @@ class SnapshotSpec extends AnyFunSuite {
     val root = freshRoot("expire")
     commit(spark, root, df(0 until 10))
     commit(spark, root, df(10 until 20))
-    // a losing racer leaves an orphaned attempt dir
+    val dataDirs = (p: String) => new java.io.File(s"$p/data").listFiles().length
+    // a losing racer deletes its own attempt dir: its manifest never
+    // became visible, so nothing can reference the data it wrote
+    val nRace = dataDirs(root)
     intercept[ConcurrentCommitException] {
       SnapshotTable.commitFrom(spark, root, 1, df(100 until 110), "append")
     }
+    assert(dataDirs(root) == nRace, "the losing racer left an attempt dir")
+    // a committer that crashed after its data write leaves an orphan
+    java.nio.file.Files.writeString(java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(root, "data", "s2-deadbeef")).resolve("part-0.parquet"), "")
     commit(spark, root, df(20 until 30), op = "overwrite") // v3 drops v1/v2 files
     commit(spark, root, df(30 until 40))                   // v4
-    val dataDirs = (p: String) => new java.io.File(s"$p/data").listFiles().length
     val nBefore = dataDirs(root)
     val (dropped, gcd) = expire(root, keepLast = 2) // retain v3, v4
     assert(dropped == 2, s"dropped $dropped")
-    assert(gcd >= 3, s"gcd $gcd") // v1 + v2 + the racer's orphan at least
+    assert(gcd >= 3, s"gcd $gcd") // v1 + v2 + the crashed write's orphan at least
     assert(dataDirs(root) == nBefore - gcd)
     // retained versions read fine; expired time travel errors
     assert(read(spark, root, asOf = 4).count() == 20)
@@ -332,17 +338,21 @@ class SnapshotSpec extends AnyFunSuite {
         assert(snapshot(root, v).rows == history(v - 1).size.toLong)
       }
       // every change range agrees with changes() over it: the manifest row
-      // count is its row count, and the id envelope contains its ids
+      // count is its row count, and the id envelope contains its ids and
+      // the ids of every changesCdc() row (an overwrite's pre-images too)
       for (to <- 1 to history.length; from <- 0 until to) {
         import org.apache.spark.sql.functions.{count, lit, max, min}
         val got = changes(spark, root, from, to)
           .agg(count(lit(1)), min("id"), max("id")).head()
         val (rows, env) = new ChangeRange(root, from, to).envelope("id")
         assert(rows == got.getLong(0), s"trial $trial ($from, $to]: $rows rows")
-        if (rows > 0) {
+        val cdc = changesCdc(spark, root, from, to)
+          .agg(count(lit(1)), min("id"), max("id")).head()
+        for (r <- Seq(got, cdc) if r.getLong(0) > 0) {
+          assert(env.isDefined, s"trial $trial ($from, $to]: no envelope")
           val (lo, hi) = env.get
-          assert(lo <= got.getLong(1) && hi >= got.getLong(2),
-            s"trial $trial ($from, $to]: [$lo, $hi] misses [${got.get(1)}, ${got.get(2)}]")
+          assert(lo <= r.getLong(1) && hi >= r.getLong(2),
+            s"trial $trial ($from, $to]: [$lo, $hi] misses [${r.get(1)}, ${r.get(2)}]")
         }
       }
     }
