@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.ParquetFiles
 
 /** Stage-level checkpoint/resume with per-partition lineage + metrics —
   * the scale analog of `loadstack`'s recompute-only-missing logic
@@ -15,7 +16,11 @@ import org.apache.spark.sql.functions._
   * param change invalidates everything downstream), row count, per-partition
   * row histogram, wall time, and write timestamp. On re-run, a stage whose
   * fingerprint matches is read back instead of recomputed — any stage of the
-  * tiling job is resumable mid-pipeline (north rule). */
+  * tiling job is resumable mid-pipeline (north rule).
+  *
+  * Both the reused and the fresh stage read their parquet back with the
+  * schema its first part file's footer records, taken on the driver: a
+  * schema-less `spark.read.parquet(dir)` runs a Spark job to infer it. */
 class Pipeline(spark: SparkSession, rootDir: String) {
   import Pipeline.lineageFingerprint
   import graft.Json.str
@@ -46,8 +51,11 @@ class Pipeline(spark: SparkSession, rootDir: String) {
     val reusable = Files.exists(lineagePath) &&
       Files.exists(Paths.get(dir, "_SUCCESS")) &&
       lineageFingerprint(lineagePath).contains(f)
+    val conf = spark.sessionState.newHadoopConf()
     if (reusable) {
-      spark.read.parquet(dir)
+      val first = ParquetFiles.partFiles(dir).head.getPath
+      spark.read.schema(ParquetFiles.sparkSchema(spark, first, ParquetFiles.footer(first, conf)))
+        .parquet(dir)
     } else {
       val t0 = System.nanoTime()
       // the stale lineage goes BEFORE the data overwrite: a crash after
@@ -56,15 +64,15 @@ class Pipeline(spark: SparkSession, rootDir: String) {
       Files.deleteIfExists(lineagePath)
       val df = build
       df.write.mode("overwrite").parquet(dir)
-      val out = spark.read.parquet(dir)
-      // per-partition lineage metrics (file-level row histogram) from the
-      // parquet FOOTERS of the files just written — driver-side, zero
-      // jobs; the previous groupBy(spark_partition_id) re-scanned every
-      // stage's full output a second time (guide §6: row counts are
-      // already in the metadata)
-      val conf = spark.sessionState.newHadoopConf()
-      val parts = graft.sources.ParquetFiles.partFiles(dir)
-        .map(p => graft.sources.ParquetFiles.rowCount(p.getPath, conf))
+      // per-partition lineage metrics (file-level row histogram) and the
+      // read-back schema from the parquet FOOTERS of the files just
+      // written, each read once on the driver with zero jobs (guide §6:
+      // row counts are already in the metadata, no re-scan of the output)
+      val footers = ParquetFiles.partFiles(dir)
+        .map(p => p.getPath -> ParquetFiles.footer(p.getPath, conf))
+      val (first, md) = footers.head
+      val out = spark.read.schema(ParquetFiles.sparkSchema(spark, first, md)).parquet(dir)
+      val parts = footers.map { case (_, md) => ParquetFiles.rowCount(md) }
       val rows = parts.sum
       val hist = parts.zipWithIndex
         .map { case (n, pid) => s"""{"pid": $pid, "rows": $n}""" }

@@ -103,12 +103,12 @@ object SpatialJoin {
     * mask tile pixels whose centers fall outside (or, inverted, inside) the
     * polygon layer.
     *
-    * Scale shape: the polygon layer is never collected to the driver. Tiles'
-    * distinct (tile_id, tx, ty) grid joins the covering-cell table of the
-    * polygon layer (the same prefilter as pipJoin) to build a per-tile
-    * candidate list, which cogroups with the tile stack by tile_id: each
-    * candidate WKB is shipped once per tile group, decoded once, and the
-    * per-pixel PIP mask is computed ONCE per tile_id and reused across every
+    * Scale shape: the polygon layer is never collected to the driver. Each
+    * polygon's bounding box maps straight onto the target's tile grid to
+    * build a per-tile candidate list (its WKBs grouped by tile_id), which
+    * is broadcast and left-joined to the tile stack, so the tile payloads
+    * never shuffle: each task decodes a tile's candidate WKBs once and
+    * computes its per-pixel PIP mask ONCE per tile_id, reused across every
     * layer in the stack (the stack has n_layers tiles per tile_id). */
   def clipTiles(spark: SparkSession, tiles: org.apache.spark.sql.Dataset[TileRow],
                 polys: DataFrame, target: graft.geo.GridSpec,

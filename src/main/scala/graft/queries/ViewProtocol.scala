@@ -31,13 +31,14 @@ object ViewProtocol {
     * lazily. The collect()+createDataFrame alternative materializes every
     * row single-threaded on the driver — measured 45 s of q108's 64 s at
     * sf0.1 (10.6M rows); this form is the same rows in ~2 s and keeps the
-    * returned plan a plain scan the driver can re-run. */
+    * returned plan a plain scan the driver can re-run. The re-read states
+    * the schema just written, so it runs no schema-inference job. */
   private def detachViaParquet(s: SparkSession, df: DataFrame): DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("graft_detach").toString
     sys.addShutdownHook(graft.sources.SnapshotTable.deleteRecursively(dir))
     val path = s"$dir/out"
     df.write.parquet(path)
-    s.read.parquet(path)
+    s.read.schema(df.schema).parquet(path)
   }
 
   /** q108: q41's per-pixel stack stats, computed INCREMENTALLY — the same

@@ -5,16 +5,20 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.ParquetProperties
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** The parquet-format primitives shared by the snapshot catalog, the stage
   * checkpoints and the protocol drivers: part-file listing, driver-side
-  * footer reads, the one-file write-and-concat, link-or-copy and the
-  * scoped scan confs. One definition each, so the callers cannot drift. */
+  * footer reads and the Spark schema a footer records, the one-file
+  * write-and-concat, link-or-copy and the scoped scan confs. One definition
+  * each, so the callers cannot drift. */
 private[graft] object ParquetFiles {
 
   /** Non-empty `*.parquet` part files directly under `dir`, by name. */
@@ -23,16 +27,37 @@ private[graft] object ParquetFiles {
       .filter(f => f.getName.endsWith(".parquet") && f.length > 0)
       .sortBy(_.getName)
 
+  /** A reader of one file, its read options built from `conf`: the
+    * one-argument `ParquetFileReader.open(InputFile)` builds them from a
+    * `new Configuration()`, which parses Hadoop's default XML resources
+    * again on every call (measured on a 4-core host: ~12 ms of driver time
+    * per footer read against ~0.7 ms). */
+  private def open(path: String, conf: Configuration): ParquetFileReader = {
+    val p = new HPath(path)
+    ParquetFileReader.open(HadoopInputFile.fromPath(p, conf),
+      HadoopReadOptions.builder(conf, p).build())
+  }
+
   /** One file's footer, read on the driver (zero Spark jobs). */
   def footer(path: String, conf: Configuration): ParquetMetadata = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(path), conf))
+    val r = open(path, conf)
     try r.getFooter finally r.close()
   }
 
+  /** The Spark schema a part file's footer records, read by Spark's own
+    * rule (the row-metadata key, else the converted parquet schema) on the
+    * driver: what `spark.read.parquet(dir)` infers from that file with a
+    * Spark job (`ParquetUtils.inferSchema` → `mergeSchemasInParallel` →
+    * `collect`). Reading a dir this engine wrote back with
+    * `spark.read.schema(sparkSchema(…))` runs no such job. */
+  def sparkSchema(spark: SparkSession, path: String, md: ParquetMetadata): StructType =
+    ParquetFileFormat.readSchemaFromFooter(new Footer(new HPath(path), md),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+
   /** Row count from the footer's row groups — the metadata already holds
     * it (guide §6), no scan needed. */
-  def rowCount(path: String, conf: Configuration): Long =
-    footer(path, conf).getBlocks.asScala.map(_.getRowCount).sum
+  def rowCount(md: ParquetMetadata): Long =
+    md.getBlocks.asScala.map(_.getRowCount).sum
 
   /** ONE parquet file from a DataFrame without serializing the encode: a
     * `repartition(1).write` funnels every row through a single task (~3 s
@@ -41,7 +66,7 @@ private[graft] object ParquetFiles {
     * decodes the whole file on ONE task too. Here the encode runs wide
     * (normal distributed write, small row groups), then the part files'
     * row groups are concatenated BYTE-FOR-BYTE on the driver
-    * (`ParquetFileWriter.appendFile` — no decode, no re-encode; the
+    * (`ParquetFileReader.appendTo` — no decode, no re-encode; the
     * parquet-tools merge primitive). Many row groups also give the
     * one-file output real scan parallelism (guide §6). */
   def writeOneFile(spark: SparkSession, df: DataFrame, dst: Path): Unit = {
@@ -63,8 +88,10 @@ private[graft] object ParquetFiles {
         ParquetProperties.DEFAULT_STATISTICS_TRUNCATE_LENGTH,
         ParquetProperties.DEFAULT_PAGE_WRITE_CHECKSUM_ENABLED)
       w.start()
-      parts.foreach(p =>
-        w.appendFile(HadoopInputFile.fromPath(new HPath(p.getPath), conf)))
+      parts.foreach { p =>
+        val r = open(p.getPath, conf)
+        try r.appendTo(w) finally r.close()
+      }
       w.end(meta.getKeyValueMetaData)
     } finally SnapshotTable.deleteRecursively(tmp)
   }

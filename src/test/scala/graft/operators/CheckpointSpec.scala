@@ -1,6 +1,8 @@
 package graft.operators
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class CheckpointSpec extends AnyFunSuite {
@@ -80,5 +82,32 @@ class CheckpointSpec extends AnyFunSuite {
     assert(run().computed.toSeq == Seq("srs"))
     val p2 = run()
     assert(p2.computed.isEmpty, s"recomputed: ${p2.computed}")
+  }
+
+  test("stage read-backs run no schema-inference job and keep the inferred schema") {
+    val root = Files.createTempDirectory("ckpt7").toString
+    def run(): (Pipeline, Seq[DataFrame]) = {
+      val p = new Pipeline(spark, root)
+      val a = p.stage("a") {
+        spark.range(0, 100, 1, 2).select(col("id"),
+          array(col("id").cast("float"), lit(1f)).as("payload"),
+          concat(lit("r"), col("id").cast("string")).as("s"))
+      }
+      val b = p.stage("b", deps = Seq("a")) { a.withColumn("n", size(col("payload"))) }
+      (p, Seq(a, b))
+    }
+    def inferred = Seq("a", "b").map(n => spark.read.parquet(s"$root/$n").schema)
+    // fresh: one job per stage write, nothing after it (the read-back
+    // takes its schema from the footer the row counts already read)
+    var fresh: (Pipeline, Seq[DataFrame]) = null
+    assert(TestSpark.usage { fresh = run() }.jobs.size == 2)
+    assert(fresh._1.computed.toSeq == Seq("a", "b"))
+    assert(fresh._2.map(_.schema) == inferred)
+    // fully reusable: building the DataFrames runs no job at all
+    var reused: (Pipeline, Seq[DataFrame]) = null
+    assert(TestSpark.usage { reused = run() }.jobs.isEmpty)
+    assert(reused._1.computed.isEmpty)
+    assert(reused._2.map(_.schema) == inferred)
+    assert(reused._2(1).exceptAll(fresh._2(1)).isEmpty && reused._2(1).count() == 100)
   }
 }
