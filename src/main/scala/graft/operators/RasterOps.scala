@@ -218,7 +218,7 @@ object RasterOps {
       }
       y += 1
     }
-    val out = Array.fill(w * h)(ndv)
+    val out = Pixels.filled(w * h, ndv)
     var n = 0
     y = 0
     while (y < h) {

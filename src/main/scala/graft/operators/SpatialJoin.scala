@@ -149,7 +149,7 @@ object SpatialJoin {
           if (wkbs == null) {
             // no candidate polygons: all pixels are "outside"
             if (invert) Some(TileRow(imageId, tsUs, tileId, tx, ty, payload0,
-              payload0.count(_ != ndv), elided = false))
+              Pixels.countNot(payload0, ndv), elided = false))
             else None
           } else {
             var geoms = geomCache.get(tileId)

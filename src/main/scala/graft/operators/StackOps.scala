@@ -33,8 +33,8 @@ object StackOps {
   class TileStatsAgg(tileLen: Int, ndv: Float)
       extends Aggregator[TileRow, StatsBuf, TileStats] with Serializable {
     def zero: StatsBuf = StatsBuf(0, new Array[Int](tileLen), new Array[Double](tileLen),
-      new Array[Double](tileLen), Array.fill(tileLen)(Float.MaxValue),
-      Array.fill(tileLen)(Float.MinValue))
+      new Array[Double](tileLen), Pixels.filled(tileLen, Float.MaxValue),
+      Pixels.filled(tileLen, Float.MinValue))
     def reduce(b: StatsBuf, t: TileRow): StatsBuf = {
       b.n += 1
       var i = 0
@@ -240,7 +240,7 @@ object StackOps {
     def zero: TrendBuf = TrendBuf(0, new Array[Int](tileLen), new Array[Double](tileLen),
       new Array[Double](tileLen), new Array[Double](tileLen), new Array[Double](tileLen),
       new Array[Double](tileLen),
-      Array.fill(tileLen)(Double.MaxValue), Array.fill(tileLen)(Double.MinValue))
+      Pixels.filled(tileLen, Double.MaxValue), Pixels.filled(tileLen, Double.MinValue))
     def reduce(b: TrendBuf, r: TileRow): TrendBuf = {
       b.n += 1
       val t = r.ts_us / 86400e6 - 20000.0
@@ -352,7 +352,7 @@ object StackOps {
 
   class TileDtAgg(tileLen: Int, ndv: Float)
       extends Aggregator[TileRow, DtBuf, TileDt] with Serializable {
-    def zero: DtBuf = DtBuf(Array.fill(tileLen)(Long.MaxValue), Array.fill(tileLen)(Long.MinValue))
+    def zero: DtBuf = DtBuf(Pixels.filled(tileLen, Long.MaxValue), Pixels.filled(tileLen, Long.MinValue))
     def reduce(b: DtBuf, r: TileRow): DtBuf = {
       var i = 0
       while (i < tileLen) {

@@ -105,7 +105,7 @@ object Stencil {
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
     StackOps.keyedRuns(parts, width, "image_id", "tile_id")(
         p => (p.image_id, p.tile_id)) { case ((imageId, tileId), run) =>
-      val frame = Array.fill(P * P)(ndv)
+      val frame = Pixels.filled(P * P, ndv)
       var tsUs = 0L
       run.foreach { p =>
         tsUs = p.ts_us
@@ -116,7 +116,7 @@ object Stencil {
         }
       }
       val out = f(frame)
-      val nValid = out.count(_ != ndv)
+      val nValid = Pixels.countNot(out, ndv)
       Option.when(nValid > 0)(TileRow(imageId, tsUs, tileId, (tileId % ntx).toInt,
         (tileId / ntx).toInt, out, nValid, elided = false))
     }
@@ -175,7 +175,7 @@ object Stencil {
         }
         y += 1
       }
-      val out = Array.fill(t * t)(ndv)
+      val out = Pixels.filled(t * t, ndv)
       var yy = 0
       while (yy < t) {
         var x = 0
@@ -218,7 +218,7 @@ object Stencil {
       require(h >= k, s"halo $h < window radius $k")
       val f = at(ndv)
       val t = p - 2 * h
-      val out = Array.fill(t * t)(ndv)
+      val out = Pixels.filled(t * t, ndv)
       val buf = new Array[Float](size * size)
       var y = 0
       while (y < t) {
@@ -309,7 +309,7 @@ object Stencil {
         }
         qy += 1
       }
-      val out = Array.fill(t * t)(ndv)
+      val out = Pixels.filled(t * t, ndv)
       var y = 0
       while (y < t) {
         var x = 0
@@ -528,7 +528,7 @@ object Stencil {
       val low = g1(padded, p, r1, ndv)           // inner (p−2r1)² lowpass
       val p2 = p - 2 * r1
       val lowOfLow = g2(low, p2, h - r1, ndv)    // t² second lowpass
-      val out = Array.fill(t * t)(ndv)
+      val out = Pixels.filled(t * t, ndv)
       var y = 0
       while (y < t) {
         var x = 0
@@ -741,7 +741,7 @@ object Stencil {
     (padded, p, h, ndv) => {
       val t = p - 2 * h
       val low = g(padded, p, h, ndv)
-      val out = Array.fill(t * t)(ndv)
+      val out = Pixels.filled(t * t, ndv)
       var y = 0
       while (y < t) {
         var x = 0

@@ -289,7 +289,7 @@ object Warp {
       ty <- (ty0 to ty1).iterator
       tx <- (tx0 to tx1).iterator
     } yield {
-      val payload = Array.fill(tileSize * tileSize)(ndv)
+      val payload = Pixels.filled(tileSize * tileSize, ndv)
       var nValid = 0
       var py = math.max(py0, ty * tileSize)
       val pyEnd = math.min(py1, (ty + 1) * tileSize - 1)

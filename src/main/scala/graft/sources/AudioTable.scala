@@ -66,9 +66,11 @@ object AudioTable {
     AudioRow(audioIdOf(i), encodePcm16(s), Sr, N, captionOf(i))
   }
 
-  /** Distributed generation: spark.range → map, index-seeded. */
-  def generate(spark: SparkSession, n: Int, partitions: Int = 16): DataFrame = {
+  /** Distributed generation: spark.range → map, index-seeded; partitioned
+    * like the session unless `partitions` is positive
+    * (`ImageTable.indices`). */
+  def generate(spark: SparkSession, n: Int, partitions: Int = 0): DataFrame = {
     import spark.implicits._
-    spark.range(0, n, 1, partitions).map(ii => row(ii.toInt)).toDF()
+    ImageTable.indices(spark, n, partitions).map(ii => row(ii.toInt)).toDF()
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.geo.GridSpec
 
 /** The engine's primary input row (BASELINE.json `input_hint` schema plus the
@@ -167,12 +167,24 @@ object ImageTable {
 
   /** Distributed generation: `spark.range` → map. Seeded by index only, so
     * output is identical at any partitioning/parallelism (FIXTURES.md F7
-    * determinism requirement). */
-  def generate(spark: SparkSession, n: Int, partitions: Int = 32,
+    * determinism requirement). The default partitioning follows the session
+    * (`defaultParallelism`, see [[indices]]); a positive `partitions` fixes
+    * the count. */
+  def generate(spark: SparkSession, n: Int, partitions: Int = 0,
                spread: Boolean = false, dimScale: Int = 1): DataFrame = {
     import spark.implicits._
-    spark.range(0, n, 1, partitions).map(i => row(i.toInt, spread, dimScale)).toDF()
+    indices(spark, n, partitions).map(i => row(i.toInt, spread, dimScale)).toDF()
   }
+
+  /** The row indices 0 until n of a synthetic source, in `partitions`
+    * partitions, or in the session's `defaultParallelism` (what
+    * `spark.range` picks when given no count) when `partitions` ≤ 0 — the
+    * generators' default, so a source is as wide as the session's cores
+    * rather than a count sized for one host. */
+  private[sources] def indices(spark: SparkSession, n: Int,
+                               partitions: Int): Dataset[java.lang.Long] =
+    spark.range(0, n, 1,
+      if (partitions > 0) partitions else spark.sparkContext.defaultParallelism)
 }
 
 /** Pure-JVM image codecs. `raw` = float32 LE row-major (the masked-array

@@ -41,9 +41,11 @@ object PolygonTable {
     }
   }
 
-  def generate(spark: SparkSession, n: Int, partitions: Int = 8): DataFrame = {
+  /** The polygon layer, index-seeded; partitioned like the session unless
+    * `partitions` is positive (`ImageTable.indices`). */
+  def generate(spark: SparkSession, n: Int, partitions: Int = 0): DataFrame = {
     import spark.implicits._
-    spark.range(0, n, 1, partitions).map { ii =>
+    ImageTable.indices(spark, n, partitions).map { ii =>
       val i = ii.toInt
       val mp = polygon(i, n)
       val d = java.time.LocalDate.ofEpochDay(ImageTable.Epoch0Days + (i * 11) % 360)
@@ -59,9 +61,11 @@ object PolygonTable {
     * points outside every polygon and duplicate timestamps. */
   final case class PointRow(pt_id: String, x: Double, y: Double, z: Double, ts_us: Long)
 
-  def points(spark: SparkSession, n: Int, partitions: Int = 16): DataFrame = {
+  /** The point set, index-seeded; partitioned like the session unless
+    * `partitions` is positive (`ImageTable.indices`). */
+  def points(spark: SparkSession, n: Int, partitions: Int = 0): DataFrame = {
     import spark.implicits._
-    spark.range(0, n, 1, partitions).map { ii =>
+    ImageTable.indices(spark, n, partitions).map { ii =>
       val i = ii.toInt
       // low-discrepancy-ish deterministic scatter, slightly beyond the region
       val x = X0 - 100.0 + (i * 131 % (ImageTable.ClusterCols * 256 + 400)).toDouble

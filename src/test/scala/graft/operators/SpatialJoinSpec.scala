@@ -230,6 +230,8 @@ class KnnSpec extends AnyFunSuite {
     assert(run(4, 1) == base)
     assert(run(1, 7) == base)
     assert(run(4, 7) == base)
+    assert(run(32, 1) == base)
+    assert(run(32, 7) == base)
   }
 
   test("kNN job budget: at most 4 jobs per call when every query resolves") {

@@ -390,6 +390,43 @@ class StencilSpec extends AnyFunSuite {
     val di = Stencil(t, 1, 1, 1)(Stencil.morphKernel("dilate", 1)).head()
     assert(di.n_valid == 22 * 22)
   }
+
+  /** md5 of a stencil output: rows sorted by (image_id, tile_id), every
+    * field written with the payload by its raw float bits. */
+  def md5(ds: org.apache.spark.sql.Dataset[TileRow]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bytes)
+    ds.collect().sortBy(t => (t.image_id, t.tile_id)).foreach { t =>
+      out.writeUTF(t.image_id); out.writeLong(t.ts_us); out.writeLong(t.tile_id)
+      out.writeInt(t.tx); out.writeInt(t.ty); out.writeInt(t.n_valid)
+      out.writeBoolean(t.elided)
+      t.payload.foreach(v => out.writeInt(java.lang.Float.floatToRawIntBits(v)))
+    }
+    out.flush()
+    md.digest(bytes.toByteArray).map(b => f"$b%02x").mkString
+  }
+
+  test("stencil operator outputs on a fixed fixture match their pinned md5") {
+    // end to end through warp, halo exchange, frame assembly and n_valid
+    // (the kernel-level pins above take a hand-built frame); the images
+    // include NDV margins (every 5th) and three resolutions
+    val images = ImageTable.generate(spark, 10)
+    val target = Warp.analyze(images, "min", "union")
+    val (ntx, nty) = Warp.tileGrid(target)
+    val tiles = Warp.warpToTiles(spark, images, target, "bilinear").cache()
+    try {
+      val got = Map(
+        "gauss" -> md5(Stencil(tiles, ntx, nty, 4)(Stencil.gaussKernel(1.5))),
+        "gaussFill" -> md5(Stencil(tiles, ntx, nty, 4)(Stencil.gaussFillKernel(1.5))))
+      // taken before the kernels' NDV fills were unboxed; a change that
+      // moves an output on purpose updates its md5 and says so
+      val want = Map(
+        "gauss" -> "b859b879b9273f6da18ae91846104635",
+        "gaussFill" -> "4b6785146d16f9253c26ea568adf7acc")
+      assert(got == want)
+    } finally tiles.unpersist()
+  }
 }
 
 class RasterOpsSpec extends AnyFunSuite {
