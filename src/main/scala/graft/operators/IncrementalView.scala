@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.sources.{ParquetFiles, SnapshotTable}
@@ -135,35 +135,22 @@ private[operators] object IncrementalView {
                          prune: Seq[SnapshotTable.ColRange], src: DataFrame,
                          old: DataFrame, affected: Option[DataFrame])
                         (implicit enc: Encoder[V]): Unit = {
-    val tEnc = Encoders.product[TileRow]
-    // tagged union rows (_1 = tile_id, _2 = source TileRow | null,
-    // _3 = old view row | null, _4 = affected marker); the null legs
-    // deserialize to null tuple components
-    def leg(df: DataFrame, t: Column, o: Column, hit: Boolean) =
-      df.select(col("tile_id").cast("long").as("_1"), t.as("_2"), o.as("_3"),
-        lit(hit).as("_4"))
-    val noT = lit(null).cast(tEnc.schema)
-    val noO = lit(null).cast(enc.schema)
-    val legs = Seq(
-      leg(src, struct(tEnc.schema.fieldNames.map(col).toSeq: _*), noO, hit = false),
-      leg(old, noT, struct(enc.schema.fieldNames.map(col).toSeq: _*), hit = false)) ++
-      affected.map(leg(_, noT, noO, hit = true))
-    implicit val tup: Encoder[(Long, TileRow, V, Boolean)] =
-      Encoders.tuple(Encoders.scalaLong, tEnc, enc, Encoders.scalaBoolean)
-    // explicit width (shared with the batch folds): the compressed
-    // shuffle size would let AQE coalesce the decode-bound fold+combine
-    // to 1-2 tasks
-    val combined: Dataset[V] = StackOps.keyedRuns(
-        legs.reduce(_ unionByName _).as[(Long, TileRow, V, Boolean)],
-        StackOps.foldWidth(spark), "_1")(_._1) { (k, run) =>
+    implicit val tup: Encoder[(Long, TileRow, V)] =
+      Encoders.tuple(Encoders.scalaLong, Encoders.product[TileRow], enc)
+    // slot 1 = source row, slot 2 = old view row; an affected tile's
+    // marker row sets neither
+    val union = StackOps.taggedUnion[(Long, TileRow, V)]("tile_id",
+      Seq(src -> 0, old -> 1) ++ affected.map(_ -> -1): _*)
+    val combined: Dataset[V] = StackOps.keyedRuns(union, StackOps.foldWidth(spark), "_1")(
+        _._1) { (k, run) =>
       val agg = view.agg
       var b: B = null.asInstanceOf[B]   // fold buffer, once a row arrives
       var o: V = null.asInstanceOf[V]   // old view row, unique per key
       var hit = false
-      run.foreach { case (_, t, v, h) =>
+      run.foreach { case (_, t, v) =>
         if (t != null) b = agg.reduce(if (b == null) agg.zero else b, t)
-        if (v != null) o = v
-        hit ||= h
+        else if (v != null) o = v
+        else hit = true
       }
       Iterator.single(
         if (hit) view.pack(k, if (b == null) agg.zero else b)

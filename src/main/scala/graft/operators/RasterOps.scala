@@ -9,8 +9,9 @@ import graft.sources.{Codec, ImageRow, ImageTable}
 object RasterOps {
 
   /** Pixelwise difference of two aligned layers — the README flagship
-    * ("warp two rasters → difference → stats"): cogroup on tile_id, mask-OR
-    * null propagation (`common_mask` `malib.py:1295-1313`). Each side must
+    * ("warp two rasters → difference → stats"): one keyed exchange on
+    * tile_id over both sides (`StackOps.taggedUnion`), mask-OR null
+    * propagation (`common_mask` `malib.py:1295-1313`). Each side must
     * hold ONE layer per tile_id (enforced) — diffing raw stacks would emit
     * an |A|×|B| cross product per tile, not raster−raster semantics; reduce
     * stacks first (e.g. StackOps.compositeMean). */
@@ -19,11 +20,15 @@ object RasterOps {
                ndv: Float = ImageTable.Ndv): Dataset[TileRow] = {
     val spark = a.sparkSession
     import spark.implicits._
-    a.groupByKey(_.tile_id).cogroup(b.groupByKey(_.tile_id)) { (tid, ia, ib) =>
-      if (!ia.hasNext || !ib.hasNext) Iterator.empty
+    val union = StackOps.taggedUnion[(Long, TileRow, TileRow)]("tile_id",
+      a.toDF() -> 0, b.toDF() -> 1)
+    StackOps.keyedRuns(union, StackOps.foldWidth(spark), "_1")(_._1) { (tid, run) =>
+      val rows = run.toSeq
+      val as = rows.flatMap(r => Option(r._2)); val bs = rows.flatMap(r => Option(r._3))
+      if (as.isEmpty || bs.isEmpty) Iterator.empty
       else {
-        val ta = ia.next(); val tb = ib.next()
-        require(!ia.hasNext && !ib.hasNext,
+        val ta = as.head; val tb = bs.head
+        require(as.size == 1 && bs.size == 1,
           s"tileDiff: multiple layers per side for tile_id $tid — reduce each " +
           "side to one composite layer first (StackOps.compositeMean)")
         val out = new Array[Float](ta.payload.length)

@@ -8,16 +8,20 @@ import graft.sources.{Codec, ImageRow, ImageTable}
 /** Point sampling of rasters — `sample` `geolib.py:914-1016`: map the point
   * into each overlapping image, read a (2·pad+1)² window, aggregate it by
   * median + NMAD, and null the sample when the window's valid fraction is
-  * below `minSampPerc` (`geolib.py:953-954`, default 50 %).
+  * below `minSampPerc` (`geolib.py:953-954`, default 50 %) or holds no
+  * valid pixel at all (the reference masks such samples).
   *
   * Join shape: images flatMap to covering cells of their extent — METADATA
   * ONLY, (cell_id, image_id) — points map to one cell, equi join on cell,
-  * then the matched (point, image) pairs cogroup with the image table by
-  * image_id. The binary payload is shuffled exactly once per image (never
-  * per covering cell, never per matched point) and decoded once per image
-  * group; the exact extent-containment refine (`pt_within_extent`
-  * `geolib.py:1332-1335`) and the window read run inside the cogroup. */
+  * then the matched (point, image) pairs and the images meet in one keyed
+  * exchange on image_id (`StackOps.taggedUnion`). The binary payload is
+  * shuffled exactly once per image (never per covering cell, never per
+  * matched point). Each image's run holds its points until the image row
+  * arrives, then refines them (`pt_within_extent` `geolib.py:1332-1335`)
+  * and decodes the image at most once, only when a point falls inside. */
 object Sampling {
+  final case class Probe(pt_id: String, x: Double, y: Double)
+
   def pointSample(spark: SparkSession, points: DataFrame, images: DataFrame,
                   cellSize: Double = 256.0, pad: Int = 1,
                   minSampPerc: Double = 0.5): DataFrame = {
@@ -38,21 +42,19 @@ object Sampling {
     // a point lies in exactly one cell and an image covers a cell at most
     // once, so the pair set is duplicate-free by construction
     val pairs = pts.join(imgCells, Seq("cell_id"))
-      .select(col("image_id"), col("pt_id"), col("x"), col("y"))
-      .as[(String, String, Double, Double)]
-      .groupByKey(_._1)
 
-    val imgGroups = images.as[ImageRow].groupByKey(_.image_id)
-
-    imgGroups.cogroup(pairs) { (_, imgIt, ptIt) =>
-      if (!imgIt.hasNext) Iterator.empty
+    val union = StackOps.taggedUnion[(String, ImageRow, Probe)]("image_id", images -> 0, pairs -> 1)
+    StackOps.keyedRuns(union, StackOps.foldWidth(spark), "_1")(_._1) { (_, run) =>
+      var img: ImageRow = null
+      val held = scala.collection.mutable.ArrayBuffer.empty[Probe]
+      run.foreach { case (_, i, p) => if (i != null) img = i else held += p }
+      if (img == null) Iterator.empty
       else {
-        val img = imgIt.next()
         val w = img.w; val h = img.h
         val ndv = img.ndv
         val g = GridSpec(img.ulx, img.uly, img.res, "", w, h)
-        var px: Array[Float] = null // decoded lazily, once per image group
-        ptIt.flatMap { case (_, ptId, x, y) =>
+        var px: Array[Float] = null // decoded lazily, once per image run
+        held.iterator.flatMap { case Probe(ptId, x, y) =>
           if (!g.extent.containsPoint(x, y)) None
           else {
             if (px == null) px = Codec.decode(img.bytes, w, h, img.fmt, ndv.toFloat)
@@ -73,7 +75,7 @@ object Sampling {
               }
               dy += 1
             }
-            if (vals.size < minSampPerc * total) None
+            if (vals.isEmpty || vals.size < minSampPerc * total) None
             else {
               val sorted = vals.sorted
               val n = sorted.size

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.sources.ImageTable
 
 /** Per-pixel stack statistics over aligned tiles — `compute_stats`
@@ -10,7 +11,7 @@ import graft.sources.ImageTable
   * per-pixel OLS trend `ma_linreg` `malib.py:999-1171`.
   *
   * Scale design: the time axis aggregates with VECTOR buffers (one
-  * groupBy(tile_id) row per tile, buffer = per-pixel running sums) instead of
+  * keyed run per tile, buffer = per-pixel running sums) instead of
   * exploding to (cell, value) rows — a 4096× reduction in shuffled rows, the
   * Spark analog of the reference's batched `linalg.solve` over pixel columns
   * (`malib.py:1076-1092`). The explode path (`toCells`) exists for exact
@@ -83,39 +84,26 @@ object StackOps {
     def outputEncoder: Encoder[TileStats] = Encoders.product[TileStats]
   }
 
-  /** ONE-shuffle vector fold: co-locate rows by tile, sort each partition
-    * by tile_id, and stream one complete group at a time through the
-    * aggregator. Rationale: Spark's own hash aggregation holds every
-    * group's vector buffer simultaneously and spills (measured 5× slower
-    * in round 1); the earlier two-phase form (per-partition LRU partials +
-    * a groupByKey merge) became vestigial once the fold co-located rows by
-    * tile — with every row of a tile in one partition each partial IS the
-    * final buffer, yet the merge still paid a second Exchange of the fat
-    * 100-300 KB buffers plus their per-element encoder round-trip. The
-    * local sort makes each tile one contiguous run, so a single live
-    * buffer per task suffices and finished rows stream straight out
-    * (guide §2.4 — remove shuffles outright). Fold order changes with
-    * partitioning either way; outputs are order-independent on the
-    * engine's exact-sum payloads (integer-valued floats, dyadic time), as
-    * the strict oracle gate checks at two CPU counts. */
-  /** Explicit width for the CPU-bound vector-fold stages (shared with the
-    * incremental views' fused refresh): never below the machine's
-    * parallelism, because the ~100-200× compressed shuffle size would let
-    * AQE coalesce a decode-bound fold to 1-2 tasks. */
-  private[operators] def foldWidth(spark: SparkSession): Int =
+  /** Explicit width for the CPU-bound keyed walks: never below the
+    * machine's parallelism, because the ~100-200× compressed shuffle size
+    * of a decode-bound fold would let AQE coalesce it to 1-2 tasks (the
+    * same pathology as the catalog scans). */
+  private[graft] def foldWidth(spark: SparkSession): Int =
     math.max(spark.sparkContext.defaultParallelism,
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
+  /** ONE-shuffle vector fold: one keyed run per tile through the
+    * aggregator, so a single live buffer per task suffices and finished
+    * rows stream straight out. Spark's own hash aggregation holds every
+    * group's vector buffer at once and spills (measured 5× slower in round
+    * 1); the raw-row shuffle is small (payloads compress well), so guide
+    * §2.3's "shuffle fewer bytes" means shuffling rows, not buffers. Fold
+    * order changes with partitioning; outputs are order-independent on the
+    * engine's exact-sum payloads (integer-valued floats, dyadic time), as
+    * the strict oracle gate checks at two CPU counts. */
   private[operators] def partialFold[B, O: Encoder](
       tiles: Dataset[TileRow], agg: Aggregator[TileRow, B, _])(
       finish: (Long, B) => O): Dataset[O] =
-    // explicit partition count (not AQE-advisory-sized): the fold is
-    // CPU-bound per DECODED byte, and the ~100-200× compressed shuffle
-    // size would coalesce it to 1-2 tasks (same pathology as the catalog
-    // scans). A tile's rows land in one partition regardless of count —
-    // one buffer per tile exists in total; the raw-row shuffle is small
-    // (payloads compress well) — guide §2.3's "shuffle fewer bytes" here
-    // means shuffling rows, not buffers.
     keyedRuns(tiles, foldWidth(tiles.sparkSession), "tile_id")(_.tile_id) { (tid, run) =>
       var b = agg.zero
       run.foreach(t => b = agg.reduce(b, t))
@@ -125,14 +113,34 @@ object StackOps {
   /** The one keyed exchange: repartition `ds` to exactly `width`
     * partitions on `keyCols`, sort each partition by them, and map every
     * run of rows with an equal `key` through `f(key, run)` to its output
-    * rows — one run live per task. Serves the batch fold, the views' fused
-    * refresh, the stencil frame assembly and the kNN block solve; `key`
-    * must be the value of `keyCols`. */
-  private[operators] def keyedRuns[T, K, O: Encoder](ds: Dataset[T], width: Int,
+    * rows — one run live per task; row order within a run is arbitrary.
+    * Serves every batch grouping: the stack folds, the stencil, the kNN
+    * block solve, the Butterworth folds (q80, q87) and, over a
+    * [[taggedUnion]], `tileDiff`, `pointSample` and the view refresh;
+    * `key` must be the value of `keyCols`. */
+  private[graft] def keyedRuns[T, K, O: Encoder](ds: Dataset[T], width: Int,
       keyCols: String*)(key: T => K)(f: (K, Iterator[T]) => IterableOnce[O]): Dataset[O] = {
     val cols = keyCols.map(col)
     ds.repartition(width, cols: _*).sortWithinPartitions(cols: _*)
       .mapPartitions((it: Iterator[T]) => sortedRuns(it)(key)(f))
+  }
+
+  /** The tagged union of several inputs that share the key column `key`,
+    * as `_1`: one [[keyedRuns]] on "_1" over it is one exchange, whatever
+    * the number of inputs. `T` is a tuple (key, slot 1, …, slot n) whose
+    * slots are case classes. A leg `(df, i)` puts each row's slot-i
+    * columns in slot i and null in every other slot, so a run's row names
+    * its input by the slot that is set; a leg `(df, -1)` fills no slot,
+    * and its rows only mark their key. */
+  private[graft] def taggedUnion[T](key: String, legs: (DataFrame, Int)*)(
+      implicit enc: Encoder[T]): Dataset[T] = {
+    val slots = enc.schema.fields.toSeq.tail.map(_.dataType.asInstanceOf[StructType])
+    legs.map { case (df, at) =>
+      df.select(col(key).as("_1") +: slots.zipWithIndex.map { case (s, i) =>
+        (if (i == at) struct(s.fieldNames.toSeq.map(col): _*) else lit(null).cast(s))
+          .as(s"_${i + 2}")
+      }: _*)
+    }.reduce(_ unionByName _).as[T]
   }
 
   /** The runs of equal keys in a key-sorted iterator, each mapped through
@@ -193,7 +201,7 @@ object StackOps {
     val spark = tiles.sparkSession
     import spark.implicits._
     val len = tileSize * tileSize
-    tiles.groupByKey(_.tile_id).mapGroups { (tid, it) =>
+    keyedRuns(tiles, foldWidth(spark), "tile_id")(_.tile_id) { (tid, it) =>
       val sum = new Array[Double](len); val cnt = new Array[Int](len)
       var tx = 0; var ty = 0; var ts = Long.MaxValue
       it.foreach { t =>
@@ -211,8 +219,9 @@ object StackOps {
         if (cnt(i) > 0) { out(i) = (sum(i) / cnt(i)).toFloat; n += 1 } else out(i) = ndv
         i += 1
       }
-      TileRow(label, ts, tid, tx, ty, out, n, elided = false)
-    }.filter(_.n_valid > 0)
+      if (n == 0) Iterator.empty
+      else Iterator.single(TileRow(label, ts, tid, tx, ty, out, n, elided = false))
+    }
   }
 
   final case class TrendBuf(var n: Int, cnt: Array[Int], st: Array[Double],
@@ -491,29 +500,26 @@ object StackOps {
   def theilSen(cells: DataFrame, nThresh: Int = 2): DataFrame = {
     val spark = cells.sparkSession
     import spark.implicits._
-    cells.select(col("cell_id"), col("ts_us"), col("v"))
-      .as[(Long, Long, Float)]
-      .groupByKey(_._1)
-      .mapGroups { (cell, it) =>
-        val pts = it.map(r => (r._2 / 86400e6, r._3.toDouble)).toArray
-        if (pts.length < nThresh || pts.map(_._1).distinct.length < 2) {
-          (cell, pts.length, Double.NaN, Double.NaN)
-        } else {
-          val slopes = for {
-            i <- pts.indices; j <- (i + 1) until pts.length
-            if pts(j)._1 != pts(i)._1
-          } yield (pts(j)._2 - pts(i)._2) / (pts(j)._1 - pts(i)._1)
-          val ss = slopes.sorted
-          val slope = if (ss.length % 2 == 1) ss(ss.length / 2)
-                      else (ss(ss.length / 2 - 1) + ss(ss.length / 2)) / 2
-          // intercept = median(y - slope*t), the standard Theil-Sen form
-          val ic = pts.map { case (t, y) => y - slope * t }.sorted
-          val icpt = if (ic.length % 2 == 1) ic(ic.length / 2)
-                     else (ic(ic.length / 2 - 1) + ic(ic.length / 2)) / 2
-          (cell, pts.length, slope * 365.25, icpt)
-        }
-      }
-      .toDF("cell_id", "n", "slope_yr", "intercept")
+    keyedRuns(cells.select(col("cell_id"), col("ts_us"), col("v")).as[(Long, Long, Float)],
+        foldWidth(spark), "cell_id")(_._1) { (cell, it) =>
+      val pts = it.map(r => (r._2 / 86400e6, r._3.toDouble)).toArray
+      Iterator.single(if (pts.length < nThresh || pts.map(_._1).distinct.length < 2) {
+        (cell, pts.length, Double.NaN, Double.NaN)
+      } else {
+        val slopes = for {
+          i <- pts.indices; j <- (i + 1) until pts.length
+          if pts(j)._1 != pts(i)._1
+        } yield (pts(j)._2 - pts(i)._2) / (pts(j)._1 - pts(i)._1)
+        val ss = slopes.sorted
+        val slope = if (ss.length % 2 == 1) ss(ss.length / 2)
+                    else (ss(ss.length / 2 - 1) + ss(ss.length / 2)) / 2
+        // intercept = median(y - slope*t), the standard Theil-Sen form
+        val ic = pts.map { case (t, y) => y - slope * t }.sorted
+        val icpt = if (ic.length % 2 == 1) ic(ic.length / 2)
+                   else (ic(ic.length / 2 - 1) + ic(ic.length / 2)) / 2
+        (cell, pts.length, slope * 365.25, icpt)
+      })
+    }.toDF("cell_id", "n", "slope_yr", "intercept")
   }
 
   /** RANSAC per-cell line fit — the `ma_linreg` robust variant
@@ -533,56 +539,53 @@ object StackOps {
       z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
       z ^ (z >>> 31)
     }
-    cells.select(col("cell_id"), col("ts_us"), col("v"))
-      .as[(Long, Long, Float)]
-      .groupByKey(_._1)
-      .mapGroups { (cell, it) =>
-        val pts = it.map(r => (r._2 / 86400e6, r._3.toDouble)).toArray
-          .sortBy(p => (p._1, p._2)) // deterministic order independent of shuffle
-        val n = pts.length
-        if (n < nThresh || pts.map(_._1).distinct.length < 2) {
+    keyedRuns(cells.select(col("cell_id"), col("ts_us"), col("v")).as[(Long, Long, Float)],
+        foldWidth(spark), "cell_id")(_._1) { (cell, it) =>
+      val pts = it.map(r => (r._2 / 86400e6, r._3.toDouble)).toArray
+        .sortBy(p => (p._1, p._2)) // deterministic order independent of shuffle
+      val n = pts.length
+      Iterator.single(if (n < nThresh || pts.map(_._1).distinct.length < 2) {
+        (cell, n, Double.NaN, Double.NaN, 0)
+      } else {
+        val ys = pts.map(_._2).sorted
+        val med = if (n % 2 == 1) ys(n / 2) else (ys(n / 2 - 1) + ys(n / 2)) / 2
+        val devs = pts.map(p => math.abs(p._2 - med)).sorted
+        val mad = if (n % 2 == 1) devs(n / 2) else (devs(n / 2 - 1) + devs(n / 2)) / 2
+        val thr = math.max(absThresh, math.max(1.4826 * mad, 1e-9))
+        var bestInliers: Array[Int] = null
+        var t = 0
+        while (t < trials) {
+          val i = (math.floorMod(mix(cell * 1000003L + t), n.toLong)).toInt
+          var j = (math.floorMod(mix(cell * 998244353L + t * 31L + 7L), n.toLong)).toInt
+          if (j == i) j = (j + 1) % n
+          if (pts(i)._1 != pts(j)._1) {
+            val sl = (pts(j)._2 - pts(i)._2) / (pts(j)._1 - pts(i)._1)
+            val ic = pts(i)._2 - sl * pts(i)._1
+            val inl = (0 until n).filter(q =>
+              math.abs(pts(q)._2 - (sl * pts(q)._1 + ic)) <= thr).toArray
+            if (bestInliers == null || inl.length > bestInliers.length)
+              bestInliers = inl
+          }
+          t += 1
+        }
+        if (bestInliers == null || bestInliers.length < nThresh) {
           (cell, n, Double.NaN, Double.NaN, 0)
         } else {
-          val ys = pts.map(_._2).sorted
-          val med = if (n % 2 == 1) ys(n / 2) else (ys(n / 2 - 1) + ys(n / 2)) / 2
-          val devs = pts.map(p => math.abs(p._2 - med)).sorted
-          val mad = if (n % 2 == 1) devs(n / 2) else (devs(n / 2 - 1) + devs(n / 2)) / 2
-          val thr = math.max(absThresh, math.max(1.4826 * mad, 1e-9))
-          var bestInliers: Array[Int] = null
-          var t = 0
-          while (t < trials) {
-            val i = (math.floorMod(mix(cell * 1000003L + t), n.toLong)).toInt
-            var j = (math.floorMod(mix(cell * 998244353L + t * 31L + 7L), n.toLong)).toInt
-            if (j == i) j = (j + 1) % n
-            if (pts(i)._1 != pts(j)._1) {
-              val sl = (pts(j)._2 - pts(i)._2) / (pts(j)._1 - pts(i)._1)
-              val ic = pts(i)._2 - sl * pts(i)._1
-              val inl = (0 until n).filter(q =>
-                math.abs(pts(q)._2 - (sl * pts(q)._1 + ic)) <= thr).toArray
-              if (bestInliers == null || inl.length > bestInliers.length)
-                bestInliers = inl
-            }
-            t += 1
-          }
-          if (bestInliers == null || bestInliers.length < nThresh) {
-            (cell, n, Double.NaN, Double.NaN, 0)
-          } else {
-            // OLS refit over the winning inlier set
-            val sel = bestInliers.map(pts)
-            val m = sel.length.toDouble
-            val st = sel.map(_._1).sum; val sy = sel.map(_._2).sum
-            val stt = sel.map(p => p._1 * p._1).sum
-            val sty = sel.map(p => p._1 * p._2).sum
-            val det = m * stt - st * st
-            if (det == 0.0) (cell, n, Double.NaN, Double.NaN, sel.length)
-            else {
-              val sl = (m * sty - st * sy) / det
-              (cell, n, sl * 365.25, (sy - sl * st) / m, sel.length)
-            }
+          // OLS refit over the winning inlier set
+          val sel = bestInliers.map(pts)
+          val m = sel.length.toDouble
+          val st = sel.map(_._1).sum; val sy = sel.map(_._2).sum
+          val stt = sel.map(p => p._1 * p._1).sum
+          val sty = sel.map(p => p._1 * p._2).sum
+          val det = m * stt - st * st
+          if (det == 0.0) (cell, n, Double.NaN, Double.NaN, sel.length)
+          else {
+            val sl = (m * sty - st * sy) / det
+            (cell, n, sl * 365.25, (sy - sl * st) / m, sel.length)
           }
         }
-      }
-      .toDF("cell_id", "n", "slope_yr", "intercept", "n_inliers")
+      })
+    }.toDF("cell_id", "n", "slope_yr", "intercept", "n_inliers")
   }
 
   /** Stack clip by cell-range predicate — `stack_clip` `malib.py:733-816`:

@@ -20,7 +20,7 @@ import org.apache.spark.sql.GraftSqlBridge
   *
   * Why a custom plan: the window-function form materializes |L_k|·|R_k|
   * pairs per key before ranking (quadratic in hot keys). This operator
-  * cogroups the two sides once, sorts the right side per key, and resolves
+  * co-partitions the two sides once, sorts the right side per key, and resolves
   * each left row with one binary search — O((|L_k|+|R_k|) log |R_k|) per
   * key, the shape that survives hot users at 100 TB. */
 final case class AsOfJoinNode(left: LogicalPlan, right: LogicalPlan,

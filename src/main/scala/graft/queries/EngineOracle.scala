@@ -88,7 +88,7 @@ object EngineOracle {
       .select(col("px"), col("py"), col("v").cast("double").as("diff"))
   }
 
-  /** q50 oracle form: the production point-sampling cogroup join over the
+  /** q50 oracle form: the production point-sampling join over the
     * quantized subset (window median + NMAD are exact on integer payloads). */
   def sampleCells(s: SparkSession, d: String): DataFrame =
     Sampling.pointSample(s,

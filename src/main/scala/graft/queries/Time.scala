@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.operators.StackOps
 
 /** timelib scalar/function coverage (`timelib.py:455-580`) and the plane-fit
   * family (`geolib.py:1811-1914`), each with a DuckDB oracle twin. */
@@ -182,30 +183,29 @@ object Time {
     * ButterworthSpec) so the oracle can replay the identical IEEE-double
     * recursion from the same coefficient literals.
     *
-    * Scale shape: one `flatMapGroups` fold per user — task state is a
-    * single user's series, the same bounded-group contract as the
-    * reference's 1-D API and the stack trend folds. No shuffle beyond the
-    * groupBy on user_id. */
+    * Scale shape: one keyed run per user (`StackOps.keyedRuns`) — task
+    * state is a single user's series, the same bounded-group contract as
+    * the reference's 1-D API and the stack trend folds. No shuffle beyond
+    * the one exchange on user_id. */
   def butterLow(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val c = graft.functions.Butterworth.lowpass(3, 0.1)
-    ev(s, d).select(col("user_id"), col("event_id"), tUs(col("ts")).as("t_us"), col("value"))
+    val events = ev(s, d)
+      .select(col("user_id"), col("event_id"), tUs(col("ts")).as("t_us"), col("value"))
       .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (uid, it) =>
-        val rows = it.toArray.sortBy(r => (r._3, r._2))
-        // domain restriction, mirrored by `cnt >= 13` in the twin: series
-        // shorter than padlen+1 = 13 use scipy-style clamped padding, whose
-        // variable pad length the fixed-depth SQL recursion cannot replay —
-        // they are SKIPPED here (not crashed into: filtfilt itself handles
-        // them, see ButterworthSpec's short-series cases)
-        if (rows.length < 13) Iterator.empty
-        else {
-          val y = graft.functions.Butterworth.filtfilt(c, rows.map(_._4))
-          rows.indices.iterator.map(i => (uid, rows(i)._3, y(i)))
-        }
+    StackOps.keyedRuns(events, StackOps.foldWidth(s), "user_id")(_._1) { (uid, it) =>
+      val rows = it.toArray.sortBy(r => (r._3, r._2))
+      // domain restriction, mirrored by `cnt >= 13` in the twin: series
+      // shorter than padlen+1 = 13 use scipy-style clamped padding, whose
+      // variable pad length the fixed-depth SQL recursion cannot replay —
+      // they are SKIPPED here (not crashed into: filtfilt itself handles
+      // them, see ButterworthSpec's short-series cases)
+      if (rows.length < 13) Iterator.empty
+      else {
+        val y = graft.functions.Butterworth.filtfilt(c, rows.map(_._4))
+        rows.indices.iterator.map(i => (uid, rows(i)._3, y(i)))
       }
-      .toDF("user_id", "t_us", "v_filt")
+    }.toDF("user_id", "t_us", "v_filt")
   }
 
   /** q87 — `butter` (filtlib.py:509-563), the band-split framework the
@@ -218,21 +218,20 @@ object Time {
     import s.implicits._
     val hp = graft.functions.Butterworth.highpass(3, 0.2)
     val lp = graft.functions.Butterworth.lowpass(3, 0.5)
-    ev(s, d).select(col("user_id"), col("event_id"), tUs(col("ts")).as("t_us"), col("value"))
+    val events = ev(s, d)
+      .select(col("user_id"), col("event_id"), tUs(col("ts")).as("t_us"), col("value"))
       .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (uid, it) =>
-        val rows = it.toArray.sortBy(r => (r._3, r._2))
-        if (rows.length < 13) Iterator.empty
-        else {
-          val x = rows.map(_._4)
-          val tide = graft.functions.Butterworth.filtfilt(hp, x)
-          val dn = graft.functions.Butterworth.filtfilt(lp, tide)
-          rows.indices.iterator.map(i =>
-            (uid, rows(i)._3, tide(i), x(i) - tide(i), dn(i)))
-        }
+    StackOps.keyedRuns(events, StackOps.foldWidth(s), "user_id")(_._1) { (uid, it) =>
+      val rows = it.toArray.sortBy(r => (r._3, r._2))
+      if (rows.length < 13) Iterator.empty
+      else {
+        val x = rows.map(_._4)
+        val tide = graft.functions.Butterworth.filtfilt(hp, x)
+        val dn = graft.functions.Butterworth.filtfilt(lp, tide)
+        rows.indices.iterator.map(i =>
+          (uid, rows(i)._3, tide(i), x(i) - tide(i), dn(i)))
       }
-      .toDF("user_id", "t_us", "v_tide", "v_notide", "v_dn")
+    }.toDF("user_id", "t_us", "v_tide", "v_notide", "v_dn")
   }
 
   private def dlit(x: Double) = s"CAST('${x.toString}' AS DOUBLE)"

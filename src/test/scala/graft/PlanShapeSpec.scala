@@ -1,16 +1,21 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import graft.operators.TestSpark
 
 /** CI guard for the executed-plan shapes the 100 TB design rests on
   * (BENCH.md §6):
   *  - the LSH/banded pair joins must never regress to a nested-loop or
   *    cartesian shape, and the ANN paths must carry no Scala UDF;
-  *  - scans must prune columns and push filters down to parquet.
+  *  - scans must prune columns and push filters down to parquet;
+  *  - batch groupings run on `StackOps.keyedRuns`, never on typed
+  *    `groupByKey`/`cogroup` nodes.
   * Runs the real queries at sf0.001 so AQE's FINAL plan is inspected, not
   * the initial one. */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
 
@@ -37,6 +42,37 @@ class PlanShapeSpec extends AnyFunSuite {
       // IvfProbe), never a ScalaUDF (BENCH.md §6 records UDF=false)
       if (name.contains("_ann_"))
         assert(!plan.contains("UDF"), s"$name planned a UDF")
+    }
+  }
+
+  test("batch groupings plan no typed-grouping node, and a tagged union takes one exchange") {
+    // whether `p` reads a Union before it reaches another exchange
+    def readsUnion(p: SparkPlan): Boolean = p match {
+      case _: ShuffleExchangeLike | _: QueryStageExec => false
+      case _ => p.nodeName == "Union" || p.children.exists(readsUnion)
+    }
+    for ((name, df) <- Seq(
+        ("q47_diff_stats", queries.EngineOracle.diffCells(spark, sf)),
+        ("q50_point_sample", queries.EngineOracle.sampleCells(spark, sf)),
+        ("q76_theilsen_cells", queries.EngineOracle.theilSenCells(spark, sf)),
+        ("q80_butter_low", queries.Time.butterLow(spark, sf)),
+        ("q87_butter_band", queries.Time.butterBand(spark, sf)),
+        ("q98_ransac_exact", queries.EngineOracle.ransacCells(spark, sf)))) {
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      // flatMapGroups plans as MapGroups; AppendColumns covers the
+      // WithObject form too
+      val typed = collect(plan) {
+        case p if Seq("AppendColumns", "MapGroups", "CoGroup").exists(p.nodeName.startsWith) =>
+          p.nodeName
+      }
+      assert(typed.isEmpty, s"$name planned $typed")
+      // the two-input walks (q47's diff, q50's sample) shuffle their legs
+      // together: one exchange over the union, none per leg
+      if (name == "q47_diff_stats" || name == "q50_point_sample") {
+        val overUnion = collect(plan) { case e: ShuffleExchangeLike if readsUnion(e.child) => e }
+        assert(overUnion.size == 1, s"$name: ${overUnion.size} exchanges over a union\n$plan")
+      }
     }
   }
 

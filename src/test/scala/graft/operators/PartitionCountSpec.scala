@@ -47,6 +47,9 @@ class PartitionCountSpec extends AnyFunSuite {
       val tiles = Warp.warpToTiles(spark, images, target, "near").cache()
       // the hot polygon covers every tile, so the clip leaves it out
       val clipPolys = polys.filter(col("poly_id") =!= "poly_00003")
+      val half = (p: Int) => tiles.filter(idx % 2 === p)
+      val cells = StackOps.toCells(
+        StackOps.stackClip(tiles, ntx / 2 - 1, nty / 2 - 1, ntx / 2, nty / 2))
       try Map(
         "tiles" -> canon(tiles.toDF()),
         "stats" -> canon(StackOps.stackStats(tiles).toDF()),
@@ -54,7 +57,12 @@ class PartitionCountSpec extends AnyFunSuite {
         "gauss" -> canon(Stencil(tiles, ntx, nty, 4)(Stencil.gaussKernel(1.5)).toDF()),
         "clip" -> canon(SpatialJoin.clipTiles(spark, tiles, clipPolys, target).toDF()),
         "pip" -> canon(SpatialJoin.pipJoin(spark, points, polys).select("pt_id", "poly_id")),
-        "heat" -> canon(SpatialJoin.heatmap(spark, polys)))
+        "heat" -> canon(SpatialJoin.heatmap(spark, polys)),
+        "diff" -> canon(RasterOps.tileDiff(StackOps.compositeMean(half(0), label = "a"),
+          StackOps.compositeMean(half(1), label = "b")).toDF()),
+        "theilsen" -> canon(StackOps.theilSen(cells)),
+        "ransac" -> canon(StackOps.ransac(cells)),
+        "sample" -> canon(Sampling.pointSample(spark, points, images)))
       finally tiles.unpersist()
     }
 

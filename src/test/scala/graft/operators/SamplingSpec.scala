@@ -32,7 +32,7 @@ class SamplingSpec extends AnyFunSuite {
     val images = ImageTable.generate(spark, 40).cache(); images.count()
     val payloadBytes = images.select(sum(length(col("bytes")))).head().getLong(0)
     // many points per image: the old shape shipped bytes per covering cell
-    // AND per matched point; the cogroup ships each image's bytes once
+    // AND per matched point; the keyed exchange ships each image's bytes once
     val pts = graft.sources.PolygonTable.points(spark, 4000)
     var n = 0L
     val shuffleWrite = TestSpark.usage {
@@ -55,9 +55,13 @@ class SamplingSpec extends AnyFunSuite {
       ("outside", g.ulx - 5000.0, g.uly + 5000.0),
       ("in_margin", g.pixelToMap(0.0, 0.0)._1, g.pixelToMap(0.0, 0.0)._2)
     ).toDF("pt_id", "x", "y")
-    val got = Sampling.pointSample(spark, pts, images, pad = 1, minSampPerc = 0.5)
-      .collect().map(_.getString(0)).toSet
-    assert(got == Set("inside"))   // margin window <50% valid → dropped
+    // the in_margin window holds no valid pixel: dropped below 50 %, and
+    // dropped (not a median of nothing) with no threshold at all
+    for (perc <- Seq(0.5, 0.0)) {
+      val got = Sampling.pointSample(spark, pts, images, pad = 1, minSampPerc = perc)
+        .collect().map(_.getString(0)).toSet
+      assert(got == Set("inside"), s"minSampPerc $perc")
+    }
   }
 
   test("profile: line densification with remainder carry (geolib.py:1018-1098)") {
