@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geo.{Extent, GridSpec, Polygon, Ring, Wkb}
-import graft.sources.{Codec, ImageRow, ImageTable}
+import graft.sources.{Codec, ImageRow}
+import graft.sources.ImageTable.Ndv
 
 /** Per-image / pairwise raster operators. */
 object RasterOps {
@@ -15,9 +16,7 @@ object RasterOps {
     * hold ONE layer per tile_id (enforced) — diffing raw stacks would emit
     * an |A|×|B| cross product per tile, not raster−raster semantics; reduce
     * stacks first (e.g. StackOps.compositeMean). */
-  def tileDiff(a: Dataset[TileRow], b: Dataset[TileRow],
-               tileSize: Int = Warp.TileSize,
-               ndv: Float = ImageTable.Ndv): Dataset[TileRow] = {
+  def tileDiff(a: Dataset[TileRow], b: Dataset[TileRow]): Dataset[TileRow] = {
     val spark = a.sparkSession
     import spark.implicits._
     val union = StackOps.taggedUnion[(Long, TileRow, TileRow)]("tile_id",
@@ -36,7 +35,7 @@ object RasterOps {
         var i = 0
         while (i < out.length) {
           val va = ta.payload(i); val vb = tb.payload(i)
-          if (va != ndv && vb != ndv) { out(i) = va - vb; n += 1 } else out(i) = ndv
+          if (va != Ndv && vb != Ndv) { out(i) = va - vb; n += 1 } else out(i) = Ndv
           i += 1
         }
         if (n == 0) Iterator.empty
@@ -48,9 +47,8 @@ object RasterOps {
 
   /** Global stats of a tile set (the reference's post-diff `print_stats`):
     * one-row count/mean/std/min/max/med/nmad via the explode path. */
-  def tileStats(tiles: Dataset[TileRow], tileSize: Int = Warp.TileSize,
-                ndv: Float = ImageTable.Ndv): DataFrame = {
-    val cells = StackOps.toCells(tiles, tileSize, ndv)
+  def tileStats(tiles: Dataset[TileRow]): DataFrame = {
+    val cells = StackOps.toCells(tiles)
     val med = cells.agg(expr("percentile(v, 0.5)").as("med"))
     cells.crossJoin(med).agg(
       count(lit(1)).as("cnt"),
@@ -459,8 +457,8 @@ object RasterOps {
 
   /** dz filter — `dz_fltr_ma` `filtlib.py:411-441`: mask src pixels where
     * |src − ref| is outside [lo, hi]; join on tile_id. */
-  def dzFilter(src: Dataset[TileRow], ref: Dataset[TileRow], lo: Double, hi: Double,
-               ndv: Float = ImageTable.Ndv): Dataset[TileRow] = {
+  def dzFilter(src: Dataset[TileRow], ref: Dataset[TileRow], lo: Double,
+               hi: Double): Dataset[TileRow] = {
     val spark = src.sparkSession
     import spark.implicits._
     src.joinWith(ref, src("tile_id") === ref("tile_id"), "inner").map { case (ts, tr) =>
@@ -468,10 +466,10 @@ object RasterOps {
       var n = 0
       var i = 0
       while (i < out.length) {
-        if (out(i) != ndv) {
+        if (out(i) != Ndv) {
           val r = tr.payload(i)
-          val dz = if (r == ndv) Double.NaN else math.abs(out(i) - r)
-          if (dz.isNaN || dz < lo || dz > hi) out(i) = ndv else n += 1
+          val dz = if (r == Ndv) Double.NaN else math.abs(out(i) - r)
+          if (dz.isNaN || dz < lo || dz > hi) out(i) = Ndv else n += 1
         }
         i += 1
       }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geo.{Extent, MultiPolygon, PlanarCell, Wkb}
-import graft.sources.ImageTable
+import graft.sources.ImageTable.Ndv
 
 /** Point/tile ⋈ polygon spatial join — the `raster_shpclip` /
   * `shp2array` pipeline (`geolib.py:635-753`) re-expressed as a covering-cell
@@ -112,15 +112,15 @@ object SpatialJoin {
     * layer in the stack (the stack has n_layers tiles per tile_id). */
   def clipTiles(spark: SparkSession, tiles: org.apache.spark.sql.Dataset[TileRow],
                 polys: DataFrame, target: graft.geo.GridSpec,
-                tileSize: Int = Warp.TileSize, invert: Boolean = false,
-                ndv: Float = ImageTable.Ndv): org.apache.spark.sql.Dataset[TileRow] = {
+                invert: Boolean = false): org.apache.spark.sql.Dataset[TileRow] = {
     import spark.implicits._
     // polygons map straight onto the TARGET's tile grid (no intermediate
     // cell join, and `tiles` is consumed exactly once — re-deriving the
     // tile-id set from the stack would re-run the upstream warp)
     val ulx = target.ulx; val uly = target.uly; val res = target.res
-    val (ntx, nty) = Warp.tileGrid(target, tileSize)
-    val cs = tileSize * res
+    val (ntx, nty) = Warp.tileGrid(target)
+    val T = Warp.TileSize
+    val cs = T * res
     val cands = polys.select("poly_id", "geom_wkb", "xmin", "ymin", "xmax", "ymax")
       .flatMap { r =>
         val wkb = r.getAs[Array[Byte]](1)
@@ -149,7 +149,7 @@ object SpatialJoin {
           if (wkbs == null) {
             // no candidate polygons: all pixels are "outside"
             if (invert) Some(TileRow(imageId, tsUs, tileId, tx, ty, payload0,
-              Pixels.countNot(payload0, ndv), elided = false))
+              Pixels.countNot(payload0, Ndv), elided = false))
             else None
           } else {
             var geoms = geomCache.get(tileId)
@@ -160,11 +160,11 @@ object SpatialJoin {
             }
             var mask = maskCache.get(tileId)
             if (mask == null) {
-              mask = new Array[Boolean](tileSize * tileSize)
+              mask = new Array[Boolean](T * T)
               var i = 0
               while (i < mask.length) {
-                val px = tx * tileSize + (i % tileSize)
-                val py = ty * tileSize + (i / tileSize)
+                val px = tx * T + (i % T)
+                val py = ty * T + (i / T)
                 val (mx, my) = target.pixelToMap(px.toDouble, py.toDouble)
                 var j = 0; var ins = false
                 while (j < geoms.length && !ins) { ins = geoms(j).contains(mx, my); j += 1 }
@@ -177,8 +177,8 @@ object SpatialJoin {
             var nValid = 0
             var i = 0
             while (i < payload.length) {
-              if (payload(i) != ndv) {
-                if (mask(i) == invert) payload(i) = ndv else nValid += 1
+              if (payload(i) != Ndv) {
+                if (mask(i) == invert) payload(i) = Ndv else nValid += 1
               }
               i += 1
             }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.sources.ImageTable
+import graft.sources.ImageTable.Ndv
 
 /** Per-pixel stack statistics over aligned tiles — `compute_stats`
   * `malib.py:559-587` and `compute_dt_stats` `malib.py:310-324` — plus the
@@ -17,6 +17,7 @@ import graft.sources.ImageTable
   * (`malib.py:1076-1092`). The explode path (`toCells`) exists for exact
   * per-pixel median/NMAD and for oracle-style verification at test scale. */
 object StackOps {
+  private final val TileLen = Warp.TileSize * Warp.TileSize
 
   final case class StatsBuf(var n: Int, cnt: Array[Int], sum: Array[Double],
                             sumsq: Array[Double], vmin: Array[Float], vmax: Array[Float])
@@ -31,17 +32,16 @@ object StackOps {
 
   /** count/mean/std/min/max per pixel; std masked (NaN) where count ≤ 1
     * (`malib.py:569`); everything masked where count == 0. */
-  class TileStatsAgg(tileLen: Int, ndv: Float)
-      extends Aggregator[TileRow, StatsBuf, TileStats] with Serializable {
-    def zero: StatsBuf = StatsBuf(0, new Array[Int](tileLen), new Array[Double](tileLen),
-      new Array[Double](tileLen), Pixels.filled(tileLen, Float.MaxValue),
-      Pixels.filled(tileLen, Float.MinValue))
+  object TileStatsAgg extends Aggregator[TileRow, StatsBuf, TileStats] {
+    def zero: StatsBuf = StatsBuf(0, new Array[Int](TileLen), new Array[Double](TileLen),
+      new Array[Double](TileLen), Pixels.filled(TileLen, Float.MaxValue),
+      Pixels.filled(TileLen, Float.MinValue))
     def reduce(b: StatsBuf, t: TileRow): StatsBuf = {
       b.n += 1
       var i = 0
-      while (i < tileLen) {
+      while (i < TileLen) {
         val v = t.payload(i)
-        if (v != ndv) {
+        if (v != Ndv) {
           b.cnt(i) += 1; b.sum(i) += v; b.sumsq(i) += v.toDouble * v
           if (v < b.vmin(i)) b.vmin(i) = v
           if (v > b.vmax(i)) b.vmax(i) = v
@@ -53,7 +53,7 @@ object StackOps {
     def merge(a: StatsBuf, b: StatsBuf): StatsBuf = {
       a.n += b.n
       var i = 0
-      while (i < tileLen) {
+      while (i < TileLen) {
         a.cnt(i) += b.cnt(i); a.sum(i) += b.sum(i); a.sumsq(i) += b.sumsq(i)
         if (b.vmin(i) < a.vmin(i)) a.vmin(i) = b.vmin(i)
         if (b.vmax(i) > a.vmax(i)) a.vmax(i) = b.vmax(i)
@@ -62,17 +62,17 @@ object StackOps {
       a
     }
     def finish(b: StatsBuf): TileStats = {
-      val mean = new Array[Float](tileLen); val std = new Array[Float](tileLen)
-      val mn = new Array[Float](tileLen); val mx = new Array[Float](tileLen)
+      val mean = new Array[Float](TileLen); val std = new Array[Float](TileLen)
+      val mn = new Array[Float](TileLen); val mx = new Array[Float](TileLen)
       var i = 0
-      while (i < tileLen) {
+      while (i < TileLen) {
         if (b.cnt(i) == 0) {
-          mean(i) = ndv; std(i) = ndv; mn(i) = ndv; mx(i) = ndv
+          mean(i) = Ndv; std(i) = Ndv; mn(i) = Ndv; mx(i) = Ndv
         } else {
           val m = b.sum(i) / b.cnt(i)
           mean(i) = m.toFloat
           // population std like np.ma.std (malib.py:568); masked at count<=1
-          std(i) = if (b.cnt(i) <= 1) ndv
+          std(i) = if (b.cnt(i) <= 1) Ndv
                    else math.sqrt(math.max(0.0, b.sumsq(i) / b.cnt(i) - m * m)).toFloat
           mn(i) = b.vmin(i); mx(i) = b.vmax(i)
         }
@@ -162,12 +162,10 @@ object StackOps {
     }.flatten
   }
 
-  def stackStats(tiles: Dataset[TileRow], tileSize: Int = Warp.TileSize,
-                 ndv: Float = ImageTable.Ndv): Dataset[TileStats] = {
+  def stackStats(tiles: Dataset[TileRow]): Dataset[TileStats] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val agg = new TileStatsAgg(tileSize * tileSize, ndv)
-    partialFold(tiles, agg)((tid, b) => agg.finish(b).copy(tile_id = tid))
+    partialFold(tiles, TileStatsAgg)((tid, b) => TileStatsAgg.finish(b).copy(tile_id = tid))
   }
 
   /** Per-band, per-pixel stack stats over multi-band tiles. The band folds
@@ -177,15 +175,13 @@ object StackOps {
     * of running malib's stack stats once per band (`malib.py:559-587`
     * driven by the `warplib.py:146-153` band loop). One shuffle keyed on
     * (band, tile); no cross-band traffic by construction. */
-  def stackStatsBands(tiles: Dataset[BandTileRow], nBands: Int,
-                      tileSize: Int = Warp.TileSize,
-                      ndv: Float = ImageTable.Ndv): Dataset[BandTileStats] = {
+  def stackStatsBands(tiles: Dataset[BandTileRow], nBands: Int): Dataset[BandTileStats] = {
     val spark = tiles.sparkSession
     import spark.implicits._
     require(nBands >= 1, s"nBands $nBands")
     val keyed = tiles.map(b => TileRow(b.image_id, b.ts_us,
       b.tile_id * nBands + b.band, b.tx, b.ty, b.payload, b.n_valid, b.elided))
-    stackStats(keyed, tileSize, ndv).map { st =>
+    stackStats(keyed).map { st =>
       BandTileStats((st.tile_id % nBands).toInt, st.tile_id / nBands,
         st.n_layers, st.count, st.mean, st.std, st.vmin, st.vmax)
     }
@@ -195,28 +191,26 @@ object StackOps {
     * mean over valid samples) — the reduction `tileDiff` requires on each
     * side (diffing two stacks pairwise is |A|×|B| per tile, not the
     * reference's raster−raster semantics). ts = earliest layer timestamp. */
-  def compositeMean(tiles: Dataset[TileRow], tileSize: Int = Warp.TileSize,
-                    ndv: Float = ImageTable.Ndv,
+  def compositeMean(tiles: Dataset[TileRow],
                     label: String = "composite"): Dataset[TileRow] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val len = tileSize * tileSize
     keyedRuns(tiles, foldWidth(spark), "tile_id")(_.tile_id) { (tid, it) =>
-      val sum = new Array[Double](len); val cnt = new Array[Int](len)
+      val sum = new Array[Double](TileLen); val cnt = new Array[Int](TileLen)
       var tx = 0; var ty = 0; var ts = Long.MaxValue
       it.foreach { t =>
         tx = t.tx; ty = t.ty; if (t.ts_us < ts) ts = t.ts_us
         var i = 0
-        while (i < len) {
+        while (i < TileLen) {
           val v = t.payload(i)
-          if (v != ndv) { sum(i) += v; cnt(i) += 1 }
+          if (v != Ndv) { sum(i) += v; cnt(i) += 1 }
           i += 1
         }
       }
-      val out = new Array[Float](len); var n = 0
+      val out = new Array[Float](TileLen); var n = 0
       var i = 0
-      while (i < len) {
-        if (cnt(i) > 0) { out(i) = (sum(i) / cnt(i)).toFloat; n += 1 } else out(i) = ndv
+      while (i < TileLen) {
+        if (cnt(i) > 0) { out(i) = (sum(i) / cnt(i)).toFloat; n += 1 } else out(i) = Ndv
         i += 1
       }
       if (n == 0) Iterator.empty
@@ -240,23 +234,23 @@ object StackOps {
     * blocks (`malib.py:1139-1156`): r2 = SSreg/SStot, T0 = slope/SE with
     * SE = √(SSres/(n−2)/Sxx); with `confTest`, slope/intercept are masked
     * where |T0| ≤ t_{α/2, n−2} (the scipy t.ppf gate, here graft TDist). */
-  class TileTrendAgg(tileLen: Int, ndv: Float, nThresh: Int, minDtPtp: Double,
+  class TileTrendAgg(nThresh: Int, minDtPtp: Double,
                      confTest: Boolean = false, alpha: Double = 0.05,
                      diagnostics: Boolean = true)
-      extends Aggregator[TileRow, TrendBuf, TileTrend] with Serializable {
+      extends Aggregator[TileRow, TrendBuf, TileTrend] {
     // r²/T0 need Σy² (the syy sums); confTest masks on T0, so it implies them
     require(diagnostics || !confTest, "confTest requires diagnostics sums")
-    def zero: TrendBuf = TrendBuf(0, new Array[Int](tileLen), new Array[Double](tileLen),
-      new Array[Double](tileLen), new Array[Double](tileLen), new Array[Double](tileLen),
-      new Array[Double](tileLen),
-      Pixels.filled(tileLen, Double.MaxValue), Pixels.filled(tileLen, Double.MinValue))
+    def zero: TrendBuf = TrendBuf(0, new Array[Int](TileLen), new Array[Double](TileLen),
+      new Array[Double](TileLen), new Array[Double](TileLen), new Array[Double](TileLen),
+      new Array[Double](TileLen),
+      Pixels.filled(TileLen, Double.MaxValue), Pixels.filled(TileLen, Double.MinValue))
     def reduce(b: TrendBuf, r: TileRow): TrendBuf = {
       b.n += 1
       val t = r.ts_us / 86400e6 - 20000.0
       var i = 0
-      while (i < tileLen) {
+      while (i < TileLen) {
         val v = r.payload(i)
-        if (v != ndv) {
+        if (v != Ndv) {
           b.cnt(i) += 1; b.st(i) += t; b.stt(i) += t * t; b.sy(i) += v; b.sty(i) += t * v
           if (diagnostics) b.syy(i) += v.toDouble * v
           if (t < b.tmin(i)) b.tmin(i) = t
@@ -269,7 +263,7 @@ object StackOps {
     def merge(a: TrendBuf, b: TrendBuf): TrendBuf = {
       a.n += b.n
       var i = 0
-      while (i < tileLen) {
+      while (i < TileLen) {
         a.cnt(i) += b.cnt(i); a.st(i) += b.st(i); a.stt(i) += b.stt(i)
         a.sy(i) += b.sy(i); a.sty(i) += b.sty(i); a.syy(i) += b.syy(i)
         if (b.tmin(i) < a.tmin(i)) a.tmin(i) = b.tmin(i)
@@ -279,15 +273,15 @@ object StackOps {
       a
     }
     def finish(b: TrendBuf): TileTrend = {
-      val slope = new Array[Float](tileLen); val icpt = new Array[Float](tileLen)
-      val r2 = new Array[Float](tileLen); val tstat = new Array[Float](tileLen)
+      val slope = new Array[Float](TileLen); val icpt = new Array[Float](TileLen)
+      val r2 = new Array[Float](TileLen); val tstat = new Array[Float](TileLen)
       // t_{α/2, df} memo — one inversion per distinct sample count
       val critMemo = scala.collection.mutable.HashMap.empty[Int, Double]
       var i = 0
-      while (i < tileLen) {
+      while (i < TileLen) {
         val n = b.cnt(i)
         val ptp = if (n > 0) b.tmax(i) - b.tmin(i) else 0.0
-        slope(i) = ndv; icpt(i) = ndv; r2(i) = ndv; tstat(i) = ndv
+        slope(i) = Ndv; icpt(i) = Ndv; r2(i) = Ndv; tstat(i) = Ndv
         if (n >= nThresh && ptp >= minDtPtp) {
           val det = n * b.stt(i) - b.st(i) * b.st(i)
           if (det != 0.0) {
@@ -328,15 +322,13 @@ object StackOps {
     def outputEncoder: Encoder[TileTrend] = Encoders.product[TileTrend]
   }
 
-  def trend(tiles: Dataset[TileRow], tileSize: Int = Warp.TileSize,
-            ndv: Float = ImageTable.Ndv, nThresh: Int = 2,
+  def trend(tiles: Dataset[TileRow], nThresh: Int = 2,
             minDtPtp: Double = 0.0, confTest: Boolean = false,
             alpha: Double = 0.05,
             diagnostics: Boolean = true): Dataset[TileTrend] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val agg = new TileTrendAgg(tileSize * tileSize, ndv, nThresh, minDtPtp, confTest,
-      alpha, diagnostics)
+    val agg = new TileTrendAgg(nThresh, minDtPtp, confTest, alpha, diagnostics)
     partialFold(tiles, agg)((tid, b) => agg.finish(b).copy(tile_id = tid))
   }
 
@@ -344,9 +336,8 @@ object StackOps {
     * (`malib.py:1020-1025`): 10 % of the 96th percentile of the per-pixel
     * date range. Exact percentile here (test scale); at 100 TB swap in
     * percentile_approx — the gate is a heuristic, not an oracle surface. */
-  def autoMinDtPtp(tiles: Dataset[TileRow], tileSize: Int = Warp.TileSize,
-                   ndv: Float = ImageTable.Ndv): Double = {
-    val dt = dtStats(tiles, tileSize, ndv).toDF()
+  def autoMinDtPtp(tiles: Dataset[TileRow]): Double = {
+    val dt = dtStats(tiles).toDF()
       .select(explode(col("ptp_us")).as("ptp_us"))
       .filter(col("ptp_us") >= 0)
     val p96 = dt.agg(expr("percentile(ptp_us, 0.96)")).head().getDouble(0)
@@ -359,13 +350,12 @@ object StackOps {
   final case class TileDt(tile_id: Long, t_first_us: Array[Long], t_last_us: Array[Long],
                           ptp_us: Array[Long], center_us: Array[Long])
 
-  class TileDtAgg(tileLen: Int, ndv: Float)
-      extends Aggregator[TileRow, DtBuf, TileDt] with Serializable {
-    def zero: DtBuf = DtBuf(Pixels.filled(tileLen, Long.MaxValue), Pixels.filled(tileLen, Long.MinValue))
+  object TileDtAgg extends Aggregator[TileRow, DtBuf, TileDt] {
+    def zero: DtBuf = DtBuf(Pixels.filled(TileLen, Long.MaxValue), Pixels.filled(TileLen, Long.MinValue))
     def reduce(b: DtBuf, r: TileRow): DtBuf = {
       var i = 0
-      while (i < tileLen) {
-        if (r.payload(i) != ndv) {
+      while (i < TileLen) {
+        if (r.payload(i) != Ndv) {
           if (r.ts_us < b.tmin(i)) b.tmin(i) = r.ts_us
           if (r.ts_us > b.tmax(i)) b.tmax(i) = r.ts_us
         }
@@ -375,7 +365,7 @@ object StackOps {
     }
     def merge(a: DtBuf, b: DtBuf): DtBuf = {
       var i = 0
-      while (i < tileLen) {
+      while (i < TileLen) {
         if (b.tmin(i) < a.tmin(i)) a.tmin(i) = b.tmin(i)
         if (b.tmax(i) > a.tmax(i)) a.tmax(i) = b.tmax(i)
         i += 1
@@ -383,10 +373,10 @@ object StackOps {
       a
     }
     def finish(b: DtBuf): TileDt = {
-      val f = new Array[Long](tileLen); val l = new Array[Long](tileLen)
-      val p = new Array[Long](tileLen); val c = new Array[Long](tileLen)
+      val f = new Array[Long](TileLen); val l = new Array[Long](TileLen)
+      val p = new Array[Long](TileLen); val c = new Array[Long](TileLen)
       var i = 0
-      while (i < tileLen) {
+      while (i < TileLen) {
         if (b.tmin(i) == Long.MaxValue) { f(i) = -1; l(i) = -1; p(i) = -1; c(i) = -1 }
         else {
           f(i) = b.tmin(i); l(i) = b.tmax(i)
@@ -402,25 +392,22 @@ object StackOps {
     def outputEncoder: Encoder[TileDt] = Encoders.product[TileDt]
   }
 
-  def dtStats(tiles: Dataset[TileRow], tileSize: Int = Warp.TileSize,
-              ndv: Float = ImageTable.Ndv): Dataset[TileDt] = {
+  def dtStats(tiles: Dataset[TileRow]): Dataset[TileDt] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val agg = new TileDtAgg(tileSize * tileSize, ndv)
-    partialFold(tiles, agg)((tid, b) => agg.finish(b).copy(tile_id = tid))
+    partialFold(tiles, TileDtAgg)((tid, b) => TileDtAgg.finish(b).copy(tile_id = tid))
   }
 
   /** Long form: one row per valid pixel — `get_xyz` `malib.py:1854-1859`
     * (tile → pixels explode). Exact median/NMAD and any relational op run
     * from here; at scale use only after heavy filtering. */
-  def toCells(tiles: Dataset[TileRow], tileSize: Int = Warp.TileSize,
-              ndv: Float = ImageTable.Ndv): DataFrame = {
+  def toCells(tiles: Dataset[TileRow]): DataFrame = {
     tiles.toDF()
       .select(col("image_id"), col("ts_us"), col("tile_id"),
         posexplode(col("payload")).as(Seq("pidx", "v")))
-      .filter(col("v") =!= ndv)
+      .filter(col("v") =!= Ndv)
       .select(col("image_id"), col("ts_us"),
-        (col("tile_id") * (tileSize * tileSize) + col("pidx")).as("cell_id"),
+        (col("tile_id") * TileLen + col("pidx")).as("cell_id"),
         col("v"))
   }
 

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.{ImageTable, SnapshotTable}
+import graft.sources.SnapshotTable
 
 /** Incrementally-maintained per-pixel stack statistics — a MATERIALIZED
   * VIEW over a snapshot-catalog table of stack tiles.
@@ -52,10 +52,10 @@ object StatsView {
 
   /** The view's one definition: the batch stats aggregator plus the
     * codec between its buffer and the stored row. */
-  private def view(tileSize: Int, ndv: Float) = {
+  private val view = {
     import IncrementalView._
     ViewDef[StackOps.StatsBuf, MvRow](
-      new StackOps.TileStatsAgg(tileSize * tileSize, ndv),
+      StackOps.TileStatsAgg,
       (tid, b) => MvRow(tid, b.n, packI(b.cnt), packD(b.sum), packD(b.sumsq),
         packF(b.vmin), packF(b.vmax)),
       unpack)
@@ -71,12 +71,9 @@ object StatsView {
     * twin) is skipped by the manifest marker. Delta fold, old⊕new merge
     * (`TileStatsAgg.merge`, delta first) and marker bookkeeping all live
     * in [[IncrementalView.refresh]]. */
-  def refresh(spark: SparkSession, tilesRoot: String, mvRoot: String,
-              tileSize: Int = Warp.TileSize,
-              ndv: Float = ImageTable.Ndv): Long = {
+  def refresh(spark: SparkSession, tilesRoot: String, mvRoot: String): Long = {
     import spark.implicits._
-    IncrementalView.refresh(spark, tilesRoot, mvRoot, "statsview",
-      view(tileSize, ndv))
+    IncrementalView.refresh(spark, tilesRoot, mvRoot, "statsview", view)
   }
 
   /** View-table maintenance (tile-sorted compaction + snapshot expiry);
@@ -89,12 +86,9 @@ object StatsView {
     * `TileStatsAgg.finish` over the unpacked buffer, so finished values
     * are bit-identical to the batch fold on exact-sum (integer-valued)
     * stacks. */
-  def stats(spark: SparkSession, mvRoot: String,
-            tileSize: Int = Warp.TileSize,
-            ndv: Float = ImageTable.Ndv): DataFrame = {
+  def stats(spark: SparkSession, mvRoot: String): DataFrame = {
     import spark.implicits._
-    val agg = new StackOps.TileStatsAgg(tileSize * tileSize, ndv)
     SnapshotTable.read(spark, mvRoot).as[MvRow]
-      .map(r => agg.finish(unpack(r)).copy(tile_id = r.tile_id)).toDF()
+      .map(r => StackOps.TileStatsAgg.finish(unpack(r)).copy(tile_id = r.tile_id)).toDF()
   }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import graft.sources.ImageTable
+import graft.sources.ImageTable.Ndv
 
 /** 2-D neighborhood ("stencil") operators over tiled rasters — the filtlib
   * convolution family (`filtlib.py:90-394`) — executed as tile+halo exchange:
@@ -27,19 +27,18 @@ object Stencil {
                             tx: Int, ty: Int, px0: Int, py0: Int,
                             pw: Int, ph: Int, strip: Array[Float])
 
-  /** A stencil kernel: `(padded, P, h, ndv) -> core(T²)` over one P×P
-    * frame with a halo of h (T = P − 2h). */
-  type Kernel = (Array[Float], Int, Int, Float) => Array[Float]
+  /** A stencil kernel: `(padded, P, h) -> core(T²)` over one P×P frame
+    * with a halo of h (T = P − 2h); invalid pixels are `ImageTable.Ndv`. */
+  type Kernel = (Array[Float], Int, Int) => Array[Float]
 
-  /** Apply `kernel(padded, P, h, ndv) -> core(T²)` to every tile with halo h. */
-  def apply(tiles: Dataset[TileRow], ntx: Int, nty: Int, halo: Int,
-            tileSize: Int = Warp.TileSize, ndv: Float = ImageTable.Ndv)
+  /** Apply `kernel(padded, P, h) -> core(T²)` to every tile with halo h. */
+  def apply(tiles: Dataset[TileRow], ntx: Int, nty: Int, halo: Int)
            (kernel: Kernel): Dataset[TileRow] = {
-    require(halo >= 0 && halo <= tileSize, s"halo $halo outside [0, $tileSize]: " +
+    val T = Warp.TileSize; val h = halo; val P = T + 2 * h
+    require(halo >= 0 && halo <= T, s"halo $halo outside [0, $T]: " +
       "strips are cut from one tile (fillGapsDilate chunks deeper halos)")
     val spark = tiles.sparkSession
     import spark.implicits._
-    val T = tileSize; val h = halo; val P = T + 2 * h
 
     // 1) each tile emits its core + up to 8 strips addressed to neighbors,
     //    with (px0, py0) = placement in the NEIGHBOR's padded frame
@@ -80,7 +79,7 @@ object Stencil {
     }
 
     // 2) assemble padded frames per (image, tile), run kernel, emit core.
-    frames(parts, ntx, P, ndv)(kernel(_, P, h, ndv))
+    frames(parts, ntx, P)(kernel(_, P, h))
   }
 
   /** Pastes the parts of each (image, tile) into one P×P frame (NDV where
@@ -97,7 +96,7 @@ object Stencil {
     * bench's 16 (guide §2.6); 2× the core count also smooths per-tile
     * kernel-cost skew (at the folds' 1× width the sf0.01 stencil queries
     * ran ~25 % slower on a 4-core host). */
-  private def frames(parts: Dataset[HaloPart], ntx: Int, P: Int, ndv: Float)(
+  private def frames(parts: Dataset[HaloPart], ntx: Int, P: Int)(
       f: Array[Float] => Array[Float]): Dataset[TileRow] = {
     val spark = parts.sparkSession
     import spark.implicits._
@@ -105,7 +104,7 @@ object Stencil {
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
     StackOps.keyedRuns(parts, width, "image_id", "tile_id")(
         p => (p.image_id, p.tile_id)) { case ((imageId, tileId), run) =>
-      val frame = Pixels.filled(P * P, ndv)
+      val frame = Pixels.filled(P * P, Ndv)
       var tsUs = 0L
       run.foreach { p =>
         tsUs = p.ts_us
@@ -116,7 +115,7 @@ object Stencil {
         }
       }
       val out = f(frame)
-      val nValid = Pixels.countNot(out, ndv)
+      val nValid = Pixels.countNot(out, Ndv)
       Option.when(nValid > 0)(TileRow(imageId, tsUs, tileId, (tileId % ntx).toInt,
         (tileId / ntx).toInt, out, nValid, elided = false))
     }
@@ -148,7 +147,7 @@ object Stencil {
   private def gaussLike(sigma: Double, fill: Boolean): Kernel = {
     val r = (3.0 * sigma).toInt
     val w1 = gaussWeights(sigma)
-    (padded, p, h, ndv) => {
+    (padded, p, h) => {
       require(h >= r, s"halo $h < kernel radius $r")
       val t = p - 2 * h
       // SEPARABLE form: the renormalized masked gaussian is
@@ -167,7 +166,7 @@ object Stencil {
           var dx = -r
           while (dx <= r) {
             val v = padded(y * p + (x + h + dx))
-            if (v != ndv) { val w = w1(dx + r); s += v * w; m += w }
+            if (v != Ndv) { val w = w1(dx + r); s += v * w; m += w }
             dx += 1
           }
           ns(y * t + x) = s; ms(y * t + x) = m
@@ -175,14 +174,14 @@ object Stencil {
         }
         y += 1
       }
-      val out = Pixels.filled(t * t, ndv)
+      val out = Pixels.filled(t * t, Ndv)
       var yy = 0
       while (yy < t) {
         var x = 0
         while (x < t) {
           val center = padded((yy + h) * p + (x + h))
-          if (fill && center != ndv) out(yy * t + x) = center // originals kept
-          else if (fill || center != ndv) {   // mask preserved, filtlib.py:160
+          if (fill && center != Ndv) out(yy * t + x) = center // originals kept
+          else if (fill || center != Ndv) {   // mask preserved, filtlib.py:160
             var s = 0.0; var ws = 0.0
             var dy = -r
             while (dy <= r) {
@@ -204,21 +203,20 @@ object Stencil {
   /** One core pixel's window, as the window walk hands it over: the
     * center value, the valid values of the window in row-major order
     * (`v(0 until n)`), and whether every kept cell was valid. */
-  private trait Window {
+  private trait Window extends Serializable {
     def apply(center: Float, v: Array[Float], n: Int, full: Boolean): Float
   }
 
   /** The window walk behind the size² window kernels: for every core pixel,
     * gather the valid values of its window (cells where `keep` is false
-    * skipped) and write `at(ndv)(center, values, n, full)`; a pixel whose
+    * skipped) and write `f(center, values, n, full)`; a pixel whose
     * window holds no valid value stays NDV. */
-  private def windowKernel(size: Int, keep: Array[Boolean] = null)(at: Float => Window): Kernel = {
+  private def windowKernel(size: Int, keep: Array[Boolean] = null)(f: Window): Kernel = {
     val k = size / 2
-    (padded, p, h, ndv) => {
+    (padded, p, h) => {
       require(h >= k, s"halo $h < window radius $k")
-      val f = at(ndv)
       val t = p - 2 * h
-      val out = Pixels.filled(t * t, ndv)
+      val out = Pixels.filled(t * t, Ndv)
       val buf = new Array[Float](size * size)
       var y = 0
       while (y < t) {
@@ -231,7 +229,7 @@ object Stencil {
             while (j < size) {
               if (keep == null || keep(i * size + j)) {
                 val v = padded((y + h + i - k) * p + (x + h + j - k))
-                if (v != ndv) { buf(n) = v; n += 1 } else full = false
+                if (v != Ndv) { buf(n) = v; n += 1 } else full = false
               }
               j += 1
             }
@@ -255,8 +253,8 @@ object Stencil {
   /** Rolling median — `rolling_fltr`/`median_fltr` `filtlib.py:271-339`
     * (nanmedian over the size² window, original mask preserved). */
   def medianKernel(radius: Int): Kernel =
-    windowKernel(2 * radius + 1) { ndv => (c, v, n, _) =>
-      if (c == ndv) ndv
+    windowKernel(2 * radius + 1) { (c, v, n, _) =>
+      if (c == Ndv) Ndv
       else {
         val s = v.take(n).sorted
         if (n % 2 == 1) s(n / 2) else ((s(n / 2 - 1) + s(n / 2)) / 2).toFloat
@@ -268,9 +266,9 @@ object Stencil {
     * invalid; dilate validates pixels with any valid neighbor (filled with
     * the neighbor mean). */
   def morphKernel(op: String, radius: Int): Kernel = op match {
-    case "erode" => windowKernel(2 * radius + 1) { ndv => (c, _, _, full) => if (full) c else ndv }
-    case "dilate" => windowKernel(2 * radius + 1) { ndv => (c, v, n, _) =>
-      if (c != ndv) c else mean(v, n) }
+    case "erode" => windowKernel(2 * radius + 1) { (c, _, _, full) => if (full) c else Ndv }
+    case "dilate" => windowKernel(2 * radius + 1) { (c, v, n, _) =>
+      if (c != Ndv) c else mean(v, n) }
     case _ => throw new IllegalArgumentException(s"unknown morphKernel op $op")
   }
 
@@ -283,7 +281,7 @@ object Stencil {
     * 2k). Values are the ORIGINAL pixel values — unlike morphKernel's
     * dilate, nothing is fabricated. */
   def removeIslandsKernel(k: Int): Kernel =
-    (padded, p, h, ndv) => {
+    (padded, p, h) => {
       require(h >= 2 * k, s"halo $h < 2*iterations ${2 * k}")
       val t = p - 2 * h
       // eroded validity for every q in [core − k, core + k] (padded coords)
@@ -299,7 +297,7 @@ object Stencil {
           while (dy <= k && ok) {
             var dx = -k
             while (dx <= k && ok) {
-              if (padded((qy + dy) * p + (qx + dx)) == ndv) ok = false
+              if (padded((qy + dy) * p + (qx + dx)) == Ndv) ok = false
               dx += 1
             }
             dy += 1
@@ -309,13 +307,13 @@ object Stencil {
         }
         qy += 1
       }
-      val out = Pixels.filled(t * t, ndv)
+      val out = Pixels.filled(t * t, Ndv)
       var y = 0
       while (y < t) {
         var x = 0
         while (x < t) {
           val c = padded((y + h) * p + (x + h))
-          if (c != ndv) {
+          if (c != Ndv) {
             var any = false
             var dy = -k
             while (dy <= k && !any) {
@@ -336,10 +334,9 @@ object Stencil {
     }
 
   /** remove_islands over a tiled stack: one halo exchange of width 2k. */
-  def removeIslands(tiles: Dataset[TileRow], ntx: Int, nty: Int, iterations: Int = 1,
-                    tileSize: Int = Warp.TileSize,
-                    ndv: Float = graft.sources.ImageTable.Ndv): Dataset[TileRow] =
-    Stencil(tiles, ntx, nty, halo = 2 * iterations, tileSize, ndv)(
+  def removeIslands(tiles: Dataset[TileRow], ntx: Int, nty: Int,
+                    iterations: Int = 1): Dataset[TileRow] =
+    Stencil(tiles, ntx, nty, halo = 2 * iterations)(
       removeIslandsKernel(iterations))
 
   /** gdaldem terrain derivatives — `gdaldem_mem_ds`/`gdaldem_wrapper`
@@ -369,14 +366,14 @@ object Stencil {
     // algebraic identity with NO trig in the loop
     val sinAlt = math.sin(altR); val cosAlt = math.cos(altR)
     val sinAz = math.sin(azR); val cosAz = math.cos(azR)
-    val cell: Float => Window = mode match {
-      case "slope" => _ => (_, v, _, _) => {
+    val cell: Window = mode match {
+      case "slope" => (_, v, _, _) => {
         val p = dzdx(v); val q = dzdy(v)
         math.toDegrees(math.atan(math.sqrt(p * p + q * q))).toFloat
       }
-      case "aspect" => ndv => (_, v, _, _) => {
+      case "aspect" => (_, v, _, _) => {
         val p = dzdx(v); val q = dzdy(v)
-        if (p == 0 && q == 0) ndv // flat
+        if (p == 0 && q == 0) Ndv // flat
         else {
           // downslope east comp = −p, north comp = +q_south
           var az = math.toDegrees(math.atan2(-p, q))
@@ -384,7 +381,7 @@ object Stencil {
           az.toFloat
         }
       }
-      case "hillshade" => _ => (_, v, _, _) => {
+      case "hillshade" => (_, v, _, _) => {
         val p = dzdx(v); val q = dzdy(v)
         // ≡ sinAlt·cos(slope) + cosAlt·sin(slope)·cos(azR − asp) with
         // cos(slope) = 1/√(1+p²+q²), sin(slope)·cos(asp) = q/√(1+p²+q²),
@@ -393,33 +390,30 @@ object Stencil {
         val shade = (sinAlt + cosAlt * (cosAz * q - sinAz * p)) / math.sqrt(1.0 + p * p + q * q)
         (255.0 * math.max(0.0, shade)).toFloat
       }
-      case "tri" => _ => (c, v, _, _) => {
+      case "tri" => (c, v, _, _) => {
         var s = 0.0; var i = 0
         while (i < 9) { if (i != 4) s += math.abs(c - v(i)); i += 1 }
         (s / 8.0).toFloat
       }
-      case "tpi" => _ => (c, v, _, _) => {
+      case "tpi" => (c, v, _, _) => {
         var s = 0.0; var i = 0
         while (i < 9) { if (i != 4) s += v(i); i += 1 }
         (c - s / 8.0).toFloat
       }
-      case "roughness" => _ => (_, v, _, _) => {
+      case "roughness" => (_, v, _, _) => {
         var mn = Float.MaxValue; var mx = Float.MinValue; var i = 0
         while (i < 9) { if (v(i) < mn) mn = v(i); if (v(i) > mx) mx = v(i); i += 1 }
         mx - mn
       }
       case m => throw new IllegalArgumentException(s"unknown demKernel mode $m")
     }
-    windowKernel(3) { ndv =>
-      val f = cell(ndv)
-      (c, v, n, full) => if (full) f(c, v, n, full) else ndv
-    }
+    windowKernel(3)((c, v, n, full) => if (full) cell(c, v, n, full) else Ndv)
   }
 
   /** Uniform (mean) filter — `uniform_fltr` `filtlib.py:382-394`:
     * window mean over valid pixels, original mask preserved. */
   def uniformKernel(radius: Int): Kernel =
-    windowKernel(2 * radius + 1) { ndv => (c, v, n, _) => if (c == ndv) ndv else mean(v, n) }
+    windowKernel(2 * radius + 1)((c, v, n, _) => if (c == Ndv) Ndv else mean(v, n))
 
   /** `rounds` radius-1 neighbor-mean dilations run LOCALLY on the padded
     * frame — bit-identical to `rounds` chained exchanges by the halo-shrink
@@ -427,7 +421,7 @@ object Stencil {
     * equals the global iteration; the core sits ≥ h ≥ rounds deep), at ONE
     * payload shuffle instead of `rounds`. */
   def iteratedDilateKernel(rounds: Int): Kernel =
-    (padded, p, h, ndv) => {
+    (padded, p, h) => {
       require(h >= rounds, s"halo $h < rounds $rounds")
       var cur = padded
       var nxt = new Array[Float](p * p)
@@ -438,7 +432,7 @@ object Stencil {
           var x = 0
           while (x < p) {
             val c = cur(y * p + x)
-            if (c != ndv) nxt(y * p + x) = c
+            if (c != Ndv) nxt(y * p + x) = c
             else {
               var s = 0.0; var n = 0
               var dy = -1
@@ -448,13 +442,13 @@ object Stencil {
                   val xx = x + dx; val yy = y + dy
                   if (xx >= 0 && xx < p && yy >= 0 && yy < p) {
                     val v = cur(yy * p + xx)
-                    if (v != ndv) { s += v; n += 1 }
+                    if (v != Ndv) { s += v; n += 1 }
                   }
                   dx += 1
                 }
                 dy += 1
               }
-              nxt(y * p + x) = if (n > 0) (s / n).toFloat else ndv
+              nxt(y * p + x) = if (n > 0) (s / n).toFloat else Ndv
             }
             x += 1
           }
@@ -478,18 +472,17 @@ object Stencil {
     * `malib.py:1352-1375`): `rounds` dilate-with-neighbor-mean passes,
     * composed into a single halo exchange of depth `rounds` (was one
     * exchange per round — verdict r2 "What's wrong" #3). */
-  def fillGapsDilate(tiles: Dataset[TileRow], ntx: Int, nty: Int, rounds: Int,
-                     tileSize: Int = Warp.TileSize,
-                     ndv: Float = graft.sources.ImageTable.Ndv): Dataset[TileRow] = {
-    // one exchange carries at most tileSize of halo (strip extraction needs
+  def fillGapsDilate(tiles: Dataset[TileRow], ntx: Int, nty: Int,
+                     rounds: Int): Dataset[TileRow] = {
+    // one exchange carries at most TileSize of halo (strip extraction needs
     // h <= T); larger round counts chunk into ceil(rounds/T) exchanges, each
     // composing up to T local dilations — still ~rounds/T payload shuffles
     // instead of the old one-per-round
     var cur = tiles
     var left = rounds
     while (left > 0) {
-      val step = math.min(left, tileSize)
-      cur = Stencil(cur, ntx, nty, halo = step, tileSize, ndv)(iteratedDilateKernel(step))
+      val step = math.min(left, Warp.TileSize)
+      cur = Stencil(cur, ntx, nty, halo = step)(iteratedDilateKernel(step))
       left -= step
     }
     cur
@@ -509,7 +502,7 @@ object Stencil {
       val oy = idx / size - r; val ox = idx % size - r
       !circular || size <= 3 || ox * ox + oy * oy <= r * r
     }
-    windowKernel(size, keep) { _ => (_, v, n, _) => f(v, n) }
+    windowKernel(size, keep)((_, v, n, _) => f(v, n))
   }
 
   /** Band-pass — `bandpass` `filtlib.py:262-268` = highpass(lowpass(v, σ1),
@@ -522,20 +515,20 @@ object Stencil {
     require(sigma2 > sigma1, "bandpass needs size2 > size1 (filtlib.py:265)")
     val r1 = (3.0 * sigma1).toInt; val r2 = (3.0 * sigma2).toInt
     val g1 = gaussKernel(sigma1); val g2 = gaussKernel(sigma2)
-    (padded, p, h, ndv) => {
+    (padded, p, h) => {
       require(h >= r1 + r2, s"halo $h < ${r1 + r2}")
       val t = p - 2 * h
-      val low = g1(padded, p, r1, ndv)           // inner (p−2r1)² lowpass
+      val low = g1(padded, p, r1)        // inner (p−2r1)² lowpass
       val p2 = p - 2 * r1
-      val lowOfLow = g2(low, p2, h - r1, ndv)    // t² second lowpass
-      val out = Pixels.filled(t * t, ndv)
+      val lowOfLow = g2(low, p2, h - r1) // t² second lowpass
+      val out = Pixels.filled(t * t, Ndv)
       var y = 0
       while (y < t) {
         var x = 0
         while (x < t) {
           val a = low((y + h - r1) * p2 + (x + h - r1))
           val b = lowOfLow(y * t + x)
-          if (a != ndv && b != ndv) out(y * t + x) = a - b
+          if (a != Ndv && b != Ndv) out(y * t + x) = a - b
           x += 1
         }
         y += 1
@@ -547,11 +540,10 @@ object Stencil {
   /** One pyramid decimation level: keep the even global pixel lattice; the
     * 2×2 input tiles of each output tile fold into its quadrants. The
     * exchange carries ¼ of the input payload. */
-  def decimate2(tiles: Dataset[TileRow], ntx: Int, tileSize: Int = Warp.TileSize,
-                ndv: Float = graft.sources.ImageTable.Ndv): Dataset[TileRow] = {
+  def decimate2(tiles: Dataset[TileRow], ntx: Int): Dataset[TileRow] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val T = tileSize; val half = T / 2
+    val T = Warp.TileSize; val half = T / 2
     val ntx2 = (ntx + 1) / 2
     val parts = tiles.map { t =>
       val sub = new Array[Float](half * half)
@@ -566,7 +558,7 @@ object Stencil {
       HaloPart(t.image_id, t.ts_us, ny.toLong * ntx2 + nx, nx, ny,
         qx * half, qy * half, half, half, sub)
     }
-    frames(parts, ntx2, T, ndv)(identity)
+    frames(parts, ntx2, T)(identity)
   }
 
   /** Pyramidal gaussian — `gauss_fltr_pyramid` `filtlib.py:175-226` (the
@@ -578,15 +570,14 @@ object Stencil {
     * centered zero-pad offset is a whole-array layout artifact). Returns
     * the coarse tiles + their tile-grid dims (`full=false`, the reference
     * default). */
-  def gaussPyramid(tiles: Dataset[TileRow], ntx: Int, nty: Int, size: Int,
-                   tileSize: Int = Warp.TileSize,
-                   ndv: Float = graft.sources.ImageTable.Ndv): (Dataset[TileRow], Int, Int) = {
+  def gaussPyramid(tiles: Dataset[TileRow], ntx: Int, nty: Int,
+                   size: Int): (Dataset[TileRow], Int, Int) = {
     val levels = (math.log(size.toDouble) / math.log(2.0)).toInt
     var cur = tiles; var cntx = ntx; var cnty = nty
     val sigma5 = (5 - 1) / 6.0
     for (_ <- 0 until levels) {
-      cur = Stencil(cur, cntx, cnty, halo = 2, tileSize, ndv)(gaussKernel(sigma5))
-      cur = decimate2(cur, cntx, tileSize, ndv)
+      cur = Stencil(cur, cntx, cnty, halo = 2)(gaussKernel(sigma5))
+      cur = decimate2(cur, cntx)
       cntx = (cntx + 1) / 2; cnty = (cnty + 1) / 2
     }
     (cur, cntx, cnty)
@@ -605,7 +596,7 @@ object Stencil {
   def interpKernel(degree: Int = 3): Kernel = {
     val terms = (for { i <- 0 to degree; j <- 0 to degree - i } yield (i, j)).toArray
     val nT = terms.length
-    (padded, p, h, ndv) => {
+    (padded, p, h) => {
       val t = p - 2 * h
       val out = new Array[Float](t * t)
       val m = Array.ofDim[Double](nT, nT + 1)
@@ -621,7 +612,7 @@ object Stencil {
         var sx = 0
         while (sx < p) {
           sat((sy + 1) * (p + 1) + (sx + 1)) =
-            (if (padded(sy * p + sx) != ndv) 1 else 0) +
+            (if (padded(sy * p + sx) != Ndv) 1 else 0) +
             sat(sy * (p + 1) + (sx + 1)) + sat((sy + 1) * (p + 1) + sx) -
             sat(sy * (p + 1) + sx)
           sx += 1
@@ -638,8 +629,8 @@ object Stencil {
         var x = 0
         while (x < t) {
           val c = padded((y + h) * p + (x + h))
-          if (c != ndv) out(y * t + x) = c
-          else if (windowCount(x + h, y + h) < 2 * nT) out(y * t + x) = ndv
+          if (c != Ndv) out(y * t + x) = c
+          else if (windowCount(x + h, y + h) < 2 * nT) out(y * t + x) = Ndv
           else {
             var a = 0
             while (a < nT) { java.util.Arrays.fill(m(a), 0.0); a += 1 }
@@ -649,7 +640,7 @@ object Stencil {
               var dx = -h
               while (dx <= h) {
                 val v = padded((y + h + dy) * p + (x + h + dx))
-                if (v != ndv) {
+                if (v != Ndv) {
                   n += 1
                   val ux = dx.toDouble / h; val uy = dy.toDouble / h
                   // incremental monomials (pow() here dominated the kernel)
@@ -712,8 +703,8 @@ object Stencil {
                 cc += 1
               }
               if (ok) out(y * t + x) = (m(0)(nT) / m(0)(0)).toFloat
-              else out(y * t + x) = ndv
-            } else out(y * t + x) = ndv
+              else out(y * t + x) = Ndv
+            } else out(y * t + x) = Ndv
           }
           x += 1
         }
@@ -726,28 +717,26 @@ object Stencil {
   /** Gap fill, `map_interp` grade (the default fill): one halo exchange,
     * degree-3 local polynomial interpolation of gap pixels. */
   def fillGaps(tiles: Dataset[TileRow], ntx: Int, nty: Int, rounds: Int = 1,
-               tileSize: Int = Warp.TileSize,
-               ndv: Float = graft.sources.ImageTable.Ndv,
                halo: Int = 4, degree: Int = 3): Dataset[TileRow] = {
     var cur = tiles
     for (_ <- 0 until rounds)
-      cur = Stencil(cur, ntx, nty, halo, tileSize, ndv)(interpKernel(degree))
+      cur = Stencil(cur, ntx, nty, halo)(interpKernel(degree))
     cur
   }
 
   /** High-pass = v − gauss(v) — `highpass` `filtlib.py:249-257`. */
   def highpassKernel(sigma: Double): Kernel = {
     val g = gaussKernel(sigma)
-    (padded, p, h, ndv) => {
+    (padded, p, h) => {
       val t = p - 2 * h
-      val low = g(padded, p, h, ndv)
-      val out = Pixels.filled(t * t, ndv)
+      val low = g(padded, p, h)
+      val out = Pixels.filled(t * t, Ndv)
       var y = 0
       while (y < t) {
         var x = 0
         while (x < t) {
           val c = padded((y + h) * p + (x + h))
-          if (c != ndv && low(y * t + x) != ndv) out(y * t + x) = c - low(y * t + x)
+          if (c != Ndv && low(y * t + x) != Ndv) out(y * t + x) = c - low(y * t + x)
           x += 1
         }
         y += 1

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.{ImageTable, SnapshotTable}
+import graft.sources.SnapshotTable
 
 /** Incrementally-maintained per-pixel OLS trend — [[StatsView]]'s sibling
   * over the normal-equation sufficient statistics (per-pixel Σt, Σt², Σv,
@@ -19,8 +19,8 @@ import graft.sources.{ImageTable, SnapshotTable}
   * ANY commit grouping — q110's strict oracle is q42's DuckDB twin
   * verbatim. The finish arithmetic is NOT re-stated here: stored moments
   * are loaded back into a `TrendBuf` and run through the same
-  * `TileTrendAgg.finish` as the batch path (one definition of the
-  * normal-equation chain, `StackOps.scala:250-295`). */
+  * `TileTrendAgg.finish` as the batch path (the one definition of the
+  * normal-equation chain). */
 object TrendView {
 
   /** One view row: tile id + the raw mergeable OLS buffer (finishing —
@@ -41,11 +41,10 @@ object TrendView {
   /** The view's one definition: the batch trend aggregator (ungated — the
     * gates apply at finish) plus the codec between its buffer and the
     * stored row. */
-  private def view(tileSize: Int, ndv: Float) = {
+  private val view = {
     import IncrementalView._
     ViewDef[StackOps.TrendBuf, MvRow](
-      new StackOps.TileTrendAgg(tileSize * tileSize, ndv, nThresh = 2,
-        minDtPtp = 0.0),
+      new StackOps.TileTrendAgg(nThresh = 2, minDtPtp = 0.0),
       (tid, b) => MvRow(tid, b.n, packI(b.cnt), packD(b.st), packD(b.stt),
         packD(b.sy), packD(b.sty), packD(b.syy), packD(b.tmin), packD(b.tmax)),
       unpack)
@@ -58,12 +57,9 @@ object TrendView {
   /** Advance the view at `mvRoot` to cover `tilesRoot`'s current version.
     * Same contract as [[StatsView.refresh]]; old⊕new is
     * `TileTrendAgg.merge` (delta first). */
-  def refresh(spark: SparkSession, tilesRoot: String, mvRoot: String,
-              tileSize: Int = Warp.TileSize,
-              ndv: Float = ImageTable.Ndv): Long = {
+  def refresh(spark: SparkSession, tilesRoot: String, mvRoot: String): Long = {
     import spark.implicits._
-    IncrementalView.refresh(spark, tilesRoot, mvRoot, "trendview",
-      view(tileSize, ndv))
+    IncrementalView.refresh(spark, tilesRoot, mvRoot, "trendview", view)
   }
 
   /** View-table maintenance (tile-sorted compaction + snapshot expiry);
@@ -77,16 +73,12 @@ object TrendView {
     * rows, so slope/intercept/r²/T0 are the same correctly-rounded doubles
     * as `StackOps.trend` on the full stack. Gate parameters mirror
     * `trend`'s. */
-  def trend(spark: SparkSession, mvRoot: String,
-            tileSize: Int = Warp.TileSize,
-            ndv: Float = ImageTable.Ndv, nThresh: Int = 2,
+  def trend(spark: SparkSession, mvRoot: String, nThresh: Int = 2,
             minDtPtp: Double = 0.0, confTest: Boolean = false,
             alpha: Double = 0.05,
             diagnostics: Boolean = true): DataFrame = {
     import spark.implicits._
-    val tileLen = tileSize * tileSize
-    val fin = new StackOps.TileTrendAgg(tileLen, ndv, nThresh, minDtPtp,
-      confTest, alpha, diagnostics)
+    val fin = new StackOps.TileTrendAgg(nThresh, minDtPtp, confTest, alpha, diagnostics)
     SnapshotTable.read(spark, mvRoot).as[MvRow]
       .map(r => fin.finish(unpack(r)).copy(tile_id = r.tile_id)).toDF()
   }

@@ -3,12 +3,13 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geo.{Extent, GridSpec, Proj}
-import graft.sources.{Codec, ImageRow}
+import graft.sources.{Codec, ImageRow, ImageTable}
 
 /** One aligned tile of one image on the common target grid — the engine's
   * unit of work (the reference's unit is a whole warped raster;
-  * `warplib.py:39-210`). `payload` is row-major tileSize², NDV-filled
-  * outside the image footprint (`warplib.py:146-153`). */
+  * `warplib.py:39-210`). `payload` is row-major `Warp.TileSize`²,
+  * `ImageTable.Ndv`-filled outside the image footprint
+  * (`warplib.py:146-153`). */
 final case class TileRow(
   image_id: String, ts_us: Long, tile_id: Long, tx: Int, ty: Int,
   payload: Array[Float], n_valid: Int, elided: Boolean)
@@ -36,13 +37,16 @@ final case class BandTileRow(
   *
   * Scale shape: A is a partial-agg reduce of ~32 B/row; C is map-only (no
   * shuffle — each image's tiles derive from that image alone). The only wide
-  * stage in a warp→stack pipeline is the later groupBy(tile_id). */
+  * stage in a warp→stack pipeline is the later keyed exchange on tile_id
+  * (`StackOps.keyedRuns`). */
 object Warp {
-  val TileSize = 64
+  /** The engine's tile edge in pixels: every tile operator, `TileCells` and
+    * the twin SQL (`// 64`, 4096-long buffers) assume it. */
+  final val TileSize = 64
 
   /** Tile columns and rows (ntx, nty) that cover `target`. */
-  private[graft] def tileGrid(target: GridSpec, tileSize: Int = TileSize): (Int, Int) =
-    ((target.w + tileSize - 1) / tileSize, (target.h + tileSize - 1) / tileSize)
+  private[graft] def tileGrid(target: GridSpec): (Int, Int) =
+    ((target.w + TileSize - 1) / TileSize, (target.h + TileSize - 1) / TileSize)
 
   /** Stage A. Strategies follow `parse_res`/`parse_extent` (`warplib.py:
     * 312-419`); 'first' = lowest image_id (the reference's list order).
@@ -164,13 +168,10 @@ object Warp {
   /** Stages B+C: align every image to `target`, emitting per-tile rows.
     * Narrow (map-only); tiles without a single valid pixel are dropped. */
   def warpToTiles(spark: SparkSession, images: DataFrame, target: GridSpec,
-                  kernel: String = "near", tileSize: Int = TileSize,
+                  kernel: String = "near",
                   datum: String = Proj.Wgs84): Dataset[TileRow] = {
     import spark.implicits._
-    val ntx = tileGrid(target, tileSize)._1
-    images.as[ImageRow].flatMap { img =>
-      warpOne(img, target, kernel, tileSize, ntx, datum)
-    }
+    images.as[ImageRow].flatMap(img => warpOne(img, target, kernel, datum))
   }
 
   /** Multi-band stages B+C: align every band of every image to `target`.
@@ -181,19 +182,18 @@ object Warp {
     * per-band NDV fill falling out of the shared kernel. Still one narrow
     * map stage (images × bands fan out inside the flatMap; no shuffle);
     * at 10¹²-image scale bands multiply rows, not shuffle width, and the
-    * later (band, tile_id) groupBys shuffle each band independently. */
+    * later keyed exchanges on (band, tile_id) shuffle each band
+    * independently. */
   def warpToTilesBands(spark: SparkSession, images: DataFrame, target: GridSpec,
                        nBands: Int, kernel: String = "near",
-                       tileSize: Int = TileSize,
                        datum: String = Proj.Wgs84): Dataset[BandTileRow] = {
     import spark.implicits._
     require(nBands >= 1, s"nBands $nBands")
-    val ntx = tileGrid(target, tileSize)._1
     images.as[ImageRow].flatMap { img =>
       (0 until nBands).iterator.flatMap { b =>
         val bandImg = img.copy(
           bytes = Codec.bandSlice(img.bytes, img.w, img.h, img.fmt, b, nBands))
-        warpOne(bandImg, target, kernel, tileSize, ntx, datum).map(t =>
+        warpOne(bandImg, target, kernel, datum).map(t =>
           BandTileRow(t.image_id, b, t.ts_us, t.tile_id, t.tx, t.ty,
             t.payload, t.n_valid, t.elided))
       }
@@ -216,7 +216,6 @@ object Warp {
   def warpToTilesSource(spark: SparkSession, images: DataFrame,
                         resStrategy: String, extentStrategy: String,
                         tSrs: String = "first", kernel: String = "near",
-                        tileSize: Int = TileSize,
                         datum: String = Proj.Wgs84): Dataset[TileRow] = {
     import spark.implicits._
     require(resStrategy == "source" || extentStrategy == "source",
@@ -235,9 +234,7 @@ object Warp {
       val res = fixedRes.getOrElse(if (sameCrs) g.res else Proj.resIn(g, crs, datum))
       val ext = fixedExtent.getOrElse(
         if (sameCrs) g.extent else Proj.projectExtent(g.extent, g.crs, crs, datum = datum))
-      val target = GridSpec.fromExtentRes(ext, res, crs)
-      val ntx = tileGrid(target, tileSize)._1
-      warpOne(img, target, kernel, tileSize, ntx, datum)
+      warpOne(img, GridSpec.fromExtentRes(ext, res, crs), kernel, datum)
     }
   }
 
@@ -259,15 +256,16 @@ object Warp {
     if (px1 < px0 || py1 < py0) None else Some((px0, px1, py0, py1))
   }
 
-  /** Warp one image onto the target grid, cut into tiles. */
+  /** Warp one image onto the target grid, cut into tiles. The image
+    * decodes with its own `ndv`; the tiles are `ImageTable.Ndv`-filled. */
   def warpOne(img: ImageRow, target: GridSpec, kernel: String,
-              tileSize: Int, ntx: Int,
               datum: String = Proj.Wgs84): Iterator[TileRow] = {
     val g = GridSpec(img.ulx, img.uly, img.res, img.crs, img.w, img.h)
     val (px0, px1, py0, py1) =
       pixelBounds(g, target, datum).getOrElse(return Iterator.empty)
     val src = Codec.decode(img.bytes, img.w, img.h, img.fmt, img.ndv.toFloat)
     val ndv = img.ndv.toFloat
+    val ntx = tileGrid(target)._1
     val aligned = isAligned(g, target)
     // cross-CRS resample: inverse-project each target pixel-center map
     // coordinate into the source CRS, then sample as usual (ReprojectImage
@@ -277,8 +275,8 @@ object Warp {
     val pooledKernel = kernel == "average" || kernel == "mode"
     val tsUs = img.ts.getTime * 1000L
 
-    val tx0 = px0 / tileSize; val tx1 = px1 / tileSize
-    val ty0 = py0 / tileSize; val ty1 = py1 / tileSize
+    val tx0 = px0 / TileSize; val tx1 = px1 / TileSize
+    val ty0 = py0 / TileSize; val ty1 = py1 / TileSize
 
     // integer offsets for the elided fast path (pixel-for-pixel copy):
     // source px = target px + off, from equating pixel-center map coords
@@ -289,13 +287,13 @@ object Warp {
       ty <- (ty0 to ty1).iterator
       tx <- (tx0 to tx1).iterator
     } yield {
-      val payload = Pixels.filled(tileSize * tileSize, ndv)
+      val payload = Pixels.filled(TileSize * TileSize, ImageTable.Ndv)
       var nValid = 0
-      var py = math.max(py0, ty * tileSize)
-      val pyEnd = math.min(py1, (ty + 1) * tileSize - 1)
+      var py = math.max(py0, ty * TileSize)
+      val pyEnd = math.min(py1, (ty + 1) * TileSize - 1)
       while (py <= pyEnd) {
-        var px = math.max(px0, tx * tileSize)
-        val pxEnd = math.min(px1, (tx + 1) * tileSize - 1)
+        var px = math.max(px0, tx * TileSize)
+        val pxEnd = math.min(px1, (tx + 1) * TileSize - 1)
         while (px <= pxEnd) {
           val v: Float =
             if (aligned) {
@@ -315,7 +313,7 @@ object Warp {
               Resample.sample(src, img.w, img.h, g, mx, my, kernel, ndv, tRes)
             }
           if (v != ndv) {
-            payload((py - ty * tileSize) * tileSize + (px - tx * tileSize)) = v
+            payload((py - ty * TileSize) * TileSize + (px - tx * TileSize)) = v
             nValid += 1
           }
           px += 1

@@ -24,7 +24,9 @@ final case class ImageRow(
   * (`malib.py:1440-1462`). */
 object ImageTable {
   val Crs = "EPSG:32610"
-  val Ndv = -9999.0f
+  /** The engine's tile NDV: every tile payload is NDV-filled with it, and
+    * the twin SQL embeds it as the literal -9999. */
+  final val Ndv = -9999.0f
   val B = 0.01   // map-x gradient per meter
   val C = -0.005 // map-y gradient per meter
   val A0 = 120.0
@@ -74,7 +76,8 @@ object ImageTable {
   /** Bench-scale layout: images arrive in clusters of `ClusterSize`; each
     * cluster overlaps internally (stack semantics preserved per cluster) but
     * clusters scatter over a wide region — realistic tiling spread, so the
-    * later groupBy(tile_id) has real parallelism instead of 9 hot tiles. */
+    * later keyed exchange on tile_id (`StackOps.keyedRuns`) has real
+    * parallelism instead of 9 hot tiles. */
   val ClusterSize = 20
   val ClusterCols = 32
 

@@ -71,14 +71,6 @@ object SnapshotTable {
     * pinned as-if-UTC), so callers must construct [lo, hi] in micros. */
   final case class ColRange(colName: String, lo: Double, hi: Double)
 
-  /** [[ColRange]] from exact Long bounds with DIRECTED rounding (lo toward
-    * −∞, hi toward +∞), the rounding the manifest bounds use. A plain
-    * `.toDouble` nearest-rounds, which is still safe against outward-rounded
-    * bounds (rounding is monotone); directed bounds are the tightest probe
-    * that contains every true value. */
-  def colRangeLong(colName: String, lo: Long, hi: Long): ColRange =
-    ColRange(colName, dirDouble(lo, up = false), dirDouble(hi, up = true))
-
   private def metaDir(root: String): Path = Paths.get(root, "meta")
 
   private def listNames(dir: Path): Seq[String] = {

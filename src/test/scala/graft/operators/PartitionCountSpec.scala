@@ -66,8 +66,30 @@ class PartitionCountSpec extends AnyFunSuite {
       finally tiles.unpersist()
     }
 
+  lazy val base = outputs(1, 1)
+
+  test("raster and vector outputs at one source and shuffle partition match their pinned md5") {
+    def md5(rows: Seq[String]): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(rows.mkString("\n").getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    // any moved output bit fails here; a change that moves an output on
+    // purpose updates its md5 and says so
+    val want = Map(
+      "clip" -> "d199fdcf0cc52640409bc298f9e579b3",
+      "diff" -> "28f36c0de682a4bdc3310a14bcd4de82",
+      "gauss" -> "2efb04eb8ab293b7ea52855fdca59110",
+      "heat" -> "a14906cafe14b0a7c63f5bb3dfacd89b",
+      "pip" -> "3a43da388bdb4cb43a522e21c75f2178",
+      "ransac" -> "b31633936f8510f9aebbe1a444aa5eb8",
+      "sample" -> "8e4972393fe9db0d6c03a83e7612cf62",
+      "stats" -> "ccd191665b1c275e01de888c3347ba40",
+      "theilsen" -> "9448012987e382206b958ce898976c6c",
+      "tiles" -> "e730a732afe73eb96b07507336b5bb87",
+      "trend" -> "56c293ef6ef6a5d125d2fbdf8c840909")
+    assert(base.map { case (k, rows) => k -> md5(rows) } == want)
+  }
+
   test("raster and vector outputs are bit-equal across source and shuffle partition counts") {
-    val base = outputs(1, 1)
     base.foreach { case (k, rows) => assert(rows.nonEmpty, s"$k is empty") }
     assert(base("clip").size < base("tiles").size, "the clip must drop some tiles")
     for (src <- Seq(1, 4, 32); sh <- Seq(1, 7) if (src, sh) != (1, 1)) {

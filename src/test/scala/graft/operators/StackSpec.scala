@@ -9,21 +9,23 @@ class StackSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val ndv = ImageTable.Ndv
 
+  /** One tile whose first pixels are `vals`, NDV-padded to the engine's size. */
   def tile(id: String, tsUs: Long, vals: Array[Float]): TileRow =
-    TileRow(id, tsUs, 0L, 0, 0, vals, vals.count(_ != ndv), elided = true)
+    TileRow(id, tsUs, 0L, 0, 0, vals.padTo(Warp.TileSize * Warp.TileSize, ndv),
+      vals.count(_ != ndv), elided = true)
 
   val day = 86400L * 1000000L
 
   test("stack stats golden: count/mean/std/min/max with masking (malib.py:559-587)") {
     import spark.implicits._
-    // 4-pixel tiles, 3 layers; pixel 2 valid once, pixel 3 never
+    // 3 layers; pixel 2 valid once, pixel 3 never
     val t = spark.createDataset(Seq(
       tile("a", 0 * day, Array(1f, 10f, 5f, ndv)),
       tile("b", 1 * day, Array(2f, 20f, ndv, ndv)),
       tile("c", 2 * day, Array(3f, 60f, ndv, ndv))))
-    val st = StackOps.stackStats(t, tileSize = 2).head()
+    val st = StackOps.stackStats(t).head()
     assert(st.n_layers == 3)
-    assert(st.count.toSeq == Seq(3, 3, 1, 0))
+    assert(st.count.toSeq.take(4) == Seq(3, 3, 1, 0))
     assert(st.mean(0) == 2f && st.mean(1) == 30f && st.mean(2) == 5f && st.mean(3) == ndv)
     // population std: sqrt(2/3) and sqrt(1400/3); masked at count<=1 (malib.py:569)
     assert(math.abs(st.std(0) - math.sqrt(2.0 / 3.0)) < 1e-6)
@@ -40,13 +42,13 @@ class StackSpec extends AnyFunSuite {
       tile("a", 0 * day, Array(2f, 7f, 5f, ndv)),
       tile("b", 1 * day, Array(5f, 7f, ndv, ndv)),
       tile("c", 2 * day, Array(8f, 7f, ndv, ndv))))
-    val tr = StackOps.trend(t, tileSize = 2).head()
+    val tr = StackOps.trend(t).head()
     assert(math.abs(tr.slope_yr(0) - 3 * 365.25) < 1e-3)
     assert(math.abs(tr.intercept(0) - 2.0) < 1e-4)
     assert(math.abs(tr.slope_yr(1)) < 1e-6)
     assert(tr.slope_yr(2) == ndv && tr.slope_yr(3) == ndv)
     // min_dt_ptp gate: 3-day spread < 10 days → everything gated
-    val gated = StackOps.trend(t, tileSize = 2, minDtPtp = 10.0).head()
+    val gated = StackOps.trend(t, minDtPtp = 10.0).head()
     assert(gated.slope_yr(0) == ndv)
   }
 
@@ -70,13 +72,13 @@ class StackSpec extends AnyFunSuite {
       tile("b", 1 * day, Array(1f, 5f, ndv, ndv)),
       tile("c", 2 * day, Array(2f, 8f, ndv, ndv)),
       tile("d", 3 * day, Array(10f, 11f, ndv, ndv)))
-    val tr = StackOps.trend(spark.createDataset(rows), tileSize = 2, nThresh = 2).head()
+    val tr = StackOps.trend(spark.createDataset(rows), nThresh = 2).head()
     assert(math.abs(tr.r2(0) - 0.765737) < 1e-4)
     assert(math.abs(tr.t_stat(0) - 2.55683) < 1e-3)
     assert(math.abs(tr.slope_yr(0) - 3.1 * 365.25) < 1e-2)
     assert(math.abs(tr.r2(1) - 1.0) < 1e-5)
     // conf_test: noisy pixel masked, perfect-fit pixel kept
-    val conf = StackOps.trend(spark.createDataset(rows), tileSize = 2,
+    val conf = StackOps.trend(spark.createDataset(rows),
       nThresh = 2, confTest = true).head()
     assert(conf.slope_yr(0) == ndv && conf.intercept(0) == ndv)
     assert(math.abs(conf.slope_yr(1) - 3 * 365.25) < 1e-2)
@@ -90,12 +92,12 @@ class StackSpec extends AnyFunSuite {
       tile("b", 1 * day, Array(2f, 4f, ndv, ndv)),
       tile("c", 2 * day, Array(3f, 5f, ndv, ndv)),
       tile("d", 3 * day, Array(4f, ndv, ndv, ndv))))
-    val auto = StackOps.autoMinDtPtp(t, tileSize = 2)
+    val auto = StackOps.autoMinDtPtp(t)
     // valid ptps (days): pixel0 = 3, pixel1 = 1 → p96 ≈ 2.92 → gate ≈ 0.292
     assert(auto > 0.29 && auto < 0.3, s"auto=$auto")
-    val gated = StackOps.trend(t, tileSize = 2, minDtPtp = auto).head()
+    val gated = StackOps.trend(t, minDtPtp = auto).head()
     assert(gated.slope_yr(0) != ndv && gated.slope_yr(1) != ndv)
-    val hardGate = StackOps.trend(t, tileSize = 2, minDtPtp = 2.0).head()
+    val hardGate = StackOps.trend(t, minDtPtp = 2.0).head()
     assert(hardGate.slope_yr(0) != ndv && hardGate.slope_yr(1) == ndv)
   }
 
@@ -104,7 +106,7 @@ class StackSpec extends AnyFunSuite {
     val t = spark.createDataset(Seq(
       tile("a", 5 * day, Array(1f, 1f, ndv, ndv)),
       tile("b", 9 * day, Array(2f, ndv, ndv, ndv))))
-    val dt = StackOps.dtStats(t, tileSize = 2).head()
+    val dt = StackOps.dtStats(t).head()
     assert(dt.t_first_us(0) == 5 * day && dt.t_last_us(0) == 9 * day)
     assert(dt.ptp_us(0) == 4 * day && dt.center_us(0) == 7 * day)
     assert(dt.ptp_us(1) == -1)            // single layer → ptp masked
@@ -163,7 +165,7 @@ class StackSpec extends AnyFunSuite {
       tile("a", 0, Array(1f, 4f, ndv, ndv)),
       tile("b", 1, Array(2f, 8f, ndv, ndv)),
       tile("c", 2, Array(9f, 12f, ndv, ndv))))
-    val mn = StackOps.cellMedianNmad(StackOps.toCells(t, tileSize = 2))
+    val mn = StackOps.cellMedianNmad(StackOps.toCells(t))
       .orderBy(col("cell_id")).collect()
     assert(mn(0).getDouble(1) == 2.0)                       // med of 1,2,9
     assert(math.abs(mn(0).getDouble(2) - 1.4826) < 1e-9)    // med(|1,0,7|)=1
@@ -176,8 +178,10 @@ class RobustTrendSpec extends org.scalatest.funsuite.AnyFunSuite {
   lazy val spark = TestSpark.spark
   val ndv = graft.sources.ImageTable.Ndv
   val day = 86400L * 1000000L
+  /** One tile whose first pixels are `vals`, NDV-padded to the engine's size. */
   def tile(id: String, tsUs: Long, vals: Array[Float]): TileRow =
-    TileRow(id, tsUs, 0L, 0, 0, vals, vals.count(_ != ndv), elided = true)
+    TileRow(id, tsUs, 0L, 0, 0, vals.padTo(Warp.TileSize * Warp.TileSize, ndv),
+      vals.count(_ != ndv), elided = true)
 
   test("Theil-Sen: exact on clean linear data, robust to one outlier (malib.py:960-998)") {
     import spark.implicits._
@@ -189,13 +193,13 @@ class RobustTrendSpec extends org.scalatest.funsuite.AnyFunSuite {
       tile("c", 2 * day, Array(5f, 14f, ndv, ndv)),
       tile("d", 3 * day, Array(7f, 16f, ndv, ndv)),
       tile("e", 4 * day, Array(500f, 18f, ndv, ndv))))   // outlier in pixel 0
-    val cells = StackOps.toCells(t, tileSize = 2)
+    val cells = StackOps.toCells(t)
     val ts = StackOps.theilSen(cells).collect()
       .map(r => r.getLong(0) -> (r.getInt(1), r.getDouble(2), r.getDouble(3))).toMap
     // pixel 0: median of pairwise slopes = 2 despite the outlier
     assert(math.abs(ts(0L)._2 - 2 * 365.25) < 1e-6, s"${ts(0L)}")
     // OLS on the same data is badly skewed by the outlier (the contrast)
-    val ols = StackOps.trend(t, tileSize = 2).head()
+    val ols = StackOps.trend(t).head()
     assert(math.abs(ols.slope_yr(0) - 2 * 365.25) > 100)
     // pixel 1: clean slope 2/day
     assert(math.abs(ts(1L)._2 - 2 * 365.25) < 1e-6)
@@ -239,8 +243,10 @@ class OutlierIterSpec extends org.scalatest.funsuite.AnyFunSuite {
   lazy val spark = TestSpark.spark
   val ndv = graft.sources.ImageTable.Ndv
   val day = 86400L * 1000000L
+  /** One tile whose first pixels are `vals`, NDV-padded to the engine's size. */
   def tile(id: String, tsUs: Long, vals: Array[Float]): TileRow =
-    TileRow(id, tsUs, 0L, 0, 0, vals, vals.count(_ != ndv), elided = true)
+    TileRow(id, tsUs, 0L, 0, 0, vals.padTo(Warp.TileSize * Warp.TileSize, ndv),
+      vals.count(_ != ndv), elided = true)
 
   test("3-sigma outlier iteration recovers the clean slope (malib.py:1103-1120)") {
     import spark.implicits._
@@ -251,7 +257,7 @@ class OutlierIterSpec extends org.scalatest.funsuite.AnyFunSuite {
     val t = spark.createDataset(ys.zipWithIndex.map { case (y, i) =>
       tile(s"l$i", i * day, Array(y, 5f, ndv, ndv))
     }.toSeq)
-    val cells = StackOps.toCells(t, tileSize = 2)
+    val cells = StackOps.toCells(t)
     val fit = StackOps.trendOutlierIter(cells).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
     // outlier removed → n=11, slope exactly 2/day
@@ -259,7 +265,7 @@ class OutlierIterSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(math.abs(fit(0L)._2 - 2 * 365.25) < 1e-6)
     assert(math.abs(fit(0L)._3 - 1.0) < 1e-6)
     // plain OLS would NOT recover it
-    val ols = StackOps.trend(t, tileSize = 2).head()
+    val ols = StackOps.trend(t).head()
     assert(math.abs(ols.slope_yr(0) - 2 * 365.25) > 1000)
     // constant pixel survives untouched (rstd = 0 keeps all samples)
     assert(fit(1L)._1 == 12 && math.abs(fit(1L)._2) < 1e-9)

@@ -19,7 +19,7 @@ class StencilSpec extends AnyFunSuite {
     val padded = Array.fill(p * p)(ndv)
     for (y <- 0 until h; x <- 0 until w)
       padded((y + halo) * p + (x + halo)) = img(y * w + x)
-    val core = kernel(padded, p, halo, ndv)
+    val core = kernel(padded, p, halo)
     val t = p - 2 * halo
     val out = new Array[Float](w * h)
     for (y <- 0 until h; x <- 0 until w) out(y * w + x) = core(y * t + x)
@@ -188,22 +188,21 @@ class StencilSpec extends AnyFunSuite {
 
   test("fillGapsDilate rounds > tileSize chunks into multiple exchanges (review r3)") {
     import spark.implicits._
-    // tileSize 8 keeps the fixture small: rounds = 11 > 8 forces two
-    // exchanges (halo 8 then 3); the old halo=rounds form crashed on
-    // negative strip offsets
-    val T = 8
+    // rounds = T + 3 > T forces two exchanges (halo T then 3); the old
+    // halo=rounds form crashed on negative strip offsets
+    val T = Warp.TileSize
+    val rounds = T + 3
     val base = Seq(graft.operators.TileRow("img", 0L, 0L, 0, 0,
       Array.tabulate(T * T)(i => if (i == 0) 5.0f else ndv), 1, elided = false)).toDS()
-    val out = Stencil.fillGapsDilate(base, ntx = 2, nty = 2, rounds = 11, tileSize = T)
-      .collect()
-    // 11 dilations from one seed reach Chebyshev distance 11: the whole
-    // home tile plus neighbors' cells within range are valid
+    val out = Stencil.fillGapsDilate(base, ntx = 2, nty = 2, rounds = rounds).collect()
+    // `rounds` dilations from one seed reach Chebyshev distance `rounds`:
+    // the whole home tile plus neighbors' cells within range are valid
     val home = out.find(t => t.tx == 0 && t.ty == 0).get
     assert(home.n_valid == T * T, s"home tile ${home.n_valid}")
     val right = out.find(t => t.tx == 1 && t.ty == 0).get
-    // columns 8..11 of the global grid are reachable (seed at 0,0)
+    // columns T..rounds of the global grid are reachable (seed at 0,0)
     assert((0 until T).forall { c =>
-      val reachable = (T + c) <= 11
+      val reachable = (T + c) <= rounds
       (right.payload(c) != ndv) == reachable
     }, right.payload.take(8).toSeq.toString)
   }
@@ -212,13 +211,13 @@ class StencilSpec extends AnyFunSuite {
     val p = 13; val h = 3
     val padded = Array.fill(p * p)(10.0f)
     padded(6 * p + 6) = ndv // one gap in a constant field
-    val out = Stencil.gaussFillKernel(1.0)(padded, p, h, ndv)
+    val out = Stencil.gaussFillKernel(1.0)(padded, p, h)
     val t = p - 2 * h
     assert(out((t / 2) * t + t / 2) == 10.0f)          // gap filled exactly
     assert(out.forall(_ == 10.0f))                     // originals untouched
     // isolated gap with NO valid support stays masked
     val empty = Array.fill(p * p)(ndv)
-    val out2 = Stencil.gaussFillKernel(1.0)(empty, p, h, ndv)
+    val out2 = Stencil.gaussFillKernel(1.0)(empty, p, h)
     assert(out2.forall(_ == ndv))
   }
 
@@ -230,7 +229,7 @@ class StencilSpec extends AnyFunSuite {
     val out = Stencil.rollingKernel(5, (v, n) => {
       var m = Float.MinValue; var i = 0
       while (i < n) { if (v(i) > m) m = v(i); i += 1 }; m
-    })(padded, p, h, ndv)
+    })(padded, p, h)
     val t = p - 2 * h
     // gap pixel gets filled from its window (rolling_fltr fills)
     assert(out((5 - h) * t + (5 - h)) != ndv)
@@ -250,11 +249,11 @@ class StencilSpec extends AnyFunSuite {
     val p = 40; val h = 9
     // constant field → bandpass 0
     val const = Array.fill(p * p)(42.0f)
-    val bc = Stencil.bandpassKernel(1.0, 2.0)(const, p, h, ndv)
+    val bc = Stencil.bandpassKernel(1.0, 2.0)(const, p, h)
     assert(bc.forall(v => math.abs(v) < 1e-4))
     // affine field → gauss is identity in the interior → bandpass ~0
     val affine = Array.tabulate(p * p)(i => (0.5f * (i % p) - 0.25f * (i / p)))
-    val ba = Stencil.bandpassKernel(1.0, 2.0)(affine, p, h, ndv)
+    val ba = Stencil.bandpassKernel(1.0, 2.0)(affine, p, h)
     assert(ba.forall(v => math.abs(v) < 1e-3))
   }
 
@@ -335,7 +334,7 @@ class StencilSpec extends AnyFunSuite {
       java.security.MessageDigest.getInstance("MD5").digest(bb.array())
         .map(b => f"${b & 0xff}%02x").mkString
     }
-    val got = kernels.map { case (name, k, h) => name -> md5(k(frame.clone(), p, h, ndv)) }.toMap
+    val got = kernels.map { case (name, k, h) => name -> md5(k(frame.clone(), p, h)) }.toMap
     // recorded from the per-kernel loops before they shared one window walk
     // ("slope" from the standalone Horn slope kernel); a change here means
     // the output bits moved

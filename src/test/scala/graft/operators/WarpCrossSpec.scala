@@ -45,8 +45,7 @@ class WarpCrossSpec extends AnyFunSuite {
     val gB = GridSpec.fromExtentRes(
       Extent(eB0.xmin - 2 * resB, eB0.ymin - 2 * resB,
              eB0.xmax + 2 * resB, eB0.ymax + 2 * resB), resB, "EPSG:4326")
-    val tilesB = Warp.warpOne(imgA, gB, "near", Warp.TileSize,
-      (gB.w + Warp.TileSize - 1) / Warp.TileSize).toSeq
+    val tilesB = Warp.warpOne(imgA, gB, "near").toSeq
     assert(tilesB.nonEmpty && tilesB.forall(!_.elided), "cross-CRS must never elide")
     val pxB = assemble(tilesB, gB)
     // a square-DEGREE grid at lon-step/4 oversamples x by 4 but y only by
@@ -55,8 +54,7 @@ class WarpCrossSpec extends AnyFunSuite {
       "4x-lon-oversampled B must carry ≥10× A's valid pixels")
 
     val imgB = mkImage("b", gB, pxB)
-    val tilesBack = Warp.warpOne(imgB, gA, "near", Warp.TileSize,
-      (gA.w + Warp.TileSize - 1) / Warp.TileSize).toSeq
+    val tilesBack = Warp.warpOne(imgB, gA, "near").toSeq
     val back = assemble(tilesBack, gA)
     var i = 0
     while (i < back.length) {
@@ -71,11 +69,9 @@ class WarpCrossSpec extends AnyFunSuite {
     val gC = GridSpec.fromExtentRes(
       Extent(eC.xmin - 2 * resC, eC.ymin - 2 * resC,
              eC.xmax + 2 * resC, eC.ymax + 2 * resC), resC, "EPSG:3413")
-    val tilesC = Warp.warpOne(imgA, gC, "near", Warp.TileSize,
-      (gC.w + Warp.TileSize - 1) / Warp.TileSize).toSeq
+    val tilesC = Warp.warpOne(imgA, gC, "near").toSeq
     val imgC = mkImage("c", gC, assemble(tilesC, gC))
-    val back = assemble(Warp.warpOne(imgC, gA, "near", Warp.TileSize,
-      (gA.w + Warp.TileSize - 1) / Warp.TileSize).toSeq, gA)
+    val back = assemble(Warp.warpOne(imgC, gA, "near").toSeq, gA)
     assert(back.sameElements(pxA))
   }
 
@@ -83,8 +79,7 @@ class WarpCrossSpec extends AnyFunSuite {
     val eB0 = Proj.projectExtent(gA.extent, gA.crs, "EPSG:4326")
     val resB = Proj.resIn(gA, "EPSG:4326")
     val gB = GridSpec.fromExtentRes(eB0, resB, "EPSG:4326")
-    val tiles = Warp.warpOne(imgA, gB, "bilinear", Warp.TileSize,
-      (gB.w + Warp.TileSize - 1) / Warp.TileSize).toSeq
+    val tiles = Warp.warpOne(imgA, gB, "bilinear").toSeq
     val vals = tiles.flatMap(_.payload).filter(_ != ImageTable.Ndv)
     assert(vals.nonEmpty)
     // bilinear is a convex combination of source values

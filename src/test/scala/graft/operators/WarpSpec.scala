@@ -69,7 +69,7 @@ class WarpSpec extends AnyFunSuite {
     import spark.implicits._
     val img0 = images.as[ImageRow].filter(_.image_id == ImageTable.imageIdOf(0)).head()
     val g0 = ImageTable.gridOf(0)
-    val tiles = Warp.warpToTiles(spark, images.limit(1), g0, "near", tileSize = 64).collect()
+    val tiles = Warp.warpToTiles(spark, images.limit(1), g0, "near").collect()
     assert(tiles.nonEmpty && tiles.forall(_.elided))
     // reassemble and compare against the decoded source
     val src = Codec.decode(img0.bytes, img0.w, img0.h, img0.fmt, ImageTable.Ndv)
